@@ -129,9 +129,9 @@ class Initializer(
     * the CCD identity (its table), so compaction keeps latest state. */
   def publish(ccd: Ccd): Unit = publishAll(Seq(ccd))
 
-  /** Batched publish: one topic append for a whole lifecycle's states
-    * (appends scan the topic for offset bases — per-state appends
-    * would make control-topic maintenance quadratic over time).
+  /** Batched publish: one topic append — one control-topic file — for
+    * a whole lifecycle's states. The frame is driver-local, which
+    * [[graft.engine.topics.FileTopicStore]] writes without a Spark job.
     * Within-append order is pinned by an explicit `seq` column —
     * append() sorts within each partition by it before assigning
     * offsets, so compaction keeps the LAST state by contract. (Relying

@@ -44,9 +44,9 @@ import graft.engine.topics.FileTopicStore
   * pushdown reaches the scan.
   */
 object TopicSource {
-  /** Write option carrying pre-scanned per-partition base offsets
-    * ("p:off,p:off"), so a caller that already aggregated the log this
-    * append (e.g. for dirty-ratio stats) saves the write path's scan. */
+  /** Write option carrying known per-partition base offsets
+    * ("p:off,p:off"), so a caller that already knows them (the store's
+    * per-file offset memo) saves the write path's scan. */
   val BasesOption = "graft.bases"
 
   def encodeBases(b: Map[Int, Long]): String =
@@ -350,8 +350,9 @@ private[sources] class TopicFileReader(file: String, columns: Array[String],
   *    driver-side routing, no RDD zipWithIndex: a 100 TB append is one
   *    shuffle + streaming writes.
   *  - per-partition base offsets (max in the existing log) are computed
-  *    once on the driver as a numPartitions-row aggregate; each task
-  *    continues its partitions' sequences locally.
+  *    once on the driver ([[TopicLog.partitionBases]], or handed in by
+  *    the store's per-file offset memo); each task continues its
+  *    partitions' sequences locally.
   *  - task commit protocol: rows stream to a hidden `.staging-*` file
   *    (invisible to both the Jackson readers and Hadoop listings),
   *    atomically renamed to `v2-*.json` on task commit, deleted on
@@ -394,11 +395,10 @@ private[sources] class TopicWrite(dir: String, bases: Option[String] = None)
   override def toStreaming: wstreaming.StreamingWrite = streamingWrite
 }
 
-/** One aggregate pass over an existing topic log: the per-partition /
-  * global max offsets every write path continues from (the
-  * broker-metadata lookup). Shared by the batch write, the streaming
-  * write, and nothing else — [[FileTopicStore]]'s richer stats scan
-  * also needs dirty-ratio counts and stays separate. */
+/** The topic log's driver-side helpers: the data-file listing every
+  * read path shares, the per-file offset scan every write path
+  * continues from (the broker-metadata lookup), and the driver-local
+  * write of a small already-routed append. */
 private[engine] object TopicLog {
   /** The one "data files of a topic dir" listing, shared by every V2
     * read path and the store's emptiness checks: `*.json`, EXCLUDING
@@ -429,24 +429,64 @@ private[engine] object TopicLog {
 
   def nonEmpty(dir: String): Boolean = dataFiles(dir).nonEmpty
 
-  def partitionBases(dir: String,
-      session: org.apache.spark.sql.SparkSession =
-        org.apache.spark.sql.SparkSession.active): Map[Int, Long] = {
-    // the default suits the V2 connector paths (driver-side inside a
-    // write, where `active` IS the writing session); FileTopicStore
-    // threads the DataFrame's own session so a multi-session JVM never
-    // computes offsets with a different session than performs the write
-    if (!nonEmpty(dir)) Map.empty
-    else session
-      .read.schema(FileTopicStore.schema).json(dir)
-      .groupBy(org.apache.spark.sql.functions.col("partition"))
-      .agg(org.apache.spark.sql.functions.max("offset"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-  }
+  /** Per-partition max offset of each given data file: ONE job, a task
+    * per group of files, each parsed by the connector's own reader
+    * with only (partition, offset) materialized. Rows missing either
+    * coordinate are skipped; a file without rows maps to no offsets. */
+  def fileMaxes(session: org.apache.spark.sql.SparkSession,
+      files: Seq[String]): Map[String, Map[Int, Long]] =
+    if (files.isEmpty) Map.empty
+    else {
+      val sc = session.sparkContext
+      sc.parallelize(files, files.size.min(sc.defaultParallelism)).map { f =>
+        val reader = new TopicFileReader(f, Array("partition", "offset"), Array.empty)
+        val maxes = scala.collection.mutable.Map.empty[Int, Long]
+        try while (reader.next()) {
+          val row = reader.get()
+          if (!row.isNullAt(0) && !row.isNullAt(1)) {
+            val p = row.getInt(0)
+            maxes(p) = math.max(maxes.getOrElse(p, Long.MinValue), row.getLong(1))
+          }
+        } finally reader.close()
+        f -> maxes.toMap
+      }.collect().toMap
+    }
+
+  /** Per-partition max over several files' maxima. */
+  def merge(maxes: Iterable[Map[Int, Long]]): Map[Int, Long] =
+    maxes.flatten.groupMapReduce(_._1)(_._2)(math.max)
+
+  /** Per-partition max offset of a whole topic log. Called driver-side
+    * inside a V2 write, where the active session IS the writing one. */
+  def partitionBases(dir: String): Map[Int, Long] =
+    merge(fileMaxes(org.apache.spark.sql.SparkSession.active, dataFiles(dir)).values)
 
   /** First free offset across all partitions (0 for an empty log). */
   def nextOffset(dir: String): Long =
     partitionBases(dir).values.maxOption.map(_ + 1L).getOrElse(0L)
+
+  /** Driver-local append: write already-routed rows in the connector's
+    * write schema (key, value, partition, offset = intra-append
+    * sequence, ts ignored) as ONE file through [[TopicDataWriter]] —
+    * the same encoder, staging name and atomic rename as a V2 task
+    * commit. Rows are ordered by (partition, sequence) first, the
+    * ordering the V2 Write requires of Spark (null sequences first,
+    * like the planned sort). Returns the visible file and its
+    * per-partition max offsets; no rows write nothing. */
+  def writeLocal(dir: String, rows: Seq[InternalRow], bases: Map[Int, Long],
+      nowMillis: Long): Option[(String, Map[Int, Long])] =
+    if (rows.isEmpty) None
+    else {
+      val writer = new TopicDataWriter(dir, p => bases.getOrElse(p, -1L), nowMillis)
+      try {
+        rows.sortBy(r => (r.getInt(2), if (r.isNullAt(3)) Long.MinValue else r.getLong(3)))
+          .foreach(writer.write)
+        writer.commit()
+      } catch {
+        case e: Throwable => writer.abort(); throw e
+      }
+      Some(writer.file -> writer.lastOffsets)
+    }
 }
 
 /** Streaming producer (sink half of the micro-batch tail): each epoch's
@@ -494,10 +534,10 @@ private[sources] class TopicStreamingWriterFactory(dir: String, base: Long)
 private[sources] class TopicBatchWrite(dir: String, bases: Option[String])
   extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // per-partition base offsets: a numPartitions-row aggregate over the
-    // existing log (the broker-metadata lookup), computed ONCE per
-    // append — or passed in by a caller that already scanned the log
-    // this append (FileTopicStore.appendV2's dirty-ratio stats pass)
+    // per-partition base offsets: one scan of the existing log (the
+    // broker-metadata lookup), computed ONCE per append — or passed in
+    // by a caller that already knows them (FileTopicStore.appendV2's
+    // per-file offset memo)
     val b = bases.map(TopicSource.decodeBases)
       .getOrElse(TopicLog.partitionBases(dir))
     new TopicWriterFactory(dir, b, System.currentTimeMillis())
@@ -522,6 +562,8 @@ private[sources] class TopicDataWriter(dir: String, baseOf: Int => Long,
   private val mapper = new ObjectMapper()
   private val uuid = java.util.UUID.randomUUID().toString
   private val staging = Paths.get(dir, s".staging-$uuid")
+  /** The data file [[commit]] makes visible. */
+  val file: String = Paths.get(dir, s"v2-$uuid.json").toString
   // UTF-8 explicitly: every reader (Files.lines, spark.read.json)
   // decodes UTF-8 regardless of the JVM's default charset
   private val out = Files.newBufferedWriter(staging,
@@ -548,9 +590,13 @@ private[sources] class TopicDataWriter(dir: String, baseOf: Int => Long,
     out.newLine()
   }
 
+  /** Per-partition last offset written so far. */
+  def lastOffsets: Map[Int, Long] =
+    counters.iterator.map { case (p, n) => p -> (baseOf(p) + n) }.toMap
+
   override def commit(): WriterCommitMessage = {
     out.close()
-    Files.move(staging, Paths.get(dir, s"v2-$uuid.json"),
+    Files.move(staging, Paths.get(file),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     TopicWriteDone()
   }

@@ -103,10 +103,12 @@ object ControlStream {
     * the at-least-once recheck then drops the loser, so the surviving
     * config would be nondeterministic. Same-key messages share a topic
     * partition, so their offsets totally order them (the V2 admission
-    * contract); sorting the whole control batch is driver-cheap. */
+    * contract). A control batch is small, so it is ordered in ONE
+    * partition: the same total order as a global sort, without the
+    * range-sampling job and the exchange. */
   private[graft] def processBatch(init: Initializer)(batch: DataFrame): Unit = {
     val ccds = init.decodeCcds(
-      batch.sort(col("offset")).select(col("key"), col("value")))
+      batch.coalesce(1).sortWithinPartitions(col("offset")).select(col("key"), col("value")))
     ccds.sortBy(_.timestamp.getTime).foreach(init.process)
   }
 

@@ -6,6 +6,8 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -150,106 +152,146 @@ class FileTopicStore(
       .otherwise(pmod(hash(key), lit(numPartitions)).cast("int"))
 
   /** Append (key, value): route each row to its key's partition, then
-    * continue that partition's offset sequence. Offsets are assigned
-    * with `zipWithIndex` (per-partition counts + cumulative bases —
-    * narrow jobs, no global ordering point), so a 100 TB seed append
-    * stays fully parallel.
+    * continue that partition's offset sequence from the bases the
+    * store's per-file offset memo supplies (see [[bases]]).
+    *
+    * Two write modes, picked by the frame's plan alone:
+    *  - **driver-local** — the routed frame optimizes to a
+    *    `LocalRelation` (every control-topic publish: a handful of
+    *    rows built on the driver). Its rows are collected with no job
+    *    (`LocalTableScanExec` returns them on the driver), ordered by
+    *    (partition, seq) and written as ONE file through the V2
+    *    connector's writer ([[graft.engine.sources.TopicLog.writeLocal]]:
+    *    hidden staging file, atomic rename); the memo records that
+    *    file's offsets directly, so a steady-state control append
+    *    launches no Spark job at all.
+    *  - **distributed** — anything else (a seed scan of any size).
+    *    Offsets are assigned per partition with a `mapPartitions`
+    *    counter after a `repartition` on the topic partition (narrow
+    *    jobs, no global ordering point), so a 100 TB seed append stays
+    *    fully parallel. One of the few sanctioned RDD uses: genuine
+    *    per-partition indexing.
     *
     * Intra-append ordering: a shuffle does NOT preserve row order, so
     * when the caller's frame carries a `seq` column (any numeric — see
-    * [[graft.engine.cdc.Initializer.publishAll]]) rows are sorted
-    * within each partition by it before offsets are assigned; offsets
-    * then follow the caller's sequence BY CONTRACT, not by accident of
-    * task layout. Without `seq`, intra-append order is unspecified —
-    * valid only for appends carrying at most one message per key (the
-    * snapshot-seed path); cross-append ordering is always guaranteed by
-    * the per-partition base offsets, and a key lives in exactly one
-    * partition. One of the few sanctioned RDD uses: genuine
-    * per-partition indexing. */
+    * [[graft.engine.cdc.Initializer.publishAll]]) rows are ordered
+    * within each partition by it before offsets are assigned, on both
+    * paths; offsets then follow the caller's sequence BY CONTRACT, not
+    * by accident of task layout. Without `seq`, intra-append order is
+    * unspecified — valid only for appends carrying at most one message
+    * per key (the snapshot-seed path); cross-append ordering is always
+    * guaranteed by the per-partition base offsets, and a key lives in
+    * exactly one partition. */
   def append(topic: String, kv: DataFrame): Unit = {
     check("append", topic) // same injectable-fault point as appendV2
     if (!exists(topic)) create(topic)
-    // With a dirty ratio configured, ONE scan serves both the offset
-    // bases and the dirty-ratio stats (the policy therefore sees the
-    // log as of the PREVIOUS append — one-append lag, in exchange for
-    // never scanning the topic twice). Without one — the default —
-    // the cheap max-only bases scan suffices: the full stats pass
-    // runs a countDistinct over the ENTIRE log, and paying a
-    // distinct-aggregation per append just to discard the counts
-    // makes append cost grow with log size for nothing (appendV2
-    // makes the same split).
-    val stats =
-      if (dirtyRatio.isDefined) Some(topicStats(topic)) else None
-    val bases: Map[Int, Long] = stats.map(_.bases).getOrElse(
-      graft.engine.sources.TopicLog.partitionBases(
-        dir(topic).toString, kv.sparkSession))
+    val stats = dirtyRatioStats(topic)
     val session = kv.sparkSession
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val seqCol =
-      if (kv.columns.contains("seq")) col("seq").cast("long") else lit(0L)
-    val routed = kv.select(
-        col("key").cast("string").as("key"),
-        col("value").cast("string").as("value"),
-        seqCol.as("seq"))
-      .withColumn("partition", partitionOf(col("key")))
-    val perPartitionIdx = routed
-      .repartition(numPartitions.min(64), col("partition"))
-      .sortWithinPartitions(col("partition"), col("seq"))
-      .rdd.mapPartitions { it =>
-        // rows of several topic-partitions may share a task; index each
-        // topic-partition's rows independently
-        val counters = scala.collection.mutable.Map.empty[Int, Long]
-        it.map { r =>
-          val p = r.getInt(3)
-          val i = counters.getOrElse(p, 0L); counters(p) = i + 1
-          (r.getString(0), r.getString(1), p, i)
+    val frame = routed(kv)
+    localRows(frame) match {
+      case Some(rows) =>
+        // bases, write and memo update under the memo's lock: a client's
+        // submit and a live submission loop publishing through one store
+        // cannot claim the same offsets
+        offsetMemo.synchronized {
+          graft.engine.sources.TopicLog.writeLocal(dir(topic).toString, rows.toSeq,
+              bases(topic, session), now.getTime)
+            .foreach { case (file, maxes) => remember(topic, file, maxes) }
         }
-      }
-    // second pass: cumulative bases per (task, topic-partition) would
-    // need a cross-task scan; for the single-writer store, per-task
-    // counts collapse because repartition(col) sends each
-    // topic-partition to exactly one task
-    val rows = perPartitionIdx.map { case (k, v, p, i) =>
-      org.apache.spark.sql.Row(k, v, p, bases.getOrElse(p, -1L) + 1L + i, now)
+      case None =>
+        val b = bases(topic, session)
+        val rows = frame
+          .repartition(numPartitions.min(64), col("partition"))
+          .sortWithinPartitions(col("partition"), col("offset"))
+          .rdd.mapPartitions { it =>
+            // rows of several topic-partitions may share a task; index
+            // each topic-partition's rows independently (per-task counts
+            // suffice: repartition(col) sends each topic-partition to
+            // exactly one task)
+            val counters = scala.collection.mutable.Map.empty[Int, Long]
+            it.map { r =>
+              val p = r.getInt(2)
+              val i = counters.getOrElse(p, 0L); counters(p) = i + 1
+              org.apache.spark.sql.Row(r.getString(0), r.getString(1), p,
+                b.getOrElse(p, -1L) + 1L + i, now)
+            }
+          }
+        session.createDataFrame(rows, FileTopicStore.schema)
+          .write.mode("append").json(dir(topic).toString)
     }
-    session.createDataFrame(rows, FileTopicStore.schema)
-      .write.mode("append").json(dir(topic).toString)
     // dirty ratio = superseded keyed messages / keyed messages, from the
     // stats of the pre-append scan above (a production store keeps
     // running per-segment counters instead of scanning at all)
     stats.foreach(maybeCompact(topic, _))
   }
 
-  private case class TopicStats(
-      bases: Map[Int, Long], keyedTotal: Long, keyedLive: Long)
+  /** The rows of a frame whose optimized plan is a driver-side
+    * `LocalRelation`, collected with no job; None for any other plan. */
+  private def localRows(df: DataFrame): Option[Array[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if !l.isStreaming =>
+        Some(df.queryExecution.executedPlan.executeCollect())
+      case _ => None
+    }
+
+  // Per-file offset memo, per topic: data file -> its per-partition max
+  // offset. Topic files are immutable once visible and every writer
+  // names them fresh (UUIDs), so a file's maxima never change; files
+  // deleted by compaction or clear() drop out of the next listing.
+  private val offsetMemo =
+    scala.collection.mutable.Map.empty[String, Map[String, Map[Int, Long]]]
+
+  /** Per-partition base offsets (max offset on file) of a topic: only
+    * the data files this store has not seen yet are scanned — one job
+    * on the first append per store instance or after another writer
+    * (a distributed append, a second store, a compaction) added files,
+    * none otherwise. */
+  private def bases(topic: String, session: SparkSession): Map[Int, Long] =
+    offsetMemo.synchronized {
+      val listed = graft.engine.sources.TopicLog.dataFiles(dir(topic).toString)
+      val live = listed.toSet
+      val known = offsetMemo.getOrElse(topic, Map.empty).filter { case (f, _) => live(f) }
+      val all = known ++ graft.engine.sources.TopicLog.fileMaxes(session,
+        listed.filterNot(known.contains))
+      offsetMemo(topic) = all
+      graft.engine.sources.TopicLog.merge(all.values)
+    }
+
+  private def remember(topic: String, file: String, maxes: Map[Int, Long]): Unit =
+    offsetMemo.synchronized {
+      offsetMemo(topic) = offsetMemo.getOrElse(topic, Map.empty) + (file -> maxes)
+    }
+
+  private case class TopicStats(keyedTotal: Long, keyedLive: Long)
+
+  /** Pre-append dirty-ratio inputs, only when the policy can act on
+    * them: a topic in `dirtyRatioExempt` can never be compacted by it,
+    * so its appends skip the full-log stats pass entirely. */
+  private def dirtyRatioStats(topic: String): Option[TopicStats] =
+    if (dirtyRatio.isEmpty || dirtyRatioExempt.contains(topic)) None
+    else Some(topicStats(topic))
 
   /** The one dirty-ratio compaction policy, shared by both append
     * paths so they cannot diverge. */
   private def maybeCompact(topic: String, stats: TopicStats): Unit =
     dirtyRatio.foreach { threshold =>
-      if (!dirtyRatioExempt.contains(topic) && stats.keyedTotal > 0 &&
+      if (stats.keyedTotal > 0 &&
         (stats.keyedTotal - stats.keyedLive).toDouble / stats.keyedTotal >= threshold)
         compact(topic)
     }
 
-  /** One aggregate pass over the log: per-partition max offsets (the
-    * append bases) + keyed total/distinct counts (the dirty-ratio
-    * inputs). Distinct keys sum across partitions because a key lives
-    * in exactly one partition. */
+  /** One aggregate pass over the log: keyed total/distinct counts (the
+    * dirty-ratio inputs). */
   private def topicStats(topic: String): TopicStats = {
-    if (!hasFiles(topic)) TopicStats(Map.empty, 0L, 0L)
+    if (!hasFiles(topic)) TopicStats(0L, 0L)
     else {
-      val rows = spark.read.schema(FileTopicStore.schema)
+      val r = spark.read.schema(FileTopicStore.schema)
         .json(dir(topic).toString)
-        .groupBy(col("partition"))
-        .agg(max(col("offset")).as("m"),
-          count(col("key")).as("keyed"), // count() skips nulls
-          countDistinct(col("key")).as("live"))
-        .collect()
-      TopicStats(
-        rows.map(r => r.getInt(0) -> r.getLong(1)).toMap,
-        rows.map(_.getLong(2)).sum,
-        rows.map(_.getLong(3)).sum)
+        .agg(count(col("key")), // count() skips nulls
+          countDistinct(col("key")))
+        .head()
+      TopicStats(r.getLong(0), r.getLong(1))
     }
   }
 
@@ -369,24 +411,15 @@ class FileTopicStore(
   def appendV2(topic: String, kv: DataFrame): Unit = {
     check("append", topic)
     if (!exists(topic)) create(topic)
-    // ONE log scan per append, exactly like append(): with a dirty
-    // ratio configured, the stats pass yields both the write path's
-    // base offsets (forwarded through the connector option, skipping
-    // its own scan) and the pre-append dirty-ratio inputs; without
-    // one, the cheap max-only bases scan suffices — no discarded
-    // countDistinct over the whole log
-    val stats =
-      if (dirtyRatio.isDefined) Some(topicStats(topic)) else None
-    val bases = stats.map(_.bases).getOrElse(
-      graft.engine.sources.TopicLog.partitionBases(
-        dir(topic).toString, kv.sparkSession))
+    // same pre-append dirty-ratio stats and offset memo as append(); the
+    // memo's bases ride the connector option, skipping its own scan
+    val stats = dirtyRatioStats(topic)
     routed(kv)
       .write.format(classOf[graft.engine.sources.TopicSource].getName)
       .option(graft.engine.sources.TopicSource.BasesOption,
-        graft.engine.sources.TopicSource.encodeBases(bases))
+        graft.engine.sources.TopicSource.encodeBases(bases(topic, kv.sparkSession)))
       .mode("append")
       .save(dir(topic).toString)
-    // same self-compaction invariant as append() (pre-append stats)
     stats.foreach(maybeCompact(topic, _))
   }
 

@@ -1,14 +1,20 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.functions.max
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.cdc.{InMemoryControlPlane, Initializer}
+import graft.engine.model.{Ccd, Status}
 import graft.engine.topics.FileTopicStore
 
-/** FileTopicStore semantics (reference topic_store.clj): keyed append,
-  * offset ordering, compaction-on-read, ensure/clear, delete retry
-  * with cube-law backoff. */
+/** FileTopicStore semantics (reference topic_store.clj): keyed append
+  * on both write modes (driver-local and distributed), offset ordering
+  * and the per-file offset memo, compaction-on-read, ensure/clear,
+  * delete retry with cube-law backoff. */
 class TopicStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.session
   import spark.implicits._
@@ -28,10 +34,18 @@ class TopicStoreSpec extends AnyFunSuite {
   }
 
   test("append assigns contiguous offsets across appends") {
-    val (store, _) = freshStore()
+    val (store, root) = freshStore()
     store.create("t")
     store.append("t", Seq(("k1", "v1"), ("k2", "v2")).toDF("key", "value"))
+    store.append("t", Seq.empty[(String, String)].toDF("key", "value"))
     store.append("t", Seq(("k1", "v3")).toDF("key", "value"))
+    val files = {
+      val ls = Files.list(java.nio.file.Paths.get(root, "t"))
+      try ls.toArray.map(_.toString).count(f => f.endsWith(".json") &&
+        !java.nio.file.Paths.get(f).getFileName.toString.startsWith("."))
+      finally ls.close()
+    }
+    assert(files == 2, "one file per non-empty append; an empty one writes nothing")
     val rows = store.readAll("t").select("key", "value", "offset")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(rows.map(_._3).toSeq == Seq(0L, 1L, 2L))
@@ -250,5 +264,114 @@ class TopicStoreSpec extends AnyFunSuite {
     store.deleteWithRetry("t") // fails once more inside, then succeeds
     assert(!store.exists("t"))
     assert(slept.nonEmpty && slept.head == 0L, "first retry is immediate (n=0 → 0ms)")
+  }
+
+  test("Initializer.publishAll onto a topic this store already wrote launches no Spark job") {
+    val (store, root) = freshStore()
+    val init = new Initializer(spark, new InMemoryControlPlane(), store, "control", _ => None)
+    store.create("control")
+    val ccd = Ccd("tpch.nation", "q", "mq", None, Status.Submitted, new Timestamp(0L))
+    init.publish(ccd)
+    val jobs = JobCount(spark)(init.publishAll(
+      Seq(ccd.copy(status = Status.Prepared), ccd.copy(status = Status.Active))))
+    assert(jobs == 0, s"a control append on a known topic launched $jobs job(s)")
+    assert(init.currentStatus("tpch.nation").contains(Status.Active))
+    // a second store over the same root has not seen those files: its
+    // first append scans them in one job, the next one needs none
+    val other = new FileTopicStore(spark, root, sleeper = _ => ())
+    val init2 = new Initializer(spark, new InMemoryControlPlane(), other, "control", _ => None)
+    assert(JobCount(spark)(init2.publish(ccd.copy(table = "tpch.region"))) == 1)
+    assert(JobCount(spark)(init2.publish(ccd.copy(table = "tpch.part"))) == 0)
+    val offsets = store.readAll("control").collect().map(_.getLong(3)).toSeq
+    assert(offsets == (0L until 5L), s"offsets must stay contiguous: $offsets")
+  }
+
+  test("dirty-ratio stats never run for an exempt topic, on either append path") {
+    def store(dirty: Option[Double]) = new FileTopicStore(spark,
+      Files.createTempDirectory("graft-topics-ex").toString, sleeper = _ => (),
+      dirtyRatio = dirty, dirtyRatioExempt = Set("c"))
+    val exempt = store(Some(0.75))
+    val plain = store(None)
+    def history(s: FileTopicStore, topic: String): Unit = {
+      s.create(topic)
+      (1 to 4).foreach(i => s.append(topic, Seq(("k", s"v$i")).toDF("key", "value")))
+      s.appendV2(topic, Seq(("k", "w0")).toDF("key", "value"))
+      s.append(topic, Seq(("k", "v5")).toDF("key", "value")) // memo scans the V2 file
+    }
+    Seq(exempt -> "c", plain -> "c", exempt -> "d").foreach { case (s, t) => history(s, t) }
+    // the memo now knows every file, so a local append needs no job; a
+    // stats pass would launch at least one
+    assert(JobCount(spark)(exempt.append("c", Seq(("k", "v6")).toDF("key", "value"))) == 0)
+    plain.append("c", Seq(("k", "v6")).toDF("key", "value"))
+    val v2 = Seq(exempt -> "c", plain -> "c", exempt -> "d").map { case (s, t) =>
+      JobCount(spark)(s.appendV2(t, Seq(("k", "w1")).toDF("key", "value")))
+    }
+    assert(v2(0) == v2(1), s"appendV2 to an exempt topic ran extra jobs: $v2")
+    assert(v2(2) > v2(1), s"a non-exempt topic must still pay the stats pass: $v2")
+    assert(exempt.readAll("c").count() == 8, "an exempt topic is never compacted")
+  }
+
+  test("ARBITRARY mixes of local and distributed appends from two stores: " +
+    "per-partition offsets unique and monotone, compaction is last-per-key") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // (messages, distributed?, written by the second store?)
+    val appendGen = for {
+      n <- Gen.chooseNum(1, 5)
+      msgs <- Gen.listOfN(n, Gen.zip(Gen.oneOf("a", "b", "c", "d", "e"), Gen.chooseNum(0, 99)))
+      distributed <- Gen.oneOf(true, false)
+      second <- Gen.oneOf(true, false)
+    } yield (msgs, distributed, second)
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6),
+      Prop.forAllNoShrink(Gen.chooseNum(2, 5).flatMap(Gen.listOfN(_, appendGen))) { appends =>
+        val root = Files.createTempDirectory("graft-topics-mix").toString
+        val stores = Seq.fill(2)(
+          new FileTopicStore(spark, root, sleeper = _ => (), numPartitions = 3))
+        stores.head.create("t")
+        // value = "append:seq:payload", so the log order is checkable
+        val log = appends.zipWithIndex.map { case ((msgs, _, _), i) =>
+          msgs.zipWithIndex.map { case ((k, v), j) => (k, s"$i:$j:$v", j) }
+        }
+        appends.zip(log).foreach { case ((_, distributed, second), rows) =>
+          // rows arrive reversed: only `seq` defines the intra-append order
+          val kv = rows.reverse.toDF("key", "value", "seq")
+          stores(if (second) 1 else 0).append("t", if (distributed) kv.repartition(8) else kv)
+        }
+        val all = stores.head.readAll("t").collect()
+          .map(r => (r.getString(1), r.getInt(2), r.getLong(3)))
+        def rank(v: String): Long = { val Array(i, j, _) = v.split(':'); i.toLong * 1000 + j.toLong }
+        val monotone = all.groupBy(_._2).values.forall { rs =>
+          val byOffset = rs.sortBy(_._3)
+          val ranks = byOffset.map(r => rank(r._1))
+          byOffset.map(_._3).distinct.length == rs.length &&
+            ranks.zip(ranks.drop(1)).forall { case (x, y) => x < y }
+        }
+        val model = log.flatten.map { case (k, v, _) => k -> v }.toMap // later wins
+        val compacted = stores(1).readCompacted("t").select("key", "value").collect()
+          .map(r => r.getString(0) -> r.getString(1)).toMap
+        all.length == log.flatten.size && monotone && compacted == model
+      })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("an append right after compact() continues past the surviving max offset, on both paths") {
+    val (store, _) = freshStore()
+    store.create("t")
+    def local(k: String, v: String): Unit =
+      store.append("t", Seq((k, v)).toDF("key", "value"))
+    def distributed(k: String, v: String): Unit =
+      store.append("t", Seq((k, v)).toDF("key", "value").repartition(2))
+    def maxOffset: Long = store.readAll("t").agg(max($"offset")).first.getLong(0)
+    local("a", "1"); distributed("a", "2"); local("b", "1") // offsets 0, 1, 2
+    // compaction retires every file the memo knows; the survivors (a@1,
+    // b@2) live in a file it has never seen
+    store.compact("t")
+    local("c", "1")
+    assert(maxOffset == 3L)
+    store.compact("t")
+    distributed("d", "1")
+    assert(maxOffset == 4L)
+    val m = store.readCompacted("t").select("key", "value").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(m == Map("a" -> "2", "b" -> "1", "c" -> "1", "d" -> "1"))
   }
 }
