@@ -254,6 +254,7 @@ private[sources] class TopicReaderFactory(columns: Array[String],
 
 private[sources] class TopicFileReader(file: String, columns: Array[String],
     pushed: Array[Filter]) extends PartitionReader[InternalRow] {
+  import com.fasterxml.jackson.core.JsonProcessingException
   import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
   private val mapper = new ObjectMapper()
@@ -296,8 +297,12 @@ private[sources] class TopicFileReader(file: String, columns: Array[String],
     current = null
     while (current == null && it.hasNext) {
       val line = it.next()
-      if (line.nonEmpty) {
-        val node: JsonNode = mapper.readTree(line)
+      // blank lines hold no record and a line Jackson cannot parse reads
+      // as an all-null row: both as spark.read.json (PERMISSIVE) does
+      if (!line.isBlank) {
+        val node: JsonNode =
+          try mapper.readTree(line)
+          catch { case _: JsonProcessingException => mapper.missingNode() }
         // absent fields stay null all the way to the output row, exactly
         // like the spark.read.json path — no sentinels
         val partition =
@@ -398,7 +403,7 @@ private[sources] class TopicWrite(dir: String, bases: Option[String] = None)
 /** The topic log's driver-side helpers: the data-file listing every
   * read path shares, the per-file offset scan every write path
   * continues from (the broker-metadata lookup), and the driver-local
-  * write of a small already-routed append. */
+  * read of a small log and write of a small already-routed append. */
 private[engine] object TopicLog {
   /** The one "data files of a topic dir" listing, shared by every V2
     * read path and the store's emptiness checks: `*.json`, EXCLUDING
@@ -428,6 +433,17 @@ private[engine] object TopicLog {
   }
 
   def nonEmpty(dir: String): Boolean = dataFiles(dir).nonEmpty
+
+  /** Every row of the given data files, in file then line order, read
+    * on the driver by the connector's own reader in the full topic
+    * schema: no Spark job. For logs small enough that one task's worth
+    * of work is cheaper than scheduling it (FileTopicStore.readCompacted). */
+  def readLocal(files: Seq[String]): Seq[InternalRow] =
+    files.flatMap { f =>
+      val reader = new TopicFileReader(f, FileTopicStore.schema.fieldNames, Array.empty)
+      try Iterator.continually(reader.next()).takeWhile(identity).map(_ => reader.get()).toVector
+      finally reader.close()
+    }
 
   /** Per-partition max offset of each given data file: ONE job, a task
     * per group of files, each parsed by the connector's own reader

@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 
@@ -35,9 +37,13 @@ trait TopicStore {
   def delete(topic: String): Unit
   /** Keyed at-least-once append of a (key, value) frame. */
   def append(topic: String, kv: DataFrame): Unit
-  /** Full log in offset order: (key, value, offset, ts). */
+  /** Full log in (partition, offset) order: (key, value, partition,
+    * offset, ts). */
   def readAll(topic: String): DataFrame
-  /** Log-compaction read: latest (key, value, offset, ts) per key. */
+  /** Log-compaction read: the latest (key, value, partition, offset, ts)
+    * per key, plus every un-keyed row. A store may compact a small log
+    * on the driver and return it materialized, or return a lazy frame
+    * over the log (see [[FileTopicStore.readCompacted]]). */
   def readCompacted(topic: String): DataFrame
   /** Streaming tail (file source). */
   def readStream(topic: String): DataFrame
@@ -455,14 +461,57 @@ class FileTopicStore(
   }
 
   /** Compaction-on-read: latest row per KEY, with every un-keyed row
-    * passed through — the same contract as [[compactStorage]] (a
+    * passed through — the same contract as [[compact]] (a
     * groupBy over `key` would collapse all null keys into one
     * surviving row, which no log compactor does: un-keyed records
     * have no identity to compact under). Round-9 fuzzing caught the
     * read side diverging from the storage side here; live callers
     * only compact the (always-keyed) control topic, so the fix
-    * changes no engine behavior. */
+    * changes no engine behavior.
+    *
+    * Two read modes, picked by the log's size alone; both keep, per
+    * non-null key, the row with the highest offset (a null offset
+    * counts lowest), and they give the same rows but for one case: a
+    * corrupt line whose key parsed before the error is an un-keyed
+    * all-null row on the driver path (as in [[readAll]]) and missing
+    * on the Spark path, whose JSON filter pushdown tests `key IS NULL`
+    * on the partial record.
+    *  - **driver** — the live data files add up to at most the store
+    *    session's `spark.sql.files.openCostInBytes` (4 MiB by default:
+    *    Spark's own estimate of what opening one file costs, so such a
+    *    log cannot gain from a distributed scan). Every control topic
+    *    is this small. The files are parsed by the connector's reader
+    *    and compacted on the driver, and the rows come back as a
+    *    `LocalRelation`: the result is materialized when the call
+    *    returns, and a filter, projection and collect over it (every
+    *    CCD status recheck) launch no Spark job.
+    *  - **Spark** — a larger log (a seed topic) is read through one
+    *    pinned `spark.read.json` and compacted by a `max_by` aggregate;
+    *    the frame is lazy, see [[sparkCompacted]] for its contract.
+    * A topic that does not exist takes the Spark path and fails there,
+    * as it always has. */
   def readCompacted(topic: String): DataFrame = {
+    val d = dir(topic)
+    val files = graft.engine.sources.TopicLog.dataFiles(d.toString)
+    val bytes = files.iterator.map(f => Files.size(Paths.get(f))).sum
+    if (Files.isDirectory(d) && bytes <= openCostInBytes) localCompacted(files)
+    else sparkCompacted(topic)
+  }
+
+  private def openCostInBytes: Long =
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.openCostInBytes"))
+
+  private def localCompacted(files: Seq[String]): DataFrame = {
+    val (keyed, unkeyed) =
+      graft.engine.sources.TopicLog.readLocal(files).partition(!_.isNullAt(0))
+    val latest = keyed.groupBy(_.getUTF8String(0)).values
+      .map(_.maxBy(r => if (r.isNullAt(3)) None else Some(r.getLong(3))))
+    PlanBridge.ofRows(spark, LocalRelation(
+      DataTypeUtils.toAttributes(FileTopicStore.schema), latest.toVector ++ unkeyed))
+  }
+
+  private def sparkCompacted(topic: String): DataFrame = {
     // ONE DataFrameReader call pins the snapshot: resolving the file
     // relation lists the topic directory EAGERLY (InMemoryFileIndex
     // captures the FileStatus set — names and lengths — right here),

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.graft.JobCount
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.cdc.{Identifiers, InMemoryControlPlane, Initializer, SeedViews}
@@ -179,6 +180,27 @@ class InitializerSpec extends AnyFunSuite {
     val replay = init.process(ccd())
     assert(replay.isEmpty, "terminal state on the control topic blocks re-processing")
     assert(store.readAll("q_nation").count() == seeded, "live queue untouched")
+  }
+
+  test("currentStatus on a control topic below the read bound launches no Spark job; " +
+    "with the bound at 0 it runs through Spark") {
+    val root = Files.createTempDirectory("graft-init-jobs").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    val init = new Initializer(spark, new InMemoryControlPlane(), store, "control", _ => None)
+    store.create("control")
+    init.publishAll(Seq(ccd(), ccd(table = "tpch.region", queue = "q_region"))
+      .map(_.copy(status = Status.Active)))
+    // the shared session's conf picks the path: see SparkTest.confLock
+    val local = SparkTest.confLock.synchronized {
+      JobCount(spark)(assert(init.currentStatus("tpch.nation").contains(Status.Active)))
+    }
+    assert(local == 0, s"a driver-path recheck launched $local job(s)")
+    val sparkStore = new FileTopicStore(SparkTest.sparkReadSession, root, sleeper = _ => ())
+    val sparkInit = new Initializer(SparkTest.sparkReadSession, new InMemoryControlPlane(),
+      sparkStore, "control", _ => None)
+    val distributed =
+      JobCount(spark)(assert(sparkInit.currentStatus("tpch.region").contains(Status.Active)))
+    assert(distributed >= 1, "openCostInBytes = 0 must select the Spark read path")
   }
 
   test("identifier utilities port (sql/util.clj:31-57)") {

@@ -29,4 +29,15 @@ object SparkTest {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A sibling of [[session]] (same SparkContext, own SQL conf) with
+    * `spark.sql.files.openCostInBytes` at 0, so a FileTopicStore over it
+    * compacts every non-empty topic through Spark rather than on the
+    * driver. The shared session's conf never changes for it, so suites
+    * running alongside keep their read paths. */
+  lazy val sparkReadSession: SparkSession = {
+    val s = session.newSession()
+    s.conf.set("spark.sql.files.openCostInBytes", "0")
+    s
+  }
 }

@@ -52,6 +52,38 @@ class TopicSourceSpec extends AnyFunSuite {
     assert(df.count() == expected && expected > 0)
   }
 
+  test("a corrupt line reads as an all-null row, as spark.read.json does; " +
+    "appends and compacted reads go on past it") {
+    val (store, dir) = seeded()
+    Files.writeString(Paths.get(dir, "hand-written.json"),
+      "{\"key\":\"k2\",\"value\":\"cut off\n  \nnot json at all\n")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select($"key", $"value", $"partition", $"offset", $"ts")
+        .collect().map(_.toString).sorted.toSeq
+    val v2 = sorted(spark.read.format(fmt).load(dir))
+    assert(v2 == sorted(store.readAll("t")))
+    assert(v2.count(_ == "[null,null,null,null,null]") == 2, v2)
+    // the offset memo parses the new file with the same reader
+    store.append("t", Seq(("k1", "v1c")).toDF("key", "value"))
+    val k1 = store.readAll("t").filter($"key" === "k1").orderBy($"offset")
+      .select("value").collect().map(_.getString(0)).toSeq
+    assert(k1 == Seq("v1", "v1b", "v1c"))
+    val sparkPath = new FileTopicStore(SparkTest.sparkReadSession,
+      Paths.get(dir).getParent.toString, numPartitions = 4)
+    // the shared session's conf picks the path: see SparkTest.confLock
+    val local = SparkTest.confLock.synchronized(store.readCompacted("t"))
+    assert(local.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val allNull = "[null,null,null,null,null]"
+    assert(sorted(local).count(_ == allNull) == 2, "both corrupt lines pass through un-keyed")
+    // Known gap of the Spark path (its code is unchanged): Spark's JSON
+    // filter pushdown evaluates the un-keyed branch's `key IS NULL` on
+    // the partial record of the cut-off line, whose key parsed before
+    // the error, and drops it. The line that fails at its first token
+    // and every other row agree.
+    assert(sorted(sparkPath.readCompacted("t")) == sorted(local).diff(Seq(allNull)))
+  }
+
   test("column pruning reaches the reader") {
     val (store, dir) = seeded()
     val df = spark.read.format(fmt).load(dir).select($"key")

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.max
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,14 @@ class TopicStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-topics").toString
     (new FileTopicStore(spark, root, sleeper = _ => ()), root)
   }
+
+  /** A store over `root` whose readCompacted always takes the Spark path. */
+  private def sparkReadStore(root: String, numPartitions: Int = 1): FileTopicStore =
+    new FileTopicStore(SparkTest.sparkReadSession, root, sleeper = _ => (),
+      numPartitions = numPartitions)
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   test("create / exists / clear lifecycle") {
     val (store, _) = freshStore()
@@ -78,7 +87,7 @@ class TopicStoreSpec extends AnyFunSuite {
     // forAllNoShrink: the default String shrinker NPEs on null keys
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6),
       Prop.forAllNoShrink(appendsGen) { appends =>
-        val (store, _) = freshStore()
+        val (store, root) = freshStore()
         store.create("t")
         appends.foreach(batch => store.append("t", batch.toDF("key", "value")))
         val log = appends.flatten
@@ -87,15 +96,18 @@ class TopicStoreSpec extends AnyFunSuite {
           .sortBy(_._3)
         val offsetsOk = all.map(_._3).toSeq == log.indices.map(_.toLong)
         val orderOk = all.map(t => (t._1, t._2)).toSeq == log
-        val compacted = store.readCompacted("t").select("key", "value")
-          .collect().map(r => (r.getString(0), r.getString(1)))
         val wantKeyed = log.zipWithIndex.filter(_._1._1 != null)
           .groupBy(_._1._1).map { case (_, ms) => ms.maxBy(_._2)._1 }.toSet
         val wantUnkeyed = log.filter(_._1 == null)
-        val keyedOk = compacted.filter(_._1 != null).toSet == wantKeyed
-        val unkeyedOk = compacted.filter(_._1 == null).map(_._2).sorted.toSeq ==
-          wantUnkeyed.map(_._2).sorted
-        offsetsOk && orderOk && keyedOk && unkeyedOk
+        // on both read paths: this store compacts the tiny log on the
+        // driver, one over the Spark-read session through Spark
+        val readers = Seq(store, sparkReadStore(root))
+        offsetsOk && orderOk && readers.forall { reader =>
+          val compacted = reader.readCompacted("t").select("key", "value")
+            .collect().map(r => (r.getString(0), r.getString(1)))
+          compacted.filter(_._1 != null).toSet == wantKeyed &&
+            compacted.filter(_._1 == null).map(_._2).sorted.toSeq == wantUnkeyed.map(_._2).sorted
+        }
       })
     assert(res.passed, res.status.toString)
   }
@@ -373,5 +385,35 @@ class TopicStoreSpec extends AnyFunSuite {
     val m = store.readCompacted("t").select("key", "value").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m == Map("a" -> "2", "b" -> "1", "c" -> "1", "d" -> "1"))
+  }
+
+  test("ARBITRARY appends: readCompacted gives the same rows on the driver " +
+    "path and the Spark path, partition, offset and ts included") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val msgGen = Gen.zip(
+      Gen.oneOf(Gen.const(null: String), Gen.oneOf("a", "b", "c", "d", "e")),
+      Gen.chooseNum(0, 99).map(_.toString))
+    val appendGen = Gen.zip(Gen.chooseNum(1, 6).flatMap(Gen.listOfN(_, msgGen)),
+      Gen.oneOf(true, false))
+    // forAllNoShrink: the default String shrinker NPEs on null keys
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6),
+      Prop.forAllNoShrink(Gen.chooseNum(1, 5).flatMap(Gen.listOfN(_, appendGen))) { appends =>
+        val root = Files.createTempDirectory("graft-topics-paths").toString
+        val store = new FileTopicStore(spark, root, sleeper = _ => (), numPartitions = 3)
+        store.create("t")
+        appends.foreach { case (msgs, distributed) =>
+          val kv = msgs.toDF("key", "value")
+          store.append("t", if (distributed) kv.repartition(4) else kv)
+        }
+        // the shared session's conf picks the path: see SparkTest.confLock
+        val local = SparkTest.confLock.synchronized(store.readCompacted("t"))
+        val remote = sparkReadStore(root, numPartitions = 3).readCompacted("t")
+        def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+        isLocal(local) && !isLocal(remote) && local.schema == remote.schema &&
+          rows(local) == rows(remote) &&
+          rows(local).size == appends.flatMap(_._1).map(_._1).filter(_ != null).distinct.size +
+            appends.flatMap(_._1).count(_._1 == null)
+      })
+    assert(res.passed, res.status.toString)
   }
 }

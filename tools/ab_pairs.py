@@ -1,0 +1,152 @@
+#!/usr/bin/env python3
+"""Interleaved A/B of the CDC benchmark between two checkouts.
+
+    python3 tools/ab_pairs.py --parent DIR --change DIR --workload seed_jdbc \
+        --seeds 931-940 [--seconds 15] [--out FILE]
+
+DIR is the root of an unpacked checkout (`git archive REV | tar -x -C
+DIR`); each builds its own .bench_build/ on its first run. For every
+seed, one untraced `perfbench/run.py` run per side forms a pair; the
+side that goes first alternates from pair to pair, so a slow host phase
+does not always land on the same side.
+
+Every run must be correct: if any run fails or reports `correct:
+false`, the runs are listed and nothing is summarized (exit 1).
+Otherwise, per end-to-end metric of BENCHMARK.json, it prints each
+side's median and quartiles, the change's wins, the parent's IQR, and
+whether the gain rule holds: the change wins at least 9 of every 10
+pairs (and there are at least 10) and its median is better than the
+parent's by more than the parent's IQR. Each run's steal_share (the
+share of CPU time the hypervisor gave to other guests, from the run
+document) is listed too: read a pair next to it.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import time
+
+MIN_PAIRS = 10
+WIN_SHARE = 0.9
+
+
+def seeds_of(spec):
+    """'931-940' -> [931, ..., 940]."""
+    lo, _, hi = spec.partition("-")
+    return list(range(int(lo), int(hi or lo) + 1))
+
+
+def run_once(checkout, workload, seed, seconds):
+    t0 = time.time()
+    p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                       cwd=checkout, capture_output=True, text=True)
+    lines = p.stdout.strip().splitlines()
+    try:
+        line = json.loads(lines[-1]) if lines else None
+    except json.JSONDecodeError:
+        line = None
+    steal = None
+    doc = os.path.join(checkout, ".bench_build", "runs", f"{workload}-s{seed}-t0.json")
+    if line is not None and os.path.exists(doc):
+        with open(doc) as f:
+            steal = json.load(f).get("host", {}).get("steal_share")
+    return {"rc": p.returncode, "wall_s": time.time() - t0, "line": line,
+            "steal_share": steal, "stderr_tail": p.stderr.strip().splitlines()[-5:]}
+
+
+def share(v):
+    return "n/a" if v is None else f"{v:.4f}"
+
+
+def quartiles(values):
+    values = sorted(values)
+    med = statistics.median(values)
+    q1, _, q3 = statistics.quantiles(values, n=4) if len(values) >= 2 else (med, med, med)
+    return med, q1, q3
+
+
+def summarize(pairs, metrics):
+    """pairs: [{"seed", "parent", "change"}]; metrics: [(name, better)]."""
+    out = {}
+    n = len(pairs)
+    for name, better in metrics:
+        par = [p["parent"]["line"]["metrics"][name]["value"] for p in pairs]
+        chg = [p["change"]["line"]["metrics"][name]["value"] for p in pairs]
+        sign = 1 if better == "lower" else -1
+        wins = sum(1 for a, b in zip(par, chg) if sign * (a - b) > 0)
+        (pm, pq1, pq3), (cm, cq1, cq3) = quartiles(par), quartiles(chg)
+        gap = sign * (pm - cm)
+        out[name] = {"better": better, "pairs": n, "wins": wins,
+                     "parent": {"median": pm, "q1": pq1, "q3": pq3},
+                     "change": {"median": cm, "q1": cq1, "q3": cq3},
+                     "change_pct": (cm - pm) / pm * 100 if pm else float("nan"),
+                     "parent_iqr": pq3 - pq1,
+                     "gain_rule": n >= MIN_PAIRS and wins >= WIN_SHARE * n
+                     and gap > pq3 - pq1}
+    return out
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--parent", required=True)
+    ap.add_argument("--change", required=True)
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True)
+    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--out")
+    a = ap.parse_args()
+    sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
+        metrics = [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
+    seeds = seeds_of(a.seeds)
+    if len(seeds) < MIN_PAIRS:
+        print(f"note: {len(seeds)} pairs; the gain rule needs at least {MIN_PAIRS}",
+              flush=True)
+
+    pairs = []
+    for i, seed in enumerate(seeds):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        pair = {"seed": seed, "first": order[0]}
+        for side in order:
+            r = run_once(sides[side], a.workload, seed, a.seconds)
+            pair[side] = r
+            vals = " ".join(f"{k}={v['value']:.4g}"
+                            for k, v in ((r["line"] or {}).get("metrics") or {}).items())
+            print(f"seed={seed} {side:6s} rc={r['rc']} wall={r['wall_s']:.0f}s "
+                  f"correct={(r['line'] or {}).get('correct')} steal={share(r['steal_share'])} {vals}",
+                  flush=True)
+        pairs.append(pair)
+
+    if a.out:
+        with open(a.out, "w") as f:
+            json.dump({"workload": a.workload, "seconds": a.seconds, "sides": sides,
+                       "pairs": pairs}, f, indent=1)
+
+    bad = [(p["seed"], side) for p in pairs for side in ("parent", "change")
+           if p[side]["rc"] != 0 or not p[side]["line"] or not p[side]["line"].get("correct")]
+    if bad:
+        print("\nnot summarized: runs that failed or were not correct:")
+        for seed, side in bad:
+            print(f"  seed {seed} {side}: " + " | ".join(
+                next(p for p in pairs if p["seed"] == seed)[side]["stderr_tail"]))
+        sys.exit(1)
+
+    summary = summarize(pairs, metrics)
+    print(f"\n== {a.workload}: {len(pairs)} pairs, --seconds {a.seconds}, every run correct")
+    for name, s in summary.items():
+        p, c = s["parent"], s["change"]
+        print(f"  {name:8s} parent {p['median']:.4g} [{p['q1']:.4g}, {p['q3']:.4g}]  "
+              f"change {c['median']:.4g} [{c['q1']:.4g}, {c['q3']:.4g}]  "
+              f"{s['change_pct']:+.1f}%  wins {s['wins']}/{s['pairs']}  "
+              f"parent IQR {s['parent_iqr']:.4g}  gain rule {'holds' if s['gain_rule'] else 'fails'}")
+    print("  steal_share per pair (parent / change):")
+    for p in pairs:
+        print(f"    seed {p['seed']} ({p['first']} first): "
+              f"{share(p['parent']['steal_share'])} / {share(p['change']['steal_share'])}")
+
+
+if __name__ == "__main__":
+    main()
