@@ -339,7 +339,7 @@ private[sources] class TopicFileReader(file: String, columns: Array[String],
   *
   * {{{
   *   routed.write.format("graft.engine.sources.TopicSource")
-  *     .mode("append").save(topicDir)   // via FileTopicStore.appendV2
+  *     .mode("append").save(topicDir)   // via FileTopicStore.append
   * }}}
   *
   * Input must be the topic schema; the caller routes each row to its
@@ -361,21 +361,22 @@ private[sources] class TopicFileReader(file: String, columns: Array[String],
   *  - task commit protocol: rows stream to a hidden `.staging-*` file
   *    (invisible to both the Jackson readers and Hadoop listings),
   *    atomically renamed to `v2-*.json` on task commit, deleted on
-  *    abort — a failed/retried task never leaves visible partial data.
+  *    abort — a failed/retried task never leaves visible partial data,
+  *    and a task that gets no rows creates no file at all.
   */
 private[sources] class TopicWriteBuilder(dir: String, schema: StructType,
     bases: Option[String]) extends WriteBuilder {
   override def build(): Write = {
     require(schema.fieldNames.sameElements(FileTopicStore.schema.fieldNames),
       s"topic append expects columns ${FileTopicStore.schema.fieldNames.mkString(",")} " +
-        s"(got ${schema.fieldNames.mkString(",")}); use FileTopicStore.appendV2")
+        s"(got ${schema.fieldNames.mkString(",")}); use FileTopicStore.append")
     // types too, not just names: a LongType partition column would reach
     // TopicDataWriter's row.getInt as 4 of 8 UnsafeRow bytes — silent
     // misrouting/garbage offsets instead of a planning-time error
     schema.fields.zip(FileTopicStore.schema.fields).foreach { case (got, want) =>
       require(got.dataType == want.dataType,
         s"topic append column ${want.name} must be ${want.dataType} " +
-          s"(got ${got.dataType}); use FileTopicStore.appendV2")
+          s"(got ${got.dataType}); use FileTopicStore.append")
     }
     new TopicWrite(dir, bases)
   }
@@ -552,7 +553,7 @@ private[sources] class TopicBatchWrite(dir: String, bases: Option[String])
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // per-partition base offsets: one scan of the existing log (the
     // broker-metadata lookup), computed ONCE per append — or passed in
-    // by a caller that already knows them (FileTopicStore.appendV2's
+    // by a caller that already knows them (FileTopicStore.append's
     // per-file offset memo)
     val b = bases.map(TopicSource.decodeBases)
       .getOrElse(TopicLog.partitionBases(dir))
@@ -578,12 +579,11 @@ private[sources] class TopicDataWriter(dir: String, baseOf: Int => Long,
   private val mapper = new ObjectMapper()
   private val uuid = java.util.UUID.randomUUID().toString
   private val staging = Paths.get(dir, s".staging-$uuid")
-  /** The data file [[commit]] makes visible. */
+  /** The data file [[commit]] makes visible once a row was written. */
   val file: String = Paths.get(dir, s"v2-$uuid.json").toString
-  // UTF-8 explicitly: every reader (Files.lines, spark.read.json)
-  // decodes UTF-8 regardless of the JVM's default charset
-  private val out = Files.newBufferedWriter(staging,
-    java.nio.charset.StandardCharsets.UTF_8)
+  // opened on the first row, so a task that gets none leaves no empty
+  // file behind for every later read and offset scan to list
+  private var out: java.io.BufferedWriter = null
   // ISO-8601 UTC, same shape the Spark JSON writer emits (UTC session)
   private val ts = java.time.Instant.ofEpochMilli(nowMillis).toString
   private val counters = scala.collection.mutable.Map.empty[Int, Long]
@@ -596,6 +596,10 @@ private[sources] class TopicDataWriter(dir: String, baseOf: Int => Long,
     if (i >= maxPerPartition) throw new IllegalStateException(
       s"topic-partition $p exceeded $maxPerPartition rows in one epoch; " +
         "offsets would collide with the next epoch's block")
+    // UTF-8 explicitly: every reader (Files.lines, spark.read.json)
+    // decodes UTF-8 regardless of the JVM's default charset
+    if (out == null)
+      out = Files.newBufferedWriter(staging, java.nio.charset.StandardCharsets.UTF_8)
     val node = mapper.createObjectNode()
     if (!row.isNullAt(0)) node.put("key", row.getUTF8String(0).toString)
     if (!row.isNullAt(1)) node.put("value", row.getUTF8String(1).toString)
@@ -611,16 +615,19 @@ private[sources] class TopicDataWriter(dir: String, baseOf: Int => Long,
     counters.iterator.map { case (p, n) => p -> (baseOf(p) + n) }.toMap
 
   override def commit(): WriterCommitMessage = {
-    out.close()
-    Files.move(staging, Paths.get(file),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    if (out != null) {
+      out.close()
+      Files.move(staging, Paths.get(file),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
     TopicWriteDone()
   }
 
-  override def abort(): Unit = {
-    out.close()
-    Files.deleteIfExists(staging)
-  }
+  override def abort(): Unit =
+    if (out != null) {
+      out.close()
+      Files.deleteIfExists(staging)
+    }
 
   override def close(): Unit = ()
 }

@@ -171,29 +171,31 @@ class FileTopicStore(
     *    hidden staging file, atomic rename); the memo records that
     *    file's offsets directly, so a steady-state control append
     *    launches no Spark job at all.
-    *  - **distributed** — anything else (a seed scan of any size).
-    *    Offsets are assigned per partition with a `mapPartitions`
-    *    counter after a `repartition` on the topic partition (narrow
-    *    jobs, no global ordering point), so a 100 TB seed append stays
-    *    fully parallel. One of the few sanctioned RDD uses: genuine
-    *    per-partition indexing.
+    *  - **distributed** — anything else (a seed scan of any size) is
+    *    written by the V2 connector ([[graft.engine.sources.TopicSource]])
+    *    with the memo's bases as an option. Its Write requires the rows
+    *    clustered by topic-partition and sorted by (partition, seq), so
+    *    Spark plans the routing exchange and the in-task sort; each task
+    *    owns whole topic-partitions, continues their offsets from the
+    *    bases and commits its file atomically (hidden staging file,
+    *    rename), and a task that gets no rows writes no file. No global
+    *    ordering point, so a 100 TB seed append stays fully parallel.
     *
     * Intra-append ordering: a shuffle does NOT preserve row order, so
     * when the caller's frame carries a `seq` column (any numeric — see
     * [[graft.engine.cdc.Initializer.publishAll]]) rows are ordered
-    * within each partition by it before offsets are assigned, on both
-    * paths; offsets then follow the caller's sequence BY CONTRACT, not
+    * within each partition by it before offsets are assigned, in both
+    * modes; offsets then follow the caller's sequence BY CONTRACT, not
     * by accident of task layout. Without `seq`, intra-append order is
     * unspecified — valid only for appends carrying at most one message
     * per key (the snapshot-seed path); cross-append ordering is always
     * guaranteed by the per-partition base offsets, and a key lives in
     * exactly one partition. */
   def append(topic: String, kv: DataFrame): Unit = {
-    check("append", topic) // same injectable-fault point as appendV2
+    check("append", topic) // same injectable-fault point as writeStreamV2
     if (!exists(topic)) create(topic)
     val stats = dirtyRatioStats(topic)
     val session = kv.sparkSession
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
     val frame = routed(kv)
     localRows(frame) match {
       case Some(rows) =>
@@ -202,29 +204,16 @@ class FileTopicStore(
         // cannot claim the same offsets
         offsetMemo.synchronized {
           graft.engine.sources.TopicLog.writeLocal(dir(topic).toString, rows.toSeq,
-              bases(topic, session), now.getTime)
+              bases(topic, session), System.currentTimeMillis())
             .foreach { case (file, maxes) => remember(topic, file, maxes) }
         }
       case None =>
-        val b = bases(topic, session)
-        val rows = frame
-          .repartition(numPartitions.min(64), col("partition"))
-          .sortWithinPartitions(col("partition"), col("offset"))
-          .rdd.mapPartitions { it =>
-            // rows of several topic-partitions may share a task; index
-            // each topic-partition's rows independently (per-task counts
-            // suffice: repartition(col) sends each topic-partition to
-            // exactly one task)
-            val counters = scala.collection.mutable.Map.empty[Int, Long]
-            it.map { r =>
-              val p = r.getInt(2)
-              val i = counters.getOrElse(p, 0L); counters(p) = i + 1
-              org.apache.spark.sql.Row(r.getString(0), r.getString(1), p,
-                b.getOrElse(p, -1L) + 1L + i, now)
-            }
-          }
-        session.createDataFrame(rows, FileTopicStore.schema)
-          .write.mode("append").json(dir(topic).toString)
+        // the memo's bases ride the connector option, skipping its own scan
+        frame.write.format(classOf[graft.engine.sources.TopicSource].getName)
+          .option(graft.engine.sources.TopicSource.BasesOption,
+            graft.engine.sources.TopicSource.encodeBases(bases(topic, session)))
+          .mode("append")
+          .save(dir(topic).toString)
     }
     // dirty ratio = superseded keyed messages / keyed messages, from the
     // stats of the pre-append scan above (a production store keeps
@@ -278,8 +267,7 @@ class FileTopicStore(
     if (dirtyRatio.isEmpty || dirtyRatioExempt.contains(topic)) None
     else Some(topicStats(topic))
 
-  /** The one dirty-ratio compaction policy, shared by both append
-    * paths so they cannot diverge. */
+  /** The one dirty-ratio compaction policy. */
   private def maybeCompact(topic: String, stats: TopicStats): Unit =
     dirtyRatio.foreach { threshold =>
       if (stats.keyedTotal > 0 &&
@@ -405,29 +393,6 @@ class FileTopicStore(
   def readV2(topic: String): DataFrame =
     spark.read.format(classOf[graft.engine.sources.TopicSource].getName)
       .load(dir(topic).toString)
-
-  /** DataSource V2 append ([[graft.engine.sources.TopicSource]] write
-    * path): same contract as [[append]] — key-hash routing, optional
-    * `seq` intra-append ordering, per-partition offset continuation —
-    * but fully plan-level: the connector's Write declares
-    * `RequiresDistributionAndOrdering` (clustered by partition, sorted
-    * by sequence), so Spark plans the routing exchange + sort and each
-    * task streams its partitions' rows out with task-commit atomicity.
-    * No RDD hop, no driver-side rows. */
-  def appendV2(topic: String, kv: DataFrame): Unit = {
-    check("append", topic)
-    if (!exists(topic)) create(topic)
-    // same pre-append dirty-ratio stats and offset memo as append(); the
-    // memo's bases ride the connector option, skipping its own scan
-    val stats = dirtyRatioStats(topic)
-    routed(kv)
-      .write.format(classOf[graft.engine.sources.TopicSource].getName)
-      .option(graft.engine.sources.TopicSource.BasesOption,
-        graft.engine.sources.TopicSource.encodeBases(bases(topic, kv.sparkSession)))
-      .mode("append")
-      .save(dir(topic).toString)
-    stats.foreach(maybeCompact(topic, _))
-  }
 
   /** Route a (key, value[, seq]) frame into the connector's write
     * schema: key-hash topic-partition + intra-append sequence in the

@@ -298,6 +298,19 @@ class TopicStoreSpec extends AnyFunSuite {
     assert(offsets == (0L until 5L), s"offsets must stay contiguous: $offsets")
   }
 
+  test("a distributed append onto a known topic launches at most 3 Spark jobs") {
+    // 3 is what the former RDD writer (repartition + mapPartitions +
+    // write.json) launched here; the connector's planned exchange, sort
+    // and task commit must not cost more
+    val (store, _) = freshStore()
+    store.create("t")
+    store.append("t", Seq(("a", "1")).toDF("key", "value"))
+    val kv = Seq(("a", "2"), ("b", "1"), ("c", "1")).toDF("key", "value").repartition(2)
+    val jobs = JobCount(spark)(store.append("t", kv))
+    assert(jobs <= 3, s"a distributed append on a known topic launched $jobs jobs")
+    assert(store.readAll("t").collect().map(_.getLong(3)).toSeq == (0L until 4L))
+  }
+
   test("dirty-ratio stats never run for an exempt topic, on either append path") {
     def store(dirty: Option[Double]) = new FileTopicStore(spark,
       Files.createTempDirectory("graft-topics-ex").toString, sleeper = _ => (),
@@ -307,19 +320,20 @@ class TopicStoreSpec extends AnyFunSuite {
     def history(s: FileTopicStore, topic: String): Unit = {
       s.create(topic)
       (1 to 4).foreach(i => s.append(topic, Seq(("k", s"v$i")).toDF("key", "value")))
-      s.appendV2(topic, Seq(("k", "w0")).toDF("key", "value"))
-      s.append(topic, Seq(("k", "v5")).toDF("key", "value")) // memo scans the V2 file
+      s.append(topic, Seq(("k", "w0")).toDF("key", "value").repartition(2))
+      // the memo scans the distributed append's file
+      s.append(topic, Seq(("k", "v5")).toDF("key", "value"))
     }
     Seq(exempt -> "c", plain -> "c", exempt -> "d").foreach { case (s, t) => history(s, t) }
     // the memo now knows every file, so a local append needs no job; a
     // stats pass would launch at least one
     assert(JobCount(spark)(exempt.append("c", Seq(("k", "v6")).toDF("key", "value"))) == 0)
     plain.append("c", Seq(("k", "v6")).toDF("key", "value"))
-    val v2 = Seq(exempt -> "c", plain -> "c", exempt -> "d").map { case (s, t) =>
-      JobCount(spark)(s.appendV2(t, Seq(("k", "w1")).toDF("key", "value")))
+    val jobs = Seq(exempt -> "c", plain -> "c", exempt -> "d").map { case (s, t) =>
+      JobCount(spark)(s.append(t, Seq(("k", "w1")).toDF("key", "value").repartition(2)))
     }
-    assert(v2(0) == v2(1), s"appendV2 to an exempt topic ran extra jobs: $v2")
-    assert(v2(2) > v2(1), s"a non-exempt topic must still pay the stats pass: $v2")
+    assert(jobs(0) == jobs(1), s"a distributed append to an exempt topic ran extra jobs: $jobs")
+    assert(jobs(2) > jobs(1), s"a non-exempt topic must still pay the stats pass: $jobs")
     assert(exempt.readAll("c").count() == 8, "an exempt topic is never compacted")
   }
 

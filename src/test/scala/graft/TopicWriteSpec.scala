@@ -1,17 +1,22 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.topics.FileTopicStore
 
-/** DataSource V2 write path ([[graft.engine.sources.TopicSource]]):
-  * appendV2 must be contract-identical to the RDD-based append() —
-  * key-hash routing, per-partition contiguous offsets continuing the
-  * existing log, seq-ordered intra-append offsets — and interoperate
-  * with every reader and with compaction. */
+/** DataSource V2 write path ([[graft.engine.sources.TopicSource]]), the
+  * writer of every distributed `FileTopicStore.append` and of
+  * `writeStreamV2`: key-hash routing, per-partition contiguous offsets
+  * continuing the existing log (whichever append mode wrote it),
+  * seq-ordered intra-append offsets, one `v2-*.json` file per task that
+  * got rows — and interoperation with every reader and with compaction.
+  * A `Seq(...).toDF` frame is a `LocalRelation` and takes the
+  * driver-local mode, so the batch tests here `.repartition` it. */
 class TopicWriteSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.session
   private def newStore(parts: Int = 4): (FileTopicStore, String) = {
@@ -19,12 +24,27 @@ class TopicWriteSpec extends AnyFunSuite {
     (new FileTopicStore(spark, root, sleeper = _ => (), numPartitions = parts), root)
   }
 
-  test("appendV2 round-trips through readAll/readV2 with contiguous per-partition offsets") {
-    val (store, _) = newStore()
+  /** A topic's visible data files (hidden staging files excluded). */
+  private def dataFiles(root: String, topic: String): Seq[Path] = {
+    val ls = Files.list(Paths.get(root, topic))
+    try ls.iterator().asScala
+      .filter { p =>
+        val name = p.getFileName.toString
+        name.endsWith(".json") && !name.startsWith(".")
+      }.toVector
+    finally ls.close()
+  }
+
+  test("distributed append round-trips with contiguous offsets") {
+    val (store, root) = newStore()
     store.create("t")
     import spark.implicits._
-    store.appendV2("t", Seq(("a", "1"), ("b", "2"), ("c", "3"), (null, "4"))
-      .toDF("key", "value"))
+    store.append("t", Seq(("a", "1"), ("b", "2"), ("c", "3"), (null, "4"))
+      .toDF("key", "value").repartition(2))
+    // the connector wrote it: its files, not Spark's JSON writer's part-*
+    val names = dataFiles(root, "t").map(_.getFileName.toString)
+    assert(names.nonEmpty && names.forall(n => n.startsWith("v2-") && n.endsWith(".json")),
+      s"a distributed append must write only v2-*.json data files: $names")
     val rows = store.readAll("t").collect()
     assert(rows.length == 4)
     // per-partition offsets are 0..n-1 with no gaps
@@ -40,15 +60,15 @@ class TopicWriteSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3))).toSeq)
   }
 
-  test("appendV2 continues offsets written by the RDD append path, and vice versa") {
+  test("distributed and local appends share one offset order") {
     val (store, _) = newStore()
     store.create("t")
     import spark.implicits._
     store.append("t", Seq(("k1", "a"), ("k2", "b")).toDF("key", "value"))
-    store.appendV2("t", Seq(("k1", "c")).toDF("key", "value"))
+    store.append("t", Seq(("k1", "c")).toDF("key", "value").repartition(2))
     store.append("t", Seq(("k1", "d")).toDF("key", "value"))
     // k1's messages are one partition, offsets strictly increasing in
-    // append order regardless of which path wrote them
+    // append order regardless of which mode wrote them
     val k1 = store.readAll("t").filter(col("key") === "k1")
       .orderBy(col("offset")).collect()
     assert(k1.map(_.getString(1)).toSeq == Seq("a", "c", "d"))
@@ -59,7 +79,7 @@ class TopicWriteSpec extends AnyFunSuite {
     assert(last.map(_.getString(1)).toSeq == Seq("d"))
   }
 
-  test("appendV2 honors the seq column: offsets follow the caller's sequence per key") {
+  test("distributed append honors the seq column per key") {
     val (store, _) = newStore(parts = 1)
     store.create("t")
     import spark.implicits._
@@ -67,7 +87,7 @@ class TopicWriteSpec extends AnyFunSuite {
     val kv = Seq(("ccd", "active", 2L), ("ccd", "preparing", 0L), ("ccd", "seeding", 1L))
       .toDF("key", "value", "seq")
       .repartition(3) // multiple input partitions: arrival order is NOT seq order
-    store.appendV2("t", kv)
+    store.append("t", kv)
     val vals = store.readAll("t").orderBy(col("offset")).collect().map(_.getString(1))
     assert(vals.toSeq == Seq("preparing", "seeding", "active"))
     // compaction (keyed max-offset) lands on the lifecycle's final state
@@ -79,7 +99,7 @@ class TopicWriteSpec extends AnyFunSuite {
     store.create("t")
     import spark.implicits._
     (1 to 3).foreach { i =>
-      store.appendV2("t", Seq(("k1", s"v$i"), ("k2", s"w$i")).toDF("key", "value"))
+      store.append("t", Seq(("k1", s"v$i"), ("k2", s"w$i")).toDF("key", "value").repartition(2))
     }
     store.compact("t")
     val rows = store.readAll("t").collect()
@@ -94,7 +114,7 @@ class TopicWriteSpec extends AnyFunSuite {
     store.create("t")
     // seed via batch first: streaming offsets must sort after these
     import spark.implicits._
-    store.appendV2("t", Seq(("k1", "batch0")).toDF("key", "value"))
+    store.append("t", Seq(("k1", "batch0")).toDF("key", "value").repartition(2))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(String, String)]
     val q = store.writeStreamV2("t", in.toDF().toDF("key", "value"),
@@ -156,7 +176,7 @@ class TopicWriteSpec extends AnyFunSuite {
     store.create("a")
     store.create("b")
     import spark.implicits._
-    store.appendV2("a", Seq(("k1", "1"), ("k2", "2")).toDF("key", "value"))
+    store.append("a", Seq(("k1", "1"), ("k2", "2")).toDF("key", "value").repartition(2))
     val in = spark.readStream
       .format(classOf[graft.engine.sources.TopicSource].getName)
       .load(java.nio.file.Paths.get(root, "a").toString)
@@ -165,7 +185,7 @@ class TopicWriteSpec extends AnyFunSuite {
       Files.createTempDirectory("graft-relay-ckpt").toString)
     try {
       q.processAllAvailable()
-      store.appendV2("a", Seq(("k1", "3")).toDF("key", "value"))
+      store.append("a", Seq(("k1", "3")).toDF("key", "value").repartition(2))
       q.processAllAvailable()
     } finally q.stop()
     val out = store.readCompacted("b").filter(col("key").isNotNull).collect()
@@ -197,7 +217,7 @@ class TopicWriteSpec extends AnyFunSuite {
     val (store, root) = newStore()
     store.create("t")
     import spark.implicits._
-    store.appendV2("t", Seq(("a", "1")).toDF("key", "value"))
+    store.append("t", Seq(("a", "1")).toDF("key", "value").repartition(2))
     val ls = Files.list(java.nio.file.Paths.get(root, "t"))
     try {
       val names = ls.iterator()
@@ -205,5 +225,27 @@ class TopicWriteSpec extends AnyFunSuite {
         .map(_.getFileName.toString).filter(_.startsWith(".staging")).toList
       assert(bad.isEmpty, s"staging leftovers: $bad")
     } finally ls.close()
+  }
+
+  test("a distributed append writes no empty data file for a task without rows") {
+    // AQE off, so none of the 4 shuffle partitions is coalesced away and
+    // three of the write's tasks get no rows (numPartitions = 1); a
+    // sibling session, so the shared session's conf never changes
+    val session = SparkTest.session.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    session.conf.set("spark.sql.shuffle.partitions", "4")
+    val root = Files.createTempDirectory("graft-v2-empty").toString
+    val store = new FileTopicStore(session, root, sleeper = _ => ())
+    store.create("t")
+    import session.implicits._
+    (0 until 2).foreach { i =>
+      store.append("t", Seq(("a", s"$i"), ("b", s"$i"), ("c", s"$i")).toDF("key", "value")
+        .repartition(3))
+    }
+    val files = dataFiles(root, "t")
+    assert(files.size == 2 && files.forall(Files.size(_) > 0),
+      s"one non-empty file per append expected: ${files.map(f => f -> Files.size(f))}")
+    val offsets = store.readAll("t").collect().map(_.getLong(3)).toSeq
+    assert(offsets == (0L until 6L), s"offsets must stay contiguous: $offsets")
   }
 }

@@ -16,9 +16,15 @@ Otherwise, per end-to-end metric of BENCHMARK.json, it prints each
 side's median and quartiles, the change's wins, the parent's IQR, and
 whether the gain rule holds: the change wins at least 9 of every 10
 pairs (and there are at least 10) and its median is better than the
-parent's by more than the parent's IQR. Each run's steal_share (the
-share of CPU time the hypervisor gave to other guests, from the run
-document) is listed too: read a pair next to it.
+parent's by more than the parent's IQR. It also prints the
+no-regression verdict against the metric's `bound` (a fraction of the
+parent's median): `worse` when the change's median is worse than the
+parent's by more than the bound; otherwise `unresolved` when the
+parent's IQR/median exceeds the bound (its runs spread too widely to
+tell), unless every change run beats every parent run; otherwise
+`holds`. Each run's steal_share (the share of CPU time the hypervisor
+gave to other guests, from the run document) is listed too: read a
+pair next to it.
 """
 import argparse
 import json
@@ -68,11 +74,23 @@ def quartiles(values):
     return med, q1, q3
 
 
+def verdict(par, chg, better, bound):
+    """No-regression verdict of one metric: worse / unresolved / holds."""
+    sign = 1 if better == "lower" else -1
+    (pm, pq1, pq3), cm = quartiles(par), statistics.median(chg)
+    if sign * (cm - pm) > bound * abs(pm):
+        return "worse"
+    every_win = max(sign * c for c in chg) < min(sign * p for p in par)
+    if (pq3 - pq1) > bound * abs(pm) and not every_win:
+        return "unresolved"
+    return "holds"
+
+
 def summarize(pairs, metrics):
-    """pairs: [{"seed", "parent", "change"}]; metrics: [(name, better)]."""
+    """pairs: [{"seed", "parent", "change"}]; metrics: [(name, better, bound)]."""
     out = {}
     n = len(pairs)
-    for name, better in metrics:
+    for name, better, bound in metrics:
         par = [p["parent"]["line"]["metrics"][name]["value"] for p in pairs]
         chg = [p["change"]["line"]["metrics"][name]["value"] for p in pairs]
         sign = 1 if better == "lower" else -1
@@ -85,7 +103,8 @@ def summarize(pairs, metrics):
                      "change_pct": (cm - pm) / pm * 100 if pm else float("nan"),
                      "parent_iqr": pq3 - pq1,
                      "gain_rule": n >= MIN_PAIRS and wins >= WIN_SHARE * n
-                     and gap > pq3 - pq1}
+                     and gap > pq3 - pq1,
+                     "bound": bound, "verdict": verdict(par, chg, better, bound)}
     return out
 
 
@@ -100,7 +119,7 @@ def main():
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
-        metrics = [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
+        metrics = [(m["name"], m["better"], m["bound"]) for m in json.load(f)["end_to_end"]]
     seeds = seeds_of(a.seeds)
     if len(seeds) < MIN_PAIRS:
         print(f"note: {len(seeds)} pairs; the gain rule needs at least {MIN_PAIRS}",
@@ -141,7 +160,8 @@ def main():
         print(f"  {name:8s} parent {p['median']:.4g} [{p['q1']:.4g}, {p['q3']:.4g}]  "
               f"change {c['median']:.4g} [{c['q1']:.4g}, {c['q3']:.4g}]  "
               f"{s['change_pct']:+.1f}%  wins {s['wins']}/{s['pairs']}  "
-              f"parent IQR {s['parent_iqr']:.4g}  gain rule {'holds' if s['gain_rule'] else 'fails'}")
+              f"parent IQR {s['parent_iqr']:.4g}  gain rule {'holds' if s['gain_rule'] else 'fails'}  "
+              f"no regression (bound {s['bound']:g}): {s['verdict']}")
     print("  steal_share per pair (parent / change):")
     for p in pairs:
         print(f"    seed {p['seed']} ({p['first']} first): "
