@@ -42,8 +42,8 @@ class GraftSystem(
     val releaseSeed: String => Unit = _ => ()) {
 
   // the CONTROL topic is exempt from auto-compaction: the submission
-  // loop keeps a streaming tail on it, and the file source would
-  // re-read a rewritten log as new input (see FileTopicStore.compact)
+  // loop keeps a streaming tail on it, and the tail tracks files, so it
+  // would re-read a rewritten log as new input (see FileTopicStore.compact)
   val topics: TopicStore =
     new FileTopicStore(spark, root, numPartitions = topicPartitions,
       dirtyRatio = dirtyRatio, dirtyRatioExempt = Set(controlTopic))

@@ -49,15 +49,18 @@ class Initializer(
   import spark.implicits._
 
   /** Resume scan (reference initializer.clj:27-39 — inferred cdc-util
-    * `topic->last-known-ccd-states`): read the whole control topic,
-    * compact to last state per key, drop terminal states, sort by
-    * timestamp. Small by construction (one row per captured table), so
-    * collecting to the driver's work queue mirrors the reference's
-    * channel of CCDs. */
+    * `topic->last-known-ccd-states`): read the compacted control topic,
+    * reduce it to last state per key, drop terminal states, sort by
+    * timestamp. The outer reduction folds every un-keyed message (a
+    * table-less CCD's `submitted` and its `error`) into one group whose
+    * latest state wins, the same result as over the full log, so a
+    * restart does not re-run a terminal table-less CCD. Small by
+    * construction (one row per captured table), so collecting to the
+    * driver's work queue mirrors the reference's channel of CCDs. */
   def backlog(): Seq[Ccd] = {
     if (!topics.exists(controlTopic)) return Seq.empty
     val compacted = Transforms.lastStatePerKey(Seq("key"), Seq("offset"))(
-      topics.readAll(controlTopic))
+      topics.readCompacted(controlTopic))
     decodeCcds(compacted)
       .filter(c => !Status.terminal.contains(c.status))
       .sortBy(_.timestamp.getTime)

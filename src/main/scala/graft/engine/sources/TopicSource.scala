@@ -12,7 +12,6 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.{streaming => rstreaming}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.write.{streaming => wstreaming}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,6 +28,11 @@ import graft.engine.topics.FileTopicStore
   *     .load(topicDir)          // (key, value, partition, offset, ts)
   * }}}
   *
+  *  - **one pinned listing per relation** — the table lists the
+  *    topic's data files once, when `load()` creates it, and every
+  *    batch scan of that relation plans from that listing: a frame is
+  *    a snapshot, and later appends (always new files) are invisible
+  *    to every action on it
   *  - **one InputPartition per log file** — scan parallelism follows
   *    the append history, no single-task reads
   *  - **predicate pushdown** on `partition` and `offset`
@@ -39,9 +43,10 @@ import graft.engine.topics.FileTopicStore
   *    key-only compaction scan materializes one column, not five
   *
   * Readers parse with Jackson directly (no inner Spark session) and
-  * emit `InternalRow`s in the pruned schema. TopicSourceSpec proves
-  * byte-equality with the `spark.read.json` path and asserts the
-  * pushdown reaches the scan.
+  * emit `InternalRow`s in the pruned schema; this is the only parser of
+  * topic files ([[FileTopicStore]]'s batch reads and its streaming
+  * tail). TopicSourceSpec proves row equality with Spark's JSON reader
+  * and asserts the pushdown reaches the scan.
   */
 object TopicSource {
   /** Write option carrying known per-partition base offsets
@@ -72,21 +77,25 @@ class TopicSource extends TableProvider {
 
 private[sources] class TopicTable(dir: String) extends Table
   with SupportsRead with SupportsWrite {
+  // the batch snapshot: listed once, when the relation is created, so
+  // every action on one frame (and both branches of a self-union) scans
+  // one file set, as Spark's eager InMemoryFileIndex does for file sources
+  private val files: Seq[String] = TopicLog.dataFiles(dir)
   override def name(): String = s"graft_topic($dir)"
   override def schema(): StructType = FileTopicStore.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE)
+      TableCapability.BATCH_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TopicScanBuilder(dir,
+    new TopicScanBuilder(dir, files,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new TopicWriteBuilder(dir, info.schema(),
       Option(info.options.get(TopicSource.BasesOption)))
 }
 
-private[sources] class TopicScanBuilder(dir: String,
-    maxFilesPerTrigger: Option[Int] = None) extends ScanBuilder
+private[sources] class TopicScanBuilder(dir: String, files: Seq[String],
+    maxFilesPerTrigger: Option[Int]) extends ScanBuilder
   with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var required: StructType = FileTopicStore.schema
@@ -112,12 +121,13 @@ private[sources] class TopicScanBuilder(dir: String,
     required = requiredSchema
 
   override def build(): Scan =
-    new TopicScan(dir, required, pushed, maxFilesPerTrigger)
+    new TopicScan(dir, files, required, pushed, maxFilesPerTrigger)
 }
 
-private[sources] class TopicScan(dir: String, required: StructType,
-    pushed: Array[Filter],
-    maxFilesPerTrigger: Option[Int] = None) extends Scan with Batch {
+/** @param files the table's pinned listing, which a batch scan plans
+  *   from; a micro-batch stream lists the directory on every trigger */
+private[sources] class TopicScan(dir: String, files: Seq[String], required: StructType,
+    pushed: Array[Filter], maxFilesPerTrigger: Option[Int]) extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -126,8 +136,7 @@ private[sources] class TopicScan(dir: String, required: StructType,
       s"pushed=[${pushed.mkString(",")}]"
 
   override def planInputPartitions(): Array[InputPartition] =
-    TopicLog.dataFiles(dir)
-      .map(f => TopicFilePartition(f): InputPartition).toArray
+    files.map(f => TopicFilePartition(f): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TopicReaderFactory(required.fieldNames, pushed)
@@ -148,7 +157,7 @@ private[sources] class TopicScan(dir: String, required: StructType,
   * FileTopicStore.compact). Pushed offset/partition predicates apply
   * inside the readers exactly as in batch. */
 private[sources] class TopicMicroBatchStream(dir: String, columns: Array[String],
-    pushed: Array[Filter], maxFilesPerTrigger: Option[Int] = None)
+    pushed: Array[Filter], maxFilesPerTrigger: Option[Int])
   extends rstreaming.MicroBatchStream with rstreaming.SupportsAdmissionControl {
   import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -165,12 +174,12 @@ private[sources] class TopicMicroBatchStream(dir: String, columns: Array[String]
     * holds — compared at FULL FileTime precision (nanoseconds where
     * the FS provides them), not truncated millis, so the name
     * tiebreak only decides genuinely same-instant commits (which can
-    * only be same-epoch tasks — disjoint topic-partitions,
-    * order-free). A file can be retired by dirty-ratio compaction
-    * (which may run inside a concurrent append) between the listing
-    * and its stat — such a file's rows were re-written into the
-    * compacted log a reader would pick up instead, so it is dropped,
-    * not an error. */
+    * only be tasks of one distributed append — disjoint
+    * topic-partitions, order-free). A file can be retired by
+    * dirty-ratio compaction (which may run inside a concurrent append)
+    * between the listing and its stat — such a file's rows were
+    * re-written into the compacted log a reader would pick up instead,
+    * so it is dropped, not an error. */
   private def listFiles(): Seq[String] =
     TopicLog.dataFiles(dir)
       .flatMap { f =>
@@ -193,10 +202,13 @@ private[sources] class TopicMicroBatchStream(dir: String, columns: Array[String]
   override def initialOffset(): rstreaming.Offset = TopicStreamOffset(Seq.empty)
   override def latestOffset(): rstreaming.Offset = TopicStreamOffset(listFiles())
 
-  /** Admission control (`maxFilesPerTrigger` option — same knob as the
-    * store's JSON readStream): a large backlog is admitted N files per
+  /** Admission control (`maxFilesPerTrigger` option; the store's
+    * control tail sets 100): a large backlog is admitted N files per
     * micro-batch instead of flooding the first one, the engine analog
-    * of the reference's bounded work queue (initializer.clj:87). */
+    * of the reference's bounded work queue (initializer.clj:87). This
+    * stream lacks `SupportsTriggerAvailableNow`, so under
+    * `Trigger.AvailableNow` Spark wraps it and admits the whole backlog
+    * in one batch. */
   override def getDefaultReadLimit: rstreaming.ReadLimit =
     maxFilesPerTrigger.map(rstreaming.ReadLimit.maxFiles)
       .getOrElse(rstreaming.ReadLimit.allAvailable())
@@ -359,7 +371,7 @@ private[sources] class TopicFileReader(file: String, columns: Array[String],
   *    the store's per-file offset memo); each task continues its
   *    partitions' sequences locally.
   *  - task commit protocol: rows stream to a hidden `.staging-*` file
-  *    (invisible to both the Jackson readers and Hadoop listings),
+  *    (invisible to the topic listing, [[TopicLog.dataFiles]]),
   *    atomically renamed to `v2-*.json` on task commit, deleted on
   *    abort — a failed/retried task never leaves visible partial data,
   *    and a task that gets no rows creates no file at all.
@@ -393,12 +405,6 @@ private[sources] class TopicWrite(dir: String, bases: Option[String] = None)
     Expressions.sort(Expressions.identity("offset"), SortDirection.ASCENDING))
 
   override def toBatch: BatchWrite = new TopicBatchWrite(dir, bases)
-
-  // one StreamingWrite per query: Spark re-wraps it in a fresh
-  // MicroBatchWrite each epoch, so any per-query state (the offset
-  // base) must live here, not be recomputed per factory call
-  private lazy val streamingWrite = new TopicStreamingWrite(dir)
-  override def toStreaming: wstreaming.StreamingWrite = streamingWrite
 }
 
 /** The topic log's driver-side helpers: the data-file listing every
@@ -411,8 +417,8 @@ private[engine] object TopicLog {
     * dot-prefixed names. Hidden files are staging/compaction
     * artifacts by convention (FileTopicStore.compact stages its
     * crash-safe swap dot-prefixed; the V2 writer stages as
-    * `.staging-*`), and Spark's own InMemoryFileIndex hides them from
-    * the classic read paths — a V2 listing that matched bare
+    * `.staging-*`), as Spark's own InMemoryFileIndex hides them from
+    * its file sources — a listing that matched bare
     * `endsWith(".json")` would read a crashed compaction's staged
     * copies as data (every surviving row delivered twice) and could
     * open a hidden file mid-rename. Previously four call sites each
@@ -478,10 +484,6 @@ private[engine] object TopicLog {
   def partitionBases(dir: String): Map[Int, Long] =
     merge(fileMaxes(org.apache.spark.sql.SparkSession.active, dataFiles(dir)).values)
 
-  /** First free offset across all partitions (0 for an empty log). */
-  def nextOffset(dir: String): Long =
-    partitionBases(dir).values.maxOption.map(_ + 1L).getOrElse(0L)
-
   /** Driver-local append: write already-routed rows in the connector's
     * write schema (key, value, partition, offset = intra-append
     * sequence, ts ignored) as ONE file through [[TopicDataWriter]] —
@@ -504,48 +506,6 @@ private[engine] object TopicLog {
       }
       Some(writer.file -> writer.lastOffsets)
     }
-}
-
-/** Streaming producer (sink half of the micro-batch tail): each epoch's
-  * tasks stream their topic-partitions' rows to staging files made
-  * visible on task commit — at-least-once, like the store's append
-  * contract. Offsets stay unique and per-partition monotone WITHOUT any
-  * cross-epoch coordination: `base + (epochId << 32) + localIdx`, where
-  * `base` (the log's max offset at query start) is computed ONCE per
-  * query run, lazily on the first epoch — epoch ids only grow, including
-  * across checkpoint restarts. Within a run an epoch replay rewrites the
-  * SAME offsets; after a crash-restart the recomputed base shifts a
-  * replayed epoch's offsets upward, so redelivered rows appear as
-  * fresher duplicates — convergent under max-offset keyed compaction
-  * (the same at-least-once contract Kafka producers without
-  * idempotence give you). Non-contiguous by design; consumers
-  * (compaction, ordered reads) need only the order, exactly like Kafka
-  * consumers must not assume offset density. Capacity: 2^31 epochs per
-  * run and 2^32 rows per epoch×partition; the writer fails fast past
-  * the block width instead of colliding into the next epoch's block. */
-private[sources] class TopicStreamingWrite(dir: String)
-  extends wstreaming.StreamingWrite {
-  private lazy val base: Long = TopicLog.nextOffset(dir)
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): wstreaming.StreamingDataWriterFactory =
-    new TopicStreamingWriterFactory(dir, base)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[sources] class TopicStreamingWriterFactory(dir: String, base: Long)
-  extends wstreaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    require(epochId >= 0 && epochId < (1L << 31),
-      s"epoch $epochId exceeds the offset scheme's 2^31-epoch capacity")
-    // per-epoch offset block: every partition starts at the same
-    // epoch-scoped floor; task-local indices make offsets unique because
-    // the required clustering gives each topic-partition one owner task
-    val epochBase = base + (epochId << 32)
-    new TopicDataWriter(dir, _ => epochBase - 1L, System.currentTimeMillis(),
-      maxPerPartition = 1L << 32)
-  }
 }
 
 private[sources] class TopicBatchWrite(dir: String, bases: Option[String])
@@ -572,8 +532,7 @@ private[sources] class TopicWriterFactory(dir: String, bases: Map[Int, Long],
 private[sources] case class TopicWriteDone() extends WriterCommitMessage
 
 private[sources] class TopicDataWriter(dir: String, baseOf: Int => Long,
-    nowMillis: Long, maxPerPartition: Long = Long.MaxValue)
-  extends DataWriter[InternalRow] {
+    nowMillis: Long) extends DataWriter[InternalRow] {
   import com.fasterxml.jackson.databind.ObjectMapper
 
   private val mapper = new ObjectMapper()
@@ -593,11 +552,8 @@ private[sources] class TopicDataWriter(dir: String, baseOf: Int => Long,
   override def write(row: InternalRow): Unit = {
     val p = row.getInt(2)
     val i = counters.getOrElse(p, 0L); counters(p) = i + 1
-    if (i >= maxPerPartition) throw new IllegalStateException(
-      s"topic-partition $p exceeded $maxPerPartition rows in one epoch; " +
-        "offsets would collide with the next epoch's block")
-    // UTF-8 explicitly: every reader (Files.lines, spark.read.json)
-    // decodes UTF-8 regardless of the JVM's default charset
+    // UTF-8 explicitly: the reader (Files.lines) decodes UTF-8
+    // regardless of the JVM's default charset
     if (out == null)
       out = Files.newBufferedWriter(staging, java.nio.charset.StandardCharsets.UTF_8)
     val node = mapper.createObjectNode()

@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
 /** Keyed, compacted, offset-ordered message topics (the reference's
   * Kafka surface: topic_store.clj + protocols.clj:6-22), backed by
   * directories of JSON-lines files — the environment ships no Kafka
-  * jar, and a file-backed topic is readable both batch
-  * (`spark.read.json`) and as a Structured Streaming file source
-  * (`spark.readStream`), which is all the reference's dataflow needs.
+  * jar. One connector, [[graft.engine.sources.TopicSource]], reads a
+  * topic both batch and as a Structured Streaming micro-batch tail,
+  * which is all the reference's dataflow needs.
   *
   * Message schema: (key, value, offset, ts). `offset` is a
   * per-append-ordered total order used for last-state-per-key
@@ -45,7 +45,7 @@ trait TopicStore {
     * on the driver and return it materialized, or return a lazy frame
     * over the log (see [[FileTopicStore.readCompacted]]). */
   def readCompacted(topic: String): DataFrame
-  /** Streaming tail (file source). */
+  /** Streaming tail. */
   def readStream(topic: String): DataFrame
 }
 
@@ -83,10 +83,10 @@ object FileTopicStore {
   *                      makes compaction an invariant rather than a
   *                      maintenance chore (reference topic_store.clj:13-16).
   * @param dirtyRatioExempt topics the policy must never touch — any
-  *                      topic with a live streaming tail (the file
-  *                      source would re-read the rewritten log; see
-  *                      [[compact]]). GraftSystem exempts its control
-  *                      topic. */
+  *                      topic with a live streaming tail (the tail
+  *                      tracks files, so it would re-read the rewritten
+  *                      log; see [[compact]]). GraftSystem exempts its
+  *                      control topic. */
 class FileTopicStore(
     spark: SparkSession,
     root: String,
@@ -192,7 +192,7 @@ class FileTopicStore(
     * guaranteed by the per-partition base offsets, and a key lives in
     * exactly one partition. */
   def append(topic: String, kv: DataFrame): Unit = {
-    check("append", topic) // same injectable-fault point as writeStreamV2
+    check("append", topic)
     if (!exists(topic)) create(topic)
     val stats = dirtyRatioStats(topic)
     val session = kv.sparkSession
@@ -280,8 +280,7 @@ class FileTopicStore(
   private def topicStats(topic: String): TopicStats = {
     if (!hasFiles(topic)) TopicStats(0L, 0L)
     else {
-      val r = spark.read.schema(FileTopicStore.schema)
-        .json(dir(topic).toString)
+      val r = scan(topic)
         .agg(count(col("key")), // count() skips nulls
           countDistinct(col("key")))
         .head()
@@ -302,14 +301,14 @@ class FileTopicStore(
     * compaction needs a key).
     *
     * Do NOT compact a topic while a streaming tail is attached: the
-    * file source tracks FILES, so it would re-read the rewritten log
+    * tail tracks FILES, so it would re-read the rewritten log
     * as new input (duplicate deliveries — convergent under keyed
     * compaction semantics, but wasteful). Run compaction as batch-side
     * maintenance between streaming sessions, like Kafka's cleaner runs
     * outside the fetch path. */
   def compact(topic: String): Unit = {
     // Stale artifacts of a compaction that DIED mid-flight (hidden by
-    // construction — dot-prefixed names are invisible to Spark's file
+    // construction — dot-prefixed names are invisible to the topic
     // listing, so they never polluted a read): clear them first.
     locally {
       val ls = Files.list(dir(topic))
@@ -326,7 +325,7 @@ class FileTopicStore(
         .map(Paths.get(_))
     // Survivor set from ONE pinned listing — readCompacted IS the
     // survivor semantics (latest per key ∪ all un-keyed rows). Deriving
-    // the un-keyed half from a second spark.read would list the
+    // the un-keyed half from a second read would list the
     // directory at a different instant and could tear the snapshot
     // between the two halves.
     val survivors = readCompacted(topic)
@@ -383,16 +382,18 @@ class FileTopicStore(
   }
 
   def readAll(topic: String): DataFrame =
-    spark.read.schema(FileTopicStore.schema).json(dir(topic).toString)
-      .orderBy(col("partition"), col("offset"))
+    scan(topic).orderBy(col("partition"), col("offset"))
 
-  /** DataSource V2 read of the full log
-    * ([[graft.engine.sources.TopicSource]]): per-file scan splits,
-    * offset/partition predicate pushdown, column pruning. Unordered —
-    * consumers that need offset order sort explicitly. */
-  def readV2(topic: String): DataFrame =
-    spark.read.format(classOf[graft.engine.sources.TopicSource].getName)
-      .load(dir(topic).toString)
+  /** The full log, unordered, through the connector: the relation lists
+    * the topic's data files once, here, and every action on the frame
+    * scans that listing (see [[graft.engine.sources.TopicSource]]). A
+    * topic that does not exist fails here. */
+  private def scan(topic: String): DataFrame = {
+    val d = dir(topic)
+    if (!Files.isDirectory(d))
+      throw new java.io.FileNotFoundException(s"topic $topic does not exist: $d")
+    spark.read.format(classOf[graft.engine.sources.TopicSource].getName).load(d.toString)
+  }
 
   /** Route a (key, value[, seq]) frame into the connector's write
     * schema: key-hash topic-partition + intra-append sequence in the
@@ -409,22 +410,6 @@ class FileTopicStore(
       lit(null).cast("timestamp").as("ts"))
   }
 
-  /** Streaming producer: run a streaming (key, value) frame into the
-    * topic through the connector's STREAMING_WRITE path — the
-    * `writeStream → topic` half of the V2 connector, replacing
-    * foreachBatch+append for simple keyed sinks. At-least-once; offsets
-    * are per-partition monotone across epochs (epoch-block scheme, see
-    * TopicStreamingWrite). */
-  def writeStreamV2(topic: String, kv: DataFrame,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    check("append", topic)
-    if (!exists(topic)) create(topic)
-    routed(kv)
-      .writeStream.format(classOf[graft.engine.sources.TopicSource].getName)
-      .option("checkpointLocation", checkpoint)
-      .start(dir(topic).toString)
-  }
-
   /** Compaction-on-read: latest row per KEY, with every un-keyed row
     * passed through — the same contract as [[compact]] (a
     * groupBy over `key` would collapse all null keys into one
@@ -434,13 +419,10 @@ class FileTopicStore(
     * only compact the (always-keyed) control topic, so the fix
     * changes no engine behavior.
     *
-    * Two read modes, picked by the log's size alone; both keep, per
-    * non-null key, the row with the highest offset (a null offset
-    * counts lowest), and they give the same rows but for one case: a
-    * corrupt line whose key parsed before the error is an un-keyed
-    * all-null row on the driver path (as in [[readAll]]) and missing
-    * on the Spark path, whose JSON filter pushdown tests `key IS NULL`
-    * on the partial record.
+    * Two read modes, picked by the log's size alone. Both parse with
+    * the connector's reader and keep, per non-null key, the row with
+    * the highest offset (a null offset counts lowest), so they give the
+    * same rows.
     *  - **driver** — the live data files add up to at most the store
     *    session's `spark.sql.files.openCostInBytes` (4 MiB by default:
     *    Spark's own estimate of what opening one file costs, so such a
@@ -451,10 +433,10 @@ class FileTopicStore(
     *    returns, and a filter, projection and collect over it (every
     *    CCD status recheck) launch no Spark job.
     *  - **Spark** — a larger log (a seed topic) is read through one
-    *    pinned `spark.read.json` and compacted by a `max_by` aggregate;
-    *    the frame is lazy, see [[sparkCompacted]] for its contract.
-    * A topic that does not exist takes the Spark path and fails there,
-    * as it always has. */
+    *    connector relation, which pins the file listing, and compacted
+    *    by a `max_by` aggregate; the frame is lazy, see
+    *    [[sparkCompacted]] for its contract.
+    * A topic that does not exist takes the Spark path and fails there. */
   def readCompacted(topic: String): DataFrame = {
     val d = dir(topic)
     val files = graft.engine.sources.TopicLog.dataFiles(d.toString)
@@ -477,12 +459,11 @@ class FileTopicStore(
   }
 
   private def sparkCompacted(topic: String): DataFrame = {
-    // ONE DataFrameReader call pins the snapshot: resolving the file
-    // relation lists the topic directory EAGERLY (InMemoryFileIndex
-    // captures the FileStatus set — names and lengths — right here),
-    // and both union branches below share that one relation, so a
-    // concurrent append (always a NEW file in this store) is invisible
-    // to every action on the returned frame — no record set can split
+    // ONE connector relation pins the snapshot: creating it lists the
+    // topic's data files EAGERLY, right here, and both union branches
+    // below share that one relation, so a concurrent append (always a
+    // NEW file in this store) is invisible to every action on the
+    // returned frame — no record set can split
     // inconsistently across the branches. This replaces an eager
     // Checkpoints.cut that paid a full materialization per read and,
     // in default localCheckpoint mode, truncated lineage onto
@@ -497,24 +478,27 @@ class FileTopicStore(
     // listing is append-safe but NOT compaction-safe — a log
     // compaction ([[compact]]/the dirty-ratio policy) REWRITES files,
     // and an action on a frame held across one fails loudly on the
-    // missing files (ignoreMissingFiles is off; never silently
-    // wrong). Every engine caller collects within the same call
-    // chain; a caller that must hold results across maintenance
-    // should persist or collect them first.
-    val raw = spark.read.schema(FileTopicStore.schema).json(dir(topic).toString)
+    // missing files (never silently wrong). Every engine caller
+    // collects within the same call chain; a caller that must hold
+    // results across maintenance should persist or collect them first.
+    val raw = scan(topic)
     graft.engine.cdc.Transforms.lastStatePerKey(Seq("key"), Seq("offset"))(
         raw.filter(col("key").isNotNull))
       .unionAll(raw.filter(col("key").isNull))
   }
 
-  def readStream(topic: String): DataFrame = readStream(topic, 100)
-
-  /** @param maxFilesPerTrigger admission control per micro-batch — the
-    *   engine analog of the reference's bounded work queue
-    *   (initializer.clj:87, buffer 100): limits how much backlog one
-    *   trigger admits so a large catch-up can't starve the loop. */
-  def readStream(topic: String, maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(FileTopicStore.schema).json(dir(topic).toString)
+  /** The control tail: the connector's micro-batch stream, whose
+    * offset is the set of files consumed. `maxFilesPerTrigger` 100 is
+    * admission control per micro-batch — the engine analog of the
+    * reference's bounded work queue (initializer.clj:87, buffer 100):
+    * it limits how much backlog one processing-time trigger admits, so
+    * a large catch-up can't starve the loop. Under
+    * `Trigger.AvailableNow` Spark wraps the stream, which lacks
+    * `SupportsTriggerAvailableNow`, and admits the whole backlog in one
+    * batch; `ControlStream.processBatch` orders each batch by offset
+    * and timestamp either way. */
+  def readStream(topic: String): DataFrame =
+    spark.readStream.format(classOf[graft.engine.sources.TopicSource].getName)
+      .option("maxFilesPerTrigger", 100)
+      .load(dir(topic).toString)
 }

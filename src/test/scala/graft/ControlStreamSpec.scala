@@ -102,6 +102,17 @@ class ControlStreamSpec extends AnyFunSuite {
     } finally { q.stop(); q.awaitTermination() }
   }
 
+  test("the control tail reads the topic through the connector") {
+    val root = Files.createTempDirectory("graft-tail").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    store.create("control")
+    val tables = ControlStream.ccdStream(store, "control").queryExecution.analyzed
+      .collect { case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 =>
+        r.table.name() }
+    assert(tables == Seq(s"graft_topic(${java.nio.file.Paths.get(root, "control")})"),
+      s"the tail must scan one TopicTable: $tables")
+  }
+
   test("flatMapGroupsWithState emits only genuine transitions") {
     import ControlStream.{KeyedStatus, Transition}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

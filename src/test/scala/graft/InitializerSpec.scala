@@ -132,6 +132,19 @@ class InitializerSpec extends AnyFunSuite {
     assert(init.runBacklog().isEmpty)
   }
 
+  test("a table-less submission ends in error once; a restart does not re-run it") {
+    val (init, _, store) = mkInit()
+    // no table: the submission and its error state are both un-keyed
+    init.publish(ccd(table = null, queue = "q_none"))
+    val first = init.runBacklog()
+    assert(first.size == 1, "the table-less submission surfaces as work once")
+    assert(first.head._2.map(_.status) == Seq(Status.Error))
+    assert(store.readAll("control").filter($"key".isNull).count() == 2)
+    // resume folds every un-keyed message into one group, whose latest
+    // state is the terminal error
+    assert(init.runBacklog().isEmpty, "restart must not reprocess a table-less CCD")
+  }
+
   test("malformed dotted table refs become error states, never throws (poison message)") {
     val (init, _, _) = mkInit()
     Seq("tpch.line-item", "a.b.c", "1pch.foo").foreach { bad =>

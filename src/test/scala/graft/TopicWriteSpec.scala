@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.topics.FileTopicStore
 
 /** DataSource V2 write path ([[graft.engine.sources.TopicSource]]), the
-  * writer of every distributed `FileTopicStore.append` and of
-  * `writeStreamV2`: key-hash routing, per-partition contiguous offsets
+  * writer of every distributed `FileTopicStore.append`: key-hash
+  * routing, per-partition contiguous offsets
   * continuing the existing log (whichever append mode wrote it),
   * seq-ordered intra-append offsets, one `v2-*.json` file per task that
   * got rows — and interoperation with every reader and with compaction.
@@ -53,8 +53,10 @@ class TopicWriteSpec extends AnyFunSuite {
     }
     // null key routes to partition 0
     assert(rows.filter(_.isNullAt(0)).forall(_.getInt(2) == 0))
-    // V2 read sees byte-identical content
-    val v2 = store.readV2("t").orderBy(col("partition"), col("offset")).collect()
+    // the unordered connector read sees the same content
+    val v2 = spark.read.format(classOf[graft.engine.sources.TopicSource].getName)
+      .load(Paths.get(root, "t").toString)
+      .orderBy(col("partition"), col("offset")).collect()
     assert(v2.map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3))).toSeq ==
       rows.sortBy(r => (r.getInt(2), r.getLong(3)))
         .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3))).toSeq)
@@ -108,70 +110,10 @@ class TopicWriteSpec extends AnyFunSuite {
       Map("k1" -> "v3", "k2" -> "w3"))
   }
 
-  test("streaming write: epochs produce per-key monotone offsets, compaction converges") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val (store, _) = newStore()
-    store.create("t")
-    // seed via batch first: streaming offsets must sort after these
-    import spark.implicits._
-    store.append("t", Seq(("k1", "batch0")).toDF("key", "value").repartition(2))
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(String, String)]
-    val q = store.writeStreamV2("t", in.toDF().toDF("key", "value"),
-      Files.createTempDirectory("graft-v2-ckpt").toString)
-    try {
-      in.addData(("k1", "e0"), ("k2", "x0"))
-      q.processAllAvailable()
-      in.addData(("k1", "e1"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val k1 = store.readAll("t").filter(col("key") === "k1")
-      .orderBy(col("offset")).collect()
-    assert(k1.map(_.getString(1)).toSeq == Seq("batch0", "e0", "e1"),
-      "offset order must follow produce order across batch + epochs")
-    // keyed compaction lands on the last epoch's state
-    val last = store.readCompacted("t").filter(col("key") === "k1").collect()
-    assert(last.map(_.getString(1)).toSeq == Seq("e1"))
-  }
-
-  test("streaming write restart: recomputed base keeps offsets monotone; compaction converges") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val (store, _) = newStore()
-    store.create("t")
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
-    val in1 = MemoryStream[(String, String)]
-    val q1 = store.writeStreamV2("t", in1.toDF().toDF("key", "value"), ckpt)
-    try {
-      in1.addData(("k1", "run1-e0"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // second run, SAME checkpoint: a fresh StreamingWrite instance
-    // recomputes its base from the log including run 1's writes, so
-    // run 2's offsets must sort strictly after run 1's
-    val in2 = MemoryStream[(String, String)]
-    // the checkpoint already committed through run 1's offset, so the
-    // fresh MemoryStream's first block occupies an already-processed
-    // slot — burn it, then produce the real run-2 data
-    in2.addData(("k1", "replay-slot"))
-    val q2 = store.writeStreamV2("t", in2.toDF().toDF("key", "value"), ckpt)
-    try {
-      in2.addData(("k1", "run2-e0"), ("k2", "other"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val k1 = store.readAll("t").filter(col("key") === "k1")
-      .orderBy(col("offset")).collect().map(_.getString(1))
-    assert(k1.toSeq == Seq("run1-e0", "run2-e0"),
-      "offsets across a checkpoint restart must preserve produce order")
-    assert(store.readCompacted("t").filter(col("key") === "k1")
-      .collect().map(_.getString(1)).toSeq == Seq("run2-e0"),
-      "keyed compaction must land on the post-restart state")
-  }
-
   test("V2 topic-to-topic relay: stream-read source, transform, stream-write sink") {
     // the full connector loop (Kafka-Streams shape): micro-batch tail of
-    // topic A (file-set offsets) → transform → STREAMING_WRITE into topic B
+    // topic A (file-set offsets) → transform → keyed append of each
+    // micro-batch into topic B
     val (store, root) = newStore()
     store.create("a")
     store.create("b")
@@ -181,8 +123,10 @@ class TopicWriteSpec extends AnyFunSuite {
       .format(classOf[graft.engine.sources.TopicSource].getName)
       .load(java.nio.file.Paths.get(root, "a").toString)
       .select(col("key"), concat(lit("relayed:"), col("value")).as("value"))
-    val q = store.writeStreamV2("b", in,
-      Files.createTempDirectory("graft-relay-ckpt").toString)
+    val q = in.writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) => store.append("b", b) }
+      .option("checkpointLocation", Files.createTempDirectory("graft-relay-ckpt").toString)
+      .start()
     try {
       q.processAllAvailable()
       store.append("a", Seq(("k1", "3")).toDF("key", "value").repartition(2))

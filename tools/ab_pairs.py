@@ -24,7 +24,10 @@ parent's IQR/median exceeds the bound (its runs spread too widely to
 tell), unless every change run beats every parent run; otherwise
 `holds`. Each run's steal_share (the share of CPU time the hypervisor
 gave to other guests, from the run document) is listed too: read a
-pair next to it.
+pair next to it. Last, each side's median and quartiles of every
+ungated `detail` figure of the run documents (resume_s,
+topic_read_rows_per_s, ccd_service_p50_s, ...) that all runs report,
+with no verdict.
 """
 import argparse
 import json
@@ -54,13 +57,16 @@ def run_once(checkout, workload, seed, seconds):
         line = json.loads(lines[-1]) if lines else None
     except json.JSONDecodeError:
         line = None
-    steal = None
+    steal, detail = None, {}
     doc = os.path.join(checkout, ".bench_build", "runs", f"{workload}-s{seed}-t0.json")
     if line is not None and os.path.exists(doc):
         with open(doc) as f:
-            steal = json.load(f).get("host", {}).get("steal_share")
+            d = json.load(f)
+        steal = d.get("host", {}).get("steal_share")
+        detail = {k: v["value"] for k, v in (d.get("detail") or {}).items()}
     return {"rc": p.returncode, "wall_s": time.time() - t0, "line": line,
-            "steal_share": steal, "stderr_tail": p.stderr.strip().splitlines()[-5:]}
+            "steal_share": steal, "detail": detail,
+            "stderr_tail": p.stderr.strip().splitlines()[-5:]}
 
 
 def share(v):
@@ -106,6 +112,16 @@ def summarize(pairs, metrics):
                      and gap > pq3 - pq1,
                      "bound": bound, "verdict": verdict(par, chg, better, bound)}
     return out
+
+
+def summarize_detail(pairs):
+    """Each side's median and quartiles of the detail figures every run reports."""
+    runs = [p[side] for p in pairs for side in ("parent", "change")]
+    names = sorted(set.intersection(*(set(r["detail"]) for r in runs))) if runs else []
+    return {name: {side: dict(zip(("median", "q1", "q3"),
+                                  quartiles([p[side]["detail"][name] for p in pairs])))
+                   for side in ("parent", "change")}
+            for name in names}
 
 
 def main():
@@ -166,6 +182,11 @@ def main():
     for p in pairs:
         print(f"    seed {p['seed']} ({p['first']} first): "
               f"{share(p['parent']['steal_share'])} / {share(p['change']['steal_share'])}")
+    print("  detail figures, median [q1, q3] (ungated, no verdict):")
+    for name, s in summarize_detail(pairs).items():
+        p, c = s["parent"], s["change"]
+        print(f"    {name:24s} parent {p['median']:.4g} [{p['q1']:.4g}, {p['q3']:.4g}]  "
+              f"change {c['median']:.4g} [{c['q1']:.4g}, {c['q3']:.4g}]")
 
 
 if __name__ == "__main__":
