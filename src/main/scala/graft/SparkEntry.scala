@@ -3,27 +3,41 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 
 import graft.engine.ops._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * Aggregates the per-module query inventories (SURVEY.md §2.B): each
-  * entry is a named `(SparkSession, sfDir) => DataFrame`, and each
-  * oracle-checkable entry has an equivalent DuckDB SQL in [[oracleSql]].
+  * The query registry (SURVEY.md §2.B) is the concatenation of every
+  * module's `defs`: each [[QueryDef]] names one query once, with its
+  * `(SparkSession, sfDir) => DataFrame` builder and, when it has one,
+  * its DuckDB oracle SQL. A name registered twice fails this object's
+  * initialization, naming the name.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.aggGroup(spark, "/root/testdata/sf0.001")
 
+  /** `defs` unchanged, or an error naming each name that repeats. */
+  private[graft] def requireUnique(defs: Seq[QueryDef]): Seq[QueryDef] = {
+    val repeated = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(repeated.isEmpty,
+      s"query names registered more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    defs
+  }
+
+  private val defs: Seq[QueryDef] = requireUnique(Seq(
+    Relational.defs, Relational2.defs, Relational3.defs, Relational4.defs,
+    Relational5.defs, Relational6.defs, Relational7.defs, Relational8.defs,
+    Relational9.defs, Relational10.defs, Relational11.defs, Relational12.defs,
+    Relational13.defs, Relational14.defs, Relational15.defs, CdcOps.defs,
+    StreamOps.defs, TextOps.defs, DedupOps.defs, SimOps.defs, PipelineOps.defs,
+    graft.engine.multimodal.Multimodal.defs).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++ Relational4.queries ++ Relational5.queries ++ Relational6.queries ++ Relational7.queries ++ Relational8.queries ++ Relational9.queries ++ Relational10.queries ++ Relational11.queries ++ Relational12.queries ++ Relational13.queries ++ Relational14.queries ++ Relational15.queries ++ CdcOps.queries ++ StreamOps.queries ++
-      TextOps.queries ++ DedupOps.queries ++ SimOps.queries ++ PipelineOps.queries ++
-      graft.engine.multimodal.Multimodal.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> d.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalOracles.oracles ++ Relational2.oracles ++ Relational3.oracles ++ Relational4.oracles ++ Relational5.oracles ++ Relational6.oracles ++ Relational7.oracles ++ Relational8.oracles ++ Relational9.oracles ++ Relational10.oracles ++ Relational11.oracles ++ Relational12.oracles ++ Relational13.oracles ++ Relational14.oracles ++ Relational15.oracles ++ CdcOps.oracles ++ StreamOps.oracles ++
-      TextOps.oracles ++ DedupOps.oracles ++ SimOps.oracles ++ PipelineOps.oracles ++
-      graft.engine.multimodal.Multimodal.oracles
+  val oracleSql: Map[String, String] =
+    defs.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }

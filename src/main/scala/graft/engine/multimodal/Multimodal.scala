@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.engine.ops.Checkpoints
+import graft.engine.ops.{Checkpoints, QueryDef}
 
 /** Multimodal column plumbing (north-star): media as opaque `binary`
   * columns with typed metadata, processed in partition-batches.
@@ -549,18 +549,6 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "mm_scene_cut" -> mmSceneCut,
-    "mm_audio" -> mmAudio,
-    "mm_meta" -> mmMeta,
-    "mm_dedup" -> mmDedup,
-    "mm_shards" -> mmShards,
-    "mm_decode" -> mmDecode,
-    "mm_frames" -> mmFrames,
-    "mm_phash" -> mmPhash,
-    "mm_phash_dup" -> mmPhashDup,
-  )
-
   /** Σ over a w×h grid of `(x + y + seed) % 256` as DuckDB list
     * arithmetic (this build's `range()` table function can't lateral-
     * join on a column). */
@@ -587,10 +575,10 @@ object Multimodal {
       |    CAST(16 + doc_id % 96 AS BIGINT) AS h
       |  FROM documents WHERE doc_id % 3 = 0)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // replays the paint rule per frame: lum(f) is closed-form, so cuts
     // and deltas are recomputable without touching a codec
-    "mm_scene_cut" ->
+    QueryDef("mm_scene_cut", mmSceneCut, Some(
       s"""WITH vid AS (
          |  SELECT doc_id AS media_id, CAST(2 + doc_id % 7 AS BIGINT) AS nf
          |  FROM documents WHERE doc_id % 3 = 2),
@@ -610,11 +598,11 @@ object Multimodal {
          |    AS BIGINT) AS n_cuts,
          |  CAST(max(delta) AS BIGINT) AS max_delta
          |FROM del WHERE delta IS NOT NULL
-         |GROUP BY media_id ORDER BY media_id""".stripMargin,
+         |GROUP BY media_id ORDER BY media_id""".stripMargin)),
 
     // recomputes the decoded PCM features from the waveform rule — the
     // Spark side must round-trip real little-endian s16 bytes to match
-    "mm_audio" ->
+    QueryDef("mm_audio", mmAudio, Some(
       s"""WITH ids AS (
          |  SELECT doc_id AS media_id,
          |    CAST(1024 + doc_id % 1024 AS BIGINT) AS n
@@ -637,9 +625,22 @@ object Multimodal {
          |      list_transform(x[f * $AudioFrameSamples + 1 :
          |        least((f + 1) * $AudioFrameSamples, n)], v -> v * v)),
          |      (a, b) -> a + b))) AS BIGINT) AS max_frame_energy
-         |FROM syn ORDER BY media_id""".stripMargin,
+         |FROM syn ORDER BY media_id""".stripMargin)),
 
-    "mm_shards" ->
+    QueryDef("mm_meta", mmMeta, Some(
+      """SELECT doc_id AS media_id,
+        |  ['image', 'audio', 'video'][(doc_id % 3) + 1] AS kind,
+        |  octet_length(encode(text)) AS byte_len,
+        |  sha256(text) AS digest
+        |FROM documents ORDER BY media_id""".stripMargin)),
+
+    QueryDef("mm_dedup", mmDedup, Some(
+      """SELECT min(doc_id) AS survivor_id, count(1) AS n_copies,
+        |  sha256(text) AS digest
+        |FROM documents GROUP BY sha256(text)
+        |ORDER BY survivor_id""".stripMargin)),
+
+    QueryDef("mm_shards", mmShards, Some(
       s"""WITH m AS (
          |  SELECT doc_id AS media_id,
          |    CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
@@ -653,24 +654,11 @@ object Multimodal {
          |SELECT media_id, n_bytes,
          |  CAST(cum_before // $ShardBytes AS BIGINT) AS shard_id,
          |  CAST(cum_before % $ShardBytes AS BIGINT) AS shard_off
-         |FROM c ORDER BY media_id""".stripMargin,
-
-    "mm_meta" ->
-      """SELECT doc_id AS media_id,
-        |  ['image', 'audio', 'video'][(doc_id % 3) + 1] AS kind,
-        |  octet_length(encode(text)) AS byte_len,
-        |  sha256(text) AS digest
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "mm_dedup" ->
-      """SELECT min(doc_id) AS survivor_id, count(1) AS n_copies,
-        |  sha256(text) AS digest
-        |FROM documents GROUP BY sha256(text)
-        |ORDER BY survivor_id""".stripMargin,
+         |FROM c ORDER BY media_id""".stripMargin)),
 
     // recomputes the decoded values from the paint rule — the Spark
     // side must round-trip real PNG bytes to match
-    "mm_decode" ->
+    QueryDef("mm_decode", mmDecode, Some(
       s"""WITH img AS (
          |  SELECT doc_id AS media_id,
          |    CAST(16 + doc_id % 120 AS BIGINT) AS w,
@@ -684,20 +672,34 @@ object Multimodal {
          |       ELSE (w * 128) // greatest(w, h) END AS INTEGER) AS out_width,
          |  CAST(CASE WHEN greatest(w, h) <= 128 THEN h
          |       ELSE (h * 128) // greatest(w, h) END AS INTEGER) AS out_height
-         |FROM img ORDER BY media_id""".stripMargin,
+         |FROM img ORDER BY media_id""".stripMargin)),
 
-    "mm_phash" ->
+    QueryDef("mm_frames", mmFrames, Some(
+      s"""WITH vid AS (
+         |  SELECT doc_id AS media_id, CAST(2 + doc_id % 7 AS BIGINT) AS nf
+         |  FROM documents WHERE doc_id % 3 = 2),
+         | sampled AS (
+         |  SELECT media_id, nf, f.f
+         |  FROM vid, (SELECT unnest(range(0, 8)) AS f) f
+         |  WHERE f.f < nf AND f.f % 4 = 0)
+         |SELECT media_id, CAST(max(nf) AS INTEGER) AS n_frames,
+         |  CAST(count(1) AS INTEGER) AS sampled_frames,
+         |  CAST(sum(${duckLumSum("4", "4", "media_id + f")}) AS BIGINT)
+         |    AS sampled_lum_sum
+         |FROM sampled GROUP BY media_id ORDER BY media_id""".stripMargin)),
+
+    QueryDef("mm_phash", mmPhash, Some(
       s"""WITH $duckImg
          |SELECT media_id,
          |  ${duckPhashHalf(0)} AS phash_lo,
          |  ${duckPhashHalf(32)} AS phash_hi
-         |FROM img ORDER BY media_id""".stripMargin,
+         |FROM img ORDER BY media_id""".stripMargin)),
 
     // mirrors the banded candidate generation INCLUDING the
     // PhashMaxBand hot-band cap (round 15): hamming <= 3 over 4 bands
     // forces one identical band (pigeonhole), and both sides drop
     // candidates whose only agreement is a >cap boilerplate band
-    "mm_phash_dup" ->
+    QueryDef("mm_phash_dup", mmPhashDup, Some(
       s"""WITH $duckImg,
          | ph AS (
          |  SELECT media_id,
@@ -724,20 +726,6 @@ object Multimodal {
          |FROM kept x JOIN kept y
          |  ON x.b = y.b AND x.bv = y.bv AND x.media_id < y.media_id
          |WHERE bit_count(xor(x.lo, y.lo)) + bit_count(xor(x.hi, y.hi)) <= 3
-         |ORDER BY media_a, media_b""".stripMargin,
-
-    "mm_frames" ->
-      s"""WITH vid AS (
-         |  SELECT doc_id AS media_id, CAST(2 + doc_id % 7 AS BIGINT) AS nf
-         |  FROM documents WHERE doc_id % 3 = 2),
-         | sampled AS (
-         |  SELECT media_id, nf, f.f
-         |  FROM vid, (SELECT unnest(range(0, 8)) AS f) f
-         |  WHERE f.f < nf AND f.f % 4 = 0)
-         |SELECT media_id, CAST(max(nf) AS INTEGER) AS n_frames,
-         |  CAST(count(1) AS INTEGER) AS sampled_frames,
-         |  CAST(sum(${duckLumSum("4", "4", "media_id + f")}) AS BIGINT)
-         |    AS sampled_lum_sum
-         |FROM sampled GROUP BY media_id ORDER BY media_id""".stripMargin,
+         |ORDER BY media_a, media_b""".stripMargin)),
   )
 }

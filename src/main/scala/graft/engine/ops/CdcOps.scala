@@ -176,22 +176,11 @@ object CdcOps {
       .orderBy($"user_id", $"valid_from", $"event_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "cdc_scd2" -> cdcScd2,
-    "cdc_apply" -> cdcApply,
-    "cdc_merge_classes" -> cdcMergeClasses,
-    "cdc_seed_key" -> cdcSeedKey,
-    "cdc_dml_msg" -> cdcDmlMsg,
-    "cdc_progress" -> cdcProgress,
-    "cdc_last_state" -> cdcLastState,
-    "cdc_status_filter" -> cdcStatusFilter,
-  )
-
   /** DuckDB oracles. cdc_dml_msg is checkable because both engines emit
     * deterministic-field-order compact JSON (Spark: select order;
     * DuckDB: struct_pack order). */
-  val oracles: Map[String, String] = Map(
-    "cdc_scd2" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("cdc_scd2", cdcScd2, Some(
       """SELECT user_id, event_id, event_type,
         |  CAST(floor(epoch(ts)) AS BIGINT) AS valid_from,
         |  lead(CAST(floor(epoch(ts)) AS BIGINT)) OVER (PARTITION BY user_id
@@ -199,55 +188,17 @@ object CdcOps {
         |  lead(ts) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id) IS NULL AS is_current
         |FROM events
-        |ORDER BY user_id, valid_from, event_id""".stripMargin,
+        |ORDER BY user_id, valid_from, event_id""".stripMargin)),
 
-    "cdc_apply" ->
+    QueryDef("cdc_apply", cdcApply, Some(
       """SELECT user_id, event_id AS last_event,
         |  CAST(floor(epoch(ts)) AS BIGINT) AS state_ts, value AS state_value
         |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
         |        ORDER BY ts DESC, event_id DESC) AS rn FROM events)
         |WHERE rn = 1 AND event_type <> 'error'
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
-    "cdc_dml_msg" ->
-      """WITH sv AS (
-        |  SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |  FROM lineitem
-        |  ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |  LIMIT 1000)
-        |SELECT
-        |  to_json(['l_linenumber', CAST(l_linenumber AS VARCHAR),
-        |           'l_orderkey', CAST(l_orderkey AS VARCHAR)]) AS key,
-        |  to_json(struct_pack(
-        |    "type" := 'insert',
-        |    "table" := 'tpch.lineitem',
-        |    info := struct_pack(user_id := 'loader'),
-        |    id := struct_pack(l_orderkey := CAST(l_orderkey AS VARCHAR),
-        |                      l_linenumber := CAST(l_linenumber AS VARCHAR)),
-        |    data := struct_pack(l_orderkey := l_orderkey,
-        |                        l_linenumber := l_linenumber,
-        |                        l_quantity := l_quantity,
-        |                        l_extendedprice := l_extendedprice))) AS value
-        |FROM sv ORDER BY key, value""".stripMargin,
-
-    "cdc_seed_key" ->
-      """SELECT DISTINCT l_orderkey, l_linenumber,
-        |  '["l_linenumber","' || CAST(l_linenumber AS VARCHAR)
-        |    || '","l_orderkey","' || CAST(l_orderkey AS VARCHAR) || '"]' AS seed_key
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "cdc_progress" ->
-      """WITH numbered AS (
-        |  SELECT event_id,
-        |    row_number() OVER (ORDER BY ts, event_id) AS seeded,
-        |    count(1) OVER () AS total
-        |  FROM events)
-        |SELECT seeded, total, event_id FROM numbered
-        |WHERE (seeded * 50) // total > ((seeded - 1) * 50) // total
-        |ORDER BY seeded""".stripMargin,
-
-    "cdc_merge_classes" ->
+    QueryDef("cdc_merge_classes", cdcMergeClasses, Some(
       """WITH snap AS (
         |  SELECT user_id, event_type AS old_type FROM (
         |    SELECT user_id, event_type,
@@ -266,21 +217,59 @@ object CdcOps {
         |       ELSE 'update' END AS action,
         |  snap.old_type, inc.new_type
         |FROM inc LEFT JOIN snap ON snap.user_id = inc.user_id
-        |ORDER BY inc.user_id""".stripMargin,
+        |ORDER BY inc.user_id""".stripMargin)),
 
-    "cdc_last_state" ->
+    QueryDef("cdc_seed_key", cdcSeedKey, Some(
+      """SELECT DISTINCT l_orderkey, l_linenumber,
+        |  '["l_linenumber","' || CAST(l_linenumber AS VARCHAR)
+        |    || '","l_orderkey","' || CAST(l_orderkey AS VARCHAR) || '"]' AS seed_key
+        |FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+
+    QueryDef("cdc_dml_msg", cdcDmlMsg, Some(
+      """WITH sv AS (
+        |  SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
+        |  FROM lineitem
+        |  ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice
+        |  LIMIT 1000)
+        |SELECT
+        |  to_json(['l_linenumber', CAST(l_linenumber AS VARCHAR),
+        |           'l_orderkey', CAST(l_orderkey AS VARCHAR)]) AS key,
+        |  to_json(struct_pack(
+        |    "type" := 'insert',
+        |    "table" := 'tpch.lineitem',
+        |    info := struct_pack(user_id := 'loader'),
+        |    id := struct_pack(l_orderkey := CAST(l_orderkey AS VARCHAR),
+        |                      l_linenumber := CAST(l_linenumber AS VARCHAR)),
+        |    data := struct_pack(l_orderkey := l_orderkey,
+        |                        l_linenumber := l_linenumber,
+        |                        l_quantity := l_quantity,
+        |                        l_extendedprice := l_extendedprice))) AS value
+        |FROM sv ORDER BY key, value""".stripMargin)),
+
+    QueryDef("cdc_progress", cdcProgress, Some(
+      """WITH numbered AS (
+        |  SELECT event_id,
+        |    row_number() OVER (ORDER BY ts, event_id) AS seeded,
+        |    count(1) OVER () AS total
+        |  FROM events)
+        |SELECT seeded, total, event_id FROM numbered
+        |WHERE (seeded * 50) // total > ((seeded - 1) * 50) // total
+        |ORDER BY seeded""".stripMargin)),
+
+    QueryDef("cdc_last_state", cdcLastState, Some(
       """SELECT user_id, event_id, event_type, value FROM (
         |  SELECT user_id, event_id, event_type, value,
         |    row_number() OVER (PARTITION BY user_id
         |                       ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
+        |  FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin)),
 
-    "cdc_status_filter" ->
+    QueryDef("cdc_status_filter", cdcStatusFilter, Some(
       """SELECT user_id, event_id, event_type FROM (
         |  SELECT user_id, event_id, event_type, ts,
         |    row_number() OVER (PARTITION BY user_id
         |                       ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events) WHERE rn = 1 AND event_type NOT IN ('error', 'purchase')
-        |ORDER BY ts, event_id""".stripMargin,
+        |ORDER BY ts, event_id""".stripMargin)),
   )
 }

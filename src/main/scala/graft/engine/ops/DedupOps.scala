@@ -800,20 +800,6 @@ object DedupOps {
       .orderBy($"doc_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "dedup_substring" -> dedupSubstring,
-    "dedup_paragraph" -> dedupParagraph,
-    "dedup_contamination" -> dedupContamination,
-    "dedup_near" -> dedupNear,
-    "dedup_containment" -> dedupContainment,
-    "dedup_minhash" -> dedupMinhash,
-    "dedup_simhash" -> dedupSimhash,
-    "dedup_simhash_dup" -> dedupSimhashDup,
-    "dedup_embed" -> dedupEmbed,
-    "dedup_clusters" -> dedupClusters,
-    "dedup_clusters_star" -> dedupClustersStar,
-  )
-
   private[ops] def duckCharHash(arg: String): String =
     "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(" +
       s"list_filter(string_split($arg, ''), c -> c <> ''), " +
@@ -827,8 +813,45 @@ object DedupOps {
       |        FROM documents)
       |  WHERE len(toks) >= 3)""".stripMargin
 
-  private val oracles0: Map[String, String] = Map(
-    "dedup_substring" ->
+  // the star-contraction variant computes the SAME clusters a
+  // different way — one oracle, two implementations under test
+  private val clustersOracle =
+    s"""WITH RECURSIVE $duckShingled,
+       | sigs AS (
+       |  SELECT doc_id, sh,
+       |    list_transform(range(0, 16), i -> list_min(list_transform(
+       |      list_transform(sh, s -> ${duckCharHash("s")}),
+       |      x -> ([${A.mkString(",")}][i + 1] * x
+       |            + [${B.mkString(",")}][i + 1]) % 1000000007))) AS mh
+       |  FROM docs WHERE len(sh) > 0),
+       | bands AS (
+       |  SELECT doc_id, band,
+       |    CAST(mh[band * 4 + 1] AS VARCHAR) || '_' || CAST(mh[band * 4 + 2] AS VARCHAR)
+       |    || '_' || CAST(mh[band * 4 + 3] AS VARCHAR) || '_'
+       |    || CAST(mh[band * 4 + 4] AS VARCHAR) AS band_key
+       |  FROM sigs, (SELECT unnest([0, 1, 2, 3]) AS band)),
+       | cands AS (
+       |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+       |  FROM bands x JOIN bands y
+       |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
+       | pairs AS (
+       |  SELECT doc_a, doc_b
+       |  FROM cands JOIN docs a ON a.doc_id = doc_a JOIN docs b ON b.doc_id = doc_b
+       |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+       |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) >= 0.5),
+       | edges AS (
+       |  SELECT doc_a AS a, doc_b AS b FROM pairs
+       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+       | reach(doc, root) AS (
+       |  SELECT a, a FROM edges
+       |  UNION
+       |  SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc)
+       |SELECT doc AS doc_id, min(root) AS canonical
+       |FROM reach GROUP BY doc HAVING doc <> min(root)
+       |ORDER BY doc_id""".stripMargin
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("dedup_substring", dedupSubstring, Some(
       s"""WITH toks AS (
          |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
          |  FROM documents),
@@ -843,9 +866,9 @@ object DedupOps {
          |  FROM grams JOIN occ USING (g) GROUP BY doc_id)
          |SELECT doc_id, CAST(n_windows AS BIGINT) AS n_windows,
          |  CAST(dup * 10000 // n_windows AS BIGINT) AS dup_bp
-         |FROM per ORDER BY doc_id""".stripMargin,
+         |FROM per ORDER BY doc_id""".stripMargin)),
 
-    "dedup_paragraph" -> {
+    QueryDef("dedup_paragraph", dedupParagraph, Some {
       val charhash =
         "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(" +
           "list_filter(string_split(para, ''), c -> c <> ''), " +
@@ -871,18 +894,18 @@ object DedupOps {
          |  COALESCE(r.digest, md5('')) AS digest
          |FROM totals t LEFT JOIN rebuilt r ON r.doc_id = t.doc_id
          |ORDER BY t.doc_id""".stripMargin
-    },
+    }),
 
-    "dedup_contamination" ->
+    QueryDef("dedup_contamination", dedupContamination, Some(
       s"""WITH $duckShingled,
          | ev AS (SELECT DISTINCT unnest(sh) AS g FROM docs WHERE doc_id < 20),
          | cx AS (SELECT doc_id, unnest(sh) AS g FROM docs WHERE doc_id >= 20)
          |SELECT doc_id, count(1) AS overlap
          |FROM cx JOIN ev USING (g)
          |GROUP BY doc_id HAVING count(1) >= 10
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin)),
 
-    "dedup_near" ->
+    QueryDef("dedup_near", dedupNear, Some(
       s"""WITH $duckShingled
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -893,9 +916,9 @@ object DedupOps {
          |WHERE len(a.sh) > 0 AND len(b.sh) > 0
          |  AND round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
          |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
-    "dedup_containment" ->
+    QueryDef("dedup_containment", dedupContainment, Some(
       // mirrors the Spark side's df-windowed posting list EXACTLY —
       // including the 2 <= df <= NearMaxShingleDf cap — so a shingle
       // crossing the cap at a larger scale factor lowers `inter`
@@ -918,9 +941,9 @@ object DedupOps {
          |JOIN sizes a ON doc_a = a.doc_id
          |JOIN sizes b ON doc_b = b.doc_id
          |WHERE (inter * 10000) // least(a.n, b.n) >= 8000
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
-    "dedup_minhash" ->
+    QueryDef("dedup_minhash", dedupMinhash, Some(
       s"""WITH $duckShingled,
          | sigs AS (
          |  SELECT doc_id, sh,
@@ -945,53 +968,18 @@ object DedupOps {
          |FROM cands JOIN docs a ON a.doc_id = doc_a JOIN docs b ON b.doc_id = doc_b
          |WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
          |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $duckShingled,
-         | sigs AS (
-         |  SELECT doc_id, sh,
-         |    list_transform(range(0, 16), i -> list_min(list_transform(
-         |      list_transform(sh, s -> ${duckCharHash("s")}),
-         |      x -> ([${A.mkString(",")}][i + 1] * x
-         |            + [${B.mkString(",")}][i + 1]) % 1000000007))) AS mh
-         |  FROM docs WHERE len(sh) > 0),
-         | bands AS (
-         |  SELECT doc_id, band,
-         |    CAST(mh[band * 4 + 1] AS VARCHAR) || '_' || CAST(mh[band * 4 + 2] AS VARCHAR)
-         |    || '_' || CAST(mh[band * 4 + 3] AS VARCHAR) || '_'
-         |    || CAST(mh[band * 4 + 4] AS VARCHAR) AS band_key
-         |  FROM sigs, (SELECT unnest([0, 1, 2, 3]) AS band)),
-         | cands AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-         | pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM cands JOIN docs a ON a.doc_id = doc_a JOIN docs b ON b.doc_id = doc_b
-         |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) >= 0.5),
-         | edges AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         | reach(doc, root) AS (
-         |  SELECT a, a FROM edges
-         |  UNION
-         |  SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc)
-         |SELECT doc AS doc_id, min(root) AS canonical
-         |FROM reach GROUP BY doc HAVING doc <> min(root)
-         |ORDER BY doc_id""".stripMargin,
-
-    "dedup_simhash" ->
+    QueryDef("dedup_simhash", dedupSimhash, Some(
       s"""WITH t AS (
          |  SELECT doc_id,
          |    list_transform(list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')),
          |      tok -> ${duckCharHash("tok")}) AS th
          |  FROM documents)
          |SELECT doc_id, $duckSimhashSql AS simhash
-         |FROM t ORDER BY doc_id""".stripMargin,
+         |FROM t ORDER BY doc_id""".stripMargin)),
 
-    "dedup_simhash_dup" ->
+    QueryDef("dedup_simhash_dup", dedupSimhashDup, Some(
       s"""WITH f AS (
          |  SELECT doc_id, $duckSimhashSql AS simhash
          |  FROM (
@@ -1018,12 +1006,16 @@ object DedupOps {
          |    ON x.b = y.b AND x.bv = y.bv AND x.doc_id < y.doc_id)
          |SELECT doc_a, doc_b, hamming FROM pairs
          |WHERE hamming <= 3 ORDER BY hamming, doc_a, doc_b
-         |LIMIT 1000""".stripMargin,
+         |LIMIT 1000""".stripMargin)),
 
-    "dedup_embed" ->
+    QueryDef("dedup_embed", dedupEmbed, Some(
       s"""WITH $duckIvfCandsCte
          |SELECT vec_a, vec_b, round(dot / nn, 4) AS cos
-         |FROM p WHERE round(dot / nn, 4) >= 0.45 ORDER BY vec_a, vec_b""".stripMargin,
+         |FROM p WHERE round(dot / nn, 4) >= 0.45 ORDER BY vec_a, vec_b""".stripMargin)),
+
+    QueryDef("dedup_clusters", dedupClusters, Some(clustersOracle)),
+
+    QueryDef("dedup_clusters_star", dedupClustersStar, Some(clustersOracle)),
   )
 
   /** The IVF candidate-pair CTE chain shared by the `dedup_embed` and
@@ -1071,9 +1063,4 @@ object DedupOps {
        |      i -> a.v[i] * b.v[i])), (x, y) -> x + y) AS dot,
        |    a.nrm * b.nrm AS nn
        |  FROM cands JOIN n a ON a.vec_id = vec_a JOIN n b ON b.vec_id = vec_b)""".stripMargin
-
-  // the star-contraction variant computes the SAME clusters a
-  // different way — one oracle, two implementations under test
-  val oracles: Map[String, String] =
-    oracles0 + ("dedup_clusters_star" -> oracles0("dedup_clusters"))
 }

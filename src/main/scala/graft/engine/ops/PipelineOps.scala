@@ -271,15 +271,6 @@ object PipelineOps {
       .orderBy($"bucket")
   }
 
-  val queries: Map[String, Q] = Map(
-    "pack_sequences" -> packSequences,
-    "pipeline_pack" -> pipelinePack,
-    "pipeline_clean" -> pipelineClean,
-    "agg_topk_custom" -> aggTopkCustom,
-    "sim_ivf_kmeans" -> simIvfKmeans,
-    "data_zorder" -> dataZorder,
-  )
-
   // ------------------------------------------------------------ oracles
 
   private def duckDotV(a: String, b: String): String =
@@ -378,45 +369,29 @@ object PipelineOps {
          |    END AS reason
          |  FROM sig s LEFT JOIN rep r ON r.doc_id = s.doc_id)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "data_zorder" ->
-      """WITH k AS (
-        |  SELECT l_partkey % 65536 AS pk, l_suppkey % 65536 AS sk
-        |  FROM lineitem),
-        | z AS (
-        |  SELECT pk, sk,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(16),
-        |      i -> (((pk >> CAST(i AS INTEGER)) & 1) << CAST(2 * i AS INTEGER))
-        |         + (((sk >> CAST(i AS INTEGER)) & 1) << CAST(2 * i + 1 AS INTEGER)))),
-        |      (a, b) -> a + b) // 262144 AS bucket
-        |  FROM k)
-        |SELECT bucket, CAST(count(1) AS BIGINT) AS n_rows,
-        |  min(pk) AS pk_min, max(pk) AS pk_max,
-        |  min(sk) AS sk_min, max(sk) AS sk_max
-        |FROM z GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "pack_sequences" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("pack_sequences", packSequences, Some(
       s"""WITH t AS (
          |  SELECT doc_id,
          |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_toks
          |  FROM documents),
-         |$packSql""".stripMargin,
+         |$packSql""".stripMargin)),
 
-    "pipeline_pack" ->
+    QueryDef("pipeline_pack", pipelinePack, Some(
       s"""WITH $cleanSql,
          | t AS (
          |  SELECT d.doc_id,
          |    CAST(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS BIGINT) AS n_toks
          |  FROM documents d JOIN v ON v.doc_id = d.doc_id AND v.reason IS NULL),
-         |$packSql""".stripMargin,
+         |$packSql""".stripMargin)),
 
-    "pipeline_clean" ->
+    QueryDef("pipeline_clean", pipelineClean, Some(
       s"""WITH $cleanSql
          |SELECT doc_id, quality, pred_lang, rep_bp,
          |  reason IS NULL AS kept, reason
-         |FROM v ORDER BY doc_id""".stripMargin,
+         |FROM v ORDER BY doc_id""".stripMargin)),
 
-    "agg_topk_custom" ->
+    QueryDef("agg_topk_custom", aggTopkCustom, Some(
       """WITH ranked AS (
         |  SELECT c_mktsegment, c_custkey, CAST(c_acctbal AS DOUBLE) AS bal,
         |    row_number() OVER (PARTITION BY c_mktsegment
@@ -424,9 +399,9 @@ object PipelineOps {
         |  FROM customer)
         |SELECT c_mktsegment, CAST(rk AS INTEGER) AS rk, c_custkey, bal
         |FROM ranked WHERE rk <= 3
-        |ORDER BY c_mktsegment, rk""".stripMargin,
+        |ORDER BY c_mktsegment, rk""".stripMargin)),
 
-    "sim_ivf_kmeans" ->
+    QueryDef("sim_ivf_kmeans", simIvfKmeans, Some(
       s"""WITH vecs AS (
          |  SELECT vec_id, v,
          |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)),
@@ -454,6 +429,22 @@ object PipelineOps {
          |JOIN probes ON probes.pcid = asg.cid,
          |(SELECT v, nrm FROM vecs WHERE vec_id = 0) q
          |WHERE e.vec_id <> 0
-         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 5""".stripMargin,
+         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 5""".stripMargin)),
+
+    QueryDef("data_zorder", dataZorder, Some(
+      """WITH k AS (
+        |  SELECT l_partkey % 65536 AS pk, l_suppkey % 65536 AS sk
+        |  FROM lineitem),
+        | z AS (
+        |  SELECT pk, sk,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(16),
+        |      i -> (((pk >> CAST(i AS INTEGER)) & 1) << CAST(2 * i AS INTEGER))
+        |         + (((sk >> CAST(i AS INTEGER)) & 1) << CAST(2 * i + 1 AS INTEGER)))),
+        |      (a, b) -> a + b) // 262144 AS bucket
+        |  FROM k)
+        |SELECT bucket, CAST(count(1) AS BIGINT) AS n_rows,
+        |  min(pk) AS pk_min, max(pk) AS pk_max,
+        |  min(sk) AS sk_min, max(sk) AS sk_max
+        |FROM z GROUP BY bucket ORDER BY bucket""".stripMargin)),
   )
 }

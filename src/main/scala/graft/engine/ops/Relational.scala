@@ -481,43 +481,260 @@ object Relational {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "scan_project" -> scanProject,
-    "scan_count" -> scanCount,
-    "filter_range" -> filterRange,
-    "filter_not_in" -> filterNotIn,
-    "project_expr" -> projectExpr,
-    "project_case" -> projectCase,
-    "join_inner" -> joinInner,
-    "join_broadcast" -> joinBroadcast,
-    "join_left" -> joinLeft,
-    "join_semi" -> joinSemi,
-    "join_anti" -> joinAnti,
-    "join_theta" -> joinTheta,
-    "join_multikey" -> joinMultikey,
-    "join_asof" -> joinAsof,
-    "agg_group" -> aggGroup,
-    "agg_distinct" -> aggDistinct,
-    "agg_having" -> aggHaving,
-    "agg_rollup" -> aggRollup,
-    "agg_cube" -> aggCube,
-    "agg_grouping_sets" -> aggGroupingSets,
-    "agg_stats" -> aggStats,
-    "agg_approx_distinct" -> aggApproxDistinct,
-    "win_rank" -> winRank,
-    "win_topn" -> winTopn,
-    "win_lag" -> winLag,
-    "win_moving" -> winMoving,
-    "win_running" -> winRunning,
-    "sort_multi" -> sortMulti,
-    "topk_global" -> topkGlobal,
-    "set_union" -> setUnion,
-    "set_intersect" -> setIntersect,
-    "set_except" -> setExcept,
-    "fn_string" -> fnString,
-    "fn_date" -> fnDate,
-    "fn_math" -> fnMath,
-    "fn_array" -> fnArray,
-    "fn_json" -> fnJson,
+  /** The oracles are written for exact value/hash parity with the Spark
+    * plans: identical column aliases, identical decimal-exact arithmetic
+    * cast to DOUBLE at the same point, identical ORDER BY with explicit
+    * NULLS FIRST (Spark's ASC default is nulls-first, DuckDB's is
+    * nulls-last), identical tie-breaks on unique keys, and BIGINT casts
+    * where Spark's function return types differ from DuckDB's
+    * (ceil/floor). */
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("scan_project", scanProject, Some(
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
+        |FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice""".stripMargin)),
+
+    QueryDef("scan_count", scanCount, Some("SELECT count(1) AS n FROM lineitem")),
+
+    QueryDef("filter_range", filterRange, Some(
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_discount
+        |FROM lineitem
+        |WHERE l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 10
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_discount""".stripMargin)),
+
+    QueryDef("filter_not_in", filterNotIn, Some(
+      """SELECT event_id, event_type, user_id FROM events
+        |WHERE event_type NOT IN ('error', 'purchase')
+        |ORDER BY event_id""".stripMargin)),
+
+    QueryDef("project_expr", projectExpr, Some(
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+        |       * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
+        |       AS DOUBLE) AS disc_price
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, disc_price""".stripMargin)),
+
+    QueryDef("project_case", projectCase, Some(
+      """SELECT o_orderkey,
+        |  CASE WHEN o_orderpriority = '1-URGENT' THEN 'hot'
+        |       WHEN o_orderpriority = '2-HIGH' THEN 'warm'
+        |       ELSE 'cold' END AS heat,
+        |  COALESCE(NULLIF(o_orderstatus, 'O'), 'open') AS status_or_open
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+
+    QueryDef("join_inner", joinInner, Some(
+      """SELECT o_orderkey, c_custkey, c_name, o_totalprice
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin)),
+
+    QueryDef("join_broadcast", joinBroadcast, Some(
+      """SELECT n_nationkey, n_name, r_name
+        |FROM nation JOIN region ON n_regionkey = r_regionkey
+        |ORDER BY n_nationkey""".stripMargin)),
+
+    QueryDef("join_left", joinLeft, Some(
+      """SELECT c_custkey, count(o_orderkey) AS n_orders,
+        |  COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS total
+        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin)),
+
+    QueryDef("join_semi", joinSemi, Some(
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey""".stripMargin)),
+
+    QueryDef("join_anti", joinAnti, Some(
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey""".stripMargin)),
+
+    QueryDef("join_theta", joinTheta, Some(
+      """SELECT l_orderkey, l_linenumber, p_partkey, p_size, l_quantity
+        |FROM lineitem JOIN part
+        |  ON l_partkey = p_partkey AND p_size BETWEEN 10 AND 20
+        |  AND l_quantity > p_size
+        |ORDER BY l_orderkey, l_linenumber, p_partkey, l_quantity""".stripMargin)),
+
+    QueryDef("join_multikey", joinMultikey, Some(
+      """SELECT l.l_orderkey, l.l_linenumber, l.l_quantity
+        |FROM lineitem l
+        |JOIN (SELECT l_orderkey AS o_key, min(l_linenumber) AS first_line
+        |      FROM lineitem GROUP BY l_orderkey) f
+        |  ON l.l_orderkey = f.o_key AND l.l_linenumber = f.first_line
+        |ORDER BY l.l_orderkey, l.l_linenumber, l.l_quantity""".stripMargin)),
+
+    QueryDef("join_asof", joinAsof, Some(
+      """SELECT event_id, o_orderkey, o_orderdate FROM (
+        |  SELECT e.event_id, o.o_orderkey, o.o_orderdate,
+        |    row_number() OVER (PARTITION BY e.event_id
+        |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
+        |  FROM events e
+        |  JOIN orders o ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
+        |) WHERE rn = 1 ORDER BY event_id""".stripMargin)),
+
+    QueryDef("agg_group", aggGroup, Some(
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+        |    * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(1) AS avg_qty,
+        |  count(1) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+
+    QueryDef("agg_distinct", aggDistinct, Some(
+      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+
+    QueryDef("agg_having", aggHaving, Some(
+      """SELECT o_custkey, count(1) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders GROUP BY o_custkey HAVING count(1) >= 10
+        |ORDER BY o_custkey""".stripMargin)),
+
+    QueryDef("agg_rollup", aggRollup, Some(
+      """SELECT r_name, n_name, count(1) AS n_customers,
+        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS acctbal_sum
+        |FROM nation
+        |JOIN region ON n_regionkey = r_regionkey
+        |JOIN customer ON c_nationkey = n_nationkey
+        |GROUP BY ROLLUP(r_name, n_name)
+        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin)),
+
+    QueryDef("agg_cube", aggCube, Some(
+      """SELECT o_orderstatus, o_orderpriority, count(1) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)),
+
+    QueryDef("agg_grouping_sets", aggGroupingSets, Some(
+      """SELECT o_orderstatus, o_orderpriority, count(1) AS n
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)),
+
+    QueryDef("agg_stats", aggStats, Some(
+      """SELECT l_returnflag,
+        |  min(l_quantity) AS min_qty,
+        |  max(l_quantity) AS max_qty,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(1) AS avg_qty,
+        |  round(sqrt(
+        |    (CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2))
+        |                   * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS DOUBLE)
+        |     - CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+        |       * CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(1))
+        |    / (count(1) - 1)), 4) AS stddev_qty
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+
+    QueryDef("agg_approx_distinct", aggApproxDistinct, None),
+
+    QueryDef("win_rank", winRank, Some(
+      """SELECT o_custkey, o_orderkey, o_totalprice,
+        |  rank() OVER (PARTITION BY o_custkey
+        |               ORDER BY o_totalprice DESC, o_orderkey) AS rk
+        |FROM orders ORDER BY o_custkey, rk, o_orderkey""".stripMargin)),
+
+    QueryDef("win_topn", winTopn, Some(
+      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    row_number() OVER (PARTITION BY o_custkey
+        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        |  FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)),
+
+    QueryDef("win_lag", winLag, Some(
+      """SELECT event_id, user_id, value,
+        |  lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
+        |FROM events ORDER BY event_id""".stripMargin)),
+
+    QueryDef("win_moving", winMoving, Some(
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
+        |    / COUNT(1) OVER w AS mov_avg
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)),
+
+    QueryDef("win_running", winRunning, Some(
+      """SELECT event_id, user_id,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
+        |FROM events ORDER BY event_id""".stripMargin)),
+
+    QueryDef("sort_multi", sortMulti, Some(
+      """SELECT l_returnflag, l_extendedprice, l_orderkey, l_linenumber
+        |FROM lineitem
+        |ORDER BY l_returnflag ASC, l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
+        |LIMIT 100""".stripMargin)),
+
+    QueryDef("topk_global", topkGlobal, Some(
+      """SELECT l_orderkey, l_linenumber, l_extendedprice
+        |FROM lineitem
+        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 20""".stripMargin)),
+
+    QueryDef("set_union", setUnion, Some(
+      """SELECT event_id, event_type FROM events WHERE event_type = 'error'
+        |UNION ALL
+        |SELECT event_id, event_type FROM events WHERE event_type = 'purchase'
+        |ORDER BY event_id""".stripMargin)),
+
+    QueryDef("set_intersect", setIntersect, Some(
+      """SELECT o_custkey AS k FROM orders
+        |INTERSECT
+        |SELECT user_id AS k FROM events
+        |ORDER BY k""".stripMargin)),
+
+    QueryDef("set_except", setExcept, Some(
+      """SELECT o_custkey AS k FROM orders
+        |EXCEPT
+        |SELECT user_id AS k FROM events
+        |ORDER BY k""".stripMargin)),
+
+    QueryDef("fn_string", fnString, Some(
+      """SELECT p_partkey,
+        |  lower(p_brand) AS brand_lower,
+        |  upper(p_type) AS type_upper,
+        |  regexp_extract(p_name, '^([a-z]+)', 1) AS first_word,
+        |  'mq_' || replace(p_brand, '#', '_') AS mq_name,
+        |  substring(p_type, 1, 5) AS type_prefix,
+        |  length(p_name) AS name_len
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+
+    QueryDef("fn_date", fnDate, Some(
+      """SELECT o_orderkey,
+        |  CAST(year(o_orderdate) AS INTEGER) AS y,
+        |  CAST(month(o_orderdate) AS INTEGER) AS m,
+        |  CAST(day(o_orderdate) AS INTEGER) AS dom,
+        |  date_trunc('month', o_orderdate) AS month_start,
+        |  CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '2025-01-01') AS INTEGER) AS days_to_2025
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+
+    QueryDef("fn_math", fnMath, Some(
+      """SELECT l_orderkey, l_linenumber,
+        |  round(l_extendedprice, 0) AS price_round,
+        |  abs(l_discount - 0.05) AS disc_dev,
+        |  CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil,
+        |  CAST(floor(l_quantity / 7) AS BIGINT) AS qty_div7,
+        |  l_orderkey % 97 AS key_mod,
+        |  round(pow(l_quantity, 2), 4) AS qty_sq
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, price_round, disc_dev, qty_sq""".stripMargin)),
+
+    QueryDef("fn_array", fnArray, Some(
+      """SELECT vec_id,
+        |  CAST(len(embedding) AS INTEGER) AS dim,
+        |  round(CAST(embedding[1] AS DOUBLE), 4) AS first,
+        |  round(CAST(embedding[64] AS DOUBLE), 4) AS last,
+        |  round(0.0 + CAST(embedding[1] AS DOUBLE) + CAST(embedding[2] AS DOUBLE)
+        |    + CAST(embedding[3] AS DOUBLE) + CAST(embedding[4] AS DOUBLE)
+        |    + CAST(embedding[5] AS DOUBLE) + CAST(embedding[6] AS DOUBLE)
+        |    + CAST(embedding[7] AS DOUBLE) + CAST(embedding[8] AS DOUBLE), 4) AS head_sum
+        |FROM embeddings ORDER BY vec_id""".stripMargin)),
+
+    QueryDef("fn_json", fnJson, Some(
+      """SELECT event_id,
+        |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
+        |FROM events ORDER BY event_id""".stripMargin)),
   )
 }

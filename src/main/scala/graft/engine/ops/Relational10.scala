@@ -348,18 +348,8 @@ object Relational10 {
       .orderBy($"doc_id", $"bucket")
   }
 
-  val queries: Map[String, Q] = Map(
-    "join_tpch_q5" -> joinTpchQ5,
-    "join_tpch_q16" -> joinTpchQ16,
-    "ts_acf" -> tsAcf,
-    "graph_labelprop" -> graphLabelprop,
-    "data_delete_vectors" -> dataDeleteVectors,
-    "data_skew_profile" -> dataSkewProfile,
-    "text_hashtf" -> textHashtf,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "join_tpch_q5" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("join_tpch_q5", joinTpchQ5, Some(
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -378,9 +368,9 @@ object Relational10 {
         |GROUP BY n_name
         |ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |  DESC, n_name""".stripMargin,
+        |  DESC, n_name""".stripMargin)),
 
-    "join_tpch_q16" ->
+    QueryDef("join_tpch_q16", joinTpchQ16, Some(
       """SELECT p_brand, p_type,
         |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
         |FROM lineitem
@@ -389,9 +379,9 @@ object Relational10 {
         |  AND l_suppkey NOT IN
         |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type
-        |ORDER BY supplier_cnt DESC, p_brand, p_type""".stripMargin,
+        |ORDER BY supplier_cnt DESC, p_brand, p_type""".stripMargin)),
 
-    "ts_acf" ->
+    QueryDef("ts_acf", tsAcf, Some(
       s"""WITH e AS (
         |  SELECT event_type, epoch_us(ts) AS ts_us, event_id,
         |    CAST(floor(value * 1000000) AS BIGINT) AS x
@@ -444,9 +434,9 @@ object Relational10 {
         |      + 100 * ((100 * (num3 % den)) // den)
         |      + (100 * ((100 * (num3 % den)) % den)) // den AS BIGINT)
         |  FROM nd)
-        |ORDER BY event_type, lag""".stripMargin,
+        |ORDER BY event_type, lag""".stripMargin)),
 
-    "graph_labelprop" -> {
+    QueryDef("graph_labelprop", graphLabelprop, Some {
       def round(prev: String, cur: String): String =
         s"""${cur}c AS (
           |  SELECT e.a AS node, $prev.label, count(1) AS c
@@ -469,9 +459,9 @@ object Relational10 {
         | ${round("l2", "l3")}
         |SELECT node AS p_partkey, label AS label$LpRounds
         |FROM l3 ORDER BY p_partkey""".stripMargin
-    },
+    }),
 
-    "data_delete_vectors" ->
+    QueryDef("data_delete_vectors", dataDeleteVectors, Some(
       s"""SELECT source, CAST(doc_id // $DvStripe AS BIGINT) AS file_id,
         |  CAST(count(1) AS BIGINT) AS n_docs,
         |  CAST(count(1) FILTER (doc_id % 97 = 0) AS BIGINT) AS n_del,
@@ -484,9 +474,9 @@ object Relational10 {
         |  count(1) FILTER (doc_id % 97 = 0) * 10 >= count(1) AS rewrite
         |FROM documents
         |GROUP BY source, doc_id // $DvStripe
-        |ORDER BY source, file_id""".stripMargin,
+        |ORDER BY source, file_id""".stripMargin)),
 
-    "data_skew_profile" ->
+    QueryDef("data_skew_profile", dataSkewProfile, Some(
       s"""WITH c AS (
         |  SELECT user_id, CAST(count(1) AS BIGINT) AS c
         |  FROM events GROUP BY user_id),
@@ -498,9 +488,9 @@ object Relational10 {
         |  CAST(CAST(c AS HUGEINT) * n_keys * 10000 // n_total AS BIGINT)
         |    AS skew_e4
         |FROM c, t
-        |ORDER BY c DESC, user_id LIMIT $SkewTopK""".stripMargin,
+        |ORDER BY c DESC, user_id LIMIT $SkewTopK""".stripMargin)),
 
-    "text_hashtf" -> {
+    QueryDef("text_hashtf", textHashtf, Some {
       val h = DedupOps.duckCharHash("tok")
       s"""WITH toks AS (
         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
@@ -511,6 +501,6 @@ object Relational10 {
         |FROM toks
         |GROUP BY doc_id, $h % $HashTfBuckets
         |ORDER BY doc_id, bucket""".stripMargin
-    },
+    }),
   )
 }

@@ -198,15 +198,8 @@ object Relational11 {
       .orderBy($"probe_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "embed_pca_power" -> embedPcaPower,
-    "join_tpch_q7" -> joinTpchQ7,
-    "graph_landmarks" -> graphLandmarks,
-    "data_zone_prune" -> dataZonePrune,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "embed_pca_power" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("embed_pca_power", embedPcaPower, Some(
       """WITH x AS (
         |  SELECT vec_id, list_transform(embedding,
         |    e -> CAST(floor(CAST(e AS DOUBLE) * 1000000) AS BIGINT)) AS v
@@ -231,9 +224,9 @@ object Relational11 {
         | m1 AS (SELECT max(abs(u)) AS m FROM u1),
         | v2 AS (SELECT j, CAST(u * 1000000 // m AS BIGINT) AS w FROM u1, m1)
         |SELECT CAST(j AS BIGINT) AS dim, w AS v_mu
-        |FROM v2 ORDER BY dim""".stripMargin,
+        |FROM v2 ORDER BY dim""".stripMargin)),
 
-    "join_tpch_q7" ->
+    QueryDef("join_tpch_q7", joinTpchQ7, Some(
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -249,9 +242,9 @@ object Relational11 {
         |WHERE (n1.n_name = '$Q7NationA' AND n2.n_name = '$Q7NationB')
         |   OR (n1.n_name = '$Q7NationB' AND n2.n_name = '$Q7NationA')
         |GROUP BY 1, 2, 3
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
 
-    "graph_landmarks" -> {
+    QueryDef("graph_landmarks", graphLandmarks, Some {
       val lms = Landmarks.mkString(", ")
       s"""WITH RECURSIVE e0 AS (
         |  SELECT p_partkey AS a, p_partkey // 10 AS b
@@ -267,9 +260,9 @@ object Relational11 {
         |SELECT lm, node, min(dist) AS dist
         |FROM walk GROUP BY lm, node
         |ORDER BY lm, node""".stripMargin
-    },
+    }),
 
-    "data_zone_prune" -> {
+    QueryDef("data_zone_prune", dataZonePrune, Some {
       val probeRows = (0 until ZoneProbes).map { k =>
         val col = if (k % 2 == 0) "pk" else "sk"
         s"(${k}, '$col', ${(100L * k + 7) % 2000L})"
@@ -304,6 +297,6 @@ object Relational11 {
         |  CAST((count(1) - sum(hit)) * 10000 // count(1) AS BIGINT) AS prune_bp
         |FROM j GROUP BY probe_id, col, v
         |ORDER BY probe_id""".stripMargin.replace("PROBE_ROWS", probeRows)
-    },
+    }),
   )
 }

@@ -112,15 +112,8 @@ object Relational12 {
       .orderBy($"b")
   }
 
-  val queries: Map[String, Q] = Map(
-    "join_tpch_q4" -> joinTpchQ4,
-    "join_tpch_q12" -> joinTpchQ12,
-    "sample_bottomk" -> sampleBottomk,
-    "graph_degree_dist" -> graphDegreeDist,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "join_tpch_q4" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("join_tpch_q4", joinTpchQ4, Some(
       """SELECT o_orderpriority, CAST(count(1) AS BIGINT) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -130,9 +123,9 @@ object Relational12 {
         |    WHERE l_orderkey = o_orderkey
         |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "join_tpch_q12" ->
+    QueryDef("join_tpch_q12", joinTpchQ12, Some(
       """SELECT
         |  CASE WHEN datediff('day', o_orderdate, l_shipdate) <= 30
         |         THEN 'a_ontime'
@@ -146,20 +139,20 @@ object Relational12 {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY delay_bucket""".stripMargin,
+        |GROUP BY 1 ORDER BY delay_bucket""".stripMargin)),
 
-    "sample_bottomk" ->
+    QueryDef("sample_bottomk", sampleBottomk, Some(
       s"""SELECT doc_id, source, md5(concat('bk:', CAST(doc_id AS VARCHAR))) AS hk
         |FROM documents
-        |ORDER BY hk, doc_id LIMIT $BottomK""".stripMargin,
+        |ORDER BY hk, doc_id LIMIT $BottomK""".stripMargin)),
 
-    "graph_degree_dist" ->
+    QueryDef("graph_degree_dist", graphDegreeDist, Some(
       """WITH e AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
         | deg AS (SELECT l_suppkey, CAST(count(1) AS BIGINT) AS deg
         |         FROM e GROUP BY l_suppkey)
         |SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS b,
         |  CAST(count(1) AS BIGINT) AS n_nodes,
         |  min(deg) AS deg_min, max(deg) AS deg_max
-        |FROM deg GROUP BY 1 ORDER BY b""".stripMargin,
+        |FROM deg GROUP BY 1 ORDER BY b""".stripMargin)),
   )
 }

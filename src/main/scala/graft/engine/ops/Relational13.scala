@@ -113,14 +113,8 @@ object Relational13 {
       .orderBy($"code")
   }
 
-  val queries: Map[String, Q] = Map(
-    "join_tpch_q13" -> joinTpchQ13,
-    "join_tpch_q19" -> joinTpchQ19,
-    "join_tpch_q22" -> joinTpchQ22,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "join_tpch_q13" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("join_tpch_q13", joinTpchQ13, Some(
       """WITH co AS (
         |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
         |  FROM customer LEFT JOIN orders
@@ -128,9 +122,9 @@ object Relational13 {
         |  GROUP BY c_custkey)
         |SELECT c_count, CAST(count(1) AS BIGINT) AS custdist
         |FROM co GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
 
-    "join_tpch_q19" ->
+    QueryDef("join_tpch_q19", joinTpchQ19, Some(
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -142,9 +136,9 @@ object Relational13 {
         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
         |       AND l_quantity BETWEEN 10 AND 20)
         |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
+        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
 
-    "join_tpch_q22" ->
+    QueryDef("join_tpch_q22", joinTpchQ22, Some(
       """WITH a AS (
         |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(18,2))
         |    AS sum_pos, CAST(count(1) AS BIGINT) AS n_pos
@@ -157,6 +151,6 @@ object Relational13 {
         |  AND CAST(c_acctbal AS DECIMAL(18,2)) * n_pos > sum_pos
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |GROUP BY 1 ORDER BY code""".stripMargin,
+        |GROUP BY 1 ORDER BY code""".stripMargin)),
   )
 }

@@ -162,20 +162,13 @@ object Relational14 {
       .orderBy($"numwait".desc, $"l_suppkey")
       .limit(20)
 
-  val queries: Map[String, Q] = Map(
-    "join_tpch_q8" -> joinTpchQ8,
-    "join_tpch_q15" -> joinTpchQ15,
-    "join_tpch_q17" -> joinTpchQ17,
-    "join_tpch_q21" -> joinTpchQ21,
-  )
-
   private val RevSql =
     """CAST(l_extendedprice AS DECIMAL(18,2))
       | * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"""
       .stripMargin.replaceAll("\n", "")
 
-  val oracles: Map[String, String] = Map(
-    "join_tpch_q8" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("join_tpch_q8", joinTpchQ8, Some(
       s"""WITH f AS (
         |  SELECT year(l_shipdate) AS o_year,
         |    CASE WHEN sn.n_name = '$Q8Nation' THEN $RevSql
@@ -197,9 +190,9 @@ object Relational14 {
         |    // CAST(all_rev * 100 AS HUGEINT) AS BIGINT) AS share_bp,
         |  CAST(nat_rev AS DOUBLE) AS nat_revenue,
         |  CAST(all_rev AS DOUBLE) AS all_revenue
-        |FROM g ORDER BY o_year""".stripMargin,
+        |FROM g ORDER BY o_year""".stripMargin)),
 
-    "join_tpch_q15" ->
+    QueryDef("join_tpch_q15", joinTpchQ15, Some(
       s"""WITH r AS (
         |  SELECT l_suppkey, sum($RevSql) AS total_rev
         |  FROM lineitem
@@ -210,9 +203,9 @@ object Relational14 {
         |  CAST(total_rev AS DOUBLE) AS total_revenue
         |FROM r JOIN supplier ON l_suppkey = s_suppkey
         |WHERE total_rev = (SELECT max(total_rev) FROM r)
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin)),
 
-    "join_tpch_q17" ->
+    QueryDef("join_tpch_q17", joinTpchQ17, Some(
       s"""WITH q AS (
         |  SELECT l_partkey AS qp_key, CAST(count(1) AS BIGINT) AS n_q,
         |    sum(l_quantity) AS sum_q
@@ -225,9 +218,9 @@ object Relational14 {
         |JOIN part ON l_partkey = p_partkey
         |WHERE l_quantity * 5 * n_q < sum_q
         |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
+        |ORDER BY p_brand""".stripMargin)),
 
-    "join_tpch_q21" ->
+    QueryDef("join_tpch_q21", joinTpchQ21, Some(
       """WITH l AS (
         |  SELECT l_orderkey, l_suppkey,
         |    l_shipdate > o_orderdate + INTERVAL 60 DAY AS late
@@ -243,6 +236,6 @@ object Relational14 {
         |  WHERE l.late)
         |SELECT l_suppkey, CAST(count(1) AS BIGINT) AS numwait
         |FROM w GROUP BY l_suppkey
-        |ORDER BY numwait DESC, l_suppkey LIMIT 20""".stripMargin,
+        |ORDER BY numwait DESC, l_suppkey LIMIT 20""".stripMargin)),
   )
 }

@@ -224,13 +224,6 @@ object Relational15 {
       .orderBy($"s_name", $"s_suppkey")
   }
 
-  val queries: Map[String, Q] = Map(
-    "join_tpch_q2" -> joinTpchQ2,
-    "join_tpch_q9" -> joinTpchQ9,
-    "join_tpch_q11" -> joinTpchQ11,
-    "join_tpch_q20" -> joinTpchQ20,
-  )
-
   private val RevSql =
     """CAST(l_extendedprice AS DECIMAL(18,2))
       | * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"""
@@ -246,8 +239,8 @@ object Relational15 {
       |           ELSE 0 END) AS BIGINT) AS ps_qty97
       |FROM lineitem GROUP BY 1, 2""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "join_tpch_q2" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("join_tpch_q2", joinTpchQ2, Some(
       s"""WITH supply AS ($SupplySql),
         | es AS (
         |  SELECT ps_partkey, ps_suppkey, ps_cost, s_name, s_acctbal, n_name
@@ -264,9 +257,9 @@ object Relational15 {
         |WHERE ps_cost = (SELECT min(ps_cost) FROM es e2
         |                 WHERE e2.ps_partkey = es.ps_partkey)
         |ORDER BY acctbal DESC, n_name, s_name, ps_partkey, ps_suppkey
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin)),
 
-    "join_tpch_q9" ->
+    QueryDef("join_tpch_q9", joinTpchQ9, Some(
       s"""WITH supply AS ($SupplySql),
         | sp AS (
         |  SELECT ps_partkey, ps_suppkey, ps_cost FROM supply
@@ -282,9 +275,9 @@ object Relational15 {
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |GROUP BY n_name, o_year
-        |ORDER BY n_name, o_year DESC""".stripMargin,
+        |ORDER BY n_name, o_year DESC""".stripMargin)),
 
-    "join_tpch_q11" ->
+    QueryDef("join_tpch_q11", joinTpchQ11, Some(
       s"""WITH supply AS ($SupplySql),
         | v AS (
         |  SELECT ps_partkey,
@@ -301,9 +294,9 @@ object Relational15 {
         |SELECT ps_partkey, CAST(value_dec AS DOUBLE) AS value
         |FROM v, t
         |WHERE CAST(value_dec * 100 AS HUGEINT) > (2 * tot_cents) // n_parts
-        |ORDER BY value DESC, ps_partkey""".stripMargin,
+        |ORDER BY value DESC, ps_partkey""".stripMargin)),
 
-    "join_tpch_q20" ->
+    QueryDef("join_tpch_q20", joinTpchQ20, Some(
       s"""WITH supply AS ($SupplySql)
         |SELECT s_suppkey, s_name, CAST(s_acctbal AS DOUBLE) AS acctbal
         |FROM supplier
@@ -314,6 +307,6 @@ object Relational15 {
         |    WHERE ps_qty97 * 2 > ps_availqty
         |      AND ps_partkey IN (SELECT p_partkey FROM part
         |                         WHERE p_name LIKE '$Q20NamePrefix%'))
-        |ORDER BY s_name, s_suppkey""".stripMargin,
+        |ORDER BY s_name, s_suppkey""".stripMargin)),
   )
 }

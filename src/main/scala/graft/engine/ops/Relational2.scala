@@ -167,36 +167,22 @@ object Relational2 {
         round($"col".cast("double"), 4).as("val"))
       .orderBy($"vec_id", $"pos")
 
-  val queries: Map[String, Q] = Map(
-    "win_ntile" -> winNtile,
-    "win_percent_rank" -> winPercentRank,
-    "win_first_last" -> winFirstLast,
-    "agg_percentile" -> aggPercentile,
-    "agg_pivot" -> aggPivot,
-    "subq_scalar" -> subqScalar,
-    "subq_in" -> subqIn,
-    "subq_correlated" -> subqCorrelated,
-    "join_asof_salted" -> joinAsofSalted,
-    "join_cross" -> joinCross,
-    "fn_explode_pos" -> fnExplodePos,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "win_ntile" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("win_ntile", winNtile, Some(
       """SELECT o_custkey, o_orderkey,
         |  CAST(ntile(4) OVER (PARTITION BY o_custkey
         |    ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS bucket
-        |FROM orders ORDER BY o_custkey, bucket, o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_custkey, bucket, o_orderkey""".stripMargin)),
 
-    "win_percent_rank" ->
+    QueryDef("win_percent_rank", winPercentRank, Some(
       """SELECT o_custkey, o_orderkey,
         |  round(percent_rank() OVER w, 4) AS pr,
         |  round(cume_dist() OVER w, 4) AS cd
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)),
 
-    "win_first_last" ->
+    QueryDef("win_first_last", winFirstLast, Some(
       """SELECT o_custkey, o_orderkey,
         |  first_value(o_orderkey) OVER (PARTITION BY o_custkey
         |    ORDER BY o_orderdate, o_orderkey
@@ -207,55 +193,55 @@ object Relational2 {
         |  nth_value(o_orderkey, 2) OVER (PARTITION BY o_custkey
         |    ORDER BY o_orderdate, o_orderkey
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS second_key
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)),
 
-    "agg_percentile" ->
+    QueryDef("agg_percentile", aggPercentile, Some(
       """SELECT round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
         |  round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
         |  round(quantile_cont(o_totalprice, 0.99), 4) AS p99
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
 
-    "agg_pivot" ->
+    QueryDef("agg_pivot", aggPivot, Some(
       """SELECT o_orderpriority,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) FILTER (o_orderstatus = 'F') AS DOUBLE) AS "F",
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) FILTER (o_orderstatus = 'O') AS DOUBLE) AS "O",
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) FILTER (o_orderstatus = 'P') AS DOUBLE) AS "P"
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
-    "subq_scalar" ->
+    QueryDef("subq_scalar", subqScalar, Some(
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders) * 1.5
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "subq_in" ->
+    QueryDef("subq_in", subqIn, Some(
       """SELECT o_orderkey, o_custkey FROM orders
         |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "subq_correlated" ->
+    QueryDef("subq_correlated", subqCorrelated, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
         |WHERE o_totalprice > (SELECT 1.2 * avg(i.o_totalprice)
         |                      FROM orders i WHERE i.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "join_asof_salted" ->
+    QueryDef("join_asof_salted", joinAsofSalted, Some(
       """SELECT event_id, o_orderkey, o_orderdate FROM (
         |  SELECT e.event_id, o.o_orderkey, o.o_orderdate,
         |    row_number() OVER (PARTITION BY e.event_id
         |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
         |  FROM events e
         |  JOIN orders o ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
-        |) WHERE rn = 1 ORDER BY event_id""".stripMargin,
+        |) WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
-    "join_cross" ->
+    QueryDef("join_cross", joinCross, Some(
       """SELECT r_regionkey, n_nationkey FROM region CROSS JOIN nation
-        |ORDER BY r_regionkey, n_nationkey""".stripMargin,
+        |ORDER BY r_regionkey, n_nationkey""".stripMargin)),
 
-    "fn_explode_pos" ->
+    QueryDef("fn_explode_pos", fnExplodePos, Some(
       """SELECT vec_id, CAST(pos AS INTEGER) AS pos, round(CAST(val AS DOUBLE), 4) AS val
         |FROM (SELECT vec_id, unnest(embedding[1:4]) AS val,
         |        unnest(range(1, 5)) AS pos
         |      FROM embeddings)
-        |ORDER BY vec_id, pos""".stripMargin,
+        |ORDER BY vec_id, pos""".stripMargin)),
   )
 }

@@ -506,47 +506,8 @@ object Relational3 {
       .orderBy($"user_id", $"grid_us")
   }
 
-  val queries: Map[String, Q] = Map(
-    "ts_asof_grid" -> tsAsofGrid,
-    "agg_bitmap_distinct" -> aggBitmapDistinct,
-    "join_asof_native" -> joinAsofNative,
-    "join_asof_outer" -> joinAsofOuter,
-    "join_asof_forward" -> joinAsofForward,
-    "join_asof_nearest" -> joinAsofNearest,
-    "join_asof_tolerance" -> joinAsofTolerance,
-    "agg_histogram" -> aggHistogram,
-    "agg_incremental" -> aggIncremental,
-    "join_band_auto" -> joinBandAuto,
-    "join_range_bucket" -> joinRangeBucket,
-    "win_lead" -> winLead,
-    "set_union_distinct" -> setUnionDistinct,
-    "agg_corr" -> aggCorr,
-    "join_shuffle_hash" -> joinShuffleHash,
-    "fn_json_tuple" -> fnJsonTuple,
-    "sample_stratified" -> sampleStratified,
-    "fn_string2" -> fnString2,
-    "agg_minmax_by" -> aggMinmaxBy,
-    "agg_collect" -> aggCollect,
-    "fn_bitwise" -> fnBitwise,
-    "win_range" -> winRange,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sample_stratified" -> {
-      val key = "concat_ws(':', l_orderkey, l_linenumber, l_partkey, l_suppkey)"
-      val rate = StratifiedBp.map { case (k, v) => s"WHEN '$k' THEN $v" }
-        .mkString(" ")
-      s"""SELECT l_returnflag, CAST(count(1) AS BIGINT) AS n_sampled
-        |FROM (
-        |  SELECT l_returnflag,
-        |    ${DedupOps.duckCharHash(key)} % 10000 AS bucket,
-        |    CASE l_returnflag $rate END AS rate_bp
-        |  FROM lineitem)
-        |WHERE rate_bp IS NOT NULL AND bucket < rate_bp
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin
-    },
-    "ts_asof_grid" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("ts_asof_grid", tsAsofGrid, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
         | b AS (
@@ -569,21 +530,21 @@ object Relational3 {
         |FROM m JOIN j ON j.user_id = m.user_id AND j.grid_us = m.grid_us
         |  AND j.ts_us = m.last_ts_us
         |GROUP BY m.user_id, m.grid_us, m.last_ts_us
-        |ORDER BY m.user_id, m.grid_us""".stripMargin,
+        |ORDER BY m.user_id, m.grid_us""".stripMargin)),
 
-    "agg_bitmap_distinct" ->
-      "SELECT count(DISTINCT o_custkey) AS n_distinct FROM orders",
+    QueryDef("agg_bitmap_distinct", aggBitmapDistinct, Some(
+      "SELECT count(DISTINCT o_custkey) AS n_distinct FROM orders")),
 
-    "join_asof_native" ->
+    QueryDef("join_asof_native", joinAsofNative, Some(
       """SELECT event_id, o_orderkey, o_orderdate FROM (
         |  SELECT e.event_id, o.o_orderkey, o.o_orderdate,
         |    row_number() OVER (PARTITION BY e.event_id
         |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
         |  FROM events e
         |  JOIN orders o ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
-        |) WHERE rn = 1 ORDER BY event_id""".stripMargin,
+        |) WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
-    "join_asof_outer" ->
+    QueryDef("join_asof_outer", joinAsofOuter, Some(
       """SELECT event_id, o_orderkey, o_orderdate FROM (
         |  SELECT e.event_id, o.o_orderkey, o.o_orderdate,
         |    row_number() OVER (PARTITION BY e.event_id
@@ -591,9 +552,9 @@ object Relational3 {
         |               o.o_orderkey DESC NULLS LAST) AS rn
         |  FROM events e
         |  LEFT JOIN orders o ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
-        |) WHERE rn = 1 ORDER BY event_id""".stripMargin,
+        |) WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
-    "join_asof_forward" ->
+    QueryDef("join_asof_forward", joinAsofForward, Some(
       """WITH c AS (SELECT event_id, user_id, ts FROM events
         |           WHERE event_type = 'click'),
         | p AS (SELECT event_id AS p_event_id, user_id, ts AS p_ts
@@ -603,13 +564,13 @@ object Relational3 {
         |    row_number() OVER (PARTITION BY c.event_id
         |      ORDER BY p.p_ts ASC, p.p_event_id ASC) AS rn
         |  FROM c JOIN p ON c.user_id = p.user_id AND p.p_ts >= c.ts
-        |) WHERE rn = 1 ORDER BY event_id""".stripMargin,
+        |) WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
     // per-side candidate first (greatest <= ts / least > ts, each with
     // its own tie order), THEN the closer side wins, ties to backward —
     // exactly the operator's selection rule. Distances compare in
     // integer epoch-microseconds, the operator's internal time unit.
-    "join_asof_nearest" ->
+    QueryDef("join_asof_nearest", joinAsofNearest, Some(
       """WITH c AS (SELECT event_id, user_id, ts FROM events
         |           WHERE event_type = 'click'),
         | p AS (SELECT event_id AS p_event_id, user_id, ts AS p_ts
@@ -639,9 +600,9 @@ object Relational3 {
         |LEFT JOIN b ON b.event_id = c.event_id
         |LEFT JOIN f ON f.event_id = c.event_id
         |WHERE b.dist IS NOT NULL OR f.dist IS NOT NULL
-        |ORDER BY c.event_id""".stripMargin,
+        |ORDER BY c.event_id""".stripMargin)),
 
-    "join_asof_tolerance" ->
+    QueryDef("join_asof_tolerance", joinAsofTolerance, Some(
       """WITH c AS (SELECT event_id, user_id, ts FROM events
         |           WHERE event_type = 'click'),
         | p AS (SELECT event_id AS p_event_id, user_id, ts AS p_ts
@@ -652,61 +613,50 @@ object Relational3 {
         |      ORDER BY p.p_ts DESC, p.p_event_id DESC) AS rn
         |  FROM c JOIN p ON c.user_id = p.user_id AND p.p_ts <= c.ts
         |    AND epoch_us(c.ts) - epoch_us(p.p_ts) <= 86400000000
-        |) WHERE rn = 1 ORDER BY event_id""".stripMargin,
+        |) WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
-    "agg_histogram" ->
+    QueryDef("agg_histogram", aggHistogram, Some(
       """WITH b AS (SELECT min(value) AS mn, max(value) AS mx FROM events)
         |SELECT CAST(CASE WHEN mx = mn THEN 0
         |  ELSE least(19, floor((value - mn) / ((mx - mn) / 20.0)))
         |  END AS INTEGER) AS bin,
         |  count(1) AS n
-        |FROM events, b GROUP BY 1 ORDER BY bin""".stripMargin,
+        |FROM events, b GROUP BY 1 ORDER BY bin""".stripMargin)),
 
-    "agg_incremental" ->
+    QueryDef("agg_incremental", aggIncremental, Some(
       """SELECT o_orderpriority, count(1) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
 
-    "join_band_auto" ->
+    QueryDef("join_band_auto", joinBandAuto, Some(
       """SELECT l.l_orderkey, l.l_linenumber, p.p_partkey,
         |  round(abs(l.l_extendedprice - p.p_retailprice), 4) AS price_diff
         |FROM lineitem l JOIN part p
         |  ON abs(l.l_extendedprice - p.p_retailprice) <= 0.5
         |WHERE l.l_quantity = 1
-        |ORDER BY l.l_orderkey, l.l_linenumber, p.p_partkey, price_diff""".stripMargin,
+        |ORDER BY l.l_orderkey, l.l_linenumber, p.p_partkey, price_diff""".stripMargin)),
 
-    "join_range_bucket" ->
+    QueryDef("join_range_bucket", joinRangeBucket, Some(
       """SELECT l.l_orderkey, l.l_linenumber, p.p_partkey,
         |  round(abs(l.l_extendedprice - p.p_retailprice), 4) AS price_diff
         |FROM lineitem l JOIN part p
         |  ON abs(l.l_extendedprice - p.p_retailprice) <= 0.5
         |WHERE l.l_quantity = 1
-        |ORDER BY l.l_orderkey, l.l_linenumber, p.p_partkey, price_diff""".stripMargin,
+        |ORDER BY l.l_orderkey, l.l_linenumber, p.p_partkey, price_diff""".stripMargin)),
 
-    "win_lead" ->
+    QueryDef("win_lead", winLead, Some(
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  lead(o_totalprice, 1) OVER (PARTITION BY o_custkey
         |    ORDER BY o_orderdate, o_orderkey) AS next_price
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)),
 
-    "set_union_distinct" ->
+    QueryDef("set_union_distinct", setUnionDistinct, Some(
       """SELECT o_custkey AS k FROM orders
         |UNION
         |SELECT user_id AS k FROM events
-        |ORDER BY k""".stripMargin,
+        |ORDER BY k""".stripMargin)),
 
-    "join_shuffle_hash" ->
-      """SELECT o_orderkey, c_custkey, c_name, o_totalprice
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "fn_json_tuple" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
-        |  json_extract_string(props, '$.missing') AS missing
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "agg_corr" ->
+    QueryDef("agg_corr", aggCorr, Some(
       """WITH a AS (
         |  SELECT l_returnflag, count(1) AS n,
         |    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
@@ -724,9 +674,35 @@ object Relational3 {
         |    / sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n)
         |         * (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / n)),
         |    4) AS corr_qty_price
-        |FROM a ORDER BY l_returnflag""".stripMargin,
+        |FROM a ORDER BY l_returnflag""".stripMargin)),
 
-    "fn_string2" ->
+    QueryDef("join_shuffle_hash", joinShuffleHash, Some(
+      """SELECT o_orderkey, c_custkey, c_name, o_totalprice
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin)),
+
+    QueryDef("fn_json_tuple", fnJsonTuple, Some(
+      """SELECT event_id,
+        |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
+        |  json_extract_string(props, '$.missing') AS missing
+        |FROM events ORDER BY event_id""".stripMargin)),
+
+    QueryDef("sample_stratified", sampleStratified, Some {
+      val key = "concat_ws(':', l_orderkey, l_linenumber, l_partkey, l_suppkey)"
+      val rate = StratifiedBp.map { case (k, v) => s"WHEN '$k' THEN $v" }
+        .mkString(" ")
+      s"""SELECT l_returnflag, CAST(count(1) AS BIGINT) AS n_sampled
+        |FROM (
+        |  SELECT l_returnflag,
+        |    ${DedupOps.duckCharHash(key)} % 10000 AS bucket,
+        |    CASE l_returnflag $rate END AS rate_bp
+        |  FROM lineitem)
+        |WHERE rate_bp IS NOT NULL AND bucket < rate_bp
+        |GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin
+    }),
+
+    QueryDef("fn_string2", fnString2, Some(
       """SELECT p_partkey,
         |  lpad(p_brand, 12, '*') AS pad_l,
         |  rpad(p_brand, 12, '.') AS pad_r,
@@ -738,36 +714,36 @@ object Relational3 {
         |  right(p_name, 4) AS tail4,
         |  CAST(CASE WHEN position('BRUSHED' IN p_type) IS NULL THEN 0
         |       ELSE position('BRUSHED' IN p_type) END AS INTEGER) AS brushed_at
-        |FROM part ORDER BY p_partkey""".stripMargin,
+        |FROM part ORDER BY p_partkey""".stripMargin)),
 
-    "agg_minmax_by" ->
+    QueryDef("agg_minmax_by", aggMinmaxBy, Some(
       """SELECT o_orderpriority,
         |  arg_max(o_orderkey, printf('%020.2f', o_totalprice) || '-'
         |    || printf('%020d', o_orderkey)) AS priciest_key,
         |  arg_min(o_orderkey, printf('%020.2f', o_totalprice) || '-'
         |    || printf('%020d', o_orderkey)) AS cheapest_key,
         |  max(o_totalprice) AS max_price
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
-    "agg_collect" ->
+    QueryDef("agg_collect", aggCollect, Some(
       """SELECT n_regionkey,
         |  array_to_string(list_sort(list(n_name)), ',') AS nations
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin)),
 
-    "fn_bitwise" ->
+    QueryDef("fn_bitwise", fnBitwise, Some(
       """SELECT l_orderkey, l_linenumber,
         |  l_orderkey & 255 AS band,
         |  l_orderkey | l_linenumber AS bor,
         |  xor(l_orderkey, CAST(l_linenumber AS BIGINT)) AS bxor,
         |  CAST(l_linenumber << 4 AS INTEGER) AS shl,
         |  l_orderkey >> 3 AS shr
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
 
-    "win_range" ->
+    QueryDef("win_range", winRange, Some(
       """SELECT o_orderkey, o_orderpriority,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
         |    PARTITION BY o_orderpriority ORDER BY o_totalprice
         |    RANGE BETWEEN 5000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS nearby_sum
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
   )
 }

@@ -383,62 +383,44 @@ object Relational4 {
       .orderBy($"c_mktsegment")
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg_unpivot" -> aggUnpivot,
-    "join_lateral" -> joinLateral,
-    "ts_fill" -> tsFill,
-    "agg_retention" -> aggRetention,
-    "data_split" -> dataSplit,
-    "text_pii" -> textPii,
-    "graph_triangles" -> graphTriangles,
-    "agg_mode" -> aggMode,
-    "join_bloom" -> joinBloom,
-    "sample_hash" -> sampleHash,
-    "fn_date2" -> fnDate2,
-    "join_full" -> joinFull,
-    "subq_exists" -> subqExists,
-    "set_intersect_all" -> setIntersectAll,
-    "set_except_all" -> setExceptAll,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "agg_unpivot" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("agg_unpivot", aggUnpivot, Some(
       """WITH w AS (SELECT o_orderpriority,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  CAST(count(1) AS DOUBLE) AS n_orders,
         |  max(o_totalprice) AS max_price FROM orders GROUP BY 1)
         |SELECT o_orderpriority, metric, value
         |FROM w UNPIVOT (value FOR metric IN (sum_price, n_orders, max_price))
-        |ORDER BY o_orderpriority, metric""".stripMargin,
+        |ORDER BY o_orderpriority, metric""".stripMargin)),
 
-    "join_lateral" ->
+    QueryDef("join_lateral", joinLateral, Some(
       """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer c
         |JOIN LATERAL (
         |  SELECT o_orderkey, o_totalprice FROM orders o
         |  WHERE o.o_custkey = c.c_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t ON true
-        |ORDER BY c.c_custkey, t.o_orderkey""".stripMargin,
+        |ORDER BY c.c_custkey, t.o_orderkey""".stripMargin)),
 
-    "ts_fill" ->
+    QueryDef("ts_fill", tsFill, Some(
       """WITH e AS (SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 3600) * 3600 AS hr,
         |                  count(1) AS n
         |           FROM events WHERE event_type = 'error' GROUP BY 1),
         | b AS (SELECT min(hr) AS mn, max(hr) AS mx FROM e),
         | hours AS (SELECT unnest(generate_series(mn, mx, 3600)) AS hr FROM b)
         |SELECT h.hr, COALESCE(e.n, 0) AS n
-        |FROM hours h LEFT JOIN e ON e.hr = h.hr ORDER BY h.hr""".stripMargin,
+        |FROM hours h LEFT JOIN e ON e.hr = h.hr ORDER BY h.hr""".stripMargin)),
 
-    "agg_retention" ->
+    QueryDef("agg_retention", aggRetention, Some(
       """WITH days AS (SELECT user_id,
         |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day FROM events),
         | cohort AS (SELECT user_id, min(day) AS d0 FROM days GROUP BY 1),
         | act AS (SELECT DISTINCT days.user_id, day - d0 AS k
         |         FROM days JOIN cohort ON cohort.user_id = days.user_id
         |         WHERE day - d0 <= 7)
-        |SELECT k, count(1) AS n_users FROM act GROUP BY 1 ORDER BY k""".stripMargin,
+        |SELECT k, count(1) AS n_users FROM act GROUP BY 1 ORDER BY k""".stripMargin)),
 
-    "data_split" ->
+    QueryDef("data_split", dataSplit, Some(
       """WITH b AS (SELECT doc_id,
         |  CAST(CAST(doc_id AS HUGEINT) * 2654435761 % 4294967296 % 100
         |       AS BIGINT) AS bucket FROM documents)
@@ -446,9 +428,9 @@ object Relational4 {
         |  CASE WHEN bucket < 80 THEN 'train'
         |       WHEN bucket < 90 THEN 'valid'
         |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin)),
 
-    "text_pii" ->
+    QueryDef("text_pii", textPii, Some(
       """WITH raw AS (SELECT doc_id,
         |  text || ' contact user' || doc_id || '@example.com tel 555'
         |       || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS raw
@@ -462,9 +444,9 @@ object Relational4 {
         |  md5(regexp_replace(regexp_replace(raw,
         |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |    '[0-9]{4,}', '<NUM>', 'g')) AS digest
-        |FROM raw ORDER BY doc_id""".stripMargin,
+        |FROM raw ORDER BY doc_id""".stripMargin)),
 
-    "graph_triangles" ->
+    QueryDef("graph_triangles", graphTriangles, Some(
       """WITH e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
         |  FROM lineitem a JOIN lineitem b
         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
@@ -472,51 +454,29 @@ object Relational4 {
         |SELECT (SELECT count(1) FROM e) AS n_edges,
         |  (SELECT count(1) FROM e e1
         |    JOIN e e2 ON e2.u = e1.v
-        |    JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles""".stripMargin,
+        |    JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles""".stripMargin)),
 
-    "fn_date2" ->
-      """SELECT o_orderkey,
-        |  CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus3m,
-        |  CAST(last_day(CAST(o_orderdate AS DATE)) AS DATE) AS eom,
-        |  CAST(date_trunc('quarter', o_orderdate) AS DATE) AS q_start,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
-        |  CAST(isodow(o_orderdate) AS INTEGER) AS dow_iso,
-        |  CAST(week(o_orderdate) AS INTEGER) AS iso_week,
-        |  CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2024-06-30')
-        |       AS INTEGER) AS days_to_mid
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+    QueryDef("agg_mode", aggMode, Some(
+      """WITH counts AS (
+        |  SELECT c_mktsegment, o_orderpriority, count(1) AS n
+        |  FROM orders JOIN customer ON o_custkey = c_custkey
+        |  GROUP BY 1, 2)
+        |SELECT c_mktsegment, o_orderpriority AS mode_priority, n FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY c_mktsegment
+        |    ORDER BY n DESC, o_orderpriority) AS rn FROM counts)
+        |WHERE rn = 1 ORDER BY c_mktsegment""".stripMargin)),
 
-    "join_full" ->
-      """SELECT COALESCE(o.k, e.k) AS k, o.n_orders, e.n_events
-        |FROM (SELECT o_custkey AS k, count(1) AS n_orders
-        |      FROM orders GROUP BY 1) o
-        |FULL OUTER JOIN (SELECT user_id AS k, count(1) AS n_events
-        |                 FROM events GROUP BY 1) e
-        |  ON o.k = e.k
-        |ORDER BY k""".stripMargin,
+    // the bloom only prunes (no false negatives; false positives die
+    // in the exact join), so the oracle is the PLAIN join — equality
+    // proves the reduction is lossless
+    QueryDef("join_bloom", joinBloom, Some(
+      """WITH dim AS (SELECT c_custkey, c_name FROM customer
+        |             WHERE c_acctbal < 0 AND c_mktsegment = 'AUTOMOBILE')
+        |SELECT o.o_orderkey, o.o_custkey, d.c_name, o.o_totalprice
+        |FROM orders o JOIN dim d ON o.o_custkey = d.c_custkey
+        |ORDER BY o.o_orderkey""".stripMargin)),
 
-    "subq_exists" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > 400000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "set_intersect_all" ->
-      """SELECT dt, count(1) AS n FROM (
-        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '1-URGENT'
-        |  INTERSECT ALL
-        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '2-HIGH')
-        |GROUP BY dt ORDER BY dt""".stripMargin,
-
-    "set_except_all" ->
-      """SELECT dt, count(1) AS n FROM (
-        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '1-URGENT'
-        |  EXCEPT ALL
-        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '2-HIGH')
-        |GROUP BY dt ORDER BY dt""".stripMargin,
-
-    "sample_hash" ->
+    QueryDef("sample_hash", sampleHash, Some(
       """WITH s AS (SELECT l_returnflag, l_quantity,
         |  ((l_orderkey * 8 + l_linenumber) * 2654435761) % 4294967296 % 1000
         |    AS bucket
@@ -527,26 +487,48 @@ object Relational4 {
         |WHERE (l_returnflag = 'A' AND bucket < 100)
         |   OR (l_returnflag = 'N' AND bucket < 200)
         |   OR (l_returnflag = 'R' AND bucket < 100)
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin)),
 
-    // the bloom only prunes (no false negatives; false positives die
-    // in the exact join), so the oracle is the PLAIN join — equality
-    // proves the reduction is lossless
-    "join_bloom" ->
-      """WITH dim AS (SELECT c_custkey, c_name FROM customer
-        |             WHERE c_acctbal < 0 AND c_mktsegment = 'AUTOMOBILE')
-        |SELECT o.o_orderkey, o.o_custkey, d.c_name, o.o_totalprice
-        |FROM orders o JOIN dim d ON o.o_custkey = d.c_custkey
-        |ORDER BY o.o_orderkey""".stripMargin,
+    QueryDef("fn_date2", fnDate2, Some(
+      """SELECT o_orderkey,
+        |  CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus3m,
+        |  CAST(last_day(CAST(o_orderdate AS DATE)) AS DATE) AS eom,
+        |  CAST(date_trunc('quarter', o_orderdate) AS DATE) AS q_start,
+        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
+        |  CAST(isodow(o_orderdate) AS INTEGER) AS dow_iso,
+        |  CAST(week(o_orderdate) AS INTEGER) AS iso_week,
+        |  CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2024-06-30')
+        |       AS INTEGER) AS days_to_mid
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
-    "agg_mode" ->
-      """WITH counts AS (
-        |  SELECT c_mktsegment, o_orderpriority, count(1) AS n
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2)
-        |SELECT c_mktsegment, o_orderpriority AS mode_priority, n FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY c_mktsegment
-        |    ORDER BY n DESC, o_orderpriority) AS rn FROM counts)
-        |WHERE rn = 1 ORDER BY c_mktsegment""".stripMargin,
+    QueryDef("join_full", joinFull, Some(
+      """SELECT COALESCE(o.k, e.k) AS k, o.n_orders, e.n_events
+        |FROM (SELECT o_custkey AS k, count(1) AS n_orders
+        |      FROM orders GROUP BY 1) o
+        |FULL OUTER JOIN (SELECT user_id AS k, count(1) AS n_events
+        |                 FROM events GROUP BY 1) e
+        |  ON o.k = e.k
+        |ORDER BY k""".stripMargin)),
+
+    QueryDef("subq_exists", subqExists, Some(
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey
+        |                AND o.o_totalprice > 400000)
+        |ORDER BY c_custkey""".stripMargin)),
+
+    QueryDef("set_intersect_all", setIntersectAll, Some(
+      """SELECT dt, count(1) AS n FROM (
+        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '1-URGENT'
+        |  INTERSECT ALL
+        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '2-HIGH')
+        |GROUP BY dt ORDER BY dt""".stripMargin)),
+
+    QueryDef("set_except_all", setExceptAll, Some(
+      """SELECT dt, count(1) AS n FROM (
+        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '1-URGENT'
+        |  EXCEPT ALL
+        |  SELECT o_orderdate AS dt FROM orders WHERE o_orderpriority = '2-HIGH')
+        |GROUP BY dt ORDER BY dt""".stripMargin)),
   )
 }

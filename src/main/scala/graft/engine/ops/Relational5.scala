@@ -353,24 +353,8 @@ object Relational5 {
       .orderBy($"event_type")
   }
 
-  val queries: Map[String, Q] = Map(
-    "ts_anomaly" -> tsAnomaly,
-    "agg_moments" -> aggMoments,
-    "ts_locf" -> tsLocf,
-    "agg_grouping_id" -> aggGroupingId,
-    "join_null_safe" -> joinNullSafe,
-    "fn_variant" -> fnVariant,
-    "fn_sql_udf" -> fnSqlUdf,
-    "fn_try" -> fnTry,
-    "graph_hierarchy" -> graphHierarchy,
-    "mix_upsample" -> mixUpsample,
-    "ts_ohlc" -> tsOhlc,
-    "agg_bool" -> aggBool,
-    "agg_multi_distinct" -> aggMultiDistinct,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ts_anomaly" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("ts_anomaly", tsAnomaly, Some(
       """WITH e AS (
         |  SELECT event_type, event_id,
         |    CAST(floor(value * 1000000) AS BIGINT) AS x
@@ -388,9 +372,9 @@ object Relational5 {
         |             - (CAST(s1 AS DOUBLE) / st.n) * (CAST(s1 AS DOUBLE) / st.n))
         |  ) AS BIGINT) AS n_anomalies
         |FROM e JOIN st ON st.event_type = e.event_type
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
+        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin)),
 
-    "agg_moments" ->
+    QueryDef("agg_moments", aggMoments, Some(
       """WITH a AS (
         |  SELECT l_returnflag, count(1) AS n,
         |    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS s1,
@@ -421,9 +405,9 @@ object Relational5 {
         |       * (CAST(s2 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)))
         |    - 3.0
         |  ) * 10000) AS BIGINT) AS kurt_bp
-        |FROM a ORDER BY l_returnflag""".stripMargin,
+        |FROM a ORDER BY l_returnflag""".stripMargin)),
 
-    "ts_locf" ->
+    QueryDef("ts_locf", tsLocf, Some(
       """WITH e AS (
         |  SELECT user_id, value,
         |    row_number() OVER (PARTITION BY user_id
@@ -436,9 +420,9 @@ object Relational5 {
         |  last_value(v_sparse IGNORE NULLS) OVER (PARTITION BY user_id
         |    ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS v_filled
-        |FROM g ORDER BY user_id, rn""".stripMargin,
+        |FROM g ORDER BY user_id, rn""".stripMargin)),
 
-    "agg_grouping_id" ->
+    QueryDef("agg_grouping_id", aggGroupingId, Some(
       """SELECT o_orderstatus, o_orderpriority, count(1) AS n,
         |  CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
         |  CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio,
@@ -446,9 +430,9 @@ object Relational5 {
         |       AS BIGINT) AS gid
         |FROM orders
         |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
+        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin)),
 
-    "join_null_safe" ->
+    QueryDef("join_null_safe", joinNullSafe, Some(
       """WITH a AS (
         |  SELECT nullif(o_orderpriority, '3-MEDIUM') AS k, count(1) AS n_all
         |  FROM orders GROUP BY 1),
@@ -457,23 +441,23 @@ object Relational5 {
         |  FROM orders WHERE o_totalprice > 200000 GROUP BY 1)
         |SELECT a.k, a.n_all, b.n_big
         |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
-        |ORDER BY a.k NULLS FIRST""".stripMargin,
+        |ORDER BY a.k NULLS FIRST""".stripMargin)),
 
-    "fn_variant" ->
+    QueryDef("fn_variant", fnVariant, Some(
       """SELECT event_id,
         |  CAST(props::JSON ->> 'k' AS BIGINT) AS k,
         |  CAST(props::JSON ->> 'missing' AS BIGINT) AS absent,
         |  event_id % 7 = 0 AS null_in
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "fn_sql_udf" ->
+    QueryDef("fn_sql_udf", fnSqlUdf, Some(
       """SELECT CASE WHEN c_acctbal < 0 THEN 'debit'
         |            WHEN c_acctbal < 5000 THEN 'standard'
         |            ELSE 'premium' END AS tier,
         |  count(1) AS n, min(c_custkey) AS min_key
-        |FROM customer GROUP BY 1 ORDER BY tier""".stripMargin,
+        |FROM customer GROUP BY 1 ORDER BY tier""".stripMargin)),
 
-    "fn_try" ->
+    QueryDef("fn_try", fnTry, Some(
       """SELECT event_id,
         |  user_id / nullif(event_id % 5, 0) AS safe_div,
         |  TRY_CAST(CASE WHEN event_id % 3 = 0 THEN CAST(event_id AS VARCHAR)
@@ -481,9 +465,9 @@ object Relational5 {
         |  CASE WHEN event_id % 50 = 0 THEN NULL
         |       ELSE CAST((event_id % 3 - 1) * 4611686018427387904 AS BIGINT)
         |  END AS safe_mul
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "graph_hierarchy" ->
+    QueryDef("graph_hierarchy", graphHierarchy, Some(
       """WITH RECURSIVE down(root, node, sz) AS (
         |  SELECT p_partkey, p_partkey, p_size FROM part WHERE p_partkey < 10
         |  UNION ALL
@@ -491,9 +475,9 @@ object Relational5 {
         |  FROM down JOIN part p
         |    ON p.p_partkey // 10 = down.node AND p.p_partkey >= 10)
         |SELECT root, count(1) AS n_desc, CAST(sum(sz) AS BIGINT) AS sum_size
-        |FROM down GROUP BY root ORDER BY root""".stripMargin,
+        |FROM down GROUP BY root ORDER BY root""".stripMargin)),
 
-    "mix_upsample" ->
+    QueryDef("mix_upsample", mixUpsample, Some(
       """WITH td AS (
         |  SELECT doc_id, lang,
         |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS toks
@@ -508,9 +492,9 @@ object Relational5 {
         |  CAST(unnest(generate_series(1, r.repeats)) AS BIGINT) AS copy
         |FROM td JOIN reps r ON r.lang = td.lang
         |WHERE td.doc_id < 50
-        |ORDER BY doc_id, copy""".stripMargin,
+        |ORDER BY doc_id, copy""".stripMargin)),
 
-    "ts_ohlc" ->
+    QueryDef("ts_ohlc", tsOhlc, Some(
       """WITH e AS (
         |  SELECT event_type, event_id, value,
         |    epoch_us(ts) AS ts_us,
@@ -532,22 +516,22 @@ object Relational5 {
         |  FROM e)
         |SELECT event_type, bar, open, high, low, close, CAST(n AS BIGINT) AS n
         |FROM wnd WHERE rn = 1
-        |ORDER BY event_type, bar""".stripMargin,
+        |ORDER BY event_type, bar""".stripMargin)),
 
-    "agg_bool" ->
+    QueryDef("agg_bool", aggBool, Some(
       """SELECT event_type,
         |  bool_and(value > 0) AS all_pos,
         |  bool_or(value > 99) AS any_big,
         |  CAST(count(1) FILTER (WHERE value > 50) AS BIGINT) AS n_gt50,
         |  CAST(count(1) FILTER (WHERE value IS NULL) AS BIGINT) AS n_null
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    "agg_multi_distinct" ->
+    QueryDef("agg_multi_distinct", aggMultiDistinct, Some(
       """SELECT l_returnflag,
         |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
         |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
         |  CAST(count(1) AS BIGINT) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
   )
 }

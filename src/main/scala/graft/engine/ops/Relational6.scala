@@ -653,39 +653,16 @@ object Relational6 {
       .orderBy($"l_returnflag")
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg_salted" -> aggSalted,
-    "win_cume_dist" -> winCumeDist,
-    "join_star" -> joinStar,
-    "ts_sessionize" -> tsSessionize,
-    "graph_pagerank" -> graphPagerank,
-    "data_shuffle" -> dataShuffle,
-    "fn_url" -> fnUrl,
-    "data_interleave" -> dataInterleave,
-    "dedup_url" -> dedupUrl,
-    "ts_interp" -> tsInterp,
-    "tok_vocab_coverage" -> tokVocabCoverage,
-    "agg_linreg" -> aggLinreg,
-    "pack_windows" -> packWindows,
-    "graph_bfs" -> graphBfs,
-    "agg_quantiles" -> aggQuantiles,
-    "dedup_fuzzy" -> dedupFuzzy,
-    "win_running_distinct" -> winRunningDistinct,
-    "join_interval_overlap" -> joinIntervalOverlap,
-    "agg_gini" -> aggGini,
-    "text_ttr" -> textTtr,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // deliberately the DIRECT single-stage form: salting must be
     // invisible in the result, only in the plan
-    "agg_salted" ->
+    QueryDef("agg_salted", aggSalted, Some(
       """SELECT l_returnflag, CAST(count(1) AS BIGINT) AS n_rows,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
 
-    "win_cume_dist" ->
+    QueryDef("win_cume_dist", winCumeDist, Some(
       """SELECT o_orderkey, o_orderpriority, o_totalprice,
         |  CAST(floor(cume_dist() OVER w * 1000000) AS BIGINT) AS cd_e6,
         |  nth_value(o_totalprice, 2) OVER (
@@ -694,9 +671,9 @@ object Relational6 {
         |FROM orders
         |WINDOW w AS (PARTITION BY o_orderpriority
         |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "join_star" ->
+    QueryDef("join_star", joinStar, Some(
       """SELECT r_name, n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
@@ -708,8 +685,9 @@ object Relational6 {
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-    "ts_sessionize" ->
+        |ORDER BY r_name, n_name""".stripMargin)),
+
+    QueryDef("ts_sessionize", tsSessionize, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
         | flags AS (
@@ -728,8 +706,9 @@ object Relational6 {
         |  min(ts_us) AS start_us, max(ts_us) AS end_us,
         |  max(ts_us) - min(ts_us) AS dur_us
         |FROM sess GROUP BY user_id, sess_id
-        |ORDER BY user_id, sess_id""".stripMargin,
-    "graph_pagerank" ->
+        |ORDER BY user_id, sess_id""".stripMargin)),
+
+    QueryDef("graph_pagerank", graphPagerank, Some(
       """WITH pairs AS (
         |  SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
         |  FROM lineitem),
@@ -751,8 +730,9 @@ object Relational6 {
         |        FROM edges e JOIN deg d ON e.src = d.src
         |        JOIN r2 r ON r.node = e.src GROUP BY e.dst)
         |SELECT node, CAST(pr AS BIGINT) AS pr FROM r3
-        |ORDER BY pr DESC, node LIMIT 20""".stripMargin,
-    "data_shuffle" ->
+        |ORDER BY pr DESC, node LIMIT 20""".stripMargin)),
+
+    QueryDef("data_shuffle", dataShuffle, Some(
       """WITH h AS (
         |  SELECT doc_id, md5('graft:' || CAST(doc_id AS VARCHAR)) AS h
         |  FROM documents),
@@ -762,8 +742,9 @@ object Relational6 {
         |  FROM h)
         |SELECT doc_id, h, CAST(pos AS BIGINT) AS pos,
         |  CAST(pos % 8 AS BIGINT) AS shard
-        |FROM p ORDER BY pos""".stripMargin,
-    "fn_url" ->
+        |FROM p ORDER BY pos""".stripMargin)),
+
+    QueryDef("fn_url", fnUrl, Some(
       """WITH u AS (
         |  SELECT doc_id,
         |    'https://' || source || '.example.org/' || lang || '/doc-'
@@ -774,13 +755,15 @@ object Relational6 {
         |  regexp_extract(url, 'https://([^/]+)', 1) AS host,
         |  regexp_extract(url, 'https://[^/]+([^?]*)', 1) AS path,
         |  regexp_extract(url, '[?&]ref=([^&]*)', 1) AS ref_param
-        |FROM u ORDER BY doc_id""".stripMargin,
-    "data_interleave" ->
+        |FROM u ORDER BY doc_id""".stripMargin)),
+
+    QueryDef("data_interleave", dataInterleave, Some(
       """SELECT doc_id, source,
         |  CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id)
         |       AS BIGINT) AS rr
-        |FROM documents ORDER BY rr, source""".stripMargin,
-    "dedup_url" ->
+        |FROM documents ORDER BY rr, source""".stripMargin)),
+
+    QueryDef("dedup_url", dedupUrl, Some(
       """WITH u AS (
         |  SELECT doc_id,
         |    'https://'
@@ -798,8 +781,9 @@ object Relational6 {
         |  FROM u)
         |SELECT canon, CAST(count(1) AS BIGINT) AS n_variants,
         |  min(doc_id) AS first_doc
-        |FROM c GROUP BY canon ORDER BY canon""".stripMargin,
-    "ts_interp" ->
+        |FROM c GROUP BY canon ORDER BY canon""".stripMargin)),
+
+    QueryDef("ts_interp", tsInterp, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CASE WHEN event_id % 3 = 0
@@ -831,8 +815,9 @@ object Relational6 {
         |       WHEN vb IS NULL THEN va
         |       ELSE (va * (b_rn - rn) + vb * (rn - a_rn)) // (b_rn - a_rn)
         |  END AS v_fill
-        |FROM w ORDER BY user_id, event_id""".stripMargin,
-    "tok_vocab_coverage" ->
+        |FROM w ORDER BY user_id, event_id""".stripMargin)),
+
+    QueryDef("tok_vocab_coverage", tokVocabCoverage, Some(
       """WITH toks AS (
         |  SELECT doc_id,
         |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
@@ -845,8 +830,9 @@ object Relational6 {
         |  CAST(count(v.tok) AS BIGINT) AS n_vocab,
         |  CAST((count(v.tok) * 10000) // count(1) AS BIGINT) AS cov_e4
         |FROM toks t LEFT JOIN vocab v USING (tok)
-        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
-    "agg_linreg" ->
+        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin)),
+
+    QueryDef("agg_linreg", aggLinreg, Some(
       """WITH e AS (
         |  SELECT event_type,
         |    (epoch_us(ts) // 3600000000)
@@ -867,8 +853,9 @@ object Relational6 {
         |SELECT event_type, n, CAST(slope_e6 AS BIGINT) AS slope_e6,
         |  CAST((CAST(sy AS HUGEINT) * 1000000 - slope_e6 * sx)
         |    // (CAST(n AS HUGEINT) * 1000000) AS BIGINT) AS icept_e6
-        |FROM sl ORDER BY event_type""".stripMargin,
-    "pack_windows" ->
+        |FROM sl ORDER BY event_type""".stripMargin)),
+
+    QueryDef("pack_windows", packWindows, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
@@ -884,8 +871,9 @@ object Relational6 {
         |SELECT doc_id, CAST(win_idx AS BIGINT) AS win_idx,
         |  CAST(win_idx * 16 AS BIGINT) AS start,
         |  CAST(least(32, n - win_idx * 16) AS BIGINT) AS win_len
-        |FROM w ORDER BY doc_id, win_idx""".stripMargin,
-    "graph_bfs" ->
+        |FROM w ORDER BY doc_id, win_idx""".stripMargin)),
+
+    QueryDef("graph_bfs", graphBfs, Some(
       """WITH RECURSIVE
         | edges AS (
         |  SELECT p_partkey AS src, p_partkey // 10 AS dst FROM part
@@ -899,8 +887,9 @@ object Relational6 {
         |  SELECT e.dst, d + 1 FROM bfs JOIN edges e ON e.src = bfs.node
         |  WHERE d < 6)
         |SELECT node, CAST(min(d) AS BIGINT) AS dist
-        |FROM bfs GROUP BY node ORDER BY dist, node""".stripMargin,
-    "agg_quantiles" ->
+        |FROM bfs GROUP BY node ORDER BY dist, node""".stripMargin)),
+
+    QueryDef("agg_quantiles", aggQuantiles, Some(
       """SELECT o_orderpriority, CAST(0 AS BIGINT) AS qi,
         |  round(quantile_cont(o_totalprice, 0.25), 4) AS qv
         |FROM orders GROUP BY o_orderpriority
@@ -916,8 +905,9 @@ object Relational6 {
         |SELECT o_orderpriority, 3,
         |  round(quantile_cont(o_totalprice, 0.9), 4)
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority, qi""".stripMargin,
-    "dedup_fuzzy" ->
+        |ORDER BY o_orderpriority, qi""".stripMargin)),
+
+    QueryDef("dedup_fuzzy", dedupFuzzy, Some(
       """WITH b AS (
         |  SELECT doc_id, lang,
         |    substr(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'),
@@ -930,8 +920,9 @@ object Relational6 {
         |FROM b a JOIN b c ON a.lang = c.lang AND a.blk = c.blk
         |  AND a.doc_id < c.doc_id
         |WHERE levenshtein(a.head, c.head) <= 15
-        |ORDER BY id_a, id_b""".stripMargin,
-    "win_running_distinct" ->
+        |ORDER BY id_a, id_b""".stripMargin)),
+
+    QueryDef("win_running_distinct", winRunningDistinct, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
         |  FROM events),
@@ -946,8 +937,9 @@ object Relational6 {
         |  CAST(sum(is_first) OVER (PARTITION BY user_id
         |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING)
         |    AS BIGINT) AS n_types_seen
-        |FROM f ORDER BY user_id, event_id""".stripMargin,
-    "join_interval_overlap" ->
+        |FROM f ORDER BY user_id, event_id""".stripMargin)),
+
+    QueryDef("join_interval_overlap", joinIntervalOverlap, Some(
       """WITH iv AS (
         |  SELECT event_id, event_type, epoch_us(ts) AS st,
         |    epoch_us(ts) + CAST(floor(value * 60000000) AS BIGINT) AS en
@@ -957,8 +949,9 @@ object Relational6 {
         |FROM iv a JOIN iv b
         |  ON a.event_type = b.event_type AND a.event_id < b.event_id
         |  AND a.st <= b.en AND b.st <= a.en
-        |ORDER BY id_a, id_b""".stripMargin,
-    "agg_gini" ->
+        |ORDER BY id_a, id_b""".stripMargin)),
+
+    QueryDef("agg_gini", aggGini, Some(
       """WITH r AS (
         |  SELECT source, CAST(n_chars AS BIGINT) AS x,
         |    CAST(row_number() OVER (PARTITION BY source
@@ -972,8 +965,9 @@ object Relational6 {
         |SELECT source, n,
         |  CAST(((2 * six - (CAST(n AS HUGEINT) + 1) * sx) * 1000000)
         |    // (CAST(n AS HUGEINT) * sx) AS BIGINT) AS gini_e6
-        |FROM s ORDER BY source""".stripMargin,
-    "text_ttr" ->
+        |FROM s ORDER BY source""".stripMargin)),
+
+    QueryDef("text_ttr", textTtr, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
@@ -989,6 +983,6 @@ object Relational6 {
         |SELECT doc_id, n_tokens, n_types, n_hapax,
         |  CAST((n_types * 10000) // n_tokens AS BIGINT) AS ttr_e4,
         |  CAST((n_hapax * 10000) // n_tokens AS BIGINT) AS hapax_e4
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin)),
   )
 }

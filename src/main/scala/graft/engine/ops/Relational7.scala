@@ -451,23 +451,8 @@ object Relational7 {
       .orderBy($"total_qty".desc, $"l_orderkey")
       .limit(100)
 
-  val queries: Map[String, Q] = Map(
-    "win_ewma" -> winEwma,
-    "win_slope" -> winSlope,
-    "graph_jaccard" -> graphJaccard,
-    "ts_downsample" -> tsDownsample,
-    "agg_diversity" -> aggDiversity,
-    "mix_epochs" -> mixEpochs,
-    "data_split_stratified" -> dataSplitStratified,
-    "ts_changepoint" -> tsChangepoint,
-    "win_drawdown" -> winDrawdown,
-    "agg_tpch_q6" -> aggTpchQ6,
-    "join_tpch_q3" -> joinTpchQ3,
-    "join_tpch_q18" -> joinTpchQ18,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "win_ewma" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("win_ewma", winEwma, Some {
       val lags = (1 until EwmaK)
         .map(i => s"lag(v_mu, $i) OVER w AS l$i").mkString(",\n        |    ")
       val num = (0 until EwmaK).map { i =>
@@ -491,53 +476,9 @@ object Relational7 {
         |SELECT user_id, event_id, v_mu,
         |  CAST(($num) // ($den) AS BIGINT) AS ewma_mu
         |FROM l ORDER BY user_id, event_id""".stripMargin
-    },
+    }),
 
-    "graph_jaccard" ->
-      s"""WITH edges AS (
-        |  SELECT DISTINCT l_suppkey AS sk, l_partkey AS p FROM lineitem),
-        | deg AS (SELECT sk, count(1) AS n FROM edges GROUP BY sk),
-        | hot AS (SELECT p FROM edges GROUP BY p
-        |         HAVING count(1) > $JaccardMaxPartDf),
-        | kept AS (SELECT * FROM edges WHERE p NOT IN (SELECT p FROM hot)),
-        | pairs AS (
-        |  SELECT a.sk AS sa, b.sk AS sb, count(1) AS inter
-        |  FROM kept a JOIN kept b ON a.p = b.p AND a.sk < b.sk
-        |  GROUP BY a.sk, b.sk)
-        |SELECT sa, sb, CAST(inter AS BIGINT) AS inter,
-        |  CAST(inter * 10000 // (da.n + db.n - inter) AS BIGINT) AS jacc_bp
-        |FROM pairs JOIN deg da ON da.sk = sa JOIN deg db ON db.sk = sb
-        |ORDER BY jacc_bp DESC, sa, sb LIMIT 20""".stripMargin,
-
-    "ts_downsample" ->
-      """WITH e AS (
-        |  SELECT event_id, epoch_us(ts) AS ts_us,
-        |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
-        |  FROM events),
-        | b AS (
-        |  SELECT event_id, v_mu,
-        |    ts_us // 3600000000 * 3600000000 AS bucket_us
-        |  FROM e),
-        | scored AS (
-        |  SELECT event_id, v_mu, bucket_us,
-        |    count(1) OVER w AS n,
-        |    sum(v_mu) OVER w AS sum_mu
-        |  FROM b WINDOW w AS (PARTITION BY bucket_us)),
-        | dev AS (
-        |  SELECT event_id, v_mu, bucket_us, n,
-        |    abs(CAST(v_mu AS HUGEINT) * n - CAST(sum_mu AS HUGEINT)) AS dev,
-        |    max(abs(CAST(v_mu AS HUGEINT) * n - CAST(sum_mu AS HUGEINT)))
-        |      OVER (PARTITION BY bucket_us) AS maxd
-        |  FROM scored)
-        |SELECT bucket_us,
-        |  CAST(min(event_id) AS BIGINT) AS event_id,
-        |  arg_min(v_mu, event_id) AS v_mu,
-        |  CAST(max(dev) AS BIGINT) AS dev,
-        |  CAST(max(n) AS BIGINT) AS n_in_bucket
-        |FROM dev WHERE dev = maxd
-        |GROUP BY bucket_us ORDER BY bucket_us""".stripMargin,
-
-    "win_slope" -> {
+    QueryDef("win_slope", winSlope, Some {
       val lags = (1 until EwmaK)
         .map(i => s"lag(v_mu, $i) OVER w AS l$i").mkString(",\n        |    ")
       def term(i: Int): String = if (i == 0) "v_mu" else s"l$i"
@@ -573,9 +514,100 @@ object Relational7 {
         |    (m * sxy - sx * sy) * 1000000 // (m * sxx - sx * sx) END
         |    AS BIGINT) AS slope_e6
         |FROM t2 ORDER BY user_id, event_id""".stripMargin
-    },
+    }),
 
-    "ts_changepoint" ->
+    QueryDef("graph_jaccard", graphJaccard, Some(
+      s"""WITH edges AS (
+        |  SELECT DISTINCT l_suppkey AS sk, l_partkey AS p FROM lineitem),
+        | deg AS (SELECT sk, count(1) AS n FROM edges GROUP BY sk),
+        | hot AS (SELECT p FROM edges GROUP BY p
+        |         HAVING count(1) > $JaccardMaxPartDf),
+        | kept AS (SELECT * FROM edges WHERE p NOT IN (SELECT p FROM hot)),
+        | pairs AS (
+        |  SELECT a.sk AS sa, b.sk AS sb, count(1) AS inter
+        |  FROM kept a JOIN kept b ON a.p = b.p AND a.sk < b.sk
+        |  GROUP BY a.sk, b.sk)
+        |SELECT sa, sb, CAST(inter AS BIGINT) AS inter,
+        |  CAST(inter * 10000 // (da.n + db.n - inter) AS BIGINT) AS jacc_bp
+        |FROM pairs JOIN deg da ON da.sk = sa JOIN deg db ON db.sk = sb
+        |ORDER BY jacc_bp DESC, sa, sb LIMIT 20""".stripMargin)),
+
+    QueryDef("ts_downsample", tsDownsample, Some(
+      """WITH e AS (
+        |  SELECT event_id, epoch_us(ts) AS ts_us,
+        |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
+        |  FROM events),
+        | b AS (
+        |  SELECT event_id, v_mu,
+        |    ts_us // 3600000000 * 3600000000 AS bucket_us
+        |  FROM e),
+        | scored AS (
+        |  SELECT event_id, v_mu, bucket_us,
+        |    count(1) OVER w AS n,
+        |    sum(v_mu) OVER w AS sum_mu
+        |  FROM b WINDOW w AS (PARTITION BY bucket_us)),
+        | dev AS (
+        |  SELECT event_id, v_mu, bucket_us, n,
+        |    abs(CAST(v_mu AS HUGEINT) * n - CAST(sum_mu AS HUGEINT)) AS dev,
+        |    max(abs(CAST(v_mu AS HUGEINT) * n - CAST(sum_mu AS HUGEINT)))
+        |      OVER (PARTITION BY bucket_us) AS maxd
+        |  FROM scored)
+        |SELECT bucket_us,
+        |  CAST(min(event_id) AS BIGINT) AS event_id,
+        |  arg_min(v_mu, event_id) AS v_mu,
+        |  CAST(max(dev) AS BIGINT) AS dev,
+        |  CAST(max(n) AS BIGINT) AS n_in_bucket
+        |FROM dev WHERE dev = maxd
+        |GROUP BY bucket_us ORDER BY bucket_us""".stripMargin)),
+
+    QueryDef("agg_diversity", aggDiversity, Some(
+      """WITH per AS (
+        |  SELECT source, lang, count(1) AS c
+        |  FROM documents GROUP BY source, lang),
+        | agg AS (
+        |  SELECT source,
+        |    CAST(sum(c) AS BIGINT) AS n_docs,
+        |    CAST(count(1) AS BIGINT) AS n_langs,
+        |    sum(CAST(c AS HUGEINT) * c) AS ss
+        |  FROM per GROUP BY source)
+        |SELECT source, n_docs, n_langs,
+        |  CAST((CAST(n_docs AS HUGEINT) * n_docs - ss) * 1000000
+        |    // (CAST(n_docs AS HUGEINT) * n_docs) AS BIGINT) AS simpson_e6,
+        |  CAST(CAST(n_docs AS HUGEINT) * n_docs * 10000 // ss AS BIGINT)
+        |    AS eff_langs_e4
+        |FROM agg ORDER BY source""".stripMargin)),
+
+    QueryDef("mix_epochs", mixEpochs, Some(
+      s"""WITH per AS (
+        |  SELECT lang,
+        |    CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+')))
+        |      AS BIGINT) AS tokens
+        |  FROM documents GROUP BY lang),
+        | mx AS (SELECT max(tokens) AS max_t FROM per)
+        |SELECT lang, tokens,
+        |  CAST(least((max_t + tokens - 1) // tokens, $MaxEpochs) AS BIGINT)
+        |    AS epochs,
+        |  CAST(least((max_t + tokens - 1) // tokens, $MaxEpochs) * tokens
+        |    AS BIGINT) AS effective_tokens
+        |FROM per, mx ORDER BY lang""".stripMargin)),
+
+    QueryDef("data_split_stratified", dataSplitStratified, Some(
+      """WITH h AS (
+        |  SELECT doc_id, source,
+        |    ((doc_id % 2147483648) * 2654435761) % 4294967296 AS h
+        |  FROM documents),
+        | r AS (
+        |  SELECT doc_id, source,
+        |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rk,
+        |    count(1) OVER (PARTITION BY source) AS n
+        |  FROM h)
+        |SELECT doc_id, source,
+        |  CASE WHEN rk <= n * 8 // 10 THEN 'train'
+        |       WHEN rk <= n * 8 // 10 + n // 10 THEN 'valid'
+        |       ELSE 'test' END AS split
+        |FROM r ORDER BY doc_id""".stripMargin)),
+
+    QueryDef("ts_changepoint", tsChangepoint, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
@@ -600,9 +632,9 @@ object Relational7 {
         |  CAST(arg_min(t, event_id) * 10000 // max(n) AS BIGINT) AS cp_pos_bp,
         |  CAST(max(dev) AS BIGINT) AS dev_max
         |FROM dev WHERE dev = maxd
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-    "win_drawdown" ->
+    QueryDef("win_drawdown", winDrawdown, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
@@ -612,39 +644,9 @@ object Relational7 {
         |    ROWS UNBOUNDED PRECEDING) AS peak_mu,
         |  max(v_mu) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
         |    ROWS UNBOUNDED PRECEDING) - v_mu AS dd_mu
-        |FROM e ORDER BY user_id, event_id""".stripMargin,
+        |FROM e ORDER BY user_id, event_id""".stripMargin)),
 
-    "mix_epochs" ->
-      s"""WITH per AS (
-        |  SELECT lang,
-        |    CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+')))
-        |      AS BIGINT) AS tokens
-        |  FROM documents GROUP BY lang),
-        | mx AS (SELECT max(tokens) AS max_t FROM per)
-        |SELECT lang, tokens,
-        |  CAST(least((max_t + tokens - 1) // tokens, $MaxEpochs) AS BIGINT)
-        |    AS epochs,
-        |  CAST(least((max_t + tokens - 1) // tokens, $MaxEpochs) * tokens
-        |    AS BIGINT) AS effective_tokens
-        |FROM per, mx ORDER BY lang""".stripMargin,
-
-    "data_split_stratified" ->
-      """WITH h AS (
-        |  SELECT doc_id, source,
-        |    ((doc_id % 2147483648) * 2654435761) % 4294967296 AS h
-        |  FROM documents),
-        | r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rk,
-        |    count(1) OVER (PARTITION BY source) AS n
-        |  FROM h)
-        |SELECT doc_id, source,
-        |  CASE WHEN rk <= n * 8 // 10 THEN 'train'
-        |       WHEN rk <= n * 8 // 10 + n // 10 THEN 'valid'
-        |       ELSE 'test' END AS split
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "agg_tpch_q6" ->
+    QueryDef("agg_tpch_q6", aggTpchQ6, Some(
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
@@ -653,9 +655,9 @@ object Relational7 {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
+        |  AND l_quantity < 24""".stripMargin)),
 
-    "join_tpch_q3" ->
+    QueryDef("join_tpch_q3", joinTpchQ3, Some(
       """WITH g AS (
         |  SELECT l_orderkey, epoch_us(o_orderdate) AS order_us,
         |    SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -670,9 +672,9 @@ object Relational7 {
         |  GROUP BY l_orderkey, epoch_us(o_orderdate)
         |  ORDER BY rev_dec DESC, l_orderkey LIMIT 10)
         |SELECT l_orderkey, order_us, CAST(rev_dec AS DOUBLE) AS revenue
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin)),
 
-    "join_tpch_q18" ->
+    QueryDef("join_tpch_q18", joinTpchQ18, Some(
       s"""WITH big AS (
         |  SELECT l_orderkey, CAST(SUM(l_quantity) AS BIGINT) AS total_qty
         |  FROM lineitem GROUP BY l_orderkey
@@ -682,23 +684,6 @@ object Relational7 {
         |FROM big
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, l_orderkey LIMIT 100""".stripMargin,
-
-    "agg_diversity" ->
-      """WITH per AS (
-        |  SELECT source, lang, count(1) AS c
-        |  FROM documents GROUP BY source, lang),
-        | agg AS (
-        |  SELECT source,
-        |    CAST(sum(c) AS BIGINT) AS n_docs,
-        |    CAST(count(1) AS BIGINT) AS n_langs,
-        |    sum(CAST(c AS HUGEINT) * c) AS ss
-        |  FROM per GROUP BY source)
-        |SELECT source, n_docs, n_langs,
-        |  CAST((CAST(n_docs AS HUGEINT) * n_docs - ss) * 1000000
-        |    // (CAST(n_docs AS HUGEINT) * n_docs) AS BIGINT) AS simpson_e6,
-        |  CAST(CAST(n_docs AS HUGEINT) * n_docs * 10000 // ss AS BIGINT)
-        |    AS eff_langs_e4
-        |FROM agg ORDER BY source""".stripMargin,
+        |ORDER BY total_qty DESC, l_orderkey LIMIT 100""".stripMargin)),
   )
 }

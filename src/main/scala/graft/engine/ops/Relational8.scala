@@ -483,22 +483,30 @@ object Relational8 {
       .orderBy($"user_id", $"event_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "win_hampel" -> winHampel,
-    "agg_tpch_q14" -> aggTpchQ14,
-    "join_tpch_q10" -> joinTpchQ10,
-    "win_rolling_median" -> winRollingMedian,
-    "ts_seasonal" -> tsSeasonal,
-    "text_lm_bigram" -> textLmBigram,
-    "graph_kcore" -> graphKcore,
-    "agg_countmin" -> aggCountmin,
-    "agg_median_select" -> aggMedianSelect,
-    "mix_dedup_weights" -> mixDedupWeights,
-    "join_bucketed" -> joinBucketed,
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("win_hampel", winHampel, Some(
+      s"""WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
+        |  FROM events),
+        | l AS (
+        |  SELECT user_id, event_id, v_mu,
+        |    list(v_mu) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+        |      ROWS BETWEEN ${MedianK - 1} PRECEDING AND CURRENT ROW) AS arr
+        |  FROM e),
+        | m AS (
+        |  SELECT user_id, event_id, v_mu, arr,
+        |    list_sort(arr)[(len(arr) + 1) // 2] AS med_mu
+        |  FROM l)
+        |SELECT user_id, event_id, v_mu, med_mu,
+        |  list_sort(list_transform(arr, x -> abs(x - med_mu)))
+        |    [(len(arr) + 1) // 2] AS mad_mu,
+        |  CAST(abs(v_mu - med_mu) > $HampelK *
+        |    list_sort(list_transform(arr, x -> abs(x - med_mu)))
+        |      [(len(arr) + 1) // 2] AS INTEGER) AS outlier
+        |FROM m ORDER BY user_id, event_id""".stripMargin)),
 
-  val oracles: Map[String, String] = Map(
-    "agg_tpch_q14" ->
+    QueryDef("agg_tpch_q14", aggTpchQ14, Some(
       """WITH f AS (
         |  SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2))
         |           * (1 - CAST(l_discount AS DECIMAL(18,2)))
@@ -514,8 +522,9 @@ object Relational8 {
         |  CAST(CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev_e4 ELSE 0 END) AS HUGEINT)
         |       * 1000000 // CAST(SUM(rev_e4) AS HUGEINT) AS BIGINT)
         |    AS promo_share_e6
-        |FROM f""".stripMargin,
-    "join_tpch_q10" ->
+        |FROM f""".stripMargin)),
+
+    QueryDef("join_tpch_q10", joinTpchQ10, Some(
       """WITH r AS (
         |  SELECT o_custkey,
         |         CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -530,8 +539,9 @@ object Relational8 {
         |  JOIN customer ON o_custkey = c_custkey
         |  JOIN nation ON c_nationkey = n_nationkey
         |ORDER BY rev_e4 DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "win_rolling_median" ->
+        |LIMIT 20""".stripMargin)),
+
+    QueryDef("win_rolling_median", winRollingMedian, Some(
       s"""WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
@@ -543,8 +553,9 @@ object Relational8 {
         |  FROM e)
         |SELECT user_id, event_id, v_mu,
         |  list_sort(arr)[(len(arr) + 1) // 2] AS med_mu
-        |FROM l ORDER BY user_id, event_id""".stripMargin,
-    "ts_seasonal" ->
+        |FROM l ORDER BY user_id, event_id""".stripMargin)),
+
+    QueryDef("ts_seasonal", tsSeasonal, Some(
       """WITH e AS (
         |  SELECT event_id, event_type, epoch_us(ts) AS ts_us,
         |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
@@ -560,8 +571,9 @@ object Relational8 {
         |SELECT event_id, b.event_type, b.hr, v_mu, seas_mu,
         |  v_mu - seas_mu AS resid_mu
         |FROM b JOIN prof ON b.event_type = prof.event_type AND b.hr = prof.hr
-        |ORDER BY event_id""".stripMargin,
-    "text_lm_bigram" ->
+        |ORDER BY event_id""".stripMargin)),
+
+    QueryDef("text_lm_bigram", textLmBigram, Some(
       s"""WITH t AS (
         |  SELECT doc_id, lang,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
@@ -587,8 +599,9 @@ object Relational8 {
         |  CAST(n_seen AS BIGINT) AS n_seen,
         |  CAST(CASE WHEN n_bigrams = 0 THEN -1
         |       ELSE n_seen * 10000 // n_bigrams END AS BIGINT) AS score_e4
-        |FROM scored ORDER BY doc_id""".stripMargin,
-    "graph_kcore" -> {
+        |FROM scored ORDER BY doc_id""".stripMargin)),
+
+    QueryDef("graph_kcore", graphKcore, Some {
       // unroll the peel: e0 = co-occurrence edges, then R rounds of
       // (degree filter -> edge restriction); the Spark side stops at
       // its fixpoint, which equals round R whenever depth <= R
@@ -615,8 +628,9 @@ object Relational8 {
         |FROM (SELECT u AS n FROM e$KCoreMaxRounds
         |      UNION ALL SELECT v FROM e$KCoreMaxRounds)
         |GROUP BY n ORDER BY n""".stripMargin
-    },
-    "agg_countmin" -> {
+    }),
+
+    QueryDef("agg_countmin", aggCountmin, Some {
       val h = DedupOps.duckCharHash(
         "concat(CAST(j.j AS VARCHAR), ':', CAST(pk AS VARCHAR))")
       s"""WITH js AS (SELECT unnest(range($CmsDepth)) AS j),
@@ -636,15 +650,17 @@ object Relational8 {
         |FROM probes p JOIN cells c ON p.j = c.j AND p.b = c.b
         |GROUP BY p.pk, p.true_cnt
         |ORDER BY true_cnt DESC, pk""".stripMargin
-    },
-    "agg_median_select" ->
+    }),
+
+    QueryDef("agg_median_select", aggMedianSelect, Some(
       """SELECT CAST(count(1) AS BIGINT) AS n_rows,
         |  CAST((count(1) + 1) // 2 AS BIGINT) AS k,
         |  quantile_disc(
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT),
         |    0.5) AS median_c
-        |FROM lineitem""".stripMargin,
-    "mix_dedup_weights" -> {
+        |FROM lineitem""".stripMargin)),
+
+    QueryDef("mix_dedup_weights", mixDedupWeights, Some {
       val h = DedupOps.duckCharHash(
         "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')")
       s"""WITH docs AS (
@@ -663,8 +679,9 @@ object Relational8 {
         |  CAST(CAST(eff_toks AS HUGEINT) * 10000 // t AS BIGINT)
         |    AS weight_bp
         |FROM src, tot ORDER BY source""".stripMargin
-    },
-    "join_bucketed" ->
+    }),
+
+    QueryDef("join_bucketed", joinBucketed, Some(
       """SELECT o_orderpriority,
         |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (1 - CAST(l_discount AS DECIMAL(18,2)))
@@ -672,27 +689,6 @@ object Relational8 {
         |  count(1) AS n_items
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "win_hampel" ->
-      s"""WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(floor(value * 1000) AS BIGINT) AS v_mu
-        |  FROM events),
-        | l AS (
-        |  SELECT user_id, event_id, v_mu,
-        |    list(v_mu) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS BETWEEN ${MedianK - 1} PRECEDING AND CURRENT ROW) AS arr
-        |  FROM e),
-        | m AS (
-        |  SELECT user_id, event_id, v_mu, arr,
-        |    list_sort(arr)[(len(arr) + 1) // 2] AS med_mu
-        |  FROM l)
-        |SELECT user_id, event_id, v_mu, med_mu,
-        |  list_sort(list_transform(arr, x -> abs(x - med_mu)))
-        |    [(len(arr) + 1) // 2] AS mad_mu,
-        |  CAST(abs(v_mu - med_mu) > $HampelK *
-        |    list_sort(list_transform(arr, x -> abs(x - med_mu)))
-        |      [(len(arr) + 1) // 2] AS INTEGER) AS outlier
-        |FROM m ORDER BY user_id, event_id""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
   )
 }

@@ -238,22 +238,15 @@ object Relational9 {
           .as("err_bp"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "data_enumerate" -> dataEnumerate,
-    "data_compact_plan" -> dataCompactPlan,
-    "ts_winsorize" -> tsWinsorize,
-    "embed_rp" -> embedRp,
-    "agg_hll" -> aggHll,
-  )
-
   private def duckPoly(arg: String): String = DedupOps.duckCharHash(arg)
 
-  val oracles: Map[String, String] = Map(
-    "data_enumerate" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("data_enumerate", dataEnumerate, Some(
       """SELECT doc_id, source,
         |  row_number() OVER (ORDER BY source, doc_id) AS global_idx
-        |FROM documents ORDER BY global_idx""".stripMargin,
-    "data_compact_plan" ->
+        |FROM documents ORDER BY global_idx""".stripMargin)),
+
+    QueryDef("data_compact_plan", dataCompactPlan, Some(
       s"""WITH f AS (
         |  SELECT source, CAST(doc_id // $CompactStripe AS BIGINT) AS file_id,
         |    CAST(count(1) AS BIGINT) AS n_docs,
@@ -268,8 +261,9 @@ object Relational9 {
         |SELECT source, file_id, n_docs, f_bytes,
         |  CAST(cum_before // $CompactTarget AS BIGINT) AS bin_id,
         |  CAST(cum_before % $CompactTarget AS BIGINT) AS bin_off
-        |FROM c ORDER BY source, file_id""".stripMargin,
-    "ts_winsorize" ->
+        |FROM c ORDER BY source, file_id""".stripMargin)),
+
+    QueryDef("ts_winsorize", tsWinsorize, Some(
       s"""WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(floor(value * 1000000) AS BIGINT) AS v_mu
@@ -293,8 +287,9 @@ object Relational9 {
         |SELECT event_id, e.event_type, v_mu, p_lo_mu, p_hi_mu,
         |  least(greatest(v_mu, p_lo_mu), p_hi_mu) AS v_clip_mu
         |FROM e JOIN b ON b.event_type = e.event_type
-        |ORDER BY event_id""".stripMargin,
-    "embed_rp" -> {
+        |ORDER BY event_id""".stripMargin)),
+
+    QueryDef("embed_rp", embedRp, Some {
       val h = duckPoly("concat('rp:', CAST(k AS VARCHAR), ':', CAST(j AS VARCHAR))")
       s"""WITH v AS (
         |  SELECT vec_id, list_transform(embedding,
@@ -310,8 +305,9 @@ object Relational9 {
         |SELECT vec_id, CAST(k AS BIGINT) AS k,
         |  CAST(sum(t) AS BIGINT) AS proj_mu
         |FROM terms GROUP BY vec_id, k ORDER BY vec_id, k""".stripMargin
-    },
-    "agg_hll" ->
+    }),
+
+    QueryDef("agg_hll", aggHll, Some(
       s"""WITH ins AS (SELECT CAST(l_orderkey AS VARCHAR) AS k FROM lineitem),
         | hx AS (SELECT md5(concat('hll:', k)) AS hx FROM ins),
         | hv AS (
@@ -340,6 +336,6 @@ object Relational9 {
         |  CAST(abs(CAST((CAST($HllAlphaE6 AS HUGEINT) * $HllM * $HllM * 2147483648)
         |    // (CAST(s_inv AS HUGEINT) * 1000000) AS BIGINT) - exact_distinct)
         |    * 10000 // exact_distinct AS BIGINT) AS err_bp
-        |FROM agg, ex""".stripMargin,
+        |FROM agg, ex""".stripMargin)),
   )
 }

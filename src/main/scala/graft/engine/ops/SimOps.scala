@@ -631,25 +631,6 @@ object SimOps {
       .orderBy($"vec_id", $"nn_rank")
   }
 
-  val queries: Map[String, Q] = Map(
-    "sim_knn_graph" -> simKnnGraph,
-    "sim_knn_classify" -> simKnnClassify,
-    "sim_rrf" -> simRrf,
-    "sim_topk" -> simTopk,
-    "sim_recall" -> simRecall,
-    "sim_range" -> simRange,
-    "sim_lsh" -> simLsh,
-    "sim_multiprobe" -> simMultiprobe,
-    "sim_ivf" -> simIvf,
-    "sim_batch_topk" -> simBatchTopk,
-    "embed_group_mean" -> embedGroupMean,
-    "embed_quantize" -> embedQuantize,
-    "embed_pq" -> embedPq,
-    "sim_pq_adc" -> simPqAdc,
-    "sim_ivf_pq" -> simIvfPq,
-    "sim_matryoshka" -> simMatryoshka,
-  )
-
   private val duckDot =
     "list_reduce(list_prepend(0.0, list_transform(range(1, len(e.v) + 1), " +
       "i -> e.v[i] * q.v[i])), (a, b) -> a + b)"
@@ -671,8 +652,8 @@ object SimOps {
       |      THEN (CAST(1 AS BIGINT) << k) ELSE CAST(0 AS BIGINT) END)),
       |    (a, b) -> a + b) AS INTEGER)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "sim_knn_graph" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("sim_knn_graph", simKnnGraph, Some(
       s"""WITH ${DedupOps.duckIvfCandsCte},
          | sym AS (
          |  SELECT vec_a, vec_b, round(dot / nn, 4) AS cos FROM p
@@ -686,55 +667,9 @@ object SimOps {
          |  FROM sym)
          |SELECT vec_id, CAST(nn_rank AS BIGINT) AS nn_rank, nn_id, cos
          |FROM r WHERE nn_rank <= $KnnGraphK
-         |ORDER BY vec_id, nn_rank""".stripMargin,
+         |ORDER BY vec_id, nn_rank""".stripMargin)),
 
-    "sim_matryoshka" -> {
-      def pdot(dim: Int, a: String, b: String): String =
-        s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), " +
-          s"i -> $a[i] * $b[i])), (x, y) -> x + y)"
-      def pnorm(dim: Int, a: String): String = s"sqrt(${pdot(dim, a, a)})"
-      val fullDot =
-        "list_reduce(list_prepend(0.0, list_transform(range(1, len(e.v) + 1), " +
-          "i -> e.v[i] * q.qv[i])), (x, y) -> x + y)"
-      val prefixCols = MatryoshkaDims.map { dim =>
-        s"    CAST(floor(${pdot(dim, "e.v", "q.qv")} / " +
-          s"(${pnorm(dim, "e.v")} * ${pnorm(dim, "q.qv")}) * 10000) " +
-          s"AS BIGINT) AS c$dim"
-      }.mkString(",\n        |")
-      val perDim = MatryoshkaDims.map { dim =>
-        s""" r$dim AS (
-        |  SELECT qid, vec_id, row_number() OVER (
-        |    PARTITION BY qid ORDER BY c$dim DESC, vec_id) AS rn FROM scored),
-        | t$dim AS (SELECT qid, vec_id FROM r$dim WHERE rn <= 5),
-        | h$dim AS (
-        |  SELECT CAST($dim AS BIGINT) AS dim, e5.qid, count(1) AS hits
-        |  FROM exact5 e5 JOIN t$dim USING (qid, vec_id) GROUP BY e5.qid)"""
-      }.mkString(",\n        |")
-      val hitsUnion = MatryoshkaDims.map(d => s"SELECT * FROM h$d")
-        .mkString(" UNION ALL ")
-      s"""WITH $duckVecs,
-        | q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn
-        |       FROM vecs WHERE vec_id < 10),
-        | scored AS (
-        |  SELECT q.qid, e.vec_id,
-        |    CAST(floor($fullDot / (e.nrm * q.qn) * 10000) AS BIGINT) AS cf,
-        |$prefixCols
-        |  FROM vecs e, q WHERE e.vec_id >= 10),
-        | rf AS (
-        |  SELECT qid, vec_id, row_number() OVER (
-        |    PARTITION BY qid ORDER BY cf DESC, vec_id) AS rn FROM scored),
-        | exact5 AS (SELECT qid, vec_id FROM rf WHERE rn <= 5),
-        |$perDim,
-        | grid AS (
-        |  SELECT CAST(d.d AS BIGINT) AS dim, q.qid
-        |  FROM q, (SELECT unnest([${MatryoshkaDims.mkString(", ")}]) AS d) d)
-        |SELECT g.dim, g.qid,
-        |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits_at_5
-        |FROM grid g LEFT JOIN ($hitsUnion) h USING (dim, qid)
-        |ORDER BY dim, qid""".stripMargin
-    },
-
-    "sim_knn_classify" ->
+    QueryDef("sim_knn_classify", simKnnClassify, Some(
       s"""WITH lv AS (
          |  SELECT vec_id, label, v,
          |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)),
@@ -762,9 +697,9 @@ object SimOps {
          |  label = true_label AS correct
          |FROM (SELECT *, row_number() OVER (PARTITION BY qid
          |        ORDER BY n DESC, label) AS vr FROM votes)
-         |WHERE vr = 1 ORDER BY qid""".stripMargin,
+         |WHERE vr = 1 ORDER BY qid""".stripMargin)),
 
-    "sim_rrf" ->
+    QueryDef("sim_rrf", simRrf, Some(
       s"""WITH $duckVecs,
          | q AS (SELECT v, nrm FROM vecs WHERE vec_id = 0),
          | scored AS (
@@ -789,9 +724,139 @@ object SimOps {
          |            ELSE 0 END AS BIGINT) AS rrf
          |FROM ranked
          |WHERE rank_cos <= 100 OR rank_l2 <= 100
-         |ORDER BY rrf DESC, vec_id LIMIT 10""".stripMargin,
+         |ORDER BY rrf DESC, vec_id LIMIT 10""".stripMargin)),
 
-    "embed_pq" ->
+    QueryDef("sim_topk", simTopk, Some(
+      s"""WITH $duckVecs
+         |SELECT e.vec_id,
+         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
+         |FROM vecs e, (SELECT v, nrm FROM vecs WHERE vec_id = 0) q
+         |WHERE e.vec_id <> 0
+         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 10""".stripMargin)),
+
+    QueryDef("sim_recall", simRecall, Some(
+      s"""WITH $duckVecs,
+         | b AS (SELECT vec_id, v, nrm, $duckBucket AS bucket FROM vecs),
+         | qs AS (SELECT vec_id AS qid, v, nrm AS qn, bucket AS qbucket
+         |        FROM b WHERE vec_id < 10),
+         | scored AS (
+         |  SELECT q.qid, e.vec_id,
+         |    CAST(floor($duckDot / (e.nrm * q.qn) * 10000) AS BIGINT) AS cos_e4,
+         |    e.bucket, q.qbucket
+         |  FROM b e, qs q WHERE e.vec_id >= 10),
+         | exact5 AS (SELECT qid, vec_id FROM (
+         |   SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
+         |     ORDER BY cos_e4 DESC, vec_id) AS rn FROM scored) WHERE rn <= 5),
+         | ann5 AS (SELECT qid, vec_id FROM (
+         |   SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
+         |     ORDER BY cos_e4 DESC, vec_id) AS rn FROM scored
+         |   WHERE bucket = qbucket) WHERE rn <= 5),
+         | h AS (SELECT e5.qid, count(1) AS hits
+         |   FROM exact5 e5 JOIN ann5 a ON a.qid = e5.qid AND a.vec_id = e5.vec_id
+         |   GROUP BY e5.qid)
+         |SELECT q.qid, COALESCE(h.hits, 0) AS hits_at_5
+         |FROM qs q LEFT JOIN h ON h.qid = q.qid
+         |ORDER BY q.qid""".stripMargin)),
+
+    QueryDef("sim_range", simRange, Some(
+      s"""WITH $duckVecs
+         |SELECT * FROM (
+         |  SELECT e.vec_id,
+         |    CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_fp
+         |  FROM vecs e, (SELECT v, nrm FROM vecs WHERE vec_id = 0) q
+         |  WHERE e.vec_id <> 0)
+         |WHERE cos_fp >= 2500
+         |ORDER BY cos_fp DESC, vec_id""".stripMargin)),
+
+    QueryDef("sim_lsh", simLsh, Some(
+      s"""WITH $duckVecs,
+         | b AS (
+         |  SELECT vec_id, v, nrm, $duckBucket AS bucket FROM vecs)
+         |SELECT e.vec_id,
+         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
+         |FROM b e, (SELECT v, nrm, bucket FROM b WHERE vec_id = 0) q
+         |WHERE e.vec_id <> 0 AND e.bucket = q.bucket
+         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 5""".stripMargin)),
+
+    QueryDef("sim_multiprobe", simMultiprobe, Some(
+      s"""WITH $duckVecs,
+         | b AS (
+         |  SELECT vec_id, v, nrm, $duckBucket AS bucket FROM vecs)
+         |SELECT e.vec_id,
+         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
+         |FROM b e, (SELECT v, nrm, bucket FROM b WHERE vec_id = 0) q
+         |WHERE e.vec_id <> 0 AND (e.bucket = q.bucket
+         |  OR e.bucket = xor(q.bucket, 1) OR e.bucket = xor(q.bucket, 2)
+         |  OR e.bucket = xor(q.bucket, 4) OR e.bucket = xor(q.bucket, 8))
+         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 10""".stripMargin)),
+
+    QueryDef("sim_ivf", simIvf, Some(
+      s"""WITH $duckVecs,
+         | cents AS (
+         |  SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM vecs WHERE vec_id < 8),
+         | ranked AS (
+         |  SELECT e.vec_id, c.cid,
+         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
+         |      CAST(floor(list_reduce(list_prepend(0.0, list_transform(
+         |        range(1, len(e.v) + 1), i -> e.v[i] * c.cv[i])), (a, b) -> a + b)
+         |        / (e.nrm * c.cnrm) * 1000000) AS BIGINT) DESC, c.cid) AS crn
+         |  FROM vecs e, cents c),
+         | assignment AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
+         | probes AS (SELECT cid FROM ranked WHERE vec_id = 0 AND crn <= 2)
+         |SELECT e.vec_id,
+         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
+         |FROM vecs e
+         |JOIN assignment a ON a.vec_id = e.vec_id
+         |JOIN probes p ON p.cid = a.cid,
+         |(SELECT v, nrm FROM vecs WHERE vec_id = 0) q
+         |WHERE e.vec_id <> 0
+         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 5""".stripMargin)),
+
+    QueryDef("sim_batch_topk", simBatchTopk, Some(
+      s"""WITH $duckVecs,
+         | scored AS (
+         |  SELECT q.vec_id AS qid, e.vec_id,
+         |    CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
+         |  FROM vecs e, (SELECT vec_id, v, nrm FROM vecs WHERE vec_id < 10) q
+         |  WHERE e.vec_id >= 10),
+         | ranked AS (
+         |  SELECT qid, vec_id, cos_e4,
+         |    row_number() OVER (PARTITION BY qid ORDER BY cos_e4 DESC, vec_id) AS rn
+         |  FROM scored)
+         |SELECT qid, vec_id, cos_e4 FROM ranked WHERE rn <= 5
+         |ORDER BY qid, cos_e4 DESC, vec_id""".stripMargin)),
+
+    QueryDef("embed_group_mean", embedGroupMean, Some(
+      """WITH ex AS (
+        |  SELECT vec_id % 8 AS grp, u.i - 1 AS pos,
+        |    CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000000) AS BIGINT) AS sv
+        |  FROM embeddings, (SELECT unnest(range(1, 65)) AS i) u)
+        |SELECT grp, pos,
+        |  round(CAST(sum(sv) AS DOUBLE)
+        |    / CAST(count(1) * 1000000000 AS DOUBLE), 6) AS mean
+        |FROM ex GROUP BY grp, pos ORDER BY grp, pos""".stripMargin)),
+
+    QueryDef("embed_quantize", embedQuantize, Some(
+      """WITH n AS (
+        |  SELECT vec_id, v, list_min(v) AS mn,
+        |    (list_max(v) - list_min(v)) / 255.0 AS scale
+        |  FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |        FROM embeddings)),
+        | q AS (
+        |  SELECT vec_id, v, mn, scale,
+        |    list_transform(v, x -> CASE WHEN scale > 0 THEN
+        |      CAST(round((x - mn) / scale) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS q
+        |  FROM n)
+        |SELECT vec_id,
+        |  list_reduce(list_prepend(CAST(0 AS BIGINT), q), (a, x) -> a + x) AS q_sum,
+        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |    list_transform(range(1, len(q) + 1), i -> q[i] * i)),
+        |    (a, x) -> a + x) AS q_checksum,
+        |  CAST(floor(list_max(list_transform(range(1, len(v) + 1),
+        |    i -> abs(v[i] - (mn + q[i] * scale)))) * 1000000) AS BIGINT) AS max_err_micro
+        |FROM q ORDER BY vec_id""".stripMargin)),
+
+    QueryDef("embed_pq", embedPq, Some(
       """WITH v AS (
         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings),
@@ -810,9 +875,9 @@ object SimOps {
         |SELECT vec_id,
         |  CAST(sum((e % 4) * (CAST(1 AS BIGINT) << CAST(2 * m AS INTEGER)))
         |       AS BIGINT) AS pq_code
-        |FROM enc GROUP BY vec_id ORDER BY vec_id""".stripMargin,
+        |FROM enc GROUP BY vec_id ORDER BY vec_id""".stripMargin)),
 
-    "sim_pq_adc" ->
+    QueryDef("sim_pq_adc", simPqAdc, Some(
       """WITH v AS (
         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings),
@@ -845,9 +910,9 @@ object SimOps {
         |  GROUP BY code.vec_id)
         |SELECT vec_id, CAST(floor(dist * 1000000) AS BIGINT) AS adist_e6
         |FROM ad WHERE vec_id <> 0
-        |ORDER BY adist_e6, vec_id LIMIT 5""".stripMargin,
+        |ORDER BY adist_e6, vec_id LIMIT 5""".stripMargin)),
 
-    "sim_ivf_pq" ->
+    QueryDef("sim_ivf_pq", simIvfPq, Some(
       s"""WITH $duckVecs,
          | cents AS (
          |  SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM vecs WHERE vec_id < 8),
@@ -892,136 +957,52 @@ object SimOps {
          |JOIN assignment a ON a.vec_id = ad.vec_id
          |JOIN probes p ON p.cid = a.cid
          |WHERE ad.vec_id <> 0
-         |ORDER BY adist_e6, ad.vec_id LIMIT 5""".stripMargin,
+         |ORDER BY adist_e6, ad.vec_id LIMIT 5""".stripMargin)),
 
-    "sim_batch_topk" ->
+    QueryDef("sim_matryoshka", simMatryoshka, Some {
+      def pdot(dim: Int, a: String, b: String): String =
+        s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), " +
+          s"i -> $a[i] * $b[i])), (x, y) -> x + y)"
+      def pnorm(dim: Int, a: String): String = s"sqrt(${pdot(dim, a, a)})"
+      val fullDot =
+        "list_reduce(list_prepend(0.0, list_transform(range(1, len(e.v) + 1), " +
+          "i -> e.v[i] * q.qv[i])), (x, y) -> x + y)"
+      val prefixCols = MatryoshkaDims.map { dim =>
+        s"    CAST(floor(${pdot(dim, "e.v", "q.qv")} / " +
+          s"(${pnorm(dim, "e.v")} * ${pnorm(dim, "q.qv")}) * 10000) " +
+          s"AS BIGINT) AS c$dim"
+      }.mkString(",\n        |")
+      val perDim = MatryoshkaDims.map { dim =>
+        s""" r$dim AS (
+        |  SELECT qid, vec_id, row_number() OVER (
+        |    PARTITION BY qid ORDER BY c$dim DESC, vec_id) AS rn FROM scored),
+        | t$dim AS (SELECT qid, vec_id FROM r$dim WHERE rn <= 5),
+        | h$dim AS (
+        |  SELECT CAST($dim AS BIGINT) AS dim, e5.qid, count(1) AS hits
+        |  FROM exact5 e5 JOIN t$dim USING (qid, vec_id) GROUP BY e5.qid)"""
+      }.mkString(",\n        |")
+      val hitsUnion = MatryoshkaDims.map(d => s"SELECT * FROM h$d")
+        .mkString(" UNION ALL ")
       s"""WITH $duckVecs,
-         | scored AS (
-         |  SELECT q.vec_id AS qid, e.vec_id,
-         |    CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
-         |  FROM vecs e, (SELECT vec_id, v, nrm FROM vecs WHERE vec_id < 10) q
-         |  WHERE e.vec_id >= 10),
-         | ranked AS (
-         |  SELECT qid, vec_id, cos_e4,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_e4 DESC, vec_id) AS rn
-         |  FROM scored)
-         |SELECT qid, vec_id, cos_e4 FROM ranked WHERE rn <= 5
-         |ORDER BY qid, cos_e4 DESC, vec_id""".stripMargin,
-
-    "embed_quantize" ->
-      """WITH n AS (
-        |  SELECT vec_id, v, list_min(v) AS mn,
-        |    (list_max(v) - list_min(v)) / 255.0 AS scale
-        |  FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |        FROM embeddings)),
-        | q AS (
-        |  SELECT vec_id, v, mn, scale,
-        |    list_transform(v, x -> CASE WHEN scale > 0 THEN
-        |      CAST(round((x - mn) / scale) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS q
-        |  FROM n)
-        |SELECT vec_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT), q), (a, x) -> a + x) AS q_sum,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(range(1, len(q) + 1), i -> q[i] * i)),
-        |    (a, x) -> a + x) AS q_checksum,
-        |  CAST(floor(list_max(list_transform(range(1, len(v) + 1),
-        |    i -> abs(v[i] - (mn + q[i] * scale)))) * 1000000) AS BIGINT) AS max_err_micro
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    "embed_group_mean" ->
-      """WITH ex AS (
-        |  SELECT vec_id % 8 AS grp, u.i - 1 AS pos,
-        |    CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000000) AS BIGINT) AS sv
-        |  FROM embeddings, (SELECT unnest(range(1, 65)) AS i) u)
-        |SELECT grp, pos,
-        |  round(CAST(sum(sv) AS DOUBLE)
-        |    / CAST(count(1) * 1000000000 AS DOUBLE), 6) AS mean
-        |FROM ex GROUP BY grp, pos ORDER BY grp, pos""".stripMargin,
-
-    "sim_topk" ->
-      s"""WITH $duckVecs
-         |SELECT e.vec_id,
-         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
-         |FROM vecs e, (SELECT v, nrm FROM vecs WHERE vec_id = 0) q
-         |WHERE e.vec_id <> 0
-         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 10""".stripMargin,
-
-    "sim_recall" ->
-      s"""WITH $duckVecs,
-         | b AS (SELECT vec_id, v, nrm, $duckBucket AS bucket FROM vecs),
-         | qs AS (SELECT vec_id AS qid, v, nrm AS qn, bucket AS qbucket
-         |        FROM b WHERE vec_id < 10),
-         | scored AS (
-         |  SELECT q.qid, e.vec_id,
-         |    CAST(floor($duckDot / (e.nrm * q.qn) * 10000) AS BIGINT) AS cos_e4,
-         |    e.bucket, q.qbucket
-         |  FROM b e, qs q WHERE e.vec_id >= 10),
-         | exact5 AS (SELECT qid, vec_id FROM (
-         |   SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-         |     ORDER BY cos_e4 DESC, vec_id) AS rn FROM scored) WHERE rn <= 5),
-         | ann5 AS (SELECT qid, vec_id FROM (
-         |   SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-         |     ORDER BY cos_e4 DESC, vec_id) AS rn FROM scored
-         |   WHERE bucket = qbucket) WHERE rn <= 5),
-         | h AS (SELECT e5.qid, count(1) AS hits
-         |   FROM exact5 e5 JOIN ann5 a ON a.qid = e5.qid AND a.vec_id = e5.vec_id
-         |   GROUP BY e5.qid)
-         |SELECT q.qid, COALESCE(h.hits, 0) AS hits_at_5
-         |FROM qs q LEFT JOIN h ON h.qid = q.qid
-         |ORDER BY q.qid""".stripMargin,
-
-    "sim_range" ->
-      s"""WITH $duckVecs
-         |SELECT * FROM (
-         |  SELECT e.vec_id,
-         |    CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_fp
-         |  FROM vecs e, (SELECT v, nrm FROM vecs WHERE vec_id = 0) q
-         |  WHERE e.vec_id <> 0)
-         |WHERE cos_fp >= 2500
-         |ORDER BY cos_fp DESC, vec_id""".stripMargin,
-
-    "sim_lsh" ->
-      s"""WITH $duckVecs,
-         | b AS (
-         |  SELECT vec_id, v, nrm, $duckBucket AS bucket FROM vecs)
-         |SELECT e.vec_id,
-         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
-         |FROM b e, (SELECT v, nrm, bucket FROM b WHERE vec_id = 0) q
-         |WHERE e.vec_id <> 0 AND e.bucket = q.bucket
-         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 5""".stripMargin,
-
-    "sim_multiprobe" ->
-      s"""WITH $duckVecs,
-         | b AS (
-         |  SELECT vec_id, v, nrm, $duckBucket AS bucket FROM vecs)
-         |SELECT e.vec_id,
-         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
-         |FROM b e, (SELECT v, nrm, bucket FROM b WHERE vec_id = 0) q
-         |WHERE e.vec_id <> 0 AND (e.bucket = q.bucket
-         |  OR e.bucket = xor(q.bucket, 1) OR e.bucket = xor(q.bucket, 2)
-         |  OR e.bucket = xor(q.bucket, 4) OR e.bucket = xor(q.bucket, 8))
-         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 10""".stripMargin,
-
-    "sim_ivf" ->
-      s"""WITH $duckVecs,
-         | cents AS (
-         |  SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM vecs WHERE vec_id < 8),
-         | ranked AS (
-         |  SELECT e.vec_id, c.cid,
-         |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |      CAST(floor(list_reduce(list_prepend(0.0, list_transform(
-         |        range(1, len(e.v) + 1), i -> e.v[i] * c.cv[i])), (a, b) -> a + b)
-         |        / (e.nrm * c.cnrm) * 1000000) AS BIGINT) DESC, c.cid) AS crn
-         |  FROM vecs e, cents c),
-         | assignment AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
-         | probes AS (SELECT cid FROM ranked WHERE vec_id = 0 AND crn <= 2)
-         |SELECT e.vec_id,
-         |  CAST(floor($duckDot / (e.nrm * q.nrm) * 10000) AS BIGINT) AS cos_e4
-         |FROM vecs e
-         |JOIN assignment a ON a.vec_id = e.vec_id
-         |JOIN probes p ON p.cid = a.cid,
-         |(SELECT v, nrm FROM vecs WHERE vec_id = 0) q
-         |WHERE e.vec_id <> 0
-         |ORDER BY cos_e4 DESC, e.vec_id LIMIT 5""".stripMargin,
+        | q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn
+        |       FROM vecs WHERE vec_id < 10),
+        | scored AS (
+        |  SELECT q.qid, e.vec_id,
+        |    CAST(floor($fullDot / (e.nrm * q.qn) * 10000) AS BIGINT) AS cf,
+        |$prefixCols
+        |  FROM vecs e, q WHERE e.vec_id >= 10),
+        | rf AS (
+        |  SELECT qid, vec_id, row_number() OVER (
+        |    PARTITION BY qid ORDER BY cf DESC, vec_id) AS rn FROM scored),
+        | exact5 AS (SELECT qid, vec_id FROM rf WHERE rn <= 5),
+        |$perDim,
+        | grid AS (
+        |  SELECT CAST(d.d AS BIGINT) AS dim, q.qid
+        |  FROM q, (SELECT unnest([${MatryoshkaDims.mkString(", ")}]) AS d) d)
+        |SELECT g.dim, g.qid,
+        |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits_at_5
+        |FROM grid g LEFT JOIN ($hitsUnion) h USING (dim, qid)
+        |ORDER BY dim, qid""".stripMargin
+    }),
   )
 }

@@ -161,19 +161,8 @@ object StreamOps {
       .orderBy($"user_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "stream_funnel" -> streamFunnel,
-    "stream_tumbling" -> streamTumbling,
-    "stream_sliding" -> streamSliding,
-    "stream_session" -> streamSession,
-    "stream_late" -> streamLate,
-    "stream_join" -> streamJoin,
-    "stream_dedup" -> streamDedup,
-    "stream_state" -> streamState,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stream_funnel" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("stream_funnel", streamFunnel, Some(
       """WITH t1 AS (
         |  SELECT user_id, min(ts) AS t1 FROM events
         |  WHERE event_type = 'click' GROUP BY user_id),
@@ -200,23 +189,23 @@ object StreamOps {
         |LEFT JOIN t1 ON t1.user_id = u.user_id
         |LEFT JOIN t2 ON t2.user_id = u.user_id
         |LEFT JOIN t3 ON t3.user_id = u.user_id
-        |ORDER BY u.user_id""".stripMargin,
+        |ORDER BY u.user_id""".stripMargin)),
 
-    "stream_tumbling" ->
+    QueryDef("stream_tumbling", streamTumbling, Some(
       """SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 3600) * 3600 AS w_start,
         |  event_type, count(1) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin)),
 
-    "stream_sliding" ->
+    QueryDef("stream_sliding", streamSliding, Some(
       """SELECT w0 - off AS w_start, event_type, count(1) AS n
         |FROM (SELECT event_type,
         |        (CAST(floor(epoch(ts)) AS BIGINT) // 1800) * 1800 AS w0
         |      FROM events) e,
         |     (SELECT unnest([0, 1800]) AS off) o
-        |GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin)),
 
-    "stream_session" ->
+    QueryDef("stream_session", streamSession, Some(
       """WITH m AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -230,31 +219,31 @@ object StreamOps {
         |  CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start,
         |  CAST(floor(epoch(max(ts))) AS BIGINT) + 1800 AS session_end,
         |  count(1) AS n
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin)),
 
-    "stream_late" ->
+    QueryDef("stream_late", streamLate, Some(
       """SELECT event_id, user_id, event_type FROM events
         |WHERE ts >= (SELECT max(ts) FROM events) - INTERVAL 1 HOUR
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "stream_join" ->
+    QueryDef("stream_join", streamJoin, Some(
       """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id
         |FROM events c JOIN events p
         |  ON c.user_id = p.user_id
         |  AND c.event_type = 'click' AND p.event_type = 'purchase'
         |  AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 1 HOUR
-        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin,
+        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin)),
 
-    "stream_dedup" ->
+    QueryDef("stream_dedup", streamDedup, Some(
       """SELECT user_id, event_type, event_id AS first_event_id,
         |  CAST(floor(epoch(ts)) AS BIGINT) AS first_ts
         |FROM (SELECT user_id, event_type, event_id, ts,
         |        row_number() OVER (PARTITION BY user_id, event_type
         |                           ORDER BY ts, event_id) AS rn
         |      FROM events) WHERE rn = 1
-        |ORDER BY user_id, event_type""".stripMargin,
+        |ORDER BY user_id, event_type""".stripMargin)),
 
-    "stream_state" ->
+    QueryDef("stream_state", streamState, Some(
       """WITH o AS (
         |  SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -265,6 +254,6 @@ object StreamOps {
         |  SELECT user_id, count(1) AS len
         |  FROM o GROUP BY user_id, event_type, grp)
         |SELECT user_id, max(len) AS longest
-        |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin)),
   )
 }

@@ -599,29 +599,8 @@ object TextOps {
       .orderBy($"doc_id", $"chunk_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "mix_budget_alloc" -> mixBudgetAlloc,
-    "tok_chunk_overlap" -> tokChunkOverlap,
-    "text_gopher_rules" -> textGopherRules,
-    "text_char_diversity" -> textCharDiversity,
-    "tok_bpe_pairs" -> tokBpePairs,
-    "pipeline_mix" -> pipelineMix,
-    "mix_weights" -> mixWeights,
-    "mix_temperature" -> mixTemperature,
-    "text_repetition" -> textRepetition,
-    "dedup_exact" -> dedupExact,
-    "text_tokens" -> textTokens,
-    "text_token_count" -> textTokenCount,
-    "text_quality" -> textQuality,
-    "text_langid" -> textLangid,
-    "text_langid_ngram" -> textLangidNgram,
-    "text_fingerprint" -> textFingerprint,
-    "text_tfidf" -> textTfidf,
-    "text_ngram_freq" -> textNgramFreq,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "mix_budget_alloc" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("mix_budget_alloc", mixBudgetAlloc, Some(
       s"""WITH per AS (
         |  SELECT lang,
         |    CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT)
@@ -640,9 +619,9 @@ object TextOps {
         |SELECT lang, tokens,
         |  CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT)
         |    AS alloc
-        |FROM r, l ORDER BY lang""".stripMargin,
+        |FROM r, l ORDER BY lang""".stripMargin)),
 
-    "tok_chunk_overlap" ->
+    QueryDef("tok_chunk_overlap", tokChunkOverlap, Some(
       s"""WITH t AS (
         |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
         |  FROM documents
@@ -658,9 +637,9 @@ object TextOps {
         |  FROM ks)
         |SELECT doc_id, chunk_id, CAST(len(chunk) AS BIGINT) AS n_toks,
         |  ${graft.engine.ops.DedupOps.duckCharHash("array_to_string(chunk, ' ')")} AS chunk_hash
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
 
-    "text_gopher_rules" -> {
+    QueryDef("text_gopher_rules", textGopherRules, Some {
       val stopList = GopherStopwords.map(w => s"'$w'").mkString(", ")
       s"""WITH t AS (
         |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
@@ -685,9 +664,9 @@ object TextOps {
         |    AND (sum_len >= n_words * 3 AND sum_len <= n_words * 10)
         |    AND (n_alpha * 5 >= n_words * 4) AND (n_stop >= 2) AS pass
         |FROM f ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    "text_char_diversity" ->
+    QueryDef("text_char_diversity", textCharDiversity, Some(
       """SELECT doc_id,
         |  CAST(count(1) AS BIGINT) AS n_distinct_chars,
         |  CAST(floor(CAST(sum(cnt * cnt) AS DOUBLE)
@@ -697,18 +676,18 @@ object TextOps {
         |    SELECT doc_id, unnest(string_split(lower(text), '')) AS c
         |    FROM documents)
         |  WHERE c <> '' GROUP BY doc_id, c)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
-    "tok_bpe_pairs" ->
+    QueryDef("tok_bpe_pairs", tokBpePairs, Some(
       """SELECT pair, count(1) AS n FROM (
         |  SELECT unnest(list_transform(range(1, length(tok)),
         |           i -> tok[i:i+1])) AS pair
         |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
         |        FROM documents)
         |  WHERE length(tok) >= 2)
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 30""".stripMargin,
+        |GROUP BY pair ORDER BY n DESC, pair LIMIT 30""".stripMargin)),
 
-    "pipeline_mix" ->
+    QueryDef("pipeline_mix", pipelineMix, Some(
       """WITH td AS (
         |  SELECT doc_id, lang,
         |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS toks
@@ -730,9 +709,9 @@ object TextOps {
         |  COALESCE(k.n_kept, 0) AS n_kept,
         |  COALESCE(k.tokens_kept, 0) AS tokens_kept
         |FROM frac f LEFT JOIN kept k ON k.lang = f.lang
-        |ORDER BY f.lang""".stripMargin,
+        |ORDER BY f.lang""".stripMargin)),
 
-    "mix_weights" ->
+    QueryDef("mix_weights", mixWeights, Some(
       """WITH per AS (
         |  SELECT lang, count(1) AS n_docs,
         |    CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT) AS tokens
@@ -740,9 +719,9 @@ object TextOps {
         |SELECT lang, n_docs, tokens,
         |  CAST(floor(CAST((SELECT min(tokens) FROM per) AS DOUBLE)
         |    / tokens * 10000) AS BIGINT) AS sample_frac_bp
-        |FROM per ORDER BY lang""".stripMargin,
+        |FROM per ORDER BY lang""".stripMargin)),
 
-    "mix_temperature" ->
+    QueryDef("mix_temperature", mixTemperature, Some(
       """WITH per AS (
         |  SELECT lang,
         |    CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT)
@@ -756,9 +735,9 @@ object TextOps {
         |SELECT lang, tokens,
         |  CAST(floor(sqrt(CAST(tokens AS DOUBLE)) / tw.tw * 1000000) AS BIGINT)
         |    AS frac_e6
-        |FROM per, tw ORDER BY lang""".stripMargin,
+        |FROM per, tw ORDER BY lang""".stripMargin)),
 
-    "text_repetition" ->
+    QueryDef("text_repetition", textRepetition, Some(
       """WITH g AS (
         |  SELECT doc_id,
         |    round(CAST(max(cnt) AS DOUBLE) / sum(cnt), 4) AS top_bigram_frac
@@ -781,57 +760,31 @@ object TextOps {
         |SELECT l.doc_id, coalesce(g.top_bigram_frac, 0.0) AS top_bigram_frac,
         |  l.dup_line_frac
         |FROM l LEFT JOIN g ON g.doc_id = l.doc_id
-        |ORDER BY l.doc_id""".stripMargin,
+        |ORDER BY l.doc_id""".stripMargin)),
 
-    "text_tfidf" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents),
-        | tf AS (SELECT doc_id, term, count(1) AS tf FROM toks GROUP BY 1, 2),
-        | df AS (SELECT term, count(1) AS df FROM tf GROUP BY 1),
-        | n AS (SELECT count(1) AS n_docs FROM documents),
-        | scored AS (
-        |  SELECT doc_id, tf.term AS term,
-        |    CAST((CAST(tf AS HUGEINT) * n_docs * 1000000) // df AS BIGINT)
-        |      AS score,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY (CAST(tf AS HUGEINT) * n_docs * 1000000) // df DESC,
-        |        tf.term) AS rn
-        |  FROM tf JOIN df ON tf.term = df.term, n)
-        |SELECT doc_id, term, score FROM scored WHERE rn <= 3
-        |ORDER BY doc_id, score DESC, term""".stripMargin,
-
-    "text_ngram_freq" ->
-      """SELECT gram, count(1) AS n FROM (
-        |  SELECT unnest(list_transform(range(1, len(toks)),
-        |           i -> toks[i] || ' ' || toks[i + 1])) AS gram
-        |  FROM (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |        FROM documents))
-        |GROUP BY gram ORDER BY n DESC, gram LIMIT 50""".stripMargin,
-
-    "dedup_exact" ->
+    QueryDef("dedup_exact", dedupExact, Some(
       """SELECT min(doc_id) AS doc_id, count(1) AS n_copies
         |FROM (SELECT doc_id,
         |        regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
         |      FROM documents)
-        |GROUP BY norm ORDER BY doc_id""".stripMargin,
+        |GROUP BY norm ORDER BY doc_id""".stripMargin)),
 
-    "text_tokens" ->
+    QueryDef("text_tokens", textTokens, Some(
       """SELECT word, count(1) AS n FROM (
         |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
         |  FROM documents)
-        |GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin,
+        |GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin)),
 
-    "text_token_count" ->
+    QueryDef("text_token_count", textTokenCount, Some(
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_ws,
         |  CAST(len(regexp_extract_all(text,
         |    '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 \t\r\n]')) AS INTEGER) AS n_bpe,
         |  round(CAST(length(text) AS DOUBLE)
         |    / nullif(len(regexp_extract_all(text, '\S+')), 0), 4) AS avg_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "text_quality" ->
+    QueryDef("text_quality", textQuality, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks,
@@ -848,9 +801,9 @@ object TextOps {
         |    / nullif(len(toks), 0), 4) AS stop_ratio,
         |  CAST(floor((0.5 * alpha_raw + 0.3 * (1.0 - punct_raw)
         |    + 0.2 * least(1.0, CAST(len(toks) AS DOUBLE) / 100.0)) * 10000.0) AS BIGINT) AS quality
-        |FROM t ORDER BY doc_id""".stripMargin,
+        |FROM t ORDER BY doc_id""".stripMargin)),
 
-    "text_langid" ->
+    QueryDef("text_langid", textLangid, Some(
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
@@ -868,9 +821,9 @@ object TextOps {
         |       WHEN hits_fr >= hits_es THEN 'fr'
         |       ELSE 'es' END AS pred_lang,
         |  hits_en
-        |FROM h ORDER BY doc_id""".stripMargin,
+        |FROM h ORDER BY doc_id""".stripMargin)),
 
-    "text_langid_ngram" ->
+    QueryDef("text_langid_ngram", textLangidNgram, Some(
       """WITH t AS (
         |  SELECT doc_id, lang, lower(text) AS lt FROM documents),
         | h AS (
@@ -898,9 +851,9 @@ object TextOps {
         |       WHEN ng_fr >= ng_es THEN 'fr'
         |       ELSE 'es' END AS pred_lang,
         |  ng_en, ng_de
-        |FROM h ORDER BY doc_id""".stripMargin,
+        |FROM h ORDER BY doc_id""".stripMargin)),
 
-    "text_fingerprint" ->
+    QueryDef("text_fingerprint", textFingerprint, Some(
       """SELECT doc_id,
         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
         |    list_transform(
@@ -909,6 +862,32 @@ object TextOps {
         |        c -> c <> ''),
         |      c -> CAST(ascii(c) AS BIGINT))),
         |    (h, c) -> (h * 31 + c) % 1000000007) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+
+    QueryDef("text_tfidf", textTfidf, Some(
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+        |  FROM documents),
+        | tf AS (SELECT doc_id, term, count(1) AS tf FROM toks GROUP BY 1, 2),
+        | df AS (SELECT term, count(1) AS df FROM tf GROUP BY 1),
+        | n AS (SELECT count(1) AS n_docs FROM documents),
+        | scored AS (
+        |  SELECT doc_id, tf.term AS term,
+        |    CAST((CAST(tf AS HUGEINT) * n_docs * 1000000) // df AS BIGINT)
+        |      AS score,
+        |    row_number() OVER (PARTITION BY doc_id
+        |      ORDER BY (CAST(tf AS HUGEINT) * n_docs * 1000000) // df DESC,
+        |        tf.term) AS rn
+        |  FROM tf JOIN df ON tf.term = df.term, n)
+        |SELECT doc_id, term, score FROM scored WHERE rn <= 3
+        |ORDER BY doc_id, score DESC, term""".stripMargin)),
+
+    QueryDef("text_ngram_freq", textNgramFreq, Some(
+      """SELECT gram, count(1) AS n FROM (
+        |  SELECT unnest(list_transform(range(1, len(toks)),
+        |           i -> toks[i] || ' ' || toks[i + 1])) AS gram
+        |  FROM (SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+        |        FROM documents))
+        |GROUP BY gram ORDER BY n DESC, gram LIMIT 50""".stripMargin)),
   )
 }

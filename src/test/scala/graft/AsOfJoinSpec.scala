@@ -112,7 +112,7 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("direction/tolerance variants keep the exchange+sort-per-side plan shape") {
     for (q <- Seq("join_asof_forward", "join_asof_nearest", "join_asof_tolerance")) {
-      val p = Relational3.queries(q)(spark, sf).queryExecution.executedPlan.toString
+      val p = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
       assert(p.contains("AsOfJoin"), s"$q: custom physical operator missing")
       assert(!p.contains("SortAggregate") && !p.contains("HashAggregate"),
         s"$q: native path must not re-aggregate pairs")

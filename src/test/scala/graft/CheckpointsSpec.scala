@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.ops.{Checkpoints, DedupOps, SimOps}
+import graft.engine.ops.Checkpoints
 
 /** The reliable-mode contract for EVERY lineage cut in the engine:
   * `spark.graft.checkpointDir` must govern all `Checkpoints.cut` call
@@ -41,7 +41,7 @@ class CheckpointsSpec extends AnyFunSuite {
     "spark.graft.checkpointDir is set") {
     withReliableDir { dir =>
       val before = rddDirs(dir)
-      val out = DedupOps.queries("dedup_minhash")(spark, sf).collect()
+      val out = SparkEntry.queries("dedup_minhash")(spark, sf).collect()
       assert(out.nonEmpty)
       assert(rddDirs(dir) > before,
         s"dedup_minhash ran without writing a reliable checkpoint under $dir")
@@ -52,7 +52,7 @@ class CheckpointsSpec extends AnyFunSuite {
     "spark.graft.checkpointDir is set") {
     withReliableDir { dir =>
       val before = rddDirs(dir)
-      val out = SimOps.queries("sim_ivf")(spark, sf).collect()
+      val out = SparkEntry.queries("sim_ivf")(spark, sf).collect()
       assert(out.nonEmpty)
       assert(rddDirs(dir) > before,
         s"sim_ivf ran without writing a reliable checkpoint under $dir")
@@ -188,7 +188,7 @@ class CheckpointsSpec extends AnyFunSuite {
       val dir = Files.createTempDirectory("graft-ckpt-unset")
       spark.sparkContext.setCheckpointDir(dir.toString)
       val before = rddDirs(dir)
-      val out = DedupOps.queries("dedup_minhash")(spark, sf).collect()
+      val out = SparkEntry.queries("dedup_minhash")(spark, sf).collect()
       assert(out.nonEmpty)
       assert(rddDirs(dir) == before,
         "knob unset but a reliable checkpoint was written")

@@ -58,7 +58,7 @@ class EmbedGuardSpec extends AnyFunSuite {
     assert(DedupOps.dedupEmbed(spark, dir).count() == 0L,
       "guard must drop the oversized bucket entirely")
     // the kNN graph shares ivfAssigned, so the same guard bounds it
-    assert(graft.engine.ops.SimOps.queries("sim_knn_graph")(spark, dir)
+    assert(SparkEntry.queries("sim_knn_graph")(spark, dir)
       .count() == 0L, "knn graph must inherit the bucket guard")
   }
 
@@ -76,7 +76,7 @@ class EmbedGuardSpec extends AnyFunSuite {
     val out = DedupOps.dedupEmbed(spark, dir).collect()
     assert(out.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L),
       "near-identical pair must surface even on a tiny corpus")
-    assert(graft.engine.ops.SimOps.queries("sim_knn_graph")(spark, dir)
+    assert(SparkEntry.queries("sim_knn_graph")(spark, dir)
       .count() > 0)
   }
 
@@ -122,7 +122,7 @@ class EmbedGuardSpec extends AnyFunSuite {
     // are rank-consistent (cos non-increasing, ties by id, ranks
     // contiguous from 1), every edge's cosine is true, and each
     // planted near-identical duplicate is its source's rank-1 neighbor
-    val g = graft.engine.ops.SimOps.queries("sim_knn_graph")(spark, dir)
+    val g = SparkEntry.queries("sim_knn_graph")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     g.foreach { case (src, _, dst, c) =>
       assert(math.abs(cos4(byId(src), byId(dst)) - c) < 1e-9,

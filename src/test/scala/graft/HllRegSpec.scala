@@ -39,7 +39,7 @@ class HllRegSpec extends AnyFunSuite {
   test("agg_approx_distinct sits inside HLL++'s 3-sigma bound") {
     val s = spark
     val sf = "/root/testdata/sf0.001"
-    val est = graft.engine.ops.Relational.queries("agg_approx_distinct")(s, sf)
+    val est = SparkEntry.queries("agg_approx_distinct")(s, sf)
       .collect()(0).getLong(0).toDouble
     val exact = graft.engine.Tables.lineitem(s, sf)
       .select("l_partkey").distinct().count().toDouble

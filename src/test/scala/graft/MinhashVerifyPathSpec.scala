@@ -24,7 +24,7 @@ class MinhashVerifyPathSpec extends AnyFunSuite {
   private val Dir = "/root/testdata/sf0.001"
 
   private def rows(): Set[(Long, Long, Double)] =
-    graft.engine.ops.DedupOps.queries("dedup_minhash")(spark, Dir)
+    SparkEntry.queries("dedup_minhash")(spark, Dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 

@@ -14,7 +14,7 @@ class MixBudgetSpec extends AnyFunSuite {
 
   test("allocations sum to the budget and sit on the proportional floor " +
     "or floor+1, remainder-ranked") {
-    val rows = TextOps.queries("mix_budget_alloc")(spark, sf).collect()
+    val rows = SparkEntry.queries("mix_budget_alloc")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(rows.length > 1)
     val total = rows.map(_._2).sum

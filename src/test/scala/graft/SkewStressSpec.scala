@@ -80,7 +80,7 @@ class SkewStressSpec extends AnyFunSuite {
       .withColumn("n_chars", length($"text").cast("long"))
       .repartition(4).write.parquet(s"$dir/documents.parquet")
 
-    val got = DedupOps.queries("dedup_near")(spark, dir).collect()
+    val got = SparkEntry.queries("dedup_near")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val expect = bruteNear(docs, DedupOps.NearMaxShingleDf)
     assert(expect.size == 10, s"corpus design: ${expect.size} expected pairs")
@@ -89,7 +89,7 @@ class SkewStressSpec extends AnyFunSuite {
     // measured sub-quadratic: the hot shingle alone would contribute
     // C(5000,2) ~ 12.5M candidate rows; the capped run must shuffle
     // nothing remotely like that
-    val s = Metrics.shuffleStats(DedupOps.queries("dedup_near")(spark, dir))
+    val s = Metrics.shuffleStats(SparkEntry.queries("dedup_near")(spark, dir))
     val quadratic = 5000L * 4999 / 2
     assert(s.recordsWritten > 0,
       "stats must come from a live plan, not an AQE-collapsed empty one")
@@ -156,13 +156,13 @@ class SkewStressSpec extends AnyFunSuite {
       .withColumn("n_chars", length($"text").cast("long"))
       .repartition(4).write.parquet(s"$dir/documents.parquet")
 
-    val got = DedupOps.queries("dedup_near")(spark, dir).collect()
+    val got = SparkEntry.queries("dedup_near")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val expect = bruteNear(docs, DedupOps.NearMaxShingleDf)
     assert(expect.size == 3, s"corpus design: ${expect.size} expected pairs")
     assert(got == expect, s"engine=${got.size} pairs, oracle=${expect.size}")
 
-    val s = Metrics.shuffleStats(DedupOps.queries("dedup_near")(spark, dir))
+    val s = Metrics.shuffleStats(SparkEntry.queries("dedup_near")(spark, dir))
     assert(s.recordsWritten > 0,
       "stats must come from a live plan, not an AQE-collapsed empty one")
     // un-pruned, the pair aggregate alone shuffles >= 179,700 records

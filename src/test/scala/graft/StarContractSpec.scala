@@ -37,8 +37,8 @@ class StarContractSpec extends AnyFunSuite {
   }
 
   test("star contraction equals label propagation on the corpus graph") {
-    val star = DedupOps.queries("dedup_clusters_star")(spark, sf).collect()
-    val prop = DedupOps.queries("dedup_clusters")(spark, sf).collect()
+    val star = SparkEntry.queries("dedup_clusters_star")(spark, sf).collect()
+    val prop = SparkEntry.queries("dedup_clusters")(spark, sf).collect()
     assert(star.map(_.toString).toSeq == prop.map(_.toString).toSeq)
   }
 

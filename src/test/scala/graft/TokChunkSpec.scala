@@ -33,7 +33,7 @@ class TokChunkSpec extends AnyFunSuite {
     val docs = graft.engine.Tables.documents(spark, sf)
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> toks(r.getString(1))).toMap
-    val out = TextOps.queries("tok_chunk_overlap")(spark, sf).collect()
+    val out = SparkEntry.queries("tok_chunk_overlap")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.nonEmpty)
     val byDoc = out.groupBy(_._1)
