@@ -2,8 +2,11 @@ package graft.engine.cdc
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.engine.model.{Ccd, Status}
 import graft.engine.topics.TopicStore
@@ -21,10 +24,12 @@ import graft.engine.topics.TopicStore
   * Sequencing matters and is preserved from the reference:
   * enable-trigger BEFORE the snapshot (core.clj:161) so no change is
   * lost between snapshot and activation — overlap converges via the
-  * topic's keyed compaction. Seeding itself is a distributed Spark
-  * write (partitioned scan → plan-level transforms → keyed append);
+  * topic's keyed compaction. Seeding itself is ONE distributed Spark
+  * write (partitioned scan → plan-level transforms → keyed append) that
+  * also counts the rows it sends, so the seed view is scanned once;
   * only the tiny control-state transitions run on the driver, exactly
-  * as the reference's single worker loop does.
+  * as the reference's single worker loop does, and they are encoded
+  * there too ([[graft.engine.model.Ccd.toJson]]).
   */
 class Initializer(
     spark: SparkSession,
@@ -45,8 +50,6 @@ class Initializer(
       * test views need no release, hence the no-op default. */
     releaseSeed: String => Unit = _ => (),
     now: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) {
-
-  import spark.implicits._
 
   /** Resume scan (reference initializer.clj:27-39 — inferred cdc-util
     * `topic->last-known-ccd-states`): read the compacted control topic,
@@ -86,8 +89,8 @@ class Initializer(
           tableAlias = Option(r.getAs[String]("table-alias")),
           status = r.getAs[String]("status"),
           // parse in explicit UTC: Timestamp.valueOf would use the JVM
-          // default zone, shifting instants on non-UTC hosts (publish
-          // formats via the UTC session timezone). A MALFORMED timestamp
+          // default zone, shifting instants on non-UTC hosts (Ccd.toJson
+          // formats in UTC whatever the session zone). A MALFORMED timestamp
           // degrades to the epoch default instead of throwing — a throw
           // here would crash backlog()/the submission loop on a poison
           // message and replay it forever from the checkpoint (same
@@ -133,28 +136,20 @@ class Initializer(
   def publish(ccd: Ccd): Unit = publishAll(Seq(ccd))
 
   /** Batched publish: one topic append — one control-topic file — for
-    * a whole lifecycle's states. The frame is driver-local, which
-    * [[graft.engine.topics.FileTopicStore]] writes without a Spark job.
-    * Within-append order is pinned by an explicit `seq` column —
-    * append() sorts within each partition by it before assigning
-    * offsets, so compaction keeps the LAST state by contract. (Relying
-    * on row order through the shuffle would work in local tests by
-    * accident only: all states of one CCD share a key, and a
-    * multi-partition source reorders under repartition.) */
+    * a whole lifecycle's states. Each value is encoded on the driver by
+    * [[graft.engine.model.Ccd.toJson]] (no encoder derived, no
+    * projection planned), and the (key, value, seq) rows become a
+    * driver-local frame, which [[graft.engine.topics.FileTopicStore]]
+    * writes without a Spark job. Within-append order is pinned by the
+    * explicit `seq` column — append() sorts within each partition by it
+    * before assigning offsets, so compaction keeps the LAST state by
+    * contract. (Relying on row order through the shuffle would work in
+    * local tests by accident only: all states of one CCD share a key,
+    * and a multi-partition source reorders under repartition.) */
   def publishAll(ccds: Seq[Ccd]): Unit = {
     if (ccds.isEmpty) return
-    val json = ccds.zipWithIndex.toDS().toDF("c", "seq")
-      .select(
-        col("c.table").as("key"),
-        to_json(struct(
-          col("c.table").as("table"), col("c.queue").as("queue"),
-          col("c.queueTable").as("queue-table"),
-          col("c.tableAlias").as("table-alias"),
-          col("c.status").as("status"),
-          date_format(col("c.timestamp"), "yyyy-MM-dd HH:mm:ss.SSS").as("timestamp"),
-          col("c.progress").as("progress"), col("c.error").as("error"))).as("value"),
-        col("seq"))
-    topics.append(controlTopic, json)
+    val rows = ccds.zipWithIndex.map { case (c, i) => Row(c.table, Ccd.toJson(c), i) }
+    topics.append(controlTopic, spark.createDataFrame(rows.asJava, Initializer.publishSchema))
   }
 
   /** Ensure-trigger → ensure-queue → ensure-topic, emitting a creation
@@ -182,23 +177,34 @@ class Initializer(
   }
 
   /** Seed the topic from the table snapshot (reference core.clj:154-182):
-    * enable trigger first, count, stream-transform-send, 2%-bucket
-    * progress (≤ 50 reports + the initial [0, total], core.clj:162-175),
-    * then `active`; on exception best-effort disable-trigger + `error`.
+    * enable trigger first, then one pass that transforms, sends AND
+    * counts the snapshot, then the 2%-bucket progress (the initial
+    * [0, total] plus ≤ 50 reports, core.clj:162-175) and `active`; on
+    * exception best-effort disable-trigger + `error`.
     *
     * The reference's row-at-a-time channel becomes one distributed
-    * write; progress statuses are the deterministic bucket ledger (the
-    * streaming engine reports live progress via listener instead). */
+    * write. The reference counts and then scans (two snapshots, whose
+    * sizes can differ); here the write's own rows are counted by an
+    * observation on the appended frame, so the seed view is scanned
+    * once and `total` is exactly what reached the topic. The observed
+    * plan is never a `LocalRelation`, so the append always takes the
+    * distributed write, whose completion fills the observation; a
+    * failed write throws before the observation is read. The seeding
+    * states are stamped after the write, which is safe because
+    * [[process]] publishes only once this returns. Progress statuses
+    * are the deterministic bucket ledger (the streaming engine reports
+    * live progress via listener instead). */
   def initialize(ccd: Ccd): Seq[Ccd] = {
     val out = Seq.newBuilder[Ccd]
     try {
       plane.enableTrigger(ccd.table)
       val view = seedView(ccd.table).getOrElse(
         throw new IllegalArgumentException(s"unknown table ${ccd.table}"))
-      val total = view.count()
+      val sent = new Observation()
+      topics.append(ccd.queue, Transforms.dmlMsgToSeedMsg(Transforms.seedRowToDmlMsg(view))
+        .observe(sent, count(lit(1)).as("rows")))
+      val total = sent.get("rows").asInstanceOf[Long]
       out += stamp(ccd, Status.Seeding, progress = Some(Seq(0L, total)))
-      val seedMsgs = Transforms.dmlMsgToSeedMsg(Transforms.seedRowToDmlMsg(view))
-      topics.append(ccd.queue, seedMsgs)
       Initializer.progressBuckets(total).foreach { c =>
         out += stamp(ccd, Status.Seeding, progress = Some(Seq(c, total)))
       }
@@ -268,6 +274,12 @@ class Initializer(
 }
 
 object Initializer {
+  /** The frame [[Initializer.publishAll]] hands the control append. */
+  private val publishSchema = StructType(Seq(
+    StructField("key", StringType),
+    StructField("value", StringType),
+    StructField("seq", IntegerType, nullable = false)))
+
   /** The 2%-bucket progress ledger (reference core.clj:162-175): the
     * seeded counts at which progress is reported after the initial
     * [0, total] — every ceil(2% · total) rows, so at most 50 reports,

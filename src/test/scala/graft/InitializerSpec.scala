@@ -3,10 +3,17 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.cdc.{Identifiers, InMemoryControlPlane, Initializer, SeedViews}
+import graft.engine.cdc.{Identifiers, InMemoryControlPlane, Initializer, SeedViews, Transforms}
 import graft.engine.model.{Ccd, Status}
 import graft.engine.topics.FileTopicStore
 
@@ -26,19 +33,23 @@ class InitializerSpec extends AnyFunSuite {
     Ccd(table, queue, s"mq_$queue", None, Status.Submitted,
       new Timestamp(1700000000000L))
 
+  private def nationView(session: SparkSession = spark): DataFrame =
+    SeedViews.forTable(
+      session.read.parquet(s"$sf/nation.parquet"), "tpch.nation", Seq("n_nationkey"))
+
+  /** `views` adds seed views next to tpch.nation's. */
   private def mkInit(
       failures: String => Boolean = _ => false,
-      planeSetup: InMemoryControlPlane => Unit = _ => ()) = {
+      planeSetup: InMemoryControlPlane => Unit = _ => (),
+      views: Map[String, DataFrame] = Map.empty,
+      session: SparkSession = spark) = {
     val root = Files.createTempDirectory("graft-init").toString
-    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    val store = new FileTopicStore(session, root, sleeper = _ => ())
     val plane = new InMemoryControlPlane(failures)
     planeSetup(plane)
     val seedView = (table: String) =>
-      if (table == "tpch.nation")
-        Some(SeedViews.forTable(
-          spark.read.parquet(s"$sf/nation.parquet"), table, Seq("n_nationkey")))
-      else None
-    val init = new Initializer(spark, plane, store, "control", seedView,
+      if (table == "tpch.nation") Some(nationView(session)) else views.get(table)
+    val init = new Initializer(session, plane, store, "control", seedView,
       now = () => new Timestamp(1700000001000L))
     store.create("control")
     (init, plane, store)
@@ -100,14 +111,76 @@ class InitializerSpec extends AnyFunSuite {
   }
 
   test("progress ledger: monotone, correct total, bounded cadence (core_test.clj:205-249)") {
-    val (init, _, _) = mkInit()
+    val (init, _, store) = mkInit()
     val states = init.process(ccd())
     val prog = states.filter(_.status == Status.Seeding).flatMap(_.progress)
     assert(prog.nonEmpty && prog.head(0) == 0L, "first report at 0 (core.clj:164)")
     val total = prog.head(1)
+    assert(total == store.readAll("q_nation").count(), "total is the rows the seed sent")
     assert(prog.forall(_(1) == total))
     assert(prog.map(_(0)) == prog.map(_(0)).sorted, "monotone")
     assert(prog.size <= 52, "≤50 bucket reports + initial")
+  }
+
+  test("one initialize of tpch.nation launches its seed append's jobs and no others") {
+    val (init, _, _) = mkInit()
+    val prepared = init.prepare(ccd()).last
+    val seeding = JobCount(spark)(assert(init.initialize(prepared).last.status == Status.Active))
+    // the same append alone, onto the same fresh topic state
+    val (_, _, other) = mkInit()
+    other.create("q_nation")
+    val append = JobCount(spark)(other.append("q_nation",
+      Transforms.dmlMsgToSeedMsg(Transforms.seedRowToDmlMsg(nationView()))))
+    assert(append >= 1 && seeding == append,
+      s"initialize launched $seeding job(s), its append alone $append")
+  }
+
+  test("a LocalRelation-backed seed view and an empty one both seed with the exact total") {
+    import spark.implicits._
+    val rows = SeedViews.forTable(
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name"), "s.rows", Seq("id"))
+    val none = SeedViews.forTable(
+      Seq.empty[(Long, String)].toDF("id", "name"), "s.none", Seq("id"))
+    Seq(rows, none).foreach(v =>
+      assert(v.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]))
+    val (init, _, store) = mkInit(views = Map("s.rows" -> rows, "s.none" -> none))
+    def seeded(table: String, queue: String) = {
+      val states = init.process(ccd(table = table, queue = queue))
+      assert(states.last.status == Status.Active, states.last.error)
+      (states.filter(_.status == Status.Seeding).map(_.progress.get),
+        store.readAll(queue).count())
+    }
+    val (rowsProgress, rowsSent) = seeded("s.rows", "q_rows")
+    assert(rowsSent == 3 && rowsProgress.head == Seq(0L, 3L))
+    assert(rowsProgress.last == Seq(3L, 3L))
+    assert(seeded("s.none", "q_none") == ((Seq(Seq(0L, 0L)), 0L)),
+      "an empty seed reports [0, 0] once, then goes active")
+  }
+
+  test("a seed whose write fails at execution ends in error without waiting on its count") {
+    val failing = SeedViews.forTable(
+      spark.read.parquet(s"$sf/nation.parquet")
+        .withColumn("boom", raise_error(concat(lit("seed write failed at "), col("n_name")))
+          .cast("string")),
+      "tpch.failing", Seq("n_nationkey"))
+    val (init, plane, _) = mkInit(views = Map("tpch.failing" -> failing))
+    val states = Await.result(
+      Future(init.process(ccd(table = "tpch.failing", queue = "q_failing"))), 120.seconds)
+    assert(states.last.status == Status.Error)
+    assert(states.last.error.exists(_.contains("seed write failed")), states.last.error)
+    assert(!states.exists(_.status == Status.Seeding), "no progress for a seed that sent nothing")
+    assert(!plane.triggerEnabled("tpch.failing"), "compensating disable")
+  }
+
+  test("a published timestamp decodes to the same instant on a non-UTC session") {
+    // a sibling session carries the zone, so the shared session's conf
+    // never changes under concurrently running suites
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val (init, _, store) = mkInit(session = la)
+    val sent = ccd().copy(timestamp = new Timestamp(1700000001234L))
+    init.publish(sent)
+    assert(init.decodeCcds(store.readAll("control")).map(_.timestamp) == Seq(sent.timestamp))
   }
 
   test("error during seeding disables trigger, emits error (core_test.clj:180-203)") {

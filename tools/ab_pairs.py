@@ -28,6 +28,12 @@ pair next to it. Last, each side's median and quartiles of every
 ungated `detail` figure of the run documents (resume_s,
 topic_read_rows_per_s, ccd_service_p50_s, ...) that all runs report,
 with no verdict.
+
+A side whose .bench_build/classpath.txt names a classes directory
+outside that side's root is refused (exit 2): the checkout was copied
+together with another checkout's build, so it would run that build's
+classes, and its own rebuild could delete them. Delete that side's
+.bench_build/ and run again.
 """
 import argparse
 import json
@@ -45,6 +51,20 @@ def seeds_of(spec):
     """'931-940' -> [931, ..., 940]."""
     lo, _, hi = spec.partition("-")
     return list(range(int(lo), int(hi or lo) + 1))
+
+
+def foreign_classes(checkout):
+    """Classes directories that checkout's saved build classpath names
+    outside the checkout (a build copied along with its sources)."""
+    cp_file = os.path.join(checkout, ".bench_build", "classpath.txt")
+    if not os.path.exists(cp_file):
+        return []
+    with open(cp_file) as f:
+        classpath = json.load(f).get("classpath", "")
+    root = os.path.realpath(checkout)
+    return [e for e in classpath.split(os.pathsep)
+            if e and not e.endswith(".jar")
+            and os.path.commonpath([root, os.path.realpath(e)]) != root]
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -134,6 +154,14 @@ def main():
     ap.add_argument("--out")
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    for side, checkout in sides.items():
+        foreign = foreign_classes(checkout)
+        if foreign:
+            print(f"refused: the {side} side's build names classes outside {checkout}: "
+                  f"{', '.join(foreign)}. It was copied with another checkout's build; "
+                  f"delete {os.path.join(checkout, '.bench_build')}/ and run again.",
+                  file=sys.stderr)
+            sys.exit(2)
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
         metrics = [(m["name"], m["better"], m["bound"]) for m in json.load(f)["end_to_end"]]
     seeds = seeds_of(a.seeds)
