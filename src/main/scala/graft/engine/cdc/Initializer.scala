@@ -5,8 +5,11 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.engine.model.{Ccd, Status}
 import graft.engine.topics.TopicStore
@@ -59,52 +62,79 @@ class Initializer(
     * latest state wins, the same result as over the full log, so a
     * restart does not re-run a terminal table-less CCD. Small by
     * construction (one row per captured table), so collecting to the
-    * driver's work queue mirrors the reference's channel of CCDs. */
+    * driver's work queue mirrors the reference's channel of CCDs.
+    *
+    * A control topic below the store's driver-read bound comes back as
+    * a `LocalRelation` (see [[graft.engine.topics.FileTopicStore.readCompacted]]):
+    * the reduction then runs on its rows and the result stays a
+    * `LocalRelation`, which [[decodeCcds]] reads directly, so a resume
+    * runs no Spark action at all. A larger log is reduced by the
+    * `max_by` aggregate and decoded from one collect. */
   def backlog(): Seq[Ccd] = {
     if (!topics.exists(controlTopic)) return Seq.empty
-    val compacted = Transforms.lastStatePerKey(Seq("key"), Seq("offset"))(
-      topics.readCompacted(controlTopic))
-    decodeCcds(compacted)
+    val compacted = topics.readCompacted(controlTopic)
+    val latest = Initializer.controlRelation(compacted) match {
+      case Some(c) => PlanBridge.ofRows(spark, c.lastPerKey)
+      case None => Transforms.lastStatePerKey(Seq("key"), Seq("offset"))(compacted)
+    }
+    decodeCcds(latest)
       .filter(c => !Status.terminal.contains(c.status))
       .sortBy(_.timestamp.getTime)
   }
 
-  /** Decode control messages to CCDs. The decoded `table` falls back
-    * to the MESSAGE KEY when the value is unparseable or lacks one:
-    * the table doubles as the publish key, and an error state for a
-    * poison message must land under the ORIGINAL key so compaction
-    * supersedes it — keyed by the decoded null it would never reach a
-    * terminal state and every restart would reprocess it. */
-  def decodeCcds(df: DataFrame): Seq[Ccd] =
-    df.select(col("key"), from_json(col("value"), Ccd.jsonSchema).as("c"))
-      .select(col("key"), col("c.*"))
-      .collect()
-      .toSeq
-      .map { r =>
-        Ccd(
-          table = Option(r.getAs[String]("table")).filter(_.trim.nonEmpty)
-            .getOrElse(r.getAs[String]("key")),
-          queue = r.getAs[String]("queue"),
-          queueTable = r.getAs[String]("queue-table"),
-          tableAlias = Option(r.getAs[String]("table-alias")),
-          status = r.getAs[String]("status"),
-          // parse in explicit UTC: Timestamp.valueOf would use the JVM
-          // default zone, shifting instants on non-UTC hosts (Ccd.toJson
-          // formats in UTC whatever the session zone). A MALFORMED timestamp
-          // degrades to the epoch default instead of throwing — a throw
-          // here would crash backlog()/the submission loop on a poison
-          // message and replay it forever from the checkpoint (same
-          // hardening as checkCcd for malformed table refs)
-          timestamp = scala.util.Try(
-            Timestamp.from(
-              java.time.LocalDateTime.parse(
-                Option(r.getAs[String]("timestamp")).getOrElse("1970-01-01 00:00:00")
-                  .replace(' ', 'T'))
-                .toInstant(java.time.ZoneOffset.UTC)))
-            .getOrElse(Timestamp.from(java.time.Instant.EPOCH)),
-          progress = Option(r.getAs[Seq[Long]]("progress")),
-          error = Option(r.getAs[String]("error")))
+  /** Decode control messages to CCDs, in topic-offset order. The frame
+    * needs `key` and `value` columns; rows without an offset (no
+    * `offset` column, or a null one) come first, in frame order.
+    *
+    * The rows reach the driver once: a frame whose analyzed plan is a
+    * driver `LocalRelation` (every compacted control topic below the
+    * read bound) is read directly, with no Spark action; any other frame
+    * (a micro-batch of the control tail) is collected as (key, value,
+    * offset) in one job. Each value is then decoded by
+    * [[graft.engine.model.Ccd.fromJson]], with no Catalyst plan.
+    *
+    * The decoded `table` falls back to the MESSAGE KEY when the value is
+    * unparseable or lacks one: the table doubles as the publish key, and
+    * an error state for a poison message must land under the ORIGINAL
+    * key so compaction supersedes it — keyed by the decoded null it
+    * would never reach a terminal state and every restart would
+    * reprocess it. */
+  def decodeCcds(df: DataFrame): Seq[Ccd] = {
+    val rows: Seq[(String, String, Option[Long])] =
+      Initializer.controlRelation(df) match {
+        case Some(c) => c.rows.map(r => (c.key(r), c.value(r), c.offset(r)))
+        case None =>
+          val offset = if (df.columns.contains("offset")) col("offset").cast(LongType) else lit(null)
+          df.select(col("key"), col("value"), offset)
+            .collect().toSeq
+            .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
       }
+    rows.sortBy(_._3).map { case (key, value, _) =>
+      val r = Ccd.fromJson(value)
+      Ccd(
+        table = Option(r.getAs[String]("table")).filter(_.trim.nonEmpty).getOrElse(key),
+        queue = r.getAs[String]("queue"),
+        queueTable = r.getAs[String]("queue-table"),
+        tableAlias = Option(r.getAs[String]("table-alias")),
+        status = r.getAs[String]("status"),
+        // parse in explicit UTC: Timestamp.valueOf would use the JVM
+        // default zone, shifting instants on non-UTC hosts (Ccd.toJson
+        // formats in UTC whatever the session zone). A MALFORMED timestamp
+        // degrades to the epoch default instead of throwing — a throw
+        // here would crash backlog()/the submission loop on a poison
+        // message and replay it forever from the checkpoint (same
+        // hardening as checkCcd for malformed table refs)
+        timestamp = scala.util.Try(
+          Timestamp.from(
+            java.time.LocalDateTime.parse(
+              Option(r.getAs[String]("timestamp")).getOrElse("1970-01-01 00:00:00")
+                .replace(' ', 'T'))
+              .toInstant(java.time.ZoneOffset.UTC)))
+          .getOrElse(Timestamp.from(java.time.Instant.EPOCH)),
+        progress = Option(r.getAs[Seq[Long]]("progress")),
+        error = Option(r.getAs[String]("error")))
+    }
+  }
 
   /** CCD validity (reference initializer.clj:51-56 `check-ccd`,
     * core.clj:38-54 requirements). Returns None when valid. */
@@ -255,13 +285,23 @@ class Initializer(
     states
   }
 
-  /** Current compacted status of a CCD key, if any. */
+  /** Current compacted status of a CCD key, if any: the `status` of the
+    * key's latest control message. On a control topic below the store's
+    * driver-read bound the compacted log is a `LocalRelation`, so the
+    * key's row is found on the driver and only that value is decoded
+    * ([[graft.engine.model.Ccd.fromJson]]): no Catalyst plan, no Spark
+    * action. A larger log is filtered to the key and collected (one
+    * job). A null table has no row. */
   def currentStatus(table: String): Option[String] = {
     if (!topics.exists(controlTopic)) return None
-    topics.readCompacted(controlTopic)
-      .filter(col("key") === table)
-      .select(from_json(col("value"), Ccd.jsonSchema).getField("status"))
-      .collect().headOption.flatMap(r => Option(r.getString(0)))
+    val compacted = topics.readCompacted(controlTopic)
+    val value: Option[String] = Initializer.controlRelation(compacted) match {
+      case Some(c) => c.rows.find(r => table != null && c.key(r) == table).map(c.value)
+      case None =>
+        compacted.filter(col("key") === table).select(col("value"))
+          .collect().headOption.map(_.getString(0))
+    }
+    value.flatMap(v => Option(Ccd.fromJson(v).getAs[String]("status")))
   }
 
   /** Full service run (reference initializer.clj:76-115): ensure the
@@ -279,6 +319,37 @@ object Initializer {
     StructField("key", StringType),
     StructField("value", StringType),
     StructField("seq", IntegerType, nullable = false)))
+
+  /** A control frame held on the driver: a `LocalRelation` with string
+    * `key` and `value` columns and, optionally, a long `offset`. */
+  private final case class ControlRelation(relation: LocalRelation) {
+    private def ordinal(name: String, dataType: org.apache.spark.sql.types.DataType): Int =
+      relation.output.indexWhere(a => a.name == name && a.dataType == dataType)
+    private val k = ordinal("key", StringType)
+    private val v = ordinal("value", StringType)
+    private val o = ordinal("offset", LongType)
+
+    def valid: Boolean = k >= 0 && v >= 0
+    def rows: Seq[InternalRow] = relation.data
+    def key(r: InternalRow): String = if (r.isNullAt(k)) null else r.getUTF8String(k).toString
+    def value(r: InternalRow): String = if (r.isNullAt(v)) null else r.getUTF8String(v).toString
+    def offset(r: InternalRow): Option[Long] =
+      if (o < 0 || r.isNullAt(o)) None else Some(r.getLong(o))
+
+    /** [[Transforms.lastStatePerKey]] over `key` and `offset` on the
+      * driver: the highest-offset row per key, all null keys one group,
+      * a null offset lowest. */
+    def lastPerKey: LocalRelation =
+      relation.copy(data = rows.groupBy(key).values.map(_.maxBy(offset)).toSeq)
+  }
+
+  /** The frame's rows when its analyzed plan is a driver `LocalRelation`
+    * of control messages, None for any other plan (nothing runs). */
+  private def controlRelation(df: DataFrame): Option[ControlRelation] =
+    df.queryExecution.analyzed match {
+      case l: LocalRelation if !l.isStreaming => Some(ControlRelation(l)).filter(_.valid)
+      case _ => None
+    }
 
   /** The 2%-bucket progress ledger (reference core.clj:162-175): the
     * seeded counts at which progress is reported after the initial

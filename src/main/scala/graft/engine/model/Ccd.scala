@@ -5,7 +5,12 @@ import java.sql.Timestamp
 import java.time.ZoneOffset
 import java.time.format.DateTimeFormatter
 
-import com.fasterxml.jackson.core.JsonFactory
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
 /** Change Capture Definition — the reference's control record
@@ -15,8 +20,8 @@ import org.apache.spark.sql.types._
   * source table, the queue (== topic) its changes flow to, and the
   * lifecycle status of the initialization state machine. Every state
   * is published to the control topic as [[Ccd.toJson]] and read back
-  * through [[Ccd.jsonSchema]]; both live in the companion, so the
-  * control format has one home.
+  * by [[Ccd.fromJson]] into [[Ccd.jsonSchema]]'s fields; all three live
+  * in the companion, so the control format has one home.
   */
 case class Ccd(
     table: String,
@@ -71,6 +76,14 @@ object Ccd {
     StructField("error", StringType)))
 
   private val jsonFactory = new JsonFactory()
+  // the read features Spark's JSON options enable by default; every
+  // other feature and limit is Jackson's default there too
+  private val readFactory = JsonFactory.builder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+  private val fieldIndex: Map[String, Int] = jsonSchema.fieldNames.zipWithIndex.toMap
+  private val progressIndex = fieldIndex("progress")
   private val timestampFormat =
     DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(ZoneOffset.UTC)
 
@@ -101,5 +114,76 @@ object Ccd {
     g.writeEndObject()
     g.close()
     out.toString
+  }
+
+  /** Decode a control-topic message value into [[jsonSchema]]'s 8
+    * fields, on the driver: the row `from_json(value, jsonSchema)`
+    * returns in its default PERMISSIVE mode, with no Catalyst plan. It
+    * follows Spark's Jackson-based reader step for step, so the odd
+    * inputs decode alike too (CcdJsonSpec pins this against `from_json`):
+    *  - a null, blank or malformed value, or one that is not a JSON
+    *    object (an array, a scalar, `null`), gives all 8 fields null
+    *  - unknown keys are skipped and a repeated key keeps its last value
+    *  - a string field holding a number, boolean, array or object keeps
+    *    that value's JSON text
+    *  - a field whose value cannot be read (a string inside `progress`)
+    *    is null while the other fields keep their values
+    *  - anything after the closing brace is ignored
+    * A missing field is null; `progress` is a `Seq` of boxed longs
+    * whose elements may be null. */
+  def fromJson(value: String): Row = {
+    val fields =
+      if (value == null) new Array[Any](jsonSchema.length)
+      else try readRecord(value) catch { case NonFatal(_) => new Array[Any](jsonSchema.length) }
+    new GenericRowWithSchema(fields, jsonSchema)
+  }
+
+  private def readRecord(value: String): Array[Any] = {
+    val fields = new Array[Any](jsonSchema.length)
+    val p = readFactory.createParser(value)
+    try p.nextToken() match {
+      case null => // blank: no record
+      case JsonToken.START_OBJECT =>
+        while (advance(p, JsonToken.END_OBJECT)) fieldIndex.get(p.currentName) match {
+          // a field that fails leaves its slot as it was (the partial
+          // result), and the parser moves on past its value
+          case Some(i) => try fields(i) = readField(p, i) catch { case NonFatal(_) => p.skipChildren() }
+          case None => p.skipChildren()
+        }
+      case t => throw new IllegalArgumentException(s"not a JSON object: $t")
+    } finally p.close()
+    fields
+  }
+
+  /** Next token, false at `stop` or at the end of the input. */
+  private def advance(p: JsonParser, stop: JsonToken): Boolean = {
+    val t = p.nextToken()
+    t != null && t != stop
+  }
+
+  /** The value at the current token, first stepping past a field name.
+    * After a failed field the loop can land here on another token (the
+    * end of a broken array, still named by its field), which then fails
+    * the same way without consuming input. */
+  private def readField(p: JsonParser, i: Int): Any = {
+    if (p.currentToken == JsonToken.FIELD_NAME) p.nextToken()
+    p.currentToken match {
+      case null | JsonToken.VALUE_NULL => null
+      case JsonToken.START_ARRAY if i == progressIndex =>
+        val out = Vector.newBuilder[Any]
+        while (advance(p, JsonToken.END_ARRAY)) out += (p.currentToken match {
+          case JsonToken.VALUE_NULL => null
+          case JsonToken.VALUE_NUMBER_INT => java.lang.Long.valueOf(p.getLongValue)
+          case t => throw new IllegalArgumentException(s"not a long: $t")
+        })
+        out.result()
+      case t if i == progressIndex => throw new IllegalArgumentException(s"not an array: $t")
+      case JsonToken.VALUE_STRING => p.getText
+      case _ =>
+        val out = new StringWriter
+        val g = readFactory.createGenerator(out)
+        try g.copyCurrentStructure(p) finally g.close()
+        out.toString
+    }
   }
 }

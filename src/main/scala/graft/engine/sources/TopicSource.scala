@@ -152,13 +152,14 @@ private[sources] class TopicScan(dir: String, files: Seq[String], required: Stru
   * micro-batch plans exactly the set difference end − start — so
   * recovery is ordering-independent: however a restarted stream
   * re-lists the directory, already-committed files are never
-  * re-planned and new ones never skipped. Appends only add files;
-  * storage compaction must not run under a live tail (see
+  * re-planned and new ones never skipped. Admission control applies
+  * under every trigger, `Trigger.AvailableNow` included. Appends only
+  * add files; storage compaction must not run under a live tail (see
   * FileTopicStore.compact). Pushed offset/partition predicates apply
   * inside the readers exactly as in batch. */
 private[sources] class TopicMicroBatchStream(dir: String, columns: Array[String],
     pushed: Array[Filter], maxFilesPerTrigger: Option[Int])
-  extends rstreaming.MicroBatchStream with rstreaming.SupportsAdmissionControl {
+  extends rstreaming.MicroBatchStream with rstreaming.SupportsTriggerAvailableNow {
   import com.fasterxml.jackson.databind.ObjectMapper
 
   private val mapper = new ObjectMapper()
@@ -205,18 +206,27 @@ private[sources] class TopicMicroBatchStream(dir: String, columns: Array[String]
   /** Admission control (`maxFilesPerTrigger` option; the store's
     * control tail sets 100): a large backlog is admitted N files per
     * micro-batch instead of flooding the first one, the engine analog
-    * of the reference's bounded work queue (initializer.clj:87). This
-    * stream lacks `SupportsTriggerAvailableNow`, so under
-    * `Trigger.AvailableNow` Spark wraps it and admits the whole backlog
-    * in one batch. */
+    * of the reference's bounded work queue (initializer.clj:87). It
+    * holds under `Trigger.AvailableNow` too, which this stream supports
+    * natively: see [[prepareForTriggerAvailableNow]]. */
   override def getDefaultReadLimit: rstreaming.ReadLimit =
     maxFilesPerTrigger.map(rstreaming.ReadLimit.maxFiles)
       .getOrElse(rstreaming.ReadLimit.allAvailable())
 
+  // the listing an AvailableNow query drains up to; None for other triggers
+  @volatile private var availableNow: Option[Set[String]] = None
+
+  /** `Trigger.AvailableNow`: record the file listing at query start;
+    * batches then admit only those files, still at most
+    * `maxFilesPerTrigger` each, and the query ends once they are all
+    * consumed. Files appended later wait for the next query. */
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNow = Some(listFiles().toSet)
+
   override def latestOffset(start: rstreaming.Offset,
       limit: rstreaming.ReadLimit): rstreaming.Offset = {
     val seen = start.asInstanceOf[TopicStreamOffset].files
-    val newFiles = listFiles().filterNot(seen.toSet)
+    val newFiles = listFiles().filterNot(seen.toSet).filter(f => availableNow.forall(_(f)))
     val admitted = limit match {
       case m: rstreaming.ReadMaxFiles => newFiles.take(m.maxFiles)
       case _ => newFiles
@@ -441,16 +451,15 @@ private[engine] object TopicLog {
 
   def nonEmpty(dir: String): Boolean = dataFiles(dir).nonEmpty
 
-  /** Every row of the given data files, in file then line order, read
-    * on the driver by the connector's own reader in the full topic
-    * schema: no Spark job. For logs small enough that one task's worth
-    * of work is cheaper than scheduling it (FileTopicStore.readCompacted). */
-  def readLocal(files: Seq[String]): Seq[InternalRow] =
-    files.flatMap { f =>
-      val reader = new TopicFileReader(f, FileTopicStore.schema.fieldNames, Array.empty)
-      try Iterator.continually(reader.next()).takeWhile(identity).map(_ => reader.get()).toVector
-      finally reader.close()
-    }
+  /** Every row of one data file, in line order, read on the driver by
+    * the connector's own reader in the full topic schema: no Spark job.
+    * For logs small enough that one task's worth of work is cheaper
+    * than scheduling it (FileTopicStore.readCompacted). */
+  def readLocal(file: String): Vector[InternalRow] = {
+    val reader = new TopicFileReader(file, FileTopicStore.schema.fieldNames, Array.empty)
+    try Iterator.continually(reader.next()).takeWhile(identity).map(_ => reader.get()).toVector
+    finally reader.close()
+  }
 
   /** Per-partition max offset of each given data file: ONE job, a task
     * per group of files, each parsed by the connector's own reader

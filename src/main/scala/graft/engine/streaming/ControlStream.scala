@@ -1,18 +1,20 @@
 package graft.engine.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.engine.cdc.Initializer
-import graft.engine.model.{Ccd, Status}
+import graft.engine.model.Status
 import graft.engine.topics.TopicStore
 
 /** Structured-Streaming control path (reference initializer.clj:88,
-  * 98, 101-110): tail the control topic, decode, keep `submitted`
-  * CCDs, and orchestrate each sequentially inside `foreachBatch` —
-  * the micro-batch loop is the engine's work queue (the reference's
-  * buffer-100 channel + single worker).
+  * 98, 101-110): tail the raw control topic and, per micro-batch, decode
+  * it on the driver, keep the `submitted` CCDs and orchestrate each
+  * sequentially inside `foreachBatch` — the micro-batch loop is the
+  * engine's work queue (the reference's buffer-100 channel + single
+  * worker). The streaming plan holds no decode and no filter: a
+  * micro-batch costs one scan job ([[processBatch]]).
   *
   * The per-key status state machine is a `flatMapGroupsWithState`
   * (SURVEY §7.4): state = last seen status per CCD key; emitted rows
@@ -22,24 +24,11 @@ import graft.engine.topics.TopicStore
   */
 object ControlStream {
 
-  /** Decoded streaming view of a control topic. Carries the RAW value
-    * through: downstream consumers that need full CCDs (processBatch)
-    * decode once from it, instead of a lossy re-serialize round-trip
-    * of the projected fields. */
-  def ccdStream(store: TopicStore, topic: String): DataFrame =
+  /** The submission loop's input: the control topic's raw messages
+    * (key, value, partition, offset, ts) through the connector's
+    * micro-batch tail, undecoded. */
+  private[graft] def controlTail(store: TopicStore, topic: String): DataFrame =
     store.readStream(topic)
-      .select(col("key"), col("offset"), col("value"),
-        from_json(col("value"), Ccd.jsonSchema).as("c"))
-      .select(col("key"), col("offset"), col("value"),
-        col("c.table").as("table"), col("c.queue").as("queue"),
-        col("c.`queue-table`").as("queue_table"),
-        col("c.`table-alias`").as("table_alias"),
-        col("c.status").as("status"), col("c.timestamp").as("status_ts"))
-
-  /** New-submission filter (reference initializer.clj:88 —
-    * `msgs->ccds-with-status :submitted`). */
-  def submissions(store: TopicStore, topic: String): DataFrame =
-    ccdStream(store, topic).filter(col("status") === Status.Submitted)
 
   case class KeyedStatus(key: String, offset: Long, status: String)
   case class Transition(key: String, from: String, to: String, offset: Long)
@@ -82,9 +71,10 @@ object ControlStream {
   /** Run the full streaming control loop over whatever is currently in
     * the topic (Trigger.AvailableNow — used by tests and by catch-up
     * runs; a live deployment uses the default processing-time
-    * trigger). Submissions are processed sequentially per micro-batch,
-    * mirroring the reference's single worker (initializer.clj:41-68).
-    * Returns after the backlog drains. */
+    * trigger). The tail admits the files listed at start, at most 100
+    * per micro-batch, in append order; submissions are processed
+    * sequentially per micro-batch, mirroring the reference's single
+    * worker (initializer.clj:41-68). Returns after the backlog drains. */
   def runSubmissions(
       store: TopicStore,
       controlTopic: String,
@@ -93,24 +83,25 @@ object ControlStream {
     startSubmissionLoop(store, controlTopic, init, checkpoint,
       Trigger.AvailableNow()).awaitTermination()
 
-  /** One micro-batch of the submission loop: decode the RAW message
-    * values back to CCDs (one parse, no lossy re-serialize of the
-    * projected columns) and orchestrate each sequentially in timestamp
-    * order, ties in TOPIC-OFFSET order. The offset sort before decode
-    * matters: collect order is partition order, not pinned, and the
-    * stable timestamp sort alone would let two same-millisecond
-    * submissions of the SAME key race on which lifecycle runs first —
-    * the at-least-once recheck then drops the loser, so the surviving
-    * config would be nondeterministic. Same-key messages share a topic
-    * partition, so their offsets totally order them (the V2 admission
-    * contract). A control batch is small, so it is ordered in ONE
-    * partition: the same total order as a global sort, without the
-    * range-sampling job and the exchange. */
-  private[graft] def processBatch(init: Initializer)(batch: DataFrame): Unit = {
-    val ccds = init.decodeCcds(
-      batch.coalesce(1).sortWithinPartitions(col("offset")).select(col("key"), col("value")))
-    ccds.sortBy(_.timestamp.getTime).foreach(init.process)
-  }
+  /** One micro-batch of the submission loop: decode the batch's raw
+    * messages once ([[Initializer.decodeCcds]]: one scan job, then
+    * [[graft.engine.model.Ccd.fromJson]] per value on the driver), keep
+    * the `submitted` ones (reference initializer.clj:88,
+    * `msgs->ccds-with-status :submitted`) and orchestrate each
+    * sequentially in timestamp order, ties in TOPIC-OFFSET order. The
+    * offset order matters: collect order is partition order, not
+    * pinned, and the stable timestamp sort alone would let two
+    * same-millisecond submissions of the SAME key race on which
+    * lifecycle runs first — the at-least-once recheck then drops the
+    * loser, so the surviving config would be nondeterministic.
+    * `decodeCcds` returns messages in offset order, and same-key
+    * messages share a topic partition, so their offsets totally order
+    * them (the V2 admission contract). */
+  private[graft] def processBatch(init: Initializer)(batch: DataFrame): Unit =
+    init.decodeCcds(batch)
+      .filter(_.status == Status.Submitted)
+      .sortBy(_.timestamp.getTime)
+      .foreach(init.process)
 
   private def startSubmissionLoop(
       store: TopicStore,
@@ -118,7 +109,7 @@ object ControlStream {
       init: Initializer,
       checkpoint: String,
       trigger: Trigger): StreamingQuery = {
-    val stream = submissions(store, controlTopic)
+    val stream = controlTail(store, controlTopic)
     // honor spark.graft.stateStore before start (provider is captured
     // per query at start time — see StateStores)
     StateStores.configure(stream.sparkSession)

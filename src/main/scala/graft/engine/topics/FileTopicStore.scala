@@ -119,6 +119,7 @@ class FileTopicStore(
 
   def delete(topic: String): Unit = {
     check("delete", topic)
+    rowMemo.synchronized(rowMemo.remove(topic))
     val d = dir(topic)
     if (Files.isDirectory(d)) {
       val walk = Files.walk(d)
@@ -430,8 +431,15 @@ class FileTopicStore(
     *    is this small. The files are parsed by the connector's reader
     *    and compacted on the driver, and the rows come back as a
     *    `LocalRelation`: the result is materialized when the call
-    *    returns, and a filter, projection and collect over it (every
-    *    CCD status recheck) launch no Spark job.
+    *    returns, and a filter, projection and collect over it launch no
+    *    Spark job (the control loop's recheck and resume read its rows
+    *    directly, see [[graft.engine.cdc.Initializer.decodeCcds]]).
+    *    Each data file's parsed rows are kept per store (the parse
+    *    memo): topic files are immutable once visible and uniquely
+    *    named, as the offset memo relies on too, so a read parses only
+    *    the files this store has not read before. A file's entry is
+    *    dropped once it leaves the listing (compaction, `clear`), and
+    *    a topic's whole memo when it is deleted or read through Spark.
     *  - **Spark** — a larger log (a seed topic) is read through one
     *    connector relation, which pins the file listing, and compacted
     *    by a `max_by` aggregate; the frame is lazy, see
@@ -441,17 +449,36 @@ class FileTopicStore(
     val d = dir(topic)
     val files = graft.engine.sources.TopicLog.dataFiles(d.toString)
     val bytes = files.iterator.map(f => Files.size(Paths.get(f))).sum
-    if (Files.isDirectory(d) && bytes <= openCostInBytes) localCompacted(files)
-    else sparkCompacted(topic)
+    if (Files.isDirectory(d) && bytes <= openCostInBytes) localCompacted(topic, files)
+    else {
+      rowMemo.synchronized(rowMemo.remove(topic))
+      sparkCompacted(topic)
+    }
   }
 
   private def openCostInBytes: Long =
     org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.openCostInBytes"))
 
-  private def localCompacted(files: Seq[String]): DataFrame = {
-    val (keyed, unkeyed) =
-      graft.engine.sources.TopicLog.readLocal(files).partition(!_.isNullAt(0))
+  // Parse memo, per topic: data file -> its rows as the driver read
+  // parsed them (see readCompacted). Guarded by its own monitor.
+  private val rowMemo =
+    scala.collection.mutable.Map.empty[String, Map[String, Vector[InternalRow]]]
+
+  /** Every row of the listed files, in file then line order, parsing
+    * only files the memo does not hold yet. */
+  private def parsedRows(topic: String, files: Seq[String]): Seq[InternalRow] =
+    rowMemo.synchronized {
+      val live = files.toSet
+      val known = rowMemo.getOrElse(topic, Map.empty).filter { case (f, _) => live(f) }
+      val all = known ++ files.filterNot(known.contains)
+        .map(f => f -> graft.engine.sources.TopicLog.readLocal(f))
+      rowMemo(topic) = all
+      files.flatMap(all)
+    }
+
+  private def localCompacted(topic: String, files: Seq[String]): DataFrame = {
+    val (keyed, unkeyed) = parsedRows(topic, files).partition(!_.isNullAt(0))
     val latest = keyed.groupBy(_.getUTF8String(0)).values
       .map(_.maxBy(r => if (r.isNullAt(3)) None else Some(r.getLong(3))))
     PlanBridge.ofRows(spark, LocalRelation(
@@ -491,12 +518,11 @@ class FileTopicStore(
     * offset is the set of files consumed. `maxFilesPerTrigger` 100 is
     * admission control per micro-batch — the engine analog of the
     * reference's bounded work queue (initializer.clj:87, buffer 100):
-    * it limits how much backlog one processing-time trigger admits, so
-    * a large catch-up can't starve the loop. Under
-    * `Trigger.AvailableNow` Spark wraps the stream, which lacks
-    * `SupportsTriggerAvailableNow`, and admits the whole backlog in one
-    * batch; `ControlStream.processBatch` orders each batch by offset
-    * and timestamp either way. */
+    * it limits how much backlog one trigger admits, so a large catch-up
+    * can't starve the loop. Under `Trigger.AvailableNow` the stream
+    * admits the files listed when the query starts, at most 100 per
+    * batch, in append order; `ControlStream.processBatch` orders each
+    * batch by offset and timestamp. */
   def readStream(topic: String): DataFrame =
     spark.readStream.format(classOf[graft.engine.sources.TopicSource].getName)
       .option("maxFilesPerTrigger", 100)

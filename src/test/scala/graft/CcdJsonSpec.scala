@@ -7,10 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.model.{Ccd, Status}
 
-/** `Ccd.toJson` against the `to_json(struct(...))` projection the
-  * control publish used before it encoded on the driver: under a UTC
-  * session the two must agree byte for byte, so control topics written
-  * by either decode alike and compact under the same values. */
+/** The control format against the Spark expressions it replaced on
+  * the driver. `Ccd.toJson` against the `to_json(struct(...))`
+  * projection the control publish used: under a UTC session the two
+  * must agree byte for byte, so control topics written by either
+  * decode alike and compact under the same values. `Ccd.fromJson`
+  * against `from_json(value, Ccd.jsonSchema)`, the decode the control
+  * loop used: the same 8 fields for every value, odd ones included. */
 class CcdJsonSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.session
 
@@ -53,5 +56,67 @@ class CcdJsonSpec extends AnyFunSuite {
       assert(got.getBytes("UTF-8").sameElements(want.getBytes("UTF-8")), s"\n got $got\nwant $want")
     }
     assert(expected.size == cases.size)
+  }
+
+  /** The former decode expression, kept as the reference decoder: each
+    * value's 8 fields, nulls for a value `from_json` cannot read. */
+  private def fromJsonExpr(values: Seq[String]): Seq[Seq[Any]] = {
+    import spark.implicits._
+    values.zipWithIndex.toDF("value", "seq")
+      .select(from_json(col("value"), Ccd.jsonSchema).as("c"), col("seq"))
+      .select(col("c.*"), col("seq"))
+      .orderBy("seq").collect().map(_.toSeq.dropRight(1)).toSeq
+  }
+
+  private val decodeCases: Seq[String] = cases.map(Ccd.toJson) ++ Seq(
+    // not a JSON object, or not JSON at all
+    null, "", "   ", "null", "[]", """[{"table":"t","status":"active"}]""", "42", "\"submitted\"",
+    "true", "{not json at all", """{"table":"t"""", """{"table":"t",}""",
+    """{"table":"t","status":}""",
+    // trailing content after the object is ignored
+    """{"table":"t","status":"active"} trailing""", """{"table":"t"}{"table":"u"}""",
+    // a non-string where a string is expected keeps its JSON text
+    """{"table":5,"queue":1.50,"status":true,"error":false,"timestamp":-0.0e3}""",
+    """{"table":{"a" : [1, "x", {"b":null}]},"queue":[ 1,2 ],"status":"active"}""",
+    "{\"table\":\"t\",\"queue\":{\"q\":\"\\u00e9\\/\\u0001\"},\"error\":[\"\\n\"]}",
+    """{"table":"t","timestamp":12345678901234567890123}""",
+    // progress: strings, floats, nulls, overflow and nesting
+    """{"table":"t","progress":["1","2"],"status":"seeding"}""",
+    """{"table":"t","progress":"1","status":"seeding"}""",
+    """{"table":"t","progress":[1.5],"status":"seeding"}""",
+    """{"table":"t","progress":[1,null,3],"status":"seeding"}""",
+    """{"table":"t","progress":[9223372036854775807,-9223372036854775808]}""",
+    """{"table":"t","progress":[9223372036854775808],"status":"seeding"}""",
+    """{"table":"t","progress":[[1]],"status":"seeding"}""",
+    """{"table":"t","progress":["x",{"table":"u"},7],"status":"seeding"}""",
+    """{"table":"t","progress":{"a":1},"status":"seeding"}""",
+    """{"table":"t","progress":[],"status":"seeding"}""",
+    """{"table":"t","progress":null,"status":null}""",
+    // duplicate keys (last wins), unknown and nested extra keys
+    """{"table":"t","table":"u","status":"a","status":"b"}""",
+    """{"progress":[1],"progress":"x","table":"t"}""",
+    """{"table":"t","status":"active","extra":{"table":"x","deep":[{"status":"y"}]},"n":1}""",
+    """{"Table":"t","STATUS":"active","queue-table":"mq"}""",
+    // Spark's default read features: single quotes and NaN are allowed
+    """{'table':'t','status':'active'}""", """{"table":NaN,"queue":Infinity}""",
+    // comments, unquoted names and leading zeros are not
+    """{"table":"t" /* c */}""", """{table:"t"}""", """{"table":"t","progress":[007]}""",
+    """  {"table":"t"}  """, "\t{\"table\":\"\u65e5\u672c\"}\n")
+
+  test("fromJson returns the 8 fields from_json(value, jsonSchema) returns, odd values included") {
+    val expected = fromJsonExpr(decodeCases)
+    assert(expected.size == decodeCases.size)
+    decodeCases.zip(expected).foreach { case (value, want) =>
+      val got = Ccd.fromJson(value)
+      assert(got.schema == Ccd.jsonSchema)
+      assert(got.toSeq == want, s"\nvalue $value\n  got ${got.toSeq}\n want $want")
+    }
+    // every status and field round-trips through toJson
+    cases.foreach { c =>
+      val r = Ccd.fromJson(Ccd.toJson(c))
+      assert(r.getAs[String]("status") == c.status && r.getAs[String]("table") == c.table)
+      assert(Option(r.getAs[Seq[Long]]("progress")) == c.progress)
+      assert(Option(r.getAs[String]("error")) == c.error)
+    }
   }
 }

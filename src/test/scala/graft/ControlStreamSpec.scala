@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.graft.JobCount
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.cdc.{InMemoryControlPlane, Initializer, SeedViews}
@@ -106,11 +107,47 @@ class ControlStreamSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-tail").toString
     val store = new FileTopicStore(spark, root, sleeper = _ => ())
     store.create("control")
-    val tables = ControlStream.ccdStream(store, "control").queryExecution.analyzed
+    val plan = ControlStream.controlTail(store, "control").queryExecution.analyzed
+    val tables = plan
       .collect { case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 =>
         r.table.name() }
     assert(tables == Seq(s"graft_topic(${java.nio.file.Paths.get(root, "control")})"),
       s"the tail must scan one TopicTable: $tables")
+    // the loop streams raw messages: no decode, no filter in the plan
+    assert(plan.output.map(_.name) == FileTopicStore.schema.fieldNames.toSeq)
+    assert(plan.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f }.isEmpty)
+    assert(!plan.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.JsonToStructs])), plan.treeString)
+  }
+
+  test("processBatch over a multi-file micro-batch launches exactly one Spark job") {
+    val root = Files.createTempDirectory("graft-batch-jobs").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    val publisher = new Initializer(spark, new InMemoryControlPlane(), store,
+      "control", _ => None)
+    store.create("control")
+    val ts = new Timestamp(1700000000000L)
+    // three publishes: three control-topic files, one of them not a submission
+    publisher.publish(Ccd("tpch.nation", "q_n", "mq", None, Status.Submitted, ts))
+    publisher.publish(Ccd("tpch.region", "q_r", "mq", None, Status.Submitted, ts))
+    publisher.publish(Ccd("tpch.part", "q_p", "mq", None, Status.Active, ts))
+    assert(Files.list(java.nio.file.Paths.get(root, "control")).toArray
+      .count(_.toString.endsWith(".json")) == 3)
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    val recording = new Initializer(spark, new InMemoryControlPlane(), store,
+      "control", _ => None) {
+      override def process(ccd: Ccd): Seq[Ccd] = { seen += ccd.table; Seq.empty }
+    }
+    val jobs = scala.collection.mutable.ArrayBuffer[Int]()
+    ControlStream.controlTail(store, "control").writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", Files.createTempDirectory("graft-batch-jobs-ckpt").toString)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        jobs += JobCount(spark)(ControlStream.processBatch(recording)(b)); ()
+      }
+      .start().awaitTermination()
+    assert(jobs.toSeq == Seq(1), s"jobs per micro-batch: $jobs")
+    assert(seen.toSeq == Seq("tpch.nation", "tpch.region"))
   }
 
   test("flatMapGroupsWithState emits only genuine transitions") {

@@ -7,7 +7,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.graft.JobCount
+import org.apache.spark.graft.{ActionCount, JobCount}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -287,6 +287,42 @@ class InitializerSpec extends AnyFunSuite {
     val distributed =
       JobCount(spark)(assert(sparkInit.currentStatus("tpch.region").contains(Status.Active)))
     assert(distributed >= 1, "openCostInBytes = 0 must select the Spark read path")
+  }
+
+  test("backlog and currentStatus on a control topic below the read bound run no Dataset " +
+    "action and no job; above it they decode the same CCDs") {
+    // an own session: its conf is the default bound, and the action
+    // listener hears only this test's queries
+    val session = spark.newSession()
+    val root = Files.createTempDirectory("graft-init-actions").toString
+    val store = new FileTopicStore(session, root, sleeper = _ => ())
+    val init = new Initializer(session, new InMemoryControlPlane(), store, "control", _ => None)
+    store.create("control")
+    init.publishAll(Seq(ccd(), ccd(table = "tpch.region", queue = "q_region"))
+      .map(_.copy(status = Status.Active)))
+    init.publish(ccd(table = "tpch.part", queue = "q_part").copy(status = Status.Prepared))
+    init.publish(ccd(table = null, queue = "q_none"))
+    init.publish(ccd(table = null, queue = "q_none").copy(status = Status.Error))
+    var resumed = Seq.empty[Ccd]
+    var statuses = Seq.empty[Option[String]]
+    val tables = Seq("tpch.nation", "tpch.region", "tpch.part", "tpch.missing", null)
+    val jobs = JobCount(session) {
+      val actions = ActionCount(session) {
+        resumed = init.backlog()
+        statuses = tables.map(init.currentStatus)
+      }
+      assert(actions == 0, s"driver-path backlog and rechecks ran $actions Dataset action(s)")
+    }
+    assert(jobs == 0, s"driver-path backlog and rechecks launched $jobs job(s)")
+    assert(resumed.map(_.table) == Seq("tpch.part"))
+    assert(statuses == Seq(Some(Status.Active), Some(Status.Active), Some(Status.Prepared), None, None))
+    // the listener does hear an action on this session
+    assert(ActionCount(session)(store.readAll("control").collect()) == 1)
+    // the Spark read path decodes the same
+    val sparkInit = new Initializer(SparkTest.sparkReadSession, new InMemoryControlPlane(),
+      new FileTopicStore(SparkTest.sparkReadSession, root, sleeper = _ => ()), "control", _ => None)
+    assert(sparkInit.backlog() == resumed)
+    assert(tables.map(sparkInit.currentStatus) == statuses)
   }
 
   test("identifier utilities port (sql/util.clj:31-57)") {

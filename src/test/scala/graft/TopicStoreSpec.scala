@@ -401,6 +401,8 @@ class TopicStoreSpec extends AnyFunSuite {
     assert(m == Map("a" -> "2", "b" -> "1", "c" -> "1", "d" -> "1"))
   }
 
+  // after every step of an arbitrary sequence of appends, compact() and clear()
+  // calls, so the driver path's parse memo carries over each of them
   test("ARBITRARY appends: readCompacted gives the same rows on the driver " +
     "path and the Spark path, partition, offset and ts included") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -409,24 +411,42 @@ class TopicStoreSpec extends AnyFunSuite {
       Gen.chooseNum(0, 99).map(_.toString))
     val appendGen = Gen.zip(Gen.chooseNum(1, 6).flatMap(Gen.listOfN(_, msgGen)),
       Gen.oneOf(true, false))
+    // Right = an append (messages, distributed?); Left = "compact" or "clear"
+    val stepGen: Gen[Either[String, (List[(String, String)], Boolean)]] = Gen.frequency(
+      4 -> appendGen.map(Right(_)),
+      1 -> Gen.const(Left("compact")),
+      1 -> Gen.const(Left("clear")))
     // forAllNoShrink: the default String shrinker NPEs on null keys
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6),
-      Prop.forAllNoShrink(Gen.chooseNum(1, 5).flatMap(Gen.listOfN(_, appendGen))) { appends =>
+      Prop.forAllNoShrink(Gen.chooseNum(1, 7).flatMap(Gen.listOfN(_, stepGen))) { steps =>
         val root = Files.createTempDirectory("graft-topics-paths").toString
+        // ONE driver-path store across the whole sequence: its parse memo
+        // carries over every read, compaction and clear
         val store = new FileTopicStore(spark, root, sleeper = _ => (), numPartitions = 3)
         store.create("t")
-        appends.foreach { case (msgs, distributed) =>
-          val kv = msgs.toDF("key", "value")
-          store.append("t", if (distributed) kv.repartition(4) else kv)
+        var live = List.empty[(String, String)]
+        steps.forall { step =>
+          step match {
+            case Right((msgs, distributed)) =>
+              val kv = msgs.toDF("key", "value")
+              store.append("t", if (distributed) kv.repartition(4) else kv)
+              live = live ++ msgs
+            case Left("compact") => store.compact("t")
+            case Left(_) => store.clear("t"); live = Nil
+          }
+          // the shared session's conf picks the path: see SparkTest.confLock
+          val local = SparkTest.confLock.synchronized(store.readCompacted("t"))
+          val remote = sparkReadStore(root, numPartitions = 3).readCompacted("t")
+          def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+          // an empty log is 0 bytes, within even a 0 bound: both read it locally
+          val ok = isLocal(local) && isLocal(remote) == live.isEmpty &&
+            local.schema == remote.schema &&
+            rows(local) == rows(remote) &&
+            rows(local).size == live.map(_._1).filter(_ != null).distinct.size +
+              live.count(_._1 == null)
+          if (!ok) println(s"after $step: driver ${rows(local)} spark ${rows(remote)}")
+          ok
         }
-        // the shared session's conf picks the path: see SparkTest.confLock
-        val local = SparkTest.confLock.synchronized(store.readCompacted("t"))
-        val remote = sparkReadStore(root, numPartitions = 3).readCompacted("t")
-        def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
-        isLocal(local) && !isLocal(remote) && local.schema == remote.schema &&
-          rows(local) == rows(remote) &&
-          rows(local).size == appends.flatMap(_._1).map(_._1).filter(_ != null).distinct.size +
-            appends.flatMap(_._1).count(_._1 == null)
       })
     assert(res.passed, res.status.toString)
   }

@@ -74,4 +74,26 @@ class TopicStreamSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
     assert(batches >= 4, s"backlog must drain one file per trigger, got $batches batches")
   }
+
+  test("Trigger.AvailableNow drains a backlog beyond maxFilesPerTrigger in several " +
+    "batches, every message once") {
+    val root = Files.createTempDirectory("graft-v2s-now").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    store.create("t")
+    // 150 appends → 150 log files pending, above the tail's 100 per trigger
+    (1 to 150).foreach(i => store.append("t", Seq((s"k$i", s"v$i")).toDF("key", "value")))
+    val batches = scala.collection.mutable.ArrayBuffer[Seq[String]]()
+    store.readStream("t")
+      .writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        batches += b.select("value").collect().map(_.getString(0)).toSeq; ()
+      }
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-v2s-now-ckpt").toString)
+      .start().awaitTermination()
+    assert(batches.size >= 2 && batches.forall(_.size <= 100),
+      s"batch sizes ${batches.map(_.size)}")
+    assert(batches.flatten.sorted == (1 to 150).map(i => s"v$i").sorted)
+  }
 }

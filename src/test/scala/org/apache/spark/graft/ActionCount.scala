@@ -1,0 +1,35 @@
+package org.apache.spark.graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Counts the Dataset actions (collect, count, a write, ...) a block
+  * runs on one session, failed ones included: a QueryExecutionListener
+  * on that session hears every action, and only that session's. Give
+  * the block its own session (`newSession()`) so suites running
+  * alongside are not counted. Lives under `org.apache.spark` for the
+  * listener bus's package-private drain: the count is read only after
+  * every event of the block has been delivered, and events still
+  * queued from before the block are delivered before it starts. */
+object ActionCount {
+  def apply(session: SparkSession)(body: => Unit): Int = {
+    val bus = session.sparkContext.listenerBus
+    val actions = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.incrementAndGet()
+    }
+    bus.waitUntilEmpty()
+    session.listenerManager.register(listener)
+    try {
+      body
+      bus.waitUntilEmpty()
+      actions.get
+    } finally session.listenerManager.unregister(listener)
+  }
+}

@@ -24,7 +24,11 @@ parent's IQR/median exceeds the bound (its runs spread too widely to
 tell), unless every change run beats every parent run; otherwise
 `holds`. Each run's steal_share (the share of CPU time the hypervisor
 gave to other guests, from the run document) is listed too: read a
-pair next to it. Last, each side's median and quartiles of every
+pair next to it. So is each side's median split by its position in the
+pair (first or second): the run that goes second can read lower on a
+warm file cache or host phase, whichever side it is, and an odd number
+of pairs gives the parent one more first place (warned at the start).
+Last, each side's median and quartiles of every
 ungated `detail` figure of the run documents (resume_s,
 topic_read_rows_per_s, ccd_service_p50_s, ...) that all runs report,
 with no verdict.
@@ -112,8 +116,21 @@ def verdict(par, chg, better, bound):
     return "holds"
 
 
+def by_position(pairs, name):
+    """Each side's median of one metric over the pairs where it ran first
+    and over those where it ran second (None where it never did)."""
+    out = {}
+    for side in ("parent", "change"):
+        for pos, first in (("first", True), ("second", False)):
+            vals = [p[side]["line"]["metrics"][name]["value"] for p in pairs
+                    if (p["first"] == side) == first]
+            out[f"{side}_{pos}"] = {"n": len(vals),
+                                    "median": statistics.median(vals) if vals else None}
+    return out
+
+
 def summarize(pairs, metrics):
-    """pairs: [{"seed", "parent", "change"}]; metrics: [(name, better, bound)]."""
+    """pairs: [{"seed", "first", "parent", "change"}]; metrics: [(name, better, bound)]."""
     out = {}
     n = len(pairs)
     for name, better, bound in metrics:
@@ -130,7 +147,8 @@ def summarize(pairs, metrics):
                      "parent_iqr": pq3 - pq1,
                      "gain_rule": n >= MIN_PAIRS and wins >= WIN_SHARE * n
                      and gap > pq3 - pq1,
-                     "bound": bound, "verdict": verdict(par, chg, better, bound)}
+                     "bound": bound, "verdict": verdict(par, chg, better, bound),
+                     "by_position": by_position(pairs, name)}
     return out
 
 
@@ -168,6 +186,10 @@ def main():
     if len(seeds) < MIN_PAIRS:
         print(f"note: {len(seeds)} pairs; the gain rule needs at least {MIN_PAIRS}",
               flush=True)
+    if len(seeds) % 2:
+        print(f"warning: {len(seeds)} pairs is odd: the parent runs first in one more pair "
+              f"than the change, so a second-place advantage favors the change; use an even "
+              f"number of pairs", flush=True)
 
     pairs = []
     for i, seed in enumerate(seeds):
@@ -206,6 +228,15 @@ def main():
               f"{s['change_pct']:+.1f}%  wins {s['wins']}/{s['pairs']}  "
               f"parent IQR {s['parent_iqr']:.4g}  gain rule {'holds' if s['gain_rule'] else 'fails'}  "
               f"no regression (bound {s['bound']:g}): {s['verdict']}")
+    print("  median by position in the pair, first / second (n runs):")
+    for name, s in summary.items():
+        pos = s["by_position"]
+
+        def cell(key):
+            m = pos[key]["median"]
+            return f"{'n/a' if m is None else f'{m:.4g}'} (n={pos[key]['n']})"
+        print(f"    {name:8s} parent {cell('parent_first')} / {cell('parent_second')}  "
+              f"change {cell('change_first')} / {cell('change_second')}")
     print("  steal_share per pair (parent / change):")
     for p in pairs:
         print(f"    seed {p['seed']} ({p['first']} first): "
