@@ -15,7 +15,7 @@ import graft.engine.topics.{FileTopicStore, TopicStore}
   * topic store, control plane, and initializer wired by constructor
   * injection; `start()` performs the reference's startup sequence
   * (ensure control topic → drain backlog) and `runOnce()` drains any
-  * new submissions through the streaming tail; `stop()` releases the
+  * new submissions from the control topic by offset; `stop()` releases the
   * session-independent state. Swap [[plane]]/[[topics]] for real
   * implementations (JDBC catalog, Kafka) without touching the dataflow.
   */
@@ -41,9 +41,10 @@ class GraftSystem(
       * parquet test views need no release, hence the no-op default. */
     val releaseSeed: String => Unit = _ => ()) {
 
-  // the CONTROL topic is exempt from auto-compaction: the submission
-  // loop keeps a streaming tail on it, and the tail tracks files, so it
-  // would re-read a rewritten log as new input (see FileTopicStore.compact)
+  // the CONTROL topic is exempt from auto-compaction for cost alone: the
+  // policy would run a stats job before every control publish. Compacting
+  // it is safe (the submission drain is offset-addressed, and compaction
+  // keeps offsets); FileTopicStore.compact is the maintenance call
   val topics: TopicStore =
     new FileTopicStore(spark, root, numPartitions = topicPartitions,
       dirtyRatio = dirtyRatio, dirtyRatioExempt = Set(controlTopic))
@@ -51,12 +52,11 @@ class GraftSystem(
   val initializer: Initializer =
     new Initializer(spark, plane, topics, controlTopic, seedView, releaseSeed)
 
-  // durable per-root checkpoint: restarted systems resume the stream
-  // from the last processed offsets instead of replaying the whole
-  // control topic (the reference resets its consumer offset past the
-  // backlog scan, initializer.clj:27-39; Initializer.process
-  // additionally skips terminal-state replays as the at-least-once
-  // backstop)
+  // durable per-root checkpoint: it holds the submission drain's
+  // per-partition position, so a restarted system resumes past the
+  // submissions it processed instead of rereading the whole control
+  // topic (the reference resets its consumer offset past the backlog
+  // scan, initializer.clj:27-39), and runLive's stream checkpoint
   private val checkpointDir = {
     val d = java.nio.file.Paths.get(root, "__checkpoint")
     Files.createDirectories(d)
@@ -78,14 +78,18 @@ class GraftSystem(
     * per resumed CCD. */
   def start(): Seq[(Ccd, Seq[Ccd])] = initializer.runBacklog()
 
-  /** Drain currently-pending submissions through the streaming tail
-    * (Trigger.AvailableNow micro-batches — the reference's live
-    * submission loop, initializer.clj:101-110). */
+  /** Drain the currently-pending submissions on the calling thread and
+    * return once their lifecycles are published (the reference's
+    * submission loop, initializer.clj:101-110): the latest message per
+    * key above the checkpointed per-partition position, with no
+    * streaming query (see [[ControlStream.runSubmissions]]). */
   def runOnce(): Unit =
     ControlStream.runSubmissions(topics, controlTopic, initializer, checkpointDir)
 
-  /** Always-on submission loop (processing-time trigger); caller owns
-    * the returned handle's stop()/awaitTermination(). */
+  /** Always-on submission loop: a processing-time streaming query whose
+    * micro-batches run the same drain as [[runOnce]] over the same
+    * position (see [[ControlStream.runLive]]); caller owns the returned
+    * handle's stop()/awaitTermination(). */
   def runLive(cadence: String = "5 seconds"): org.apache.spark.sql.streaming.StreamingQuery =
     ControlStream.runLive(topics, controlTopic, initializer, checkpointDir, cadence)
 

@@ -258,16 +258,15 @@ class Initializer(
   def process(ccd: Ccd): Seq[Ccd] = process(ccd, recheck = true)
 
   /** @param recheck when true, re-read the CCD's compacted status and
-    *   skip terminal states — the at-least-once guard for the
-    *   streaming path, where a replayed submission (fresh checkpoint,
-    *   restarted stream) must not re-run a finished lifecycle. The
-    *   backlog path passes false: [[backlog]] just computed exactly
-    *   these compacted states and filtered terminal ones, the
-    *   compaction keeps at most one entry per table, and sequential
-    *   processing only publishes the CURRENT table's states — so the
-    *   recheck there was a redundant full-topic read+compact job per
-    *   CCD (N+1 control-topic scans at startup). */
-  private[cdc] def process(ccd: Ccd, recheck: Boolean): Seq[Ccd] = {
+    *   skip terminal states — the at-least-once guard for a caller that
+    *   holds a CCD it did not just read as its key's latest state. The
+    *   control loop's two readers pass false: [[backlog]] and the
+    *   submission drain ([[graft.engine.streaming.ControlStream.runSubmissions]])
+    *   both take each CCD from the compacted control topic, which keeps
+    *   one entry per table, and sequential processing only publishes
+    *   the CURRENT table's states — so the recheck there would be a
+    *   redundant control-topic read per CCD. */
+  private[graft] def process(ccd: Ccd, recheck: Boolean): Seq[Ccd] = {
     // at-least-once guard (reference parity: the backlog scan resets
     // the consumer offset past processed messages, initializer.clj:27-39);
     // prepare() clears the live queue
@@ -328,6 +327,7 @@ object Initializer {
     private val k = ordinal("key", StringType)
     private val v = ordinal("value", StringType)
     private val o = ordinal("offset", LongType)
+    private val p = ordinal("partition", IntegerType)
 
     def valid: Boolean = k >= 0 && v >= 0
     def rows: Seq[InternalRow] = relation.data
@@ -335,12 +335,37 @@ object Initializer {
     def value(r: InternalRow): String = if (r.isNullAt(v)) null else r.getUTF8String(v).toString
     def offset(r: InternalRow): Option[Long] =
       if (o < 0 || r.isNullAt(o)) None else Some(r.getLong(o))
+    /** The row's (topic partition, offset), when it has both. */
+    def position(r: InternalRow): Option[(Int, Long)] =
+      if (p < 0 || r.isNullAt(p)) None else offset(r).map(r.getInt(p) -> _)
 
     /** [[Transforms.lastStatePerKey]] over `key` and `offset` on the
       * driver: the highest-offset row per key, all null keys one group,
       * a null offset lowest. */
     def lastPerKey: LocalRelation =
       relation.copy(data = rows.groupBy(key).values.map(_.maxBy(offset)).toSeq)
+  }
+
+  /** The messages of a compacted control frame above a per-partition
+    * `position`, and that position advanced past them. A row is fresh
+    * when it has a topic partition and an offset, and the offset is
+    * above the position's entry for that partition (no entry: every
+    * offset is); a row without both is never fresh. The fresh rows come
+    * back as a driver `LocalRelation` with the frame's columns, which
+    * [[Initializer.decodeCcds]] reads with no Spark action. A frame held
+    * on the driver (a compacted control topic below the store's read
+    * bound) is filtered with no Spark action; any other frame is
+    * collected once. */
+  private[graft] def after(df: DataFrame,
+      position: Map[Int, Long]): (DataFrame, Map[Int, Long]) = {
+    val c = controlRelation(df)
+      .orElse(controlRelation(df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)))
+      .getOrElse(throw new IllegalArgumentException(s"not a control frame: ${df.schema.simpleString}"))
+    val fresh = c.rows.flatMap(r => c.position(r).collect {
+      case at @ (part, off) if position.get(part).forall(off > _) => r -> at
+    })
+    (PlanBridge.ofRows(df.sparkSession, c.relation.copy(data = fresh.map(_._1))),
+      graft.engine.sources.TopicLog.merge(position +: fresh.map(f => Map(f._2))))
   }
 
   /** The frame's rows when its analyzed plan is a driver `LocalRelation`

@@ -1,32 +1,44 @@
 package graft.engine.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.engine.cdc.Initializer
 import graft.engine.model.Status
+import graft.engine.sources.TopicSource
 import graft.engine.topics.TopicStore
 
-/** Structured-Streaming control path (reference initializer.clj:88,
-  * 98, 101-110): tail the raw control topic and, per micro-batch, decode
-  * it on the driver, keep the `submitted` CCDs and orchestrate each
-  * sequentially inside `foreachBatch` — the micro-batch loop is the
-  * engine's work queue (the reference's buffer-100 channel + single
-  * worker). The streaming plan holds no decode and no filter: a
-  * micro-batch costs one scan job ([[processBatch]]).
+/** The control path (reference initializer.clj:88, 98, 101-110): drain
+  * the control topic's pending submissions and orchestrate each
+  * sequentially — the reference's buffer-100 channel and single worker.
   *
-  * The per-key status state machine is a `flatMapGroupsWithState`
-  * (SURVEY §7.4): state = last seen status per CCD key; emitted rows
-  * are the valid transitions, so replays/duplicates (at-least-once
-  * topic appends) collapse idempotently — the same convergence
-  * argument as the reference's log-compacted topic.
+  * The submission loop is a Kafka-style consumer of the compacted
+  * control topic (reference initializer.clj:27-39, 101-110): its
+  * position is a per-partition offset map kept in the checkpoint
+  * directory, and each drain ([[runSubmissions]]) runs on the driver.
+  * It starts no streaming query: no offset or commit log, no
+  * micro-batch planning, and on a control topic below the store's
+  * driver-read bound no Spark action outside the lifecycles themselves.
+  * [[runLive]] keeps a streaming query only as the signal that files
+  * arrived; each of its micro-batches runs the same drain.
+  *
+  * The per-key status state machine [[transitions]] is a
+  * `flatMapGroupsWithState` (SURVEY §7.4): state = last seen status per
+  * CCD key; emitted rows are the valid transitions, so
+  * replays/duplicates (at-least-once topic appends) collapse
+  * idempotently — the same convergence argument as the reference's
+  * log-compacted topic.
   */
 object ControlStream {
 
-  /** The submission loop's input: the control topic's raw messages
+  /** The live loop's arrival signal: the control topic's raw messages
     * (key, value, partition, offset, ts) through the connector's
-    * micro-batch tail, undecoded. */
+    * micro-batch tail. [[runLive]] drains on each micro-batch and reads
+    * none of its rows. */
   private[graft] def controlTail(store: TopicStore, topic: String): DataFrame =
     store.readStream(topic)
 
@@ -68,47 +80,101 @@ object ControlStream {
       }
   }
 
-  /** Run the full streaming control loop over whatever is currently in
-    * the topic (Trigger.AvailableNow — used by tests and by catch-up
-    * runs; a live deployment uses the default processing-time
-    * trigger). The tail admits the files listed at start, at most 100
-    * per micro-batch, in append order; submissions are processed
-    * sequentially per micro-batch, mirroring the reference's single
-    * worker (initializer.clj:41-68). Returns after the backlog drains. */
+  /** Drain the control topic's pending submissions once, on the calling
+    * thread, and return when their lifecycles are published (used by
+    * `GraftSystem.runOnce`, tests and catch-up runs).
+    *
+    * The drain reads the compacted control topic
+    * ([[TopicStore.readCompacted]]), keeps the messages above the
+    * checkpoint's position ([[Initializer.after]]), hands them to
+    * [[processBatch]], and only then advances the position past every
+    * message it read. So it runs the LATEST message per key after the
+    * position, the rule [[Initializer.backlog]] resumes by: when one
+    * key is submitted twice between drains, the later spec runs.
+    * Terminal states need no recheck: a key whose lifecycle was
+    * published reads as that lifecycle's last state, not as
+    * `submitted`. A drain that dies leaves the position where it was,
+    * and the next drain re-reads what it had not published.
+    *
+    * The order holds because offsets become visible in offset order:
+    * the store assigns a control append's offsets and renames its file
+    * under one lock, as a Kafka high-watermark only exposes a complete
+    * prefix. Compaction keeps offsets, so a compacted log is not new
+    * input. Drains over one checkpoint directory run one at a time in
+    * this JVM. A missing position file reads as "from the start",
+    * which is what a checkpoint written by the former streaming tail
+    * holds: every finished key then reads terminal, so nothing
+    * re-runs. */
   def runSubmissions(
       store: TopicStore,
       controlTopic: String,
       init: Initializer,
-      checkpoint: String): Unit =
-    startSubmissionLoop(store, controlTopic, init, checkpoint,
-      Trigger.AvailableNow()).awaitTermination()
+      checkpoint: String): Unit = {
+    val at = Paths.get(checkpoint).toAbsolutePath.normalize
+    drainLocks.computeIfAbsent(at.toString, _ => new Object).synchronized {
+      if (store.exists(controlTopic)) {
+        val start = position(checkpoint)
+        val (fresh, next) = Initializer.after(store.readCompacted(controlTopic), start)
+        processBatch(init)(fresh)
+        if (next != start) writePosition(at, next)
+      }
+    }
+  }
 
-  /** One micro-batch of the submission loop: decode the batch's raw
-    * messages once ([[Initializer.decodeCcds]]: one scan job, then
-    * [[graft.engine.model.Ccd.fromJson]] per value on the driver), keep
-    * the `submitted` ones (reference initializer.clj:88,
-    * `msgs->ccds-with-status :submitted`) and orchestrate each
-    * sequentially in timestamp order, ties in TOPIC-OFFSET order. The
-    * offset order matters: collect order is partition order, not
-    * pinned, and the stable timestamp sort alone would let two
-    * same-millisecond submissions of the SAME key race on which
-    * lifecycle runs first — the at-least-once recheck then drops the
-    * loser, so the surviving config would be nondeterministic.
-    * `decodeCcds` returns messages in offset order, and same-key
-    * messages share a topic partition, so their offsets totally order
-    * them (the V2 admission contract). */
+  private val drainLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The position file inside a checkpoint directory: per topic
+    * partition, the highest offset a drain has consumed. */
+  private val PositionFile = "position"
+
+  /** A checkpoint's position ([[TopicSource.encodeBases]] form); empty
+    * when no drain has finished there. */
+  private[graft] def position(checkpoint: String): Map[Int, Long] = {
+    val f = Paths.get(checkpoint, PositionFile)
+    if (!Files.exists(f)) Map.empty
+    else TopicSource.decodeBases(new String(Files.readAllBytes(f), UTF_8).trim)
+  }
+
+  /** Replace the position file atomically: a reader sees the old
+    * position or the new one, never a torn file. */
+  private def writePosition(checkpoint: Path, next: Map[Int, Long]): Unit = {
+    Files.createDirectories(checkpoint)
+    val tmp = Files.createTempFile(checkpoint, s".$PositionFile-", ".tmp")
+    Files.write(tmp, TopicSource.encodeBases(next).getBytes(UTF_8))
+    Files.move(tmp, checkpoint.resolve(PositionFile), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** One drain's pending messages: decode them once
+    * ([[Initializer.decodeCcds]]: a driver `LocalRelation` is read with
+    * no Spark action, then [[graft.engine.model.Ccd.fromJson]] per
+    * value), keep the `submitted` ones (reference
+    * initializer.clj:88, `msgs->ccds-with-status :submitted`) and
+    * orchestrate each sequentially in timestamp order, ties in
+    * TOPIC-OFFSET order, so same-millisecond submissions run in the
+    * order they were appended whatever order the frame holds them in
+    * (`decodeCcds` returns messages in offset order). Each lifecycle
+    * runs without a recheck: the caller hands over its keys' latest
+    * states. */
   private[graft] def processBatch(init: Initializer)(batch: DataFrame): Unit =
     init.decodeCcds(batch)
       .filter(_.status == Status.Submitted)
       .sortBy(_.timestamp.getTime)
-      .foreach(init.process)
+      .foreach(init.process(_, recheck = false))
 
-  private def startSubmissionLoop(
+  /** Live deployment form of [[runSubmissions]]: a streaming query over
+    * the control topic on a processing-time cadence (the reference's
+    * always-on submission loop), whose micro-batches only signal that
+    * control files arrived. Each runs the same drain over the same
+    * position, ignoring the batch's rows; a batch that dies is not
+    * committed, so the query replays it and the drain re-reads what it
+    * had not published. Returns the handle; callers own
+    * stop()/awaitTermination(). */
+  def runLive(
       store: TopicStore,
       controlTopic: String,
       init: Initializer,
       checkpoint: String,
-      trigger: Trigger): StreamingQuery = {
+      cadence: String = "5 seconds"): StreamingQuery = {
     val stream = controlTail(store, controlTopic)
     // honor spark.graft.stateStore before start (provider is captured
     // per query at start time — see StateStores)
@@ -116,24 +182,12 @@ object ControlStream {
     stream
       .writeStream
       .outputMode(OutputMode.Append)
-      .trigger(trigger)
+      .trigger(Trigger.ProcessingTime(cadence))
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) => processBatch(init)(batch) }
+      .foreachBatch { (_: DataFrame, _: Long) =>
+        runSubmissions(store, controlTopic, init, checkpoint) }
       .start()
   }
-
-  /** Live deployment form of [[runSubmissions]]: continuous
-    * micro-batches on a processing-time cadence (the reference's
-    * always-on submission loop). Returns the handle; callers own
-    * stop()/awaitTermination(). */
-  def runLive(
-      store: TopicStore,
-      controlTopic: String,
-      init: Initializer,
-      checkpoint: String,
-      cadence: String = "5 seconds"): StreamingQuery =
-    startSubmissionLoop(store, controlTopic, init, checkpoint,
-      Trigger.ProcessingTime(cadence))
 
   /** Streaming windowed event counts with watermark — the live form of
     * StreamOps.streamTumbling (same expression tree under readStream). */

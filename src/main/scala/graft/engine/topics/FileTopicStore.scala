@@ -82,11 +82,11 @@ object FileTopicStore {
   *                      Kafka's `min.cleanable.dirty.ratio=0.75` that
   *                      makes compaction an invariant rather than a
   *                      maintenance chore (reference topic_store.clj:13-16).
-  * @param dirtyRatioExempt topics the policy must never touch — any
-  *                      topic with a live streaming tail (the tail
-  *                      tracks files, so it would re-read the rewritten
-  *                      log; see [[compact]]). GraftSystem exempts its
-  *                      control topic. */
+  * @param dirtyRatioExempt topics the policy never touches, so their
+  *                      appends skip its pre-append stats job.
+  *                      GraftSystem exempts its control topic: a
+  *                      handful of rows per publish would pay a job
+  *                      each. */
 class FileTopicStore(
     spark: SparkSession,
     root: String,
@@ -301,12 +301,12 @@ class FileTopicStore(
     * positions; null-keyed messages are all retained (Kafka semantics:
     * compaction needs a key).
     *
-    * Do NOT compact a topic while a streaming tail is attached: the
-    * tail tracks FILES, so it would re-read the rewritten log
-    * as new input (duplicate deliveries — convergent under keyed
-    * compaction semantics, but wasteful). Run compaction as batch-side
-    * maintenance between streaming sessions, like Kafka's cleaner runs
-    * outside the fetch path. */
+    * A consumer that tracks offsets is unaffected (the control loop's
+    * drain, [[graft.engine.streaming.ControlStream.runSubmissions]]):
+    * the rewritten log holds no offset it has not seen. A
+    * [[readStream]] tail tracks FILES, so it re-reads the rewritten log
+    * as new input; `ControlStream.runLive` reads no rows of its tail,
+    * only drains on it. */
   def compact(topic: String): Unit = {
     // Stale artifacts of a compaction that DIED mid-flight (hidden by
     // construction — dot-prefixed names are invisible to the topic
@@ -432,7 +432,7 @@ class FileTopicStore(
     *    and compacted on the driver, and the rows come back as a
     *    `LocalRelation`: the result is materialized when the call
     *    returns, and a filter, projection and collect over it launch no
-    *    Spark job (the control loop's recheck and resume read its rows
+    *    Spark job (the control loop's drain, recheck and resume read its rows
     *    directly, see [[graft.engine.cdc.Initializer.decodeCcds]]).
     *    Each data file's parsed rows are kept per store (the parse
     *    memo): topic files are immutable once visible and uniquely
@@ -514,15 +514,15 @@ class FileTopicStore(
       .unionAll(raw.filter(col("key").isNull))
   }
 
-  /** The control tail: the connector's micro-batch stream, whose
+  /** A streaming tail: the connector's micro-batch stream, whose
     * offset is the set of files consumed. `maxFilesPerTrigger` 100 is
     * admission control per micro-batch — the engine analog of the
     * reference's bounded work queue (initializer.clj:87, buffer 100):
     * it limits how much backlog one trigger admits, so a large catch-up
     * can't starve the loop. Under `Trigger.AvailableNow` the stream
     * admits the files listed when the query starts, at most 100 per
-    * batch, in append order; `ControlStream.processBatch` orders each
-    * batch by offset and timestamp. */
+    * batch, in append order. `ControlStream.runLive` uses it on the
+    * control topic only as an arrival signal. */
   def readStream(topic: String): DataFrame =
     spark.readStream.format(classOf[graft.engine.sources.TopicSource].getName)
       .option("maxFilesPerTrigger", 100)

@@ -11,9 +11,10 @@ import graft.engine.model.{Ccd, Status}
 import graft.engine.streaming.ControlStream
 import graft.engine.topics.FileTopicStore
 
-/** Streaming control path: submissions tail → foreachBatch
-  * orchestration → status write-back; flatMapGroupsWithState status
-  * machine; watermarked streaming aggregates. */
+/** Control path: the submission drain by offset → orchestration →
+  * status write-back, its cost and recovery; the live loop;
+  * flatMapGroupsWithState status machine; watermarked streaming
+  * aggregates. */
 class ControlStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.session
   import spark.implicits._
@@ -41,7 +42,7 @@ class ControlStreamSpec extends AnyFunSuite {
       Files.createTempDirectory("graft-ckpt").toString)
 
     assert(store.exists("q_nation") && store.readAll("q_nation").count() == 25)
-    assert(!store.exists("q_other"), "non-submitted status ignored by the tail")
+    assert(!store.exists("q_other"), "non-submitted status ignored by the drain")
     // final state on the control topic is active (write-back happened)
     val last = store.readCompacted("control")
       .filter($"key" === "tpch.nation").select("value").first.getString(0)
@@ -113,41 +114,216 @@ class ControlStreamSpec extends AnyFunSuite {
         r.table.name() }
     assert(tables == Seq(s"graft_topic(${java.nio.file.Paths.get(root, "control")})"),
       s"the tail must scan one TopicTable: $tables")
-    // the loop streams raw messages: no decode, no filter in the plan
+    // the live tail streams raw messages: no decode, no filter in the plan
     assert(plan.output.map(_.name) == FileTopicStore.schema.fieldNames.toSeq)
     assert(plan.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f }.isEmpty)
     assert(!plan.expressions.exists(_.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.JsonToStructs])), plan.treeString)
   }
 
-  test("processBatch over a multi-file micro-batch launches exactly one Spark job") {
-    val root = Files.createTempDirectory("graft-batch-jobs").toString
-    val store = new FileTopicStore(spark, root, sleeper = _ => ())
-    val publisher = new Initializer(spark, new InMemoryControlPlane(), store,
-      "control", _ => None)
+  /** An initializer over `session` seeding nation and region from the
+    * sf0.001 tables, recording each table it initializes. */
+  private def seeding(session: org.apache.spark.sql.SparkSession, store: FileTopicStore,
+      seeded: scala.collection.mutable.Buffer[String]): Initializer = {
+    val views = Map("tpch.nation" -> ("nation", "n_nationkey"),
+      "tpch.region" -> ("region", "r_regionkey"))
+    val seedView = (table: String) => views.get(table).map { case (name, key) =>
+      SeedViews.forTable(session.read.parquet(s"$sf/$name.parquet"), table, Seq(key))
+    }
+    new Initializer(session, new InMemoryControlPlane(), store, "control", seedView) {
+      override def initialize(ccd: Ccd): Seq[Ccd] = { seeded += ccd.table; super.initialize(ccd) }
+    }
+  }
+
+  private def submitted(table: String, queue: String) =
+    Ccd(table, queue, "mq", None, Status.Submitted, new Timestamp(System.currentTimeMillis()))
+
+  test("runSubmissions with nothing pending runs no job or query") {
+    // a session of its own: its conf keeps the 4 MiB driver-read bound
+    // whatever suites alongside set, and its listener hears only it
+    val session = spark.newSession()
+    val root = Files.createTempDirectory("graft-drain-idle").toString
+    val ckpt = Files.createTempDirectory("graft-drain-idle-ckpt").toString
+    val store = new FileTopicStore(session, root, sleeper = _ => ())
+    val seeded = scala.collection.mutable.ArrayBuffer[String]()
+    val init = seeding(session, store, seeded)
     store.create("control")
-    val ts = new Timestamp(1700000000000L)
-    // three publishes: three control-topic files, one of them not a submission
-    publisher.publish(Ccd("tpch.nation", "q_n", "mq", None, Status.Submitted, ts))
-    publisher.publish(Ccd("tpch.region", "q_r", "mq", None, Status.Submitted, ts))
-    publisher.publish(Ccd("tpch.part", "q_p", "mq", None, Status.Active, ts))
-    assert(Files.list(java.nio.file.Paths.get(root, "control")).toArray
-      .count(_.toString.endsWith(".json")) == 3)
+    init.publish(submitted("tpch.nation", "q_n"))
+    init.publish(Ccd("tpch.part", "q_p", "mq", None, Status.Active, new Timestamp(0L)))
+    ControlStream.runSubmissions(store, "control", init, ckpt)
+    assert(seeded.toSeq == Seq("tpch.nation"))
+    var jobs = -1
+    val queries = org.apache.spark.graft.QueryStarts(session) {
+      jobs = JobCount(session)(ControlStream.runSubmissions(store, "control", init, ckpt))
+    }
+    assert(jobs == 0, s"an idle drain launched $jobs job(s)")
+    assert(queries == 0, s"an idle drain started $queries streaming quer(ies)")
+    assert(seeded.toSeq == Seq("tpch.nation"))
+    // past the lifecycle's own states, which the first drain published
+    val last = store.readAll("control").collect().map(_.getAs[Long]("offset")).max
+    assert(ControlStream.position(ckpt) == Map(0 -> last))
+  }
+
+  test("a drain of one submission runs only its seed append's jobs") {
+    val session = spark.newSession()
+    val seeded = scala.collection.mutable.ArrayBuffer[String]()
+    // the seed append alone: one initialize of a prepared CCD
+    val ref = seeding(session, new FileTopicStore(session,
+      Files.createTempDirectory("graft-drain-ref").toString, sleeper = _ => ()), seeded)
+    val prepared = ref.prepare(submitted("tpch.nation", "q_n")).last
+    var states = Seq.empty[Ccd]
+    val seedJobs = JobCount(session) { states = ref.initialize(prepared) }
+    assert(states.last.status == Status.Active && seedJobs > 0)
+    val store = new FileTopicStore(session,
+      Files.createTempDirectory("graft-drain-one").toString, sleeper = _ => ())
+    val init = seeding(session, store, seeded)
+    store.create("control")
+    init.publish(submitted("tpch.nation", "q_n"))
+    val jobs = JobCount(session)(ControlStream.runSubmissions(store, "control", init,
+      Files.createTempDirectory("graft-drain-one-ckpt").toString))
+    assert(jobs == seedJobs, s"drain launched $jobs job(s), its seed append $seedJobs")
+    assert(store.readAll("q_n").count() == 25)
+  }
+
+  test("compacting the control topic between drains re-runs nothing") {
+    val root = Files.createTempDirectory("graft-drain-compact").toString
+    val ckpt = Files.createTempDirectory("graft-drain-compact-ckpt").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    val seeded = scala.collection.mutable.ArrayBuffer[String]()
+    val init = seeding(spark, store, seeded)
+    store.create("control")
+    init.publish(submitted("tpch.nation", "q_n"))
+    ControlStream.runSubmissions(store, "control", init, ckpt)
+    def files() = Files.list(java.nio.file.Paths.get(root, "control")).toArray
+      .count(_.toString.endsWith(".json"))
+    val before = files()
+    store.compact("control")
+    assert(files() < before, "compaction rewrote nothing")
+    ControlStream.runSubmissions(store, "control", init, ckpt)
+    assert(seeded.toSeq == Seq("tpch.nation"), "a compacted log re-ran a lifecycle")
+    // a submission after the compaction continues the offsets and runs
+    init.publish(submitted("tpch.region", "q_r"))
+    ControlStream.runSubmissions(store, "control", init, ckpt)
+    assert(seeded.toSeq == Seq("tpch.nation", "tpch.region"))
+    assert(store.readAll("q_r").count() == 5)
+  }
+
+  test("the position holds one offset per control-topic partition") {
+    val root = Files.createTempDirectory("graft-drain-parts").toString
+    val ckpt = Files.createTempDirectory("graft-drain-parts-ckpt").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => (), numPartitions = 3)
     val seen = scala.collection.mutable.ArrayBuffer[String]()
     val recording = new Initializer(spark, new InMemoryControlPlane(), store,
       "control", _ => None) {
-      override def process(ccd: Ccd): Seq[Ccd] = { seen += ccd.table; Seq.empty }
+      override private[graft] def process(ccd: Ccd, recheck: Boolean): Seq[Ccd] = {
+        seen += ccd.table; Seq.empty
+      }
     }
-    val jobs = scala.collection.mutable.ArrayBuffer[Int]()
+    store.create("control")
+    val tables = (1 to 12).map(i => s"tpch.t$i")
+    tables.foreach(t => recording.publish(submitted(t, s"q_$t")))
+    ControlStream.runSubmissions(store, "control", recording, ckpt)
+    assert(seen.sorted == tables.sorted)
+    val rows = store.readAll("control").collect()
+    val maxes = rows.groupBy(_.getAs[Int]("partition"))
+      .map { case (p, rs) => p -> rs.map(_.getAs[Long]("offset")).max }
+    assert(maxes.size > 1, "keys must spread over partitions")
+    assert(rows.length == 12 && ControlStream.position(ckpt) == maxes,
+      "one entry per partition, at its highest offset, however many files")
+  }
+
+  test("a drain over a Spark-read control topic keeps the position") {
+    // a store whose every compacted read goes through Spark: the drain
+    // collects the compacted frame once and filters it on the driver
+    val root = Files.createTempDirectory("graft-drain-spark").toString
+    val ckpt = Files.createTempDirectory("graft-drain-spark-ckpt").toString
+    val session = SparkTest.sparkReadSession
+    val store = new FileTopicStore(session, root, sleeper = _ => ())
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    val recording = new Initializer(session, new InMemoryControlPlane(), store,
+      "control", _ => None) {
+      override private[graft] def process(ccd: Ccd, recheck: Boolean): Seq[Ccd] = {
+        seen += ccd.table; Seq.empty
+      }
+    }
+    store.create("control")
+    recording.publish(submitted("tpch.nation", "q_n"))
+    ControlStream.runSubmissions(store, "control", recording, ckpt)
+    recording.publish(submitted("tpch.region", "q_r"))
+    ControlStream.runSubmissions(store, "control", recording, ckpt)
+    assert(seen.toSeq == Seq("tpch.nation", "tpch.region"))
+    assert(ControlStream.position(ckpt) == Map(0 -> 1L))
+  }
+
+  test("a lifecycle that dies mid-drain leaves the position unmoved") {
+    val root = Files.createTempDirectory("graft-drain-kill").toString
+    val ckpt = Files.createTempDirectory("graft-drain-kill-ckpt").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    var kill = true
+    val dying = new Initializer(spark, new InMemoryControlPlane(), store,
+      "control", _ => None) {
+      override private[graft] def process(ccd: Ccd, recheck: Boolean): Seq[Ccd] = {
+        if (ccd.table == "tpch.region" && kill) {
+          kill = false
+          throw new AssertionError("injected kill")
+        }
+        seen += ccd.table; Seq.empty
+      }
+    }
+    store.create("control")
+    dying.publish(submitted("tpch.nation", "q_n"))
+    ControlStream.runSubmissions(store, "control", dying, ckpt)
+    val position = ControlStream.position(ckpt)
+    assert(position == Map(0 -> 0L))
+    dying.publish(submitted("tpch.region", "q_r"))
+    intercept[AssertionError](ControlStream.runSubmissions(store, "control", dying, ckpt))
+    assert(ControlStream.position(ckpt) == position)
+    ControlStream.runSubmissions(store, "control", dying, ckpt)
+    assert(seen.toSeq == Seq("tpch.nation", "tpch.region"))
+    assert(ControlStream.position(ckpt) == Map(0 -> 1L))
+  }
+
+  test("a streaming-tail checkpoint re-runs no finished lifecycle") {
+    val root = Files.createTempDirectory("graft-drain-legacy").toString
+    val ckpt = Files.createTempDirectory("graft-drain-legacy-ckpt").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    val seeded = scala.collection.mutable.ArrayBuffer[String]()
+    val init = seeding(spark, store, seeded)
+    store.create("control")
+    init.publish(submitted("tpch.nation", "q_n"))
+    // the former submission loop: an AvailableNow query over the tail
+    // whose checkpoint holds file-set offsets and commits, no position
     ControlStream.controlTail(store, "control").writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft-batch-jobs-ckpt").toString)
+      .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        jobs += JobCount(spark)(ControlStream.processBatch(recording)(b)); ()
-      }
+        ControlStream.processBatch(init)(b) }
       .start().awaitTermination()
-    assert(jobs.toSeq == Seq(1), s"jobs per micro-batch: $jobs")
-    assert(seen.toSeq == Seq("tpch.nation", "tpch.region"))
+    assert(seeded.toSeq == Seq("tpch.nation"))
+    assert(Files.isDirectory(java.nio.file.Paths.get(ckpt, "commits")) &&
+      ControlStream.position(ckpt).isEmpty)
+    ControlStream.runSubmissions(store, "control", init, ckpt)
+    assert(seeded.toSeq == Seq("tpch.nation"), "a terminal lifecycle re-ran")
+    assert(ControlStream.position(ckpt).nonEmpty)
+    init.publish(submitted("tpch.region", "q_r"))
+    ControlStream.runSubmissions(store, "control", init, ckpt)
+    assert(seeded.toSeq == Seq("tpch.nation", "tpch.region"))
+  }
+
+  test("one key submitted twice between drains runs the later spec") {
+    val root = Files.createTempDirectory("graft-drain-twice").toString
+    val store = new FileTopicStore(spark, root, sleeper = _ => ())
+    val seeded = scala.collection.mutable.ArrayBuffer[String]()
+    val init = seeding(spark, store, seeded)
+    store.create("control")
+    init.publish(submitted("tpch.nation", "q_first"))
+    init.publish(submitted("tpch.nation", "q_second"))
+    ControlStream.runSubmissions(store, "control", init,
+      Files.createTempDirectory("graft-drain-twice-ckpt").toString)
+    assert(seeded.toSeq == Seq("tpch.nation"), "one lifecycle per key per drain")
+    assert(store.exists("q_second") && store.readAll("q_second").count() == 25)
+    assert(!store.exists("q_first"), "the superseded spec must not run")
   }
 
   test("flatMapGroupsWithState emits only genuine transitions") {
@@ -257,14 +433,14 @@ class ControlStreamSpec extends AnyFunSuite {
 
   test("same-millisecond same-key submissions process in topic-offset " +
     "order even when the batch arrives offset-reversed") {
-    // Two submissions of ONE table within the same millisecond: the
-    // batch's collect order is partition order, NOT pinned, and the
-    // stable timestamp sort alone cannot break the tie — whichever
-    // lifecycle ran first would win (the at-least-once recheck drops
-    // the second), a nondeterministic surviving config. processBatch
-    // must therefore order by topic offset. Feed it the batch rows
-    // offset-REVERSED to prove the contract does not ride on readAll's
-    // natural order.
+    // Two submissions of ONE table within the same millisecond: a
+    // frame's row order is not pinned, and the stable timestamp sort
+    // alone cannot break the tie — whichever lifecycle ran first would
+    // be superseded by the other, a nondeterministic surviving config.
+    // (The drain hands processBatch one message per key; a frame of the
+    // full log, as here, holds both.) processBatch must therefore order
+    // by topic offset. Feed it the rows offset-REVERSED to prove the
+    // contract does not ride on readAll's natural order.
     val root = Files.createTempDirectory("graft-order").toString
     val store = new FileTopicStore(spark, root, sleeper = _ => ())
     val init0 = new Initializer(spark, new InMemoryControlPlane(), store,
@@ -278,7 +454,9 @@ class ControlStreamSpec extends AnyFunSuite {
     val seen = scala.collection.mutable.ArrayBuffer[String]()
     val recording = new Initializer(spark, new InMemoryControlPlane(), store,
       "control", _ => None) {
-      override def process(ccd: Ccd): Seq[Ccd] = { seen += ccd.queue; Seq.empty }
+      override private[graft] def process(ccd: Ccd, recheck: Boolean): Seq[Ccd] = {
+        seen += ccd.queue; Seq.empty
+      }
     }
     val reversed = store.readAll("control")
       .orderBy(org.apache.spark.sql.functions.col("offset").desc)

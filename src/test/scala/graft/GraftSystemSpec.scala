@@ -45,7 +45,7 @@ class GraftSystemSpec extends AnyFunSuite {
   // Crash-resume under failure injection: the reference's core
   // operational promise (initializer.clj:27-39) — a process killed
   // mid-seed leaves only durable state (control-topic files, partial
-  // seed files, the stream checkpoint), and a restarted system must
+  // seed files, the drain's checkpointed position), and a restarted system must
   // re-run exactly the non-terminal CCDs, skip terminal ones, and
   // converge the seed topic via keyed compaction with no loss and no
   // duplicate identity beyond at-least-once.
@@ -86,15 +86,20 @@ class GraftSystemSpec extends AnyFunSuite {
     init.publish(Ccd("tpch.nation", "q_nation", "mq_nation", None,
       Status.Submitted, ts()))
     // SAME checkpoint path GraftSystem derives, so the restarted
-    // system's stream resumes this stream's uncommitted batch
+    // system's drain starts from the position this drain left
     val checkpoint = java.nio.file.Paths.get(root, "__checkpoint")
     Files.createDirectories(checkpoint)
-    val died = intercept[Exception] {
+    val position = ControlStream.position(checkpoint.toString)
+    // the drain runs on the calling thread: the kill reaches the caller
+    // as thrown, with no streaming query to wrap it
+    val died = intercept[AssertionError] {
       ControlStream.runSubmissions(faulty, "cdc-control", init, checkpoint.toString)
     }
     assert(Iterator.iterate(died: Throwable)(_.getCause).takeWhile(_ != null)
       .exists(t => Option(t.getMessage).exists(_.contains("injected kill"))),
-      s"stream died for an unexpected reason: $died")
+      s"drain died for an unexpected reason: $died")
+    assert(ControlStream.position(checkpoint.toString) == position,
+      "a drain that died must leave its position unmoved")
 
     // durable mid-crash state: control topic still shows the NON-terminal
     // submitted state (the lifecycle's states were never published) and
@@ -117,10 +122,12 @@ class GraftSystemSpec extends AnyFunSuite {
       Status.TopicCreated)))
     assert(sys2.topics.readAll("q_nation").count() == 25)
 
-    // the killed batch was never committed, so the stream REPLAYS the
-    // submission on restart — and the terminal-state guard makes the
-    // replay a no-op instead of a second seed (at-least-once backstop)
+    // the killed drain never advanced its position, so the restarted
+    // drain reads the submission's key again — and finds its latest
+    // state terminal (the resume above published it), so nothing is
+    // seeded a second time; the position then moves past it
     sys2.runOnce()
+    assert(ControlStream.position(checkpoint.toString) != position)
     assert(sys2.topics.readAll("q_nation").count() == 25)
     val after = sys2.controlState().collect()
       .map(r => r.getAs[String]("key") -> r.getAs[String]("value")).toMap
@@ -171,8 +178,9 @@ class GraftSystemSpec extends AnyFunSuite {
       .collect().map(_.getString(0))
     assert(keys.length == 25 && keys.distinct.length == 25,
       "seed topic must converge to one compacted state per key")
-    // the pending nation submission replays through the stream tail and
-    // is skipped as terminal; region stays untouched
+    // the drain reads nation's latest state (active, published by the
+    // resume), not its submission, so nothing re-runs; region stays
+    // untouched
     sys2.runOnce()
     assert(sys2.topics.readAll("q_nation").count() == 25)
     assert(sys2.topics.readAll("q_region").count() == 5)

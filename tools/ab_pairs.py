@@ -2,7 +2,7 @@
 """Interleaved A/B of the CDC benchmark between two checkouts.
 
     python3 tools/ab_pairs.py --parent DIR --change DIR --workload seed_jdbc \
-        --seeds 931-940 [--seconds 15] [--out FILE]
+        --seeds 931-940 [--seconds 15] [--traced N] [--out FILE]
 
 DIR is the root of an unpacked checkout (`git archive REV | tar -x -C
 DIR`); each builds its own .bench_build/ on its first run. For every
@@ -32,6 +32,15 @@ Last, each side's median and quartiles of every
 ungated `detail` figure of the run documents (resume_s,
 topic_read_rows_per_s, ccd_service_p50_s, ...) that all runs report,
 with no verdict.
+
+With --traced N, N traced runs per side follow the pairs (`run.py
+--trace 1`, on the first N seeds, the side that goes first alternating
+as for the pairs), and each side's median of every per-layer metric
+(spark.jobs, cdc.decode_s, streaming.batches, ...) that all of them
+report is printed, with no verdict: counts repeat exactly for a seed,
+so they read as before/after checks; timings are a guide only. A traced
+run that fails or is not correct is listed and the layer medians are
+not printed (exit 1).
 
 A side whose .bench_build/classpath.txt names a classes directory
 outside that side's root is refused (exit 2): the checkout was copied
@@ -71,10 +80,10 @@ def foreign_classes(checkout):
             and os.path.commonpath([root, os.path.realpath(e)]) != root]
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=0):
     t0 = time.time()
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                        cwd=checkout, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     try:
@@ -82,7 +91,7 @@ def run_once(checkout, workload, seed, seconds):
     except json.JSONDecodeError:
         line = None
     steal, detail = None, {}
-    doc = os.path.join(checkout, ".bench_build", "runs", f"{workload}-s{seed}-t0.json")
+    doc = os.path.join(checkout, ".bench_build", "runs", f"{workload}-s{seed}-t{trace}.json")
     if line is not None and os.path.exists(doc):
         with open(doc) as f:
             d = json.load(f)
@@ -162,6 +171,46 @@ def summarize_detail(pairs):
             for name in names}
 
 
+def run_pairs(sides, workload, seeds, seconds, trace):
+    """One run per side per seed, the side that goes first alternating."""
+    pairs = []
+    for i, seed in enumerate(seeds):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        pair = {"seed": seed, "first": order[0]}
+        for side in order:
+            r = run_once(sides[side], workload, seed, seconds, trace)
+            pair[side] = r
+            vals = " ".join(f"{k}={v['value']:.4g}"
+                            for k, v in ((r["line"] or {}).get("metrics") or {}).items())
+            print(f"seed={seed} {side:6s} trace={trace} rc={r['rc']} wall={r['wall_s']:.0f}s "
+                  f"correct={(r['line'] or {}).get('correct')} steal={share(r['steal_share'])} {vals}",
+                  flush=True)
+        pairs.append(pair)
+    return pairs
+
+
+def report_bad(pairs, what):
+    """List the runs that failed or were not correct; True when there were any."""
+    bad = [(p["seed"], side) for p in pairs for side in ("parent", "change")
+           if p[side]["rc"] != 0 or not p[side]["line"] or not p[side]["line"].get("correct")]
+    if bad:
+        print(f"\nnot summarized: {what} that failed or were not correct:")
+        for seed, side in bad:
+            print(f"  seed {seed} {side}: " + " | ".join(
+                next(p for p in pairs if p["seed"] == seed)[side]["stderr_tail"]))
+    return bool(bad)
+
+
+def summarize_layers(traced):
+    """Each side's median of every per-layer metric all traced runs report."""
+    runs = [p[side]["line"]["metrics"] for p in traced for side in ("parent", "change")]
+    names = sorted(set.intersection(*(set(r) for r in runs))) if runs else []
+    return {name: {side: statistics.median(p[side]["line"]["metrics"][name]["value"]
+                                           for p in traced)
+                   for side in ("parent", "change")}
+            for name in names}
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True)
@@ -169,6 +218,8 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True)
     ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--traced", type=int, default=0,
+                    help="traced runs per side after the pairs (per-layer medians, no verdict)")
     ap.add_argument("--out")
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
@@ -191,32 +242,16 @@ def main():
               f"than the change, so a second-place advantage favors the change; use an even "
               f"number of pairs", flush=True)
 
-    pairs = []
-    for i, seed in enumerate(seeds):
-        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        pair = {"seed": seed, "first": order[0]}
-        for side in order:
-            r = run_once(sides[side], a.workload, seed, a.seconds)
-            pair[side] = r
-            vals = " ".join(f"{k}={v['value']:.4g}"
-                            for k, v in ((r["line"] or {}).get("metrics") or {}).items())
-            print(f"seed={seed} {side:6s} rc={r['rc']} wall={r['wall_s']:.0f}s "
-                  f"correct={(r['line'] or {}).get('correct')} steal={share(r['steal_share'])} {vals}",
-                  flush=True)
-        pairs.append(pair)
+    pairs = run_pairs(sides, a.workload, seeds, a.seconds, 0)
 
-    if a.out:
-        with open(a.out, "w") as f:
-            json.dump({"workload": a.workload, "seconds": a.seconds, "sides": sides,
-                       "pairs": pairs}, f, indent=1)
+    def save(traced):
+        if a.out:
+            with open(a.out, "w") as f:
+                json.dump({"workload": a.workload, "seconds": a.seconds, "sides": sides,
+                           "pairs": pairs, "traced": traced}, f, indent=1)
 
-    bad = [(p["seed"], side) for p in pairs for side in ("parent", "change")
-           if p[side]["rc"] != 0 or not p[side]["line"] or not p[side]["line"].get("correct")]
-    if bad:
-        print("\nnot summarized: runs that failed or were not correct:")
-        for seed, side in bad:
-            print(f"  seed {seed} {side}: " + " | ".join(
-                next(p for p in pairs if p["seed"] == seed)[side]["stderr_tail"]))
+    save([])
+    if report_bad(pairs, "runs"):
         sys.exit(1)
 
     summary = summarize(pairs, metrics)
@@ -246,6 +281,16 @@ def main():
         p, c = s["parent"], s["change"]
         print(f"    {name:24s} parent {p['median']:.4g} [{p['q1']:.4g}, {p['q3']:.4g}]  "
               f"change {c['median']:.4g} [{c['q1']:.4g}, {c['q3']:.4g}]")
+
+    if a.traced > 0:
+        traced = run_pairs(sides, a.workload, seeds[:a.traced], a.seconds, 1)
+        save(traced)
+        if report_bad(traced, "traced runs"):
+            sys.exit(1)
+        print(f"\n== {len(traced)} traced run(s) per side, per-layer metrics, "
+              f"median (no verdict):")
+        for name, m in summarize_layers(traced).items():
+            print(f"    {name:32s} parent {m['parent']:.6g}  change {m['change']:.6g}")
 
 
 if __name__ == "__main__":
