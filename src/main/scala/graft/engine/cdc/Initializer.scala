@@ -355,17 +355,35 @@ object Initializer {
     * [[Initializer.decodeCcds]] reads with no Spark action. A frame held
     * on the driver (a compacted control topic below the store's read
     * bound) is filtered with no Spark action; any other frame is
-    * collected once. */
+    * filtered by the position in Spark and only its fresh rows are
+    * collected, in one action. */
   private[graft] def after(df: DataFrame,
       position: Map[Int, Long]): (DataFrame, Map[Int, Long]) = {
     val c = controlRelation(df)
-      .orElse(controlRelation(df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)))
+      .orElse(controlRelation(collectAbove(df, position)))
       .getOrElse(throw new IllegalArgumentException(s"not a control frame: ${df.schema.simpleString}"))
     val fresh = c.rows.flatMap(r => c.position(r).collect {
       case at @ (part, off) if position.get(part).forall(off > _) => r -> at
     })
     (PlanBridge.ofRows(df.sparkSession, c.relation.copy(data = fresh.map(_._1))),
       graft.engine.sources.TopicLog.merge(position +: fresh.map(f => Map(f._2))))
+  }
+
+  /** The rows of `df` above `position`, the freshness rule of [[after]]
+    * run in Spark, collected into a driver frame with `df`'s schema. A
+    * frame without int `partition` and long `offset` columns has no
+    * fresh row, and nothing is collected. */
+  private def collectAbove(df: DataFrame, position: Map[Int, Long]): DataFrame = {
+    def has(name: String, dataType: org.apache.spark.sql.types.DataType) =
+      df.schema.exists(f => f.name == name && f.dataType == dataType)
+    val rows =
+      if (!has("partition", IntegerType) || !has("offset", LongType)) Array.empty[Row]
+      else {
+        val (part, off) = (df("partition"), df("offset"))
+        val seen = position.map { case (p, o) => part === p && off <= o }.reduceOption(_ || _)
+        df.where(part.isNotNull && off.isNotNull && seen.fold(lit(true))(!_)).collect()
+      }
+    df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
   }
 
   /** The frame's rows when its analyzed plan is a driver `LocalRelation`

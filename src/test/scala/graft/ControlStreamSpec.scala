@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.graft.JobCount
+import org.apache.spark.graft.{ActionCount, JobCount}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.cdc.{InMemoryControlPlane, Initializer, SeedViews}
@@ -234,7 +234,8 @@ class ControlStreamSpec extends AnyFunSuite {
 
   test("a drain over a Spark-read control topic keeps the position") {
     // a store whose every compacted read goes through Spark: the drain
-    // collects the compacted frame once and filters it on the driver
+    // filters the compacted frame by the position in Spark and collects
+    // only the fresh rows
     val root = Files.createTempDirectory("graft-drain-spark").toString
     val ckpt = Files.createTempDirectory("graft-drain-spark-ckpt").toString
     val session = SparkTest.sparkReadSession
@@ -253,6 +254,29 @@ class ControlStreamSpec extends AnyFunSuite {
     ControlStream.runSubmissions(store, "control", recording, ckpt)
     assert(seen.toSeq == Seq("tpch.nation", "tpch.region"))
     assert(ControlStream.position(ckpt) == Map(0 -> 1L))
+  }
+
+  test("Initializer.after filters a Spark frame by the position before collecting it") {
+    val session = spark.newSession()
+    val rows = Seq[(String, String, Integer, java.lang.Long)](
+      ("a", "v0", 0, 3L), ("b", "v1", 0, 7L), ("c", "v2", 1, 2L),
+      ("d", "v3", 2, 0L), ("e", "v4", null, 9L), ("f", "v5", 1, null))
+      .toDF("key", "value", "partition", "offset")
+    // an RDD-backed frame: not a driver LocalRelation, so after runs Spark
+    val df = session.createDataFrame(rows.rdd, rows.schema)
+    var out: (org.apache.spark.sql.DataFrame, Map[Int, Long]) = null
+    val actions = ActionCount.executions(session) {
+      out = Initializer.after(df, Map(0 -> 3L, 1 -> 2L))
+    }
+    val (fresh, next) = out
+    // above partition 0's 3, nothing above partition 1's 2, partition 2
+    // has no entry; a row without partition or offset is never fresh
+    assert(fresh.collect().map(_.getString(0)).sorted.toSeq == Seq("b", "d"))
+    assert(next == Map(0 -> 7L, 1 -> 2L, 2 -> 0L))
+    assert(actions.size == 1, s"one action, got ${actions.size}")
+    assert(actions.head.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+    }.nonEmpty, "the position is applied in Spark, before the collect")
   }
 
   test("a lifecycle that dies mid-drain leaves the position unmoved") {

@@ -1,6 +1,8 @@
 package org.apache.spark.graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -15,21 +17,25 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * every event of the block has been delivered, and events still
   * queued from before the block are delivered before it starts. */
 object ActionCount {
-  def apply(session: SparkSession)(body: => Unit): Int = {
+  def apply(session: SparkSession)(body: => Unit): Int = executions(session)(body).size
+
+  /** The query executions of the Dataset actions `body` runs on
+    * `session`, in the order they finished. */
+  def executions(session: SparkSession)(body: => Unit): Seq[QueryExecution] = {
     val bus = session.sparkContext.listenerBus
-    val actions = new AtomicInteger
+    val seen = new ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        actions.incrementAndGet()
+        seen.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        actions.incrementAndGet()
+        seen.add(qe)
     }
     bus.waitUntilEmpty()
     session.listenerManager.register(listener)
     try {
       body
       bus.waitUntilEmpty()
-      actions.get
+      seen.asScala.toSeq
     } finally session.listenerManager.unregister(listener)
   }
 }
